@@ -19,10 +19,11 @@ object Harness {
     * (offset/commit WAL, state delta/changelog commits) — skip the .crc
     * twin Hadoop's default local Fs writes beside every file. On a
     * per-run tmpfs checkpoint that halves the many small synchronous
-    * writes every micro-batch pays (StreamDiag agg: ~35 ms → ~18 ms per
-    * write). The trade is losing checksum DETECTION of on-disk
-    * checkpoint corruption, so correctness-gate runs (Verify, tests)
-    * keep the default checksummed FS — a timing capture is re-runnable,
+    * writes every micro-batch pays (~35 ms → ~18 ms per write, measured
+    * on the checkpoint commits of a streaming agg). The trade is losing
+    * checksum DETECTION of on-disk checkpoint corruption, so
+    * correctness-gate runs (Verify, tests) keep the default checksummed
+    * FS — a timing capture is re-runnable,
     * a silently-corrupt correctness verdict is not. Batch parquet I/O
     * is untouched either way (FileSystem API, fs.file.impl key); a
     * production deployment points checkpoints at HDFS/S3, whose

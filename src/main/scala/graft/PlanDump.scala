@@ -2,14 +2,14 @@ package graft
 
 /** Dev utility (guide §1: capture `.explain("formatted")` evidence):
   * writes each named query's formatted physical plan to
-  * `plans/r22/<name>_<tag>.txt`. Queries whose canonical entry runs a
+  * `<outDir>/<name>_<tag>.txt`. Queries whose canonical entry runs a
   * streaming pipeline or driver loop EXECUTE while being planned — the
   * plan captured is the final DataFrame the bench times. For the
-  * iterative queries that final plan says nothing about the loop (the
-  * r21 evidence gap), so the `<query>_iter` names run the real query
+  * iterative queries that final plan says nothing about the loop, so
+  * the `<query>_iter` names run the real query
   * and capture the FIRST loop-body iteration's plan via the runners'
   * dumpRound hook — the per-round plan the bench actually pays.
-  * `runMain graft.PlanDump <tag> <name> [name...] [sfDir]`. */
+  * `runMain graft.PlanDump <outDir> <tag> <name> [name...] [sfDir]`. */
 object PlanDump {
   import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -25,20 +25,22 @@ object PlanDump {
   )
 
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: PlanDump <tag> <queryName>... [sfDir]")
-    val tag = args.head
-    val rest = args.tail
+    require(args.length >= 3,
+      "usage: PlanDump <outDir> <tag> <queryName>... [sfDir]")
+    val outDir = java.nio.file.Paths.get(args(0))
+    val tag = args(1)
+    val rest = args.drop(2)
     val (names, sfDir) =
       if (rest.last.contains("/")) (rest.init.toSeq, rest.last)
       else (rest.toSeq, "/root/testdata/sf0.1")
     val spark = Harness.session(checksumFreeFs = true)
-    val outDir = java.nio.file.Paths.get("plans", "r22")
     java.nio.file.Files.createDirectories(outDir)
     def write(n: String, df: DataFrame): Unit = {
       val txt = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
-      java.nio.file.Files.writeString(outDir.resolve(s"${n}_$tag.txt"), txt)
-      println(s"[plandump] wrote plans/r22/${n}_$tag.txt (${txt.length} chars)")
+      val f = outDir.resolve(s"${n}_$tag.txt")
+      java.nio.file.Files.writeString(f, txt)
+      println(s"[plandump] wrote $f (${txt.length} chars)")
     }
     names.foreach { n =>
       iterDumps.get(n) match {

@@ -55,32 +55,24 @@ object ConfScope {
     else identity
   }
 
-  /** Hash-partition `df` by `keys` and localCheckpoint it, with AQE
-    * disabled for the checkpoint job (r22, optimization guide §2.4):
-    * under AQE the executed plan is an AdaptiveSparkPlanExec whose
-    * outputPartitioning is still unresolved when Dataset.checkpoint
-    * snapshots it into the LogicalRDD, so the checkpoint would carry
-    * UnknownPartitioning (measured) and every downstream groupBy/join
-    * on `keys` re-shuffles. With AQE off the checkpoint preserves
-    * hashpartitioning(keys, spark.sql.shuffle.partitions) and iterative
+  /** Hash-partition `df` by `keys` into `n` partitions and
+    * localCheckpoint it, with AQE disabled for the checkpoint job: under
+    * AQE the executed plan is an
+    * AdaptiveSparkPlanExec whose outputPartitioning is still unresolved
+    * when Dataset.checkpoint snapshots it into the LogicalRDD, so the
+    * checkpoint would carry UnknownPartitioning (measured) and every
+    * downstream groupBy/join on `keys` re-shuffles. With AQE off the
+    * checkpoint preserves hashpartitioning(keys, n) and iterative
     * consumers (the graph loops, CC) aggregate on `keys` exchange-free
     * in EVERY round. The no-AQE scope covers only this repartition +
     * materialize job — callers keep expensive upstream builds in their
-    * own (AQE-planned, separately checkpointed) jobs. */
-  def checkpointByKey(df: org.apache.spark.sql.DataFrame,
-                      keys: org.apache.spark.sql.Column*)
-      : org.apache.spark.sql.DataFrame =
-    checkpointByKeyN(df, df.sparkSession.sessionState.conf
-      .numShufflePartitions, keys: _*)
-
-  /** checkpointByKey with an explicit partition count — the loop-width
-    * variant. Removing the per-round Exchange (checkpointByKey) also
-    * removes AQE's chance to COALESCE the loop's post-shuffle partitions,
-    * so iterative callers size the width themselves with [[loopParts]]
-    * (the same bytes/advisory-size arithmetic AQE would have applied):
-    * at test scale a few-MB loop relation runs 1–2 tasks per round
-    * instead of 32 empty-ish ones; at cluster scale the cap keeps the
-    * full configured width. */
+    * own (AQE-planned, separately checkpointed) jobs. Removing the
+    * per-round Exchange also removes AQE's chance to COALESCE the loop's
+    * post-shuffle partitions, so iterative callers size `n` themselves
+    * with [[loopParts]] (the same bytes/advisory-size arithmetic AQE
+    * would have applied): at test scale a few-MB loop relation runs 1–2
+    * tasks per round instead of 32 empty-ish ones; at cluster scale the
+    * cap keeps the full configured width. */
   def checkpointByKeyN(df: org.apache.spark.sql.DataFrame, n: Int,
                        keys: org.apache.spark.sql.Column*)
       : org.apache.spark.sql.DataFrame =
@@ -114,7 +106,7 @@ object ConfScope {
   }
 
   /** localCheckpoint that KEEPS the plan's natural output partitioning
-    * (no repartition — the checkpointByKey variant without the shuffle):
+    * (no repartition — the checkpointByKeyN variant without the shuffle):
     * AQE is disabled for the materialize job so Dataset.checkpoint
     * snapshots the real partitioning instead of AdaptiveSparkPlanExec's
     * unresolved UnknownPartitioning. Used by iterative loops whose round

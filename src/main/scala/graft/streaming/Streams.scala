@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
 import graft.core.Tables
@@ -38,42 +39,59 @@ object Streams {
   import Replayer.WatermarkDelay
   import graft.core.ConfScope
 
-  /** Stream-state parallelism (SPARK_GRAFT_STREAM_PARTITIONS), validated
-    * eagerly so a bad value fails with a message naming the env var.
-    * Default 2 from a r6 sweep at sf0.1 (s5 p50: 8→5.31 s, 4→4.61 s,
-    * 2→4.53 s, 1→4.63 s) — per-store commit overhead dominates below ~8
-    * and task-launch overhead takes over at 1. */
-  private def streamPartitions: String =
-    ConfScope.envInt("SPARK_GRAFT_STREAM_PARTITIONS", "2")
+  /** Stream-state parallelism of every streaming query. Stateful
+    * operators open one state store per shuffle partition per
+    * micro-batch, and each store commit is a synchronous checkpoint file
+    * write, so at local replay scale that per-store overhead dominates
+    * the S-series wall-clock. 2 comes from a sweep at sf0.1 (s5 p50:
+    * 8→5.31 s, 4→4.61 s, 2→4.53 s, 1→4.63 s): per-store commit overhead
+    * dominates below ~8 and task-launch overhead takes over at 1. At
+    * cluster scale this would be O(total cores): state volume per
+    * partition, not result content, is what it trades. */
+  private val StreamPartitions = "2"
 
+  /** The one streaming start: runs `df` to completion under
+    * `Trigger.AvailableNow` with the state parallelism above plus
+    * `extraConf` (per-query confs the stream must see at start, e.g. the
+    * RocksDB provider for transformWithState). `sink` picks the sink and
+    * output mode: the memory sink or a `foreachBatch`. The confs are
+    * baked into the checkpoint only; batch queries are untouched because
+    * ConfScope restores them (under the shared JVM-wide lock, see its
+    * scaladoc) before this returns. A failed query is stopped and its
+    * exception rethrown. The checkpoint is a fresh one dropped on return,
+    * unless the caller passes its own `checkpoint` to read or restart
+    * on afterwards; then the caller drops it. */
+  private def runStream(s: SparkSession, df: DataFrame,
+      extraConf: Map[String, String] = Map.empty,
+      checkpoint: Option[String] = None)
+      (sink: DataStreamWriter[Row] => DataStreamWriter[Row])
+      : StreamingQuery = {
+    val ckpt = checkpoint.getOrElse(Replayer.checkpoint())
+    try {
+      ConfScope.withConf(s,
+        Map("spark.sql.shuffle.partitions" -> StreamPartitions) ++ extraConf) {
+        val q = sink(df.writeStream)
+          .option("checkpointLocation", ckpt)
+          .trigger(Trigger.AvailableNow()).start()
+        try q.awaitTermination()
+        catch { case e: Throwable => q.stop(); throw e }
+        q
+      }
+    } finally if (checkpoint.isEmpty) Replayer.dropCheckpoint(ckpt)
+  }
+
+  /** Run `df` into a memory sink and return its final table. The sink's
+    * temp view is dropped before return: the returned DataFrame's
+    * analysed plan holds the sink's data, so the session keeps no view. */
   private def runToMemory(s: SparkSession, df: DataFrame, mode: String,
                           extraConf: Map[String, String] = Map.empty)
       : DataFrame = {
     val name = "mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    // Stateful operators open one state store per shuffle partition per
-    // micro-batch, and each store commit is a synchronous checkpoint file
-    // write — at local replay scale that per-store overhead dominates the
-    // S-series wall-clock, so the stream runs at a smaller state
-    // parallelism. The value is baked into the (fresh, per-run) checkpoint
-    // only; batch queries are untouched because ConfScope restores the
-    // conf (under the shared JVM-wide lock — see its scaladoc for the
-    // two-lock leak this prevents) before the returned table is consumed;
-    // extraConf carries per-query session confs the stream must see at
-    // start, e.g. the RocksDB provider for transformWithState. At cluster
-    // scale raise SPARK_GRAFT_STREAM_PARTITIONS to O(total cores): state
-    // volume per partition, not result content, is what the knob trades.
-    val ckpt = Replayer.checkpoint()
     try {
-      ConfScope.withConf(s,
-        Map("spark.sql.shuffle.partitions" -> streamPartitions) ++ extraConf) {
-        val q = df.writeStream.format("memory").queryName(name)
-          .outputMode(mode)
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-    } finally Replayer.dropCheckpoint(ckpt) // keep tmpfs tidy
-    s.table(name)
+      runStream(s, df, extraConf)(
+        _.format("memory").queryName(name).outputMode(mode))
+      s.table(name)
+    } finally s.catalog.dropTempView(name)
   }
 
   /** SNK4 snapshot root for a dataset dir — pid-scoped (two concurrent
@@ -1048,30 +1066,24 @@ object Streams {
     * batch (the s26 restart discipline): a fresh coordinator instance
     * per attempt, so a second attempt models a restarted driver
     * process — its in-memory state starts empty and must restore from
-    * the persisted coordinator files. Shared by the canonical run and
-    * the kill-and-restart pin. */
+    * the persisted coordinator files. Shared by the canonical run
+    * (`ckpt` None: a fresh checkpoint, dropped on return) and the
+    * kill-and-restart pin (its own checkpoint across both attempts). */
   private[graft] def s34bAttempt(s: SparkSession, d: String,
       stageRoot: java.nio.file.Path, outRoot: java.nio.file.Path,
-      ckpt: String, poisonAt: Option[Long]): Unit = {
+      ckpt: Option[String], poisonAt: Option[Long]): Unit = {
     val fast = Replayer.stream(s, d, "clean")
       .select(col("ts"), col("event_type"), lit("fast").as("src"))
     val lag = Replayer.stream(s, d, "shift48stop")
       .select(col("ts"), col("event_type"), lit("lag").as("src"))
     val coord = new S34bCoordinator(Seq("fast", "lag"),
       600L * 1000000L, stageRoot, outRoot)
-    ConfScope.withConf(s, Map(
-      "spark.sql.shuffle.partitions" -> streamPartitions) ++
-      NoFinalBatch) {
-      val q = fast.unionByName(lag).writeStream
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          poisonAt.foreach(p => if (id >= p)
-            throw new RuntimeException("s34b poison"))
-          coord(b, id)
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+    runStream(s, fast.unionByName(lag), NoFinalBatch, ckpt)(
+      _.foreachBatch { (b: DataFrame, id: Long) =>
+        poisonAt.foreach(p => if (id >= p)
+          throw new RuntimeException("s34b poison"))
+        coord(b, id)
+      })
   }
 
   private[graft] def s34bRun(s: SparkSession, d: String): DataFrame = {
@@ -1081,9 +1093,7 @@ object Streams {
     val outRoot = root.resolve("out")
     Replayer.deleteTree(stageRoot); Replayer.deleteTree(outRoot)
     java.nio.file.Files.createDirectories(stageRoot)
-    val ckpt = Replayer.checkpoint()
-    try s34bAttempt(s, d, stageRoot, outRoot, ckpt, None)
-    finally Replayer.dropCheckpoint(ckpt)
+    s34bAttempt(s, d, stageRoot, outRoot, None, None)
     s.read.parquet(s23BatchDirs(outRoot): _*)
       .select(col("win_start"), col("event_type"), col("n"),
         col("rel_b"))
@@ -1118,22 +1128,12 @@ object Streams {
     val idxRoot = root.resolve("index")
     Replayer.deleteTree(idxRoot)
     val cdf = Llm.coarseCells(s, d) // build-once, BEFORE the stream
-    val ckpt = Replayer.checkpoint()
-    try {
-      ConfScope.withConf(s, Map(
-        "spark.sql.shuffle.partitions" -> streamPartitions) ++
-        NoFinalBatch) {
-        val q = Replayer.streamEmbeds(s, d).writeStream
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            Llm.assignCells(Llm.vecsOf(b), cdf, Llm.IvfRassign)
-              .write.mode("overwrite")
-              .parquet(idxRoot.resolve(s"b$id").toString)
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-    } finally Replayer.dropCheckpoint(ckpt)
+    runStream(s, Replayer.streamEmbeds(s, d), NoFinalBatch)(
+      _.foreachBatch { (b: DataFrame, id: Long) =>
+        Llm.assignCells(Llm.vecsOf(b), cdf, Llm.IvfRassign)
+          .write.mode("overwrite")
+          .parquet(idxRoot.resolve(s"b$id").toString)
+      })
     val assigns = s.read.parquet(s23BatchDirs(idxRoot): _*)
     val e = Llm.vecsOf(graft.core.Tables.embeddings(s, d))
     val cands = Llm.candidatesFromAssigns(e, cdf, assigns,
@@ -1189,24 +1189,14 @@ object Streams {
       .toDF("user_id", "purchase_id")
     val buf = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
     val nBatches = new java.util.concurrent.atomic.AtomicLong(0)
-    val ckpt = Replayer.checkpoint()
-    val q = try {
-      ConfScope.withConf(s, Map(
-        "spark.sql.shuffle.partitions" -> streamPartitions) ++
-        RocksDbConf ++ NoFinalBatch) {
-        val q = conv.writeStream
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            nBatches.incrementAndGet()
-            batch.collect().foreach(r =>
-              buf.add((r.getLong(0), r.getLong(1))))
-            // pace the NEXT batch past the TTL; skip after the last file
-            if (id < Replayer.NumFiles - 1) Thread.sleep(S25GapMs)
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination(); q
-      }
-    } finally Replayer.dropCheckpoint(ckpt)
+    val q = runStream(s, conv, RocksDbConf ++ NoFinalBatch)(
+      _.foreachBatch { (batch: DataFrame, id: Long) =>
+        nBatches.incrementAndGet()
+        batch.collect().foreach(r =>
+          buf.add((r.getLong(0), r.getLong(1))))
+        // pace the NEXT batch past the TTL; skip after the last file
+        if (id < Replayer.NumFiles - 1) Thread.sleep(S25GapMs)
+      })
     // The pacing skip above assumes batch ids are exactly 0..NumFiles−1
     // (maxFilesPerTrigger=1, no final batch). If the source ever splits
     // or merges batches, cross-batch TTL expiry would turn wall-clock-
@@ -1259,19 +1249,12 @@ object Streams {
         .transformWithState(new FunnelProcessor(HourUs),
           TimeMode.None(), OutputMode.Append())
         .toDF("user_id", "purchase_id")
-      ConfScope.withConf(s, Map(
-        "spark.sql.shuffle.partitions" -> streamPartitions) ++
-        RocksDbConf ++ NoFinalBatch) {
-        val q = conv.writeStream
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            // consume every partition (an unconsumed partition fails
-            // commit validation); the query's OUTPUT is not the point
-            // here — the checkpoint's state is
-            b.foreach((_: org.apache.spark.sql.Row) => ()) }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      runStream(s, conv, RocksDbConf ++ NoFinalBatch, Some(ckpt))(
+        _.foreachBatch { (b: DataFrame, _: Long) =>
+          // consume every partition (an unconsumed partition fails
+          // commit validation); the query's OUTPUT is not the point
+          // here — the checkpoint's state is
+          b.foreach((_: Row) => ()) })
       val st = s.read.format("statestore")
         .option("stateVarName", "funnel").load(ckpt)
       val views = st.select(col("key.value").as("user_id"),
@@ -1349,16 +1332,8 @@ object Streams {
         .transformWithState(new AbandonProcessor(S31bWindowUs),
           TimeMode.EventTime(), OutputMode.Append())
         .toDF("user_id", "view_id")
-      ConfScope.withConf(s, Map(
-        "spark.sql.shuffle.partitions" -> streamPartitions) ++
-        RocksDbConf) {
-        val q = out.writeStream
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            b.foreach((_: org.apache.spark.sql.Row) => ()) }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      runStream(s, out, RocksDbConf, Some(ckpt))(
+        _.foreachBatch((b: DataFrame, _: Long) => b.foreach((_: Row) => ())))
       val timers = s.read.format("statestore")
         .option("readRegisteredTimers", "true").load(ckpt)
         .select(col("key.value").as("user_id"), lit("timer").as("kind"),
@@ -1405,36 +1380,29 @@ object Streams {
     def collect(b: DataFrame): Unit =
       b.collect().foreach(r => buf.add((r.getLong(0), r.getLong(1))))
     val conf = Map(
-      "spark.sql.shuffle.partitions" -> streamPartitions,
       "spark.sql.streaming.stateStore.encodingFormat" -> "avro") ++
       RocksDbConf ++ NoFinalBatch
     val ckpt = Replayer.checkpoint()
     var crashed = false
     try {
-      ConfScope.withConf(s, conf) {
-        val q1 = pipeline(new FunnelProcessor(HourUs)).writeStream
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            if (id >= 3L) throw new RuntimeException("upgrade point")
-            collect(b)
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        try q1.awaitTermination()
-        catch {
-          case e: org.apache.spark.sql.streaming.StreamingQueryException
-              if String.valueOf(e.getMessage).contains("upgrade point") ||
-                Option(e.getCause).exists(c => String.valueOf(c.getMessage)
-                  .contains("upgrade point")) =>
-            crashed = true
-        }
-        require(crashed, "s26 upgrade point never fired — fixture has " +
-          "fewer batches than the poison id")
-        val q2 = pipeline(new FunnelProcessorV2(HourUs)).writeStream
-          .foreachBatch((b: DataFrame, _: Long) => collect(b))
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q2.awaitTermination()
+      try runStream(s, pipeline(new FunnelProcessor(HourUs)), conf,
+          Some(ckpt))(
+        _.foreachBatch { (b: DataFrame, id: Long) =>
+          if (id >= 3L) throw new RuntimeException("upgrade point")
+          collect(b)
+        })
+      catch {
+        case e: org.apache.spark.sql.streaming.StreamingQueryException
+            if String.valueOf(e.getMessage).contains("upgrade point") ||
+              Option(e.getCause).exists(c => String.valueOf(c.getMessage)
+                .contains("upgrade point")) =>
+          crashed = true
       }
+      require(crashed, "s26 upgrade point never fired — fixture has " +
+        "fewer batches than the poison id")
+      runStream(s, pipeline(new FunnelProcessorV2(HourUs)), conf,
+        Some(ckpt))(
+        _.foreachBatch((b: DataFrame, _: Long) => collect(b)))
     } finally Replayer.dropCheckpoint(ckpt)
     import scala.jdk.CollectionConverters._
     (s.createDataFrame(buf.asScala.toSeq).toDF("user_id", "purchase_id")
@@ -1530,18 +1498,8 @@ object Streams {
       val root = upsertRoot(d)
       Replayer.deleteTree(root) // fresh run: no stale snapshots
       java.nio.file.Files.createDirectories(root)
-      val ckpt = Replayer.checkpoint()
-      try {
-        ConfScope.withConf(s, Map(
-          "spark.sql.shuffle.partitions" -> streamPartitions) ++
-          NoFinalBatch) {
-          val q = Replayer.stream(s, d, "clean").writeStream
-            .foreachBatch(upsertMerge(root) _)
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
-      } finally Replayer.dropCheckpoint(ckpt)
+      runStream(s, Replayer.stream(s, d, "clean"), NoFinalBatch)(
+        _.foreachBatch(upsertMerge(root) _))
       s.read.parquet(latestSnapshot(root))
         .select(col("user_id"), col("best.ts").as("last_ts"),
           col("best.event_id").as("last_event_id"),
@@ -1595,18 +1553,8 @@ object Streams {
             .parquet(aggRoot.resolve(s"v$id").toString)
         } finally batch.unpersist()
       }
-      val ckpt = Replayer.checkpoint()
-      try {
-        ConfScope.withConf(s, Map(
-          "spark.sql.shuffle.partitions" -> streamPartitions) ++
-          NoFinalBatch) {
-          val q = Replayer.stream(s, d, "clean").writeStream
-            .foreachBatch(fanout _)
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
-      } finally Replayer.dropCheckpoint(ckpt)
+      runStream(s, Replayer.stream(s, d, "clean"), NoFinalBatch)(
+        _.foreachBatch(fanout _))
       // explicit batch-dir listing, not a "/b*" glob: the glob path
       // made DataSource's FileStreamSink-metadata probe log a benign
       // but full-stack FileNotFoundException on every run (it probes
@@ -1838,18 +1786,8 @@ object Streams {
       val root = upsertRoot(d + "#s19snap")
       Replayer.deleteTree(root)
       java.nio.file.Files.createDirectories(root)
-      val ckpt = Replayer.checkpoint()
-      try {
-        ConfScope.withConf(s, Map(
-          "spark.sql.shuffle.partitions" -> streamPartitions) ++
-          NoFinalBatch) {
-          val q = Replayer.stream(s, d, "clean").writeStream
-            .foreachBatch(s19PublishBatch(root) _)
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
-      } finally Replayer.dropCheckpoint(ckpt)
+      runStream(s, Replayer.stream(s, d, "clean"), NoFinalBatch)(
+        _.foreachBatch(s19PublishBatch(root) _))
       val latest = {
         val mdir = root.resolve("manifests")
         val ls = java.nio.file.Files.list(mdir)
@@ -2570,18 +2508,8 @@ object Streams {
       s23WriteRules(s, rulesDir.toString)
       val outRoot = root.resolve("out")
       Replayer.deleteTree(outRoot) // fresh run: no stale batch outputs
-      val ckpt = Replayer.checkpoint()
-      try {
-        ConfScope.withConf(s, Map(
-          "spark.sql.shuffle.partitions" -> streamPartitions) ++
-          NoFinalBatch) {
-          val q = Replayer.stream(s, d, "clean").writeStream
-            .foreachBatch(s23ApplyRules(rulesDir.toString, outRoot) _)
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
-      } finally Replayer.dropCheckpoint(ckpt)
+      runStream(s, Replayer.stream(s, d, "clean"), NoFinalBatch)(
+        _.foreachBatch(s23ApplyRules(rulesDir.toString, outRoot) _))
       s.read.parquet(s23BatchDirs(outRoot): _*)
         .groupBy(col("event_type"))
         .agg(sum(col("n")).as("n_flagged"), sum(col("sc")).as("sum_cents"))
@@ -2676,18 +2604,8 @@ object Streams {
       s36WriteDim(s, dimDir.toString)
       val outRoot = root.resolve("out")
       Replayer.deleteTree(outRoot)
-      val ckpt = Replayer.checkpoint()
-      try {
-        ConfScope.withConf(s, Map(
-          "spark.sql.shuffle.partitions" -> streamPartitions) ++
-          NoFinalBatch) {
-          val q = Replayer.stream(s, d, "late").writeStream
-            .foreachBatch(s36Enrich(dimDir.toString, outRoot) _)
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
-      } finally Replayer.dropCheckpoint(ckpt)
+      runStream(s, Replayer.stream(s, d, "late"), NoFinalBatch)(
+        _.foreachBatch(s36Enrich(dimDir.toString, outRoot) _))
       s.read.parquet(s23BatchDirs(outRoot): _*)
         .select(col("b"), col("grp"), col("n"), col("adj_cents"))
         .orderBy(col("b"), col("grp"))
@@ -2715,24 +2633,12 @@ object Streams {
         .agg(count(lit(1)).as("n"))
       val buf = new java.util.concurrent.ConcurrentLinkedQueue[
         (java.sql.Timestamp, String, Long)]()
-      val ckpt = Replayer.checkpoint()
-      try {
-        ConfScope.withConf(s, Map(
-          "spark.sql.shuffle.partitions" -> streamPartitions) ++
-          NoFinalBatch) {
-          val q = agg.select(col("window.start"), col("event_type"),
-              col("n"))
-            .writeStream
-            .foreachBatch { (b: DataFrame, _: Long) =>
-              b.collect().foreach(r =>
-                buf.add((r.getTimestamp(0), r.getString(1), r.getLong(2))))
-            }
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
-      } finally Replayer.dropCheckpoint(ckpt)
+      runStream(s, agg.select(col("window.start"), col("event_type"),
+          col("n")), NoFinalBatch)(
+        _.foreachBatch { (b: DataFrame, _: Long) =>
+          b.collect().foreach(r =>
+            buf.add((r.getTimestamp(0), r.getString(1), r.getLong(2))))
+        }.outputMode("update"))
       import scala.jdk.CollectionConverters._
       s.createDataFrame(buf.asScala.toSeq)
         .toDF("win_start", "event_type", "n")
@@ -3142,18 +3048,8 @@ object Streams {
           .mode("overwrite").parquet(store.toString)
       } finally decided.unpersist()
     }
-    val ckpt = Replayer.checkpoint()
-    val q = try {
-      ConfScope.withConf(s, Map(
-        "spark.sql.shuffle.partitions" -> streamPartitions) ++
-        NoFinalBatch) {
-        val q = Replayer.streamDocs(s, d).writeStream
-          .foreachBatch(refresh _)
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination(); q
-      }
-    } finally Replayer.dropCheckpoint(ckpt)
+    val q = runStream(s, Replayer.streamDocs(s, d), NoFinalBatch)(
+      _.foreachBatch(refresh _))
     // enumerate the committed batch dirs explicitly (a glob path makes
     // the reader's FileStreamSink probe log a scary-looking WARN)
     val batches = {

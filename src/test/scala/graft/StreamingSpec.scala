@@ -2546,7 +2546,7 @@ class StreamingSpec extends AnyFunSuite {
     // the idleness release, so the restart must restore the laggard's
     // idle count to make the same decision
     try {
-      Streams.s34bAttempt(s, sf, stage, out, ckpt, Some(3L))
+      Streams.s34bAttempt(s, sf, stage, out, Some(ckpt), Some(3L))
       fail("poison batch never fired")
     } catch {
       case e: org.apache.spark.sql.streaming.StreamingQueryException =>
@@ -2562,7 +2562,7 @@ class StreamingSpec extends AnyFunSuite {
       "the poisoned batch must not have committed coordinator state")
     // phase 2: a FRESH coordinator (new instance = restarted driver)
     // resumes from the same checkpoint + staging roots
-    Streams.s34bAttempt(s, sf, stage, out, ckpt, None)
+    Streams.s34bAttempt(s, sf, stage, out, Some(ckpt), None)
     Replayer.dropCheckpoint(ckpt)
     val got = s.read.parquet(Streams.s23BatchDirs(out): _*)
       .select(col("win_start"), col("event_type"), col("n"),
@@ -2979,5 +2979,56 @@ class StreamingSpec extends AnyFunSuite {
       mdir.resolve("v3.list").toString)
       .select(col("event_id")).collect().map(_.getLong(0)).toSet
     assert(snap == Set(1L, 2L, 3L), s"v3 snapshot wrong: $snap")
+  }
+
+  test("Streaming runner hygiene: memory-sink, foreachBatch, update-mode " +
+       "and crash-restart queries leave no active stream, temp view, " +
+       "shuffle-partition change or checkpoint behind, and the returned " +
+       "table outlives the dropped sink view") {
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    import scala.jdk.CollectionConverters._
+    val cases = Seq(
+      "s1_tumbling", // memory sink, complete mode
+      "s3_session", // memory sink, append mode
+      "snk4_upsert", // foreachBatch
+      "s28_update_mode", // foreachBatch, update mode
+      "s26_state_evolution") // crash + restart on one checkpoint
+    cases.foreach { name =>
+      val c = s.newSession()
+      val ckpts = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      c.streams.addListener(new StreamingQueryListener {
+        // posted synchronously on the query thread while it is active
+        override def onQueryStarted(e: QueryStartedEvent): Unit =
+          Option(c.streams.get(e.id)).foreach(q => ckpts.add(
+            q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+              .resolvedCheckpointRoot))
+        override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+        override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+      })
+      def views = c.catalog.listTables().collect()
+        .filter(_.isTemporary).map(_.name).toSet
+      val viewsBefore = views
+      val partsBefore = c.conf.get("spark.sql.shuffle.partitions")
+      val df = SparkEntry.queries(name)(c, sf)
+      assert(c.streams.active.isEmpty, s"$name left a query active")
+      assert(views == viewsBefore,
+        s"$name leaked temp views: ${views -- viewsBefore}")
+      assert(c.conf.get("spark.sql.shuffle.partitions") == partsBefore,
+        s"$name left spark.sql.shuffle.partitions changed")
+      assert(!ckpts.isEmpty, s"$name started no streaming query")
+      ckpts.asScala.foreach { root =>
+        val dir = Paths.get(new org.apache.hadoop.fs.Path(root).toUri.getPath)
+        assert(!Files.exists(dir), s"$name left its checkpoint $dir")
+      }
+      // counted before the reference run: the foreachBatch queries
+      // return reads of staging dirs that a re-run overwrites
+      val got = df.count()
+      val expected = SparkEntry.queries(name)(s, sf).count()
+      assert(expected > 0, s"$name is empty — vacuous")
+      assert(got == expected,
+        s"$name's returned table lost rows once its sink view was dropped")
+    }
   }
 }
