@@ -17,25 +17,16 @@ import graft.plans.GraftFunctions
   */
 object Engine {
 
-  /** A correctly-configured session (UTC, AQE on, nanos-tolerant reads,
-    * native functions injected at build time). */
+  /** A correctly-configured session: `Harness.builder`'s shared confs,
+    * AQE on, native functions injected at build time. */
   def session(master: String = "local[*]", shufflePartitions: Int = 32,
               checksumFreeFs: Boolean = false): SparkSession = {
-    val b = SparkSession.builder()
+    val s = Harness.builder(checksumFreeFs)
       .master(master)
       .appName("graft-engine")
       .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-    // opt-in checksum-free FileContext for streaming checkpoints — see
-    // the rationale and the detection trade-off at Harness.session;
-    // default keeps Hadoop's checksummed local FS
-    if (checksumFreeFs)
-      b.config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-               "org.apache.hadoop.fs.local.RawLocalFs")
-    val s = b.getOrCreate()
+      .getOrCreate()
     GraftFunctions.ensure(s) // cover the getOrCreate-reuses-session case
     s
   }

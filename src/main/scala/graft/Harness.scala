@@ -8,10 +8,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (e.g. a new required session conf like the nanosAsLong fix) cannot
   * drift between the tools that all claim to measure the same way. */
 object Harness {
-  /** The driver-contract local session: local[$SPARK_GRAFT_CPUS],
-    * matching shuffle parallelism, UTC, nanos-tolerant parquet reads,
-    * no UI. (Native functions self-register on first use via
-    * GraftFunctions.ensure inside the queries that need them.)
+  /** The builder every session of this program starts from (Harness,
+    * Engine, the test session): UTC, nanos-tolerant parquet reads, no
+    * UI, and artifact isolation off.
+    *
+    * Artifact isolation is off because Spark keys its generated-code
+    * cache (`CodeGenerator.cache`) by the task thread's context class
+    * loader as well as the code. With isolation on, every
+    * `newSession()` and every streaming query's cloned session runs its
+    * tasks under a new per-session executor class loader, so code
+    * already compiled in the JVM is compiled again. This program adds
+    * no per-session artifact (no `addArtifact`, `addJar` or `ADD JAR`),
+    * so isolation only costs the recompiles.
     *
     * `checksumFreeFs` (TIMING sessions only — Bench/TimeOne/AnnBench):
     * rebinds file:'s AbstractFileSystem to RawLocalFs so FileContext
@@ -28,18 +36,28 @@ object Harness {
     * is untouched either way (FileSystem API, fs.file.impl key); a
     * production deployment points checkpoints at HDFS/S3, whose
     * AbstractFileSystem carries its own integrity story. */
-  def session(checksumFreeFs: Boolean = false): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  def builder(checksumFreeFs: Boolean = false): SparkSession.Builder = {
     val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.artifact.isolation.enabled", "false")
     if (checksumFreeFs)
       b.config("spark.hadoop.fs.AbstractFileSystem.file.impl",
                "org.apache.hadoop.fs.local.RawLocalFs")
-    val s = b.getOrCreate()
+    b
+  }
+
+  /** The driver-contract local session: the shared `builder` at
+    * local[$SPARK_GRAFT_CPUS] with matching shuffle parallelism.
+    * (Native functions self-register on first use via
+    * GraftFunctions.ensure inside the queries that need them.) */
+  def session(checksumFreeFs: Boolean = false): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val s = builder(checksumFreeFs)
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

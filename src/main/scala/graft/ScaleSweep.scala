@@ -23,10 +23,10 @@ package graft
   * cache key, same JVM/context) so the measured time is the full
   * replay + stateful pipeline, which is the part whose scaling matters.
   *
-  * Usage: `runMain graft.ScaleSweep [small] [big:ratio[,big:ratio...]]
-  * [onlyCsv|-] [outFile]` — e.g.
+  * Usage: `runMain graft.ScaleSweep <small> <big:ratio[,big:ratio...]>
+  * <onlyCsv|-> <outFile>` — e.g.
   * `runMain graft.ScaleSweep /root/testdata/sf0.1
-  *  target/sf1:10,target/sf3:30 - SCALE_r10.json`.
+  *  target/sf1:10,target/sf3:30 - target/scale.json`.
   * A query subset (3rd arg) re-measures only those queries; untouched
   * rows carry over from the existing outFile.
   *
@@ -227,15 +227,15 @@ object ScaleSweep {
     } catch { case _: Throwable => Map.empty }
 
   def main(args: Array[String]): Unit = {
-    val small = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
+    require(args.length == 4,
+      "usage: ScaleSweep <small> <big:ratio[,big:ratio...]> <onlyCsv|-> <outFile>")
+    val small = args(0)
     val decadeSpecs: Seq[(String, Double)] =
-      (if (args.length > 1) args(1) else "target/sf1:10")
-        .split(",").toSeq.map { s =>
-          val Array(d, r) = s.split(":"); (d, r.toDouble) }
+      args(1).split(",").toSeq.map { s =>
+        val Array(d, r) = s.split(":"); (d, r.toDouble) }
     val only: Set[String] =
-      if (args.length > 2 && args(2) != "-")
-        args(2).split(",").map(_.trim).toSet else Set.empty
-    val outFile = if (args.length > 3) args(3) else "SCALE_r10.json"
+      if (args(2) != "-") args(2).split(",").map(_.trim).toSet else Set.empty
+    val outFile = args(3)
     def selected(q: String) = only.isEmpty || only(q)
     val spark = Harness.session(checksumFreeFs = true)
 

@@ -3031,4 +3031,28 @@ class StreamingSpec extends AnyFunSuite {
         s"$name's returned table lost rows once its sink view was dropped")
     }
   }
+
+  test("Generated code compiles once per JVM: re-running a streaming " +
+       "query, in its own or a fresh child session, compiles no class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def run(c: org.apache.spark.sql.SparkSession, name: String): Unit =
+      assert(SparkEntry.queries(name)(c, sf).collect().nonEmpty,
+        s"$name is empty — vacuous")
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val c1 = s.newSession()
+    run(c1, "s3_session")
+    run(c1, "s1_tumbling")
+    val warm = compiles
+    // s3_session restarts its stream in the same child; s1_tumbling's
+    // same-child re-run would be served by Streams.coreCache, so it
+    // re-runs in the second child only
+    run(c1, "s3_session")
+    assert(compiles == warm,
+      s"re-running s3_session in its session compiled ${compiles - warm} classes")
+    val c2 = s.newSession()
+    run(c2, "s3_session")
+    run(c2, "s1_tumbling")
+    assert(compiles == warm,
+      s"a fresh session compiled ${compiles - warm} classes")
+  }
 }

@@ -7,13 +7,10 @@ object TestSpark {
   val Sf = "/root/testdata/sf0.001"
 
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val s = Harness.builder()
       .master("local[8]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
