@@ -88,12 +88,12 @@ object GenScale {
       .drop("cp"), "lineitem")
 
     // events: raw read passes ts through in whatever physical type the
-    // source generation used (int64 nanos under the legacy conf, or
-    // TIMESTAMP_NTZ for the current TIMESTAMP_MICROS data) — the
-    // synthesized copy keeps the same type, and Tables.events normalizes
-    // at load. Interleaved ids keep the table ts-ordered in event_id
-    // order (the Replayer's contiguous-id batch split requires it).
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // source generation used (int64 nanos under Harness.builder's
+    // legacy `nanosAsLong` conf, or TIMESTAMP_NTZ for the current
+    // TIMESTAMP_MICROS data) — the synthesized copy keeps the same type,
+    // and Tables.events normalizes at load. Interleaved ids keep the
+    // table ts-ordered in event_id order (the Replayer's contiguous-id
+    // batch split requires it).
     val ev = s.read.parquet(s"$src/events.parquet")
     write(fan(ev, n)
       .withColumn("event_id", col("event_id") * n + col("cp"))

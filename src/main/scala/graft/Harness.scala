@@ -10,7 +10,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Harness {
   /** The builder every session of this program starts from (Harness,
     * Engine, the test session): UTC, nanos-tolerant parquet reads, no
-    * UI, and artifact isolation off.
+    * UI, artifact isolation off, and a 1000-class generated-code cache.
     *
     * Artifact isolation is off because Spark keys its generated-code
     * cache (`CodeGenerator.cache`) by the task thread's context class
@@ -20,6 +20,12 @@ object Harness {
     * already compiled in the JVM is compiled again. This program adds
     * no per-session artifact (no `addArtifact`, `addJar` or `ADD JAR`),
     * so isolation only costs the recompiles.
+    *
+    * The cache holds 1000 classes instead of Spark's 100 because it is a
+    * Guava cache of 4 segments that evict separately, and the segment of
+    * a class depends on the class loader's identity hash. At 100 entries
+    * a 25-entry segment can evict a class a warm run still uses, and
+    * which classes go differs from one JVM to the next.
     *
     * `checksumFreeFs` (TIMING sessions only — Bench/TimeOne/AnnBench):
     * rebinds file:'s AbstractFileSystem to RawLocalFs so FileContext
@@ -42,6 +48,7 @@ object Harness {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
     if (checksumFreeFs)
       b.config("spark.hadoop.fs.AbstractFileSystem.file.impl",
                "org.apache.hadoop.fs.local.RawLocalFs")

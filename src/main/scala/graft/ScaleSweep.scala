@@ -1,669 +1,122 @@
 package graft
 
-/** Scale sweep: time the engine's most expensive queries at multiple data
-  * scales (the shipped sf0.1 plus GenScale-derived 10× and 30× targets)
-  * and report the per-query, per-decade scaling exponent
+import org.apache.spark.sql.SparkSession
+
+/** Scale sweep: time the engine's most expensive queries at several data
+  * scales (a small dataset plus GenScale-derived ratio× targets) and
+  * report the per-query, per-decade scaling exponent
   * e = log(t_big / t_small) / log(ratio) — e ≈ 1 is linear scaling,
   * e ≈ 2 quadratic, e < 1 sublinear (fixed overhead amortizing out).
-  * Two decades (10×, 30×) distinguish "sublinear because fixed costs
-  * dominate" from "sublinear so far": an exponent that HOLDS across
-  * decades is evidence the asymptote is tame, one that climbs says the
-  * fixed costs are done amortizing.
+  * Two decades distinguish "sublinear because fixed costs dominate" from
+  * "sublinear so far": an exponent that holds across decades is evidence
+  * the asymptote is tame, one that climbs says the fixed costs are done
+  * amortizing.
   *
-  * Protocol per query and scale: 1 warm-up + 3 timed noop-sink runs,
-  * p50 (the BASELINE.md rule, via Harness.timed3). The warm-up also
-  * absorbs build-once artifacts so the timed runs measure the steady
-  * state the 100 TB story is about: replay fixtures (disk-cached),
-  * IVF/PQ codebooks (the index is a build-once artifact — timed runs
-  * measure SEARCH scaling, declared in the JSON), and JIT.
-  *
-  * Streaming queries would otherwise be served from the shared
-  * ingestion core (see Streams.sharedCore) after the first run; each
-  * timed run uses a FRESH child session (s.newSession() — new core
-  * cache key, same JVM/context) so the measured time is the full
-  * replay + stateful pipeline, which is the part whose scaling matters.
+  * One timing rule for every query and scale: one warm-up in the shared
+  * session, then the p50 of 3 noop-sink runs, each in a fresh
+  * `spark.newSession()` child. The warm-up absorbs replay fixtures
+  * (disk-cached), JVM-wide build-once artifacts (IVF/PQ codebooks, the
+  * cached BPE model) and JIT. A child session has its own key for the
+  * shared streaming ingestion core (Streams.sharedCore), so a streaming
+  * run measures the full replay + stateful pipeline.
   *
   * Usage: `runMain graft.ScaleSweep <small> <big:ratio[,big:ratio...]>
   * <onlyCsv|-> <outFile>` — e.g.
   * `runMain graft.ScaleSweep /root/testdata/sf0.1
   *  target/sf1:10,target/sf3:30 - target/scale.json`.
-  * A query subset (3rd arg) re-measures only those queries; untouched
-  * rows carry over from the existing outFile.
+  * `-` sweeps [[Queries]]; a comma-separated subset of registered query
+  * names sweeps only those, at every decade. outFile is rewritten from
+  * this run alone.
   *
-  * Output: one JSON line (stdout, first and last) + outFile. Per query:
+  * Output: one JSON line, on stdout and in outFile. Per query:
   * `{"small_sec":s,"decades":{"10":{"big_sec":b,"exponent":e},...}}`.
   */
 object ScaleSweep {
-  /** Batch queries — index/codebook training amortized by warm-up.
-    * r12 adds the heavies the r11 verdict named without 30× evidence:
-    * l39 (the composed 4-stage export), l34b (the self-tuning K dial —
-    * autoSplit grows K with the corpus, so the BIG runs measure the
-    * production setting end-to-end, training included in warm-up), and
-    * the new l40 BPE trainer (50 bounded pair-count rounds; per-round
-    * cost is the linear part, round count is corpus-independent). */
-  private val BatchQ = Seq(
+  /** The swept queries: corpus loops, ANN search, graph loops, joins and
+    * sinks, then the stateful streaming queries. */
+  val Queries: Seq[String] = Seq(
     "a8_percentile", "j8_asof", "j12_recursive",
     "l10_minhash_lsh", "l10b_minhash_tuned", "l22_dup_clusters",
     "l26_quality_resample", "l33_span_dedup", "l34_semantic_dedup",
     "l34b_semantic_autok", "l35_epoch_shards", "l39_corpus_export",
-    "l40_bpe_train", "l3f_ivfpq_topk", "l3g_ivfadc_topk",
-    // r12 late additions (measured via a subset run with carry-over):
-    // l42's paragraph shuffles, l43's bigram-vocab joins, l44's
-    // sketch-screened confirm, l8e's banded candidate join — l8e is
-    // the one whose candidate volume COULD grow superlinearly (band
-    // collisions), hence also on the watchlist below.
-    "l42_para_dedup", "l43_bigram_surprisal", "l44_heavy_hitters",
-    "l8e_image_neardup",
-    // r13 additions: l45's per-query candidate shuffle, l46's
-    // chunk-corpus BM25 (the chunk explode multiplies the token
-    // relation ~25% over l45's — the one new unknown, watchlisted),
-    // g1b's data-dependent round count (rounds are log-ish in scale,
-    // so the exponent prices rounds × per-round shuffle).
-    "l45_bm25_topk", "l46_passage_decon", "g1b_pagerank_conv",
-    // r13 second batch: g2's wedge volume is the one that COULD grow
-    // superlinearly (orientation bounds it — the measurement is the
-    // proof), g3 is rounds × linear shuffles, j14's name domain is
-    // fixed-size (expect e ≈ 0 — the blocking claim), j15 prices the
-    // bucketed write + exchange-free join, snk6 the double rewrite,
-    // a15 the two-phase mass aggregate.
-    "g2_triangles", "g3_labelprop", "j14_editdist_join", "j15_bucketed",
-    "snk6_compaction", "a15_weighted_median",
-    // w9's per-user ordered fold, l47's five n-gram scoring joins
-    "w9_seq_pattern", "l47_trigram_backoff",
-    // r14 additions: g4's frontier rounds × linear relaxation (round
-    // count = eccentricity, data-dependent — the measurement prices
-    // it), j16's dim-build windows + containment probe, w9b's per-user
-    // fold automaton, snk7's sorted rewrite + pruned read-back
+    "l40_bpe_train", "l40c_bpe_train_fresh", "l3f_ivfpq_topk",
+    "l3g_ivfadc_topk", "l42_para_dedup", "l43_bigram_surprisal",
+    "l44_heavy_hitters", "l8e_image_neardup", "l45_bm25_topk",
+    "l46_passage_decon", "g1b_pagerank_conv", "g2_triangles",
+    "g3_labelprop", "j14_editdist_join", "j15_bucketed", "snk6_compaction",
+    "a15_weighted_median", "w9_seq_pattern", "l47_trigram_backoff",
     "g4_bfs", "j16_scd2", "w9b_skip_pattern", "snk7_sorted_skip",
-    // r14 second batch: the l8e production dial — representative
-    // collapse (linear output) vs the pair listing whose 100× decade
-    // measured output-bound quadratic growth (see the l8e note) —
-    // and snk8's min/max pass + z-value range exchange + pruned probe
-    "l8f_image_dedup", "snk8_zorder_skip",
-    // g5's rounds × (frontier join + min merge) — like g4 the round
-    // count is data-dependent (weighted eccentricity), priced here —
-    // and src9's two-generation rewrite + footer-merged read
-    "g5_sssp", "src9_schema_evolution",
-    // r14 third batch: j17's partitioned write + DPP probe, snk9's
-    // two-version publish train, j8b's forward struct-aggregate
-    "j17_dpp", "snk9_snapshot_publish", "j8b_asof_forward",
-    // r19: l48's cost is its two ranker chains + a qid-keyed top-k
-    // join — the exponent prices the rankers (the fusion itself is
-    // top-k-sized, corpus-independent)
-    "l48_rrf_fusion",
-    // r16: snk10's copy-on-write merge — the touched-file probe scans
-    // one int64 column of the base, the rewrite is touched-set-sized;
-    // the exponent prices the probe scan + the range-clustered write
-    "snk10_merge")
-  /** Streaming queries — timed on fresh child sessions (full replay).
-    * r12 adds s13 (the incremental signature-index refresh — the
-    * per-batch index merge is the part whose scaling matters). */
-  private val StreamQ = Seq(
+    "l8f_image_dedup", "snk8_zorder_skip", "g5_sssp",
+    "src9_schema_evolution", "j17_dpp", "snk9_snapshot_publish",
+    "j8b_asof_forward", "l48_rrf_fusion", "snk10_merge",
     "s5_interval_join", "s5b_interval_left", "s5c_interval_full",
-    "s11_chained", "s13_sig_refresh",
-    // r14: the semi join's state budget (matched left rows drop
-    // immediately — the favorable variant of s5's), and s18's
-    // 1-row-per-user SCD2 maintainer (the cheapest stateful op)
-    "s17_semi_interval", "s18_scd2_stream", "s19_stream_snapshot",
-    // r13: the watermark-evicted heavy-hitter state — per-batch state
-    // rows scale with active users per window, the part that matters —
-    // and the drift monitor's histogram state (windows × types)
-    "s15_heavy_hitters", "s16_drift",
-    // r16 stateful additions: s20's O(pattern) DP state (the cheapest
-    // CEP state), s4b's one-tuple temporal-join state, s21's
-    // timer-per-view + pending-list budget (rate × window — the one
-    // whose state and timer volume grow with scale)
-    "s20_stream_pattern", "s4b_temporal_join", "s21_abandon_timer",
-    // r17: the watermark reorder buffer priced at scale — s21b stacks
-    // the buffer on the timer-heaviest fold (buffer rewrite + walking
-    // release timer + deadline timers), s18b buffers only the purchase
-    // substream (the filtered-watermark shape), s22b buffers EVERY
-    // event and emits per op (the output-bound variant). The buffer
-    // adds one ListState rewrite per key per batch; state high-water =
-    // rate × (trigger + delay) per key — the exponent prices exactly
-    // that extra RocksDB traffic on top of the wrapped folds' rows.
-    "s21b_abandon_ooo", "s18b_scd2_ooo", "s22b_cdc_ooo",
-    // s8d stacks the buffer on the trailing-window funnel state (the
-    // only reordered fold whose per-key state grows with rate × window
-    // on its own) — the exponent prices buffer + window-list together
-    "s8d_funnel_ooo",
-    // r18 (verdict task 5): the two unmeasured sextet members — s4c is
-    // the WORST-CASE buffer (every event buffers, not just purchases:
-    // the temporal join by definition probes on all events) and also
-    // emits one row per event (output-bound like s4b); s20b buffers
-    // everything but holds only O(pattern) fold state
-    "s4c_temporal_ooo", "s20b_pattern_ooo",
-    // r18: the chained multi-stateful junction — one CDC shuffle + one
-    // (window x grp) shuffle in a single IncrementalExecution; deltas
-    // are one row per op (output-bound like s4b) but the agg state is
-    // |open windows| x 10 groups, aggregate cardinality
-    "s22c_cdc_windowed",
-    // r19 additions: s29's (window × type)-keyed pane state under the
-    // 72 h outer watermark (state = open windows × types, purged at
-    // end + allowance; the refire fixture derivation rides the
-    // warm-up), s30's pane-end explosion (≤ 6× map-side rows
-    // collapsed by partial agg before the exchange — the exponent
-    // prices exactly that claim), s20e's trailing-window candidate
-    // lists with combination-volume output (the no-skip semantics),
-    // and s31's full replay + state-source read-back (the export is
-    // state-sized; the replay is the linear part)
-    "s29_allowed_lateness", "s30_cumulate", "s20e_all_matches",
-    "s31_state_export",
-    // s31b reads the timer registry on top of s31's read path; the
-    // replay (24 h abandonment) is the linear part, the export is
-    // pending-set-sized
-    "s31b_timer_export",
-    // s32's three-stateful chain: two agg shuffles at aggregate
-    // cardinality + a join over AGGREGATED rows — (windows × buckets)
-    // state, so the exponent prices the scans + map-side combines
-    "s32_window_join",
-    // r20 additions: s33's retract producer is output-bound BY
-    // CONTRACT (2 rows out per row in, 1 long of state per key — the
-    // exponent prices exactly that doubled emission); s33b stacks the
-    // (window × grp) agg on it (pairs map-side combine, agg state =
-    // aggregate cardinality); s32b/s32c are s32's budget with
-    // null-extension (no extra state — the exponent should track
-    // s32's); s34 is two replays through one agg (2× scan, aggregate
-    // state); s34b adds the coordinator (per-batch 2-row driver
-    // collect + window-aggregate staging — the exponent prices the
-    // staging re-reads, bounded by released-window cardinality); s35
-    // is per-batch |batch|·K map-side distances + a vec_id partial agg
-    // (index-sized snapshots; the quantizer trains once in the
-    // warm-up via centCache); s36 is a per-batch broadcast BHJ against
-    // KB control data (events never shuffle for the join); s20f is
-    // S20's budget with one more long of state (O(1)/event).
-    "s33_retract_stream", "s33b_retract_consumed",
-    "s32b_window_join_outer", "s32c_window_join_anti",
-    "s34_watermark_align", "s34b_idleness_dial",
+    "s11_chained", "s13_sig_refresh", "s17_semi_interval",
+    "s18_scd2_stream", "s19_stream_snapshot", "s15_heavy_hitters",
+    "s16_drift", "s20_stream_pattern", "s4b_temporal_join",
+    "s21_abandon_timer", "s21b_abandon_ooo", "s18b_scd2_ooo",
+    "s22b_cdc_ooo", "s8d_funnel_ooo", "s4c_temporal_ooo",
+    "s20b_pattern_ooo", "s22c_cdc_windowed", "s29_allowed_lateness",
+    "s30_cumulate", "s20e_all_matches", "s31_state_export",
+    "s31b_timer_export", "s32_window_join", "s33_retract_stream",
+    "s33b_retract_consumed", "s32b_window_join_outer",
+    "s32c_window_join_anti", "s34_watermark_align", "s34b_idleness_dial",
     "s35_index_refresh", "s36_lookup_join", "s20f_oneormore",
-    // the remaining TVF faces: semi drops matched left state
-    // immediately (the cheapest join-state shape), full outer holds
-    // both sides to eviction — both at aggregate cardinality
-    "s32d_window_join_semi", "s32e_window_join_full",
-    // the reordered producer stacks the trio's buffer (rate × delay
-    // per key) on S33's O(1) fold — output still 2× released ops
-    "s33c_retract_ooo")
+    "s32d_window_join_semi", "s32e_window_join_full", "s33c_retract_ooo")
 
-  private case class Row(smallSec: Double,
-                         decades: Map[String, (Double, Double)]) // ratio -> (big_sec, exponent)
-
-  /** Carry-over rows from the existing outFile (new multi-decade format
-    * ONLY — an old-format file yields nothing, loudly, instead of being
-    * silently discarded and overwritten). Jackson is on the Spark
-    * classpath. */
-  private def readExisting(path: String): Map[String, Row] =
-    try {
-      val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
-        java.nio.file.Files.readString(java.nio.file.Paths.get(path)))
-      val qs = root.get("queries")
-      import scala.jdk.CollectionConverters._
-      qs.fieldNames().asScala.map { q =>
-        val v = qs.get(q)
-        val decs = v.get("decades")
-        q -> Row(v.get("small_sec").asDouble,
-          decs.fieldNames().asScala.map { r =>
-            val d = decs.get(r)
-            r -> (d.get("big_sec").asDouble, d.get("exponent").asDouble)
-          }.toMap)
-      }.toMap
-    } catch {
-      case e: Throwable =>
-        System.err.println(
-          s"[scale] WARNING: no carry-over — $path unreadable or not in " +
-          s"the multi-decade format ($e); untouched queries will be " +
-          "ABSENT from the rewritten file")
-        Map.empty
+  /** The queries a subset argument selects: `-` is [[Queries]], anything
+    * else a comma-separated list of `SparkEntry.queries` names. A
+    * misspelled name fails here, before any session is built. */
+  private[graft] def select(onlyCsv: String): Seq[String] =
+    if (onlyCsv == "-") Queries
+    else {
+      val names = onlyCsv.split(",").map(_.trim).filter(_.nonEmpty).toSeq.distinct
+      val unknown = names.filterNot(SparkEntry.queries.contains)
+      require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
+      require(names.nonEmpty, s"no query named in '$onlyCsv'")
+      names
     }
 
-  /** The existing outFile's ratio→directory header, so carried rows'
-    * decade keys stay described when this run measures fewer decades. */
-  private def readExistingDecades(path: String): Map[String, String] =
-    try {
-      val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
-        java.nio.file.Files.readString(java.nio.file.Paths.get(path)))
-      val d = root.get("decades")
-      import scala.jdk.CollectionConverters._
-      d.fieldNames().asScala.map(r => r -> d.get(r).asText).toMap
-    } catch { case _: Throwable => Map.empty }
+  /** One warm-up in `spark`, then the p50 of 3 runs in fresh children. */
+  private def time(spark: SparkSession, q: String, dir: String): Double = {
+    val run = SparkEntry.queries(q)
+    Harness.timeOnce(run(spark, dir))
+    val p50 = Seq.fill(3)(Harness.timeOnce(run(spark.newSession(), dir))).sorted.apply(1)
+    System.err.println(f"[scale] $dir $q p50=$p50%.3f")
+    p50
+  }
 
   def main(args: Array[String]): Unit = {
     require(args.length == 4,
       "usage: ScaleSweep <small> <big:ratio[,big:ratio...]> <onlyCsv|-> <outFile>")
-    val small = args(0)
-    val decadeSpecs: Seq[(String, Double)] =
-      args(1).split(",").toSeq.map { s =>
-        val Array(d, r) = s.split(":"); (d, r.toDouble) }
-    val only: Set[String] =
-      if (args(2) != "-") args(2).split(",").map(_.trim).toSet else Set.empty
-    val outFile = args(3)
-    def selected(q: String) = only.isEmpty || only(q)
-    val spark = Harness.session(checksumFreeFs = true)
-
-    def ms(v: Double): String =
+    val Array(small, bigs, onlyCsv, outFile) = args
+    val qs = select(onlyCsv)
+    val decades: Seq[(String, Double)] = bigs.split(",").toSeq.map { s =>
+      val Array(d, r) = s.split(":"); (d, r.toDouble)
+    }.sortBy(_._2)
+    def num(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     def rkey(r: Double): String =
       if (r == r.floor) r.toLong.toString else r.toString
 
-    /** p50 of 3 after one warm-up for a driver-side thunk (the fresh
-      * BPE trainer — not a DataFrame, so Harness.timed3 cannot time
-      * it). */
-    def timedThunk3(f: => Unit): Double = {
-      f
-      Seq.fill(3) {
-        val t0 = System.nanoTime; f; (System.nanoTime - t0) / 1e9
-      }.sorted.apply(1)
-    }
-
-    def sweep(dir: String, qs: Seq[String]): Map[String, Double] = {
-      val batch = qs.filter(BatchQ.contains).map { q =>
-        val t = Harness.timed3(SparkEntry.queries(q)(spark, dir))(1)
-        System.err.println(f"[scale] $dir $q p50=$t%.3f")
-        q -> t
+    val spark = Harness.session(checksumFreeFs = true)
+    try {
+      val tSmall = qs.map(q => q -> time(spark, q, small)).toMap
+      val tBig = decades.map { case (d, _) => qs.map(q => q -> time(spark, q, d)).toMap }
+      val rows = qs.map { q =>
+        val decs = decades.zip(tBig).map { case ((_, r), t) =>
+          val e = math.log(t(q) / tSmall(q)) / math.log(r)
+          s""""${rkey(r)}":{"big_sec":${num(t(q))},"exponent":${num(e)}}"""
+        }
+        s""""$q":{"small_sec":${num(tSmall(q))},"decades":{${decs.mkString(",")}}}"""
       }
-      val stream = qs.filter(StreamQ.contains).map { q =>
-        SparkEntry.queries(q)(spark, dir).count() // fixture + JIT warm-up
-        val ts = Seq.fill(3) {
-          Harness.timeOnce(SparkEntry.queries(q)(spark.newSession(), dir))
-        }.sorted
-        System.err.println(f"[scale] $dir $q p50=${ts(1)}%.3f (fresh-session replays)")
-        q -> ts(1)
-      }
-      (batch ++ stream).toMap
-    }
-
-    val allQ = BatchQ ++ StreamQ
-    val tSmall = sweep(small, allQ.filter(selected))
-    // fresh-training rows measured OUTSIDE the DataFrame path (the
-    // l34-kdial idiom): small-scale numbers for thunk-timed extras
-    val extraSmall = scala.collection.mutable.Map[String, Double]()
-    if (selected("l40_bpe_train")) {
-      val t = timedThunk3(graft.llm.Bpe.trainFresh(spark, small))
-      System.err.println(f"[scale] $small l40 fresh-train p50=$t%.3f")
-      extraSmall("l40_bpe_train_fresh") = t
-    }
-
-    // measured: query -> ratio-key -> big_sec (plus the l34 K-dial rows,
-    // see below). Decade selection: every selected query runs at the
-    // FIRST decade; later (larger) decades run only the high-exponent
-    // watchlist unless the subset arg names others — the point of the
-    // second decade is confirming the worst exponents hold.
-    val watchlist = Set("j8_asof", "j12_recursive", "l10b_minhash_tuned",
-      "l33_span_dedup", "l3f_ivfpq_topk",
-      // r11 verdict task: the heavies needing a SECOND decade —
-      // l22's contraction rounds, l39's composed stages, l34b's dial
-      "l22_dup_clusters", "l39_corpus_export", "l34b_semantic_autok",
-      // r12: banded-hamming candidate volume is the one new unknown
-      "l8e_image_neardup",
-      // r13: chunk-corpus BM25 candidate volume needs the second decade,
-      // as does g2's oriented wedge volume
-      "l46_passage_decon", "g2_triangles",
-      // r14: the l8e production dial rides every decade the pair
-      // listing does, so the two rows stay comparable
-      "l8f_image_dedup",
-      // r17 (verdict task 5): l47's 10×→30× marginal exponent (≈1.18)
-      // carries the same vocabulary-saturation fingerprint l43 showed
-      // before rolling over — the 100× decade decides
-      "l47_trigram_backoff")
-    val measured = scala.collection.mutable.Map[String, scala.collection.mutable.Map[String, (Double, Double)]]()
-    def record(q: String, ratio: Double, sSec: Double, bSec: Double): Unit =
-      measured.getOrElseUpdate(q, scala.collection.mutable.Map.empty)
-        .update(rkey(ratio), (bSec, math.log(bSec / sSec) / math.log(ratio)))
-
-    decadeSpecs.zipWithIndex.foreach { case ((big, ratio), i) =>
-      val qs = allQ.filter(selected).filter(q => i == 0 || watchlist(q) || only(q))
-      sweep(big, qs).foreach { case (q, b) => record(q, ratio, tSmall(q), b) }
-      // the l34 production dial, measured: at the big scale, grow K with
-      // the corpus (split = ratio → K = 10·ratio cells) so |cell| matches
-      // the small scale's. small_sec is the canonical K=10 small run —
-      // the exponent is the end-to-end cost of "N× data at N× K", the
-      // claim the fixed-K superlinear note defers to.
-      if (qs.contains("l34_semantic_dedup")) {
-        val split = math.max(2, math.round(ratio).toInt)
-        val t = Harness.timed3(
-          graft.llm.Llm.semanticDedup(spark, big, split))(1)
-        System.err.println(f"[scale] $big l34 kdial split=$split p50=$t%.3f")
-        record("l34_semantic_dedup_kdial", ratio,
-          tSmall("l34_semantic_dedup"), t)
-      }
-      if (qs.contains("l40_bpe_train")) {
-        val t = timedThunk3(graft.llm.Bpe.trainFresh(spark, big))
-        System.err.println(f"[scale] $big l40 fresh-train p50=$t%.3f")
-        record("l40_bpe_train_fresh", ratio,
-          extraSmall("l40_bpe_train_fresh"), t)
-      }
-      // r17 (verdict task 5): g2 with shuffle partitions ∝ data — the
-      // rows/partition dial the r16 adjudication blamed for the 30×
-      // marginal e≈1.6 (a 1.23B-row wedge join spilling through the
-      // fixed-32-partition local harness). Constant rows/partition
-      // (32 at 1× → 32·ratio at ratio×) is exactly what a cluster
-      // provides; small_sec stays the canonical 32-partition run so
-      // the exponent prices "N× data at N× partitions".
-      if (qs.contains("g2_triangles")) {
-        val parts = math.max(32, math.round(32 * ratio).toInt)
-        val child = spark.newSession()
-        child.conf.set("spark.sql.shuffle.partitions", parts.toString)
-        val t = Harness.timed3(
-          SparkEntry.queries("g2_triangles")(child, big))(1)
-        System.err.println(
-          f"[scale] $big g2 scaledparts=$parts p50=$t%.3f")
-        record("g2_triangles_scaledparts", ratio,
-          tSmall("g2_triangles"), t)
-      }
-      // r19: l48's production face — a FIXED query suite over a
-      // growing corpus: qmod scaled with the ratio keeps the query
-      // COUNT at the small scale's (~30), so the exponent prices
-      // rankers-linear corpus growth. The unscaled row keeps %17
-      // (queries grow WITH the corpus), which squares the brute-force
-      // dense side by construction — the declared small-corpus face
-      // (the IVF family l3f/l3g is the priced dense scale path).
-      if (qs.contains("l48_rrf_fusion")) {
-        val qmod = 17L * math.round(ratio)
-        val t = Harness.timed3(
-          graft.llm.Retrieval.rrfFusion(spark, big, qmod))(1)
-        System.err.println(f"[scale] $big l48 fixedq qmod=$qmod p50=$t%.3f")
-        record("l48_rrf_fusion_fixedq", ratio, tSmall("l48_rrf_fusion"), t)
-      }
-      // r19 (verdict task 6): the j8b broadcast-threshold dial,
-      // MEASURED — the one documented-but-unmeasured scale note: at
-      // 30× the orders self-join's build side outgrows the default
-      // 10 MB autoBroadcastJoinThreshold and the plan flips BHJ→SMJ,
-      // sorting wide rows (marginal e ≈ 1.6). The documented dial is
-      // raising the threshold while the key-space-sized build fits
-      // executor memory (512 MB here; the 3-column orders projection
-      // at 30× is ~10⁷ rows ≈ 10² MB). small_sec stays the canonical
-      // default-threshold run, so the exponent prices "N× data with
-      // the dial turned" — the claim under test.
-      if (qs.contains("j8b_asof_forward")) {
-        val child = spark.newSession()
-        child.conf.set("spark.sql.autoBroadcastJoinThreshold",
-          (512L * 1024 * 1024).toString)
-        val t = Harness.timed3(
-          SparkEntry.queries("j8b_asof_forward")(child, big))(1)
-        System.err.println(f"[scale] $big j8b bcastdial p50=$t%.3f")
-        record("j8b_asof_forward_bcastdial", ratio,
-          tSmall("j8b_asof_forward"), t)
-      }
-    }
-
-    // Carry-over is WHOLE-ROW and subset-only: an unselected query keeps
-    // its existing (small_sec, decades) verbatim; a re-measured query's
-    // row is built ONLY from this run's measurements (a carried big_sec
-    // paired with a fresh small_sec would publish an exponent
-    // inconsistent with the numbers beside it). A full run carries
-    // nothing — every published number is from this build.
-    val carried: Map[String, Row] =
-      if (only.isEmpty) Map.empty else readExisting(outFile)
-    val order = BatchQ.flatMap(q =>
-      if (q == "l34_semantic_dedup") Seq(q, "l34_semantic_dedup_kdial")
-      else if (q == "l40_bpe_train") Seq(q, "l40_bpe_train_fresh")
-      else if (q == "g2_triangles") Seq(q, "g2_triangles_scaledparts")
-      else if (q == "j8b_asof_forward") Seq(q, "j8b_asof_forward_bcastdial")
-      else if (q == "l48_rrf_fusion") Seq(q, "l48_rrf_fusion_fixedq")
-      else Seq(q)) ++ StreamQ
-    val rows = order.flatMap { q =>
-      val base = if (q.endsWith("_kdial")) "l34_semantic_dedup"
-        else if (q == "g2_triangles_scaledparts") "g2_triangles"
-        else if (q == "j8b_asof_forward_bcastdial") "j8b_asof_forward"
-        else if (q == "l48_rrf_fusion_fixedq") "l48_rrf_fusion"
-        else q
-      val fresh: Option[(Double, Map[String, (Double, Double)])] =
-        tSmall.get(base).orElse(extraSmall.get(q)).map(s =>
-          (s, measured.getOrElse(q, scala.collection.mutable.Map.empty).toMap))
-      val row: Option[(Double, Map[String, (Double, Double)])] =
-        fresh.orElse(carried.get(q).map(r => (r.smallSec, r.decades)))
-      row.filter(_._2.nonEmpty).map { case (s, decs) =>
-        val dJson = decs.toSeq.sortBy(_._1.toDouble).map { case (r, (b, e)) =>
-          s""""$r":{"big_sec":${ms(b)},"exponent":${ms(e)}}""" }.mkString(",")
-        s""""$q":{"small_sec":${ms(s)},"decades":{$dJson}}"""
-      }
-    }
-    // Shape notes for the exponents a reader will ask about — the
-    // explanation ships with the measurement so adjudication needs no
-    // code spelunking. l34 is the one DESIGNED superlinear at fixed K.
-    val notes = Seq(
-      "g2_triangles" ->
-        ("SECOND decade adjudicated (r16): marginal 10x->30x e~1.6 is " +
-         "NOT the algorithm - the intermediate is measured LINEAR " +
-         "(DuckDB: edges x30.0, oriented wedges x30.0, 41.1M -> 1.23B " +
-         "- GenScale preserves the degree distribution, so the " +
-         "orientation bound holds). The cost is the fixed-32-partition " +
-         "local harness hitting memory pressure on the 1.23B-row wedge " +
-         "join: OOM at 8g, needed SPARK_DRIVER_MEM=64g, per-wedge cost " +
-         "87ns -> 167ns (spill/GC). At cluster scale partitions scale " +
-         "with data - rows/partition is the dial, not the join shape"),
-      "j8b_asof_forward" ->
-        ("r19 re-adjudication (exclusive subset run, fresh GenScale " +
-         "data): the r16 superlinear reading (30x 27.6s, marginal " +
-         "e~1.6) does NOT reproduce - 30x now measures 8.9s, e 0.626 " +
-         "(10x) -> 0.575 (30x), marginal e~0.47: ROLLED OVER. The " +
-         "BHJ->SMJ plan flip itself is real and re-verified (default " +
-         "30x = 1 SortMergeJoin, 512m threshold = 1 " +
-         "BroadcastHashJoin), but the SMJ is not the bottleneck the " +
-         "old row said: the 27.6s was a full-sweep carry-over " +
-         "(same-JVM memory pressure from preceding heavies - the " +
-         "contention signature the r18 verdict documented for the " +
-         "driver bench capture). j8b leaves the watchlist"),
-      "l48_rrf_fusion" ->
-        ("queries grow WITH the corpus by construction (qid = doc_id " +
-         "% 17), so the brute-force dense side does ratio-squared " +
-         "dot products - the declared small-corpus face; see " +
-         "l48_rrf_fusion_fixedq for the production shape and l3f/l3g " +
-         "for the priced dense scale path"),
-      "l48_rrf_fusion_fixedq" ->
-        ("r19: the production face - qmod scaled with the ratio holds " +
-         "the query count at the small scale's ~30, so the exponent " +
-         "prices a FIXED eval/RAG suite over a growing corpus " +
-         "(rankers-linear; fusion itself is top-k-sized and " +
-         "corpus-independent)"),
-      "s29_allowed_lateness" ->
-        ("keys are (window x type) - SPAN-dependent, not row-dependent " +
-         "(10x density rides the same 30-day span), so per-batch fixed " +
-         "costs dominate and the exponent is near-zero: the best " +
-         "scaling shape a stateful op can have. Measured exclusively " +
-         "(the first capture ran after l48's heavy runs in one JVM and " +
-         "read 2x high - the r18 contention signature)"),
-      "j8b_asof_forward_bcastdial" ->
-        ("r19 (verdict task 6): the broadcast-threshold dial " +
-         "MEASURED and ADJUDICATED AGAINST - " +
-         "autoBroadcastJoinThreshold=512m keeps both sides BHJ at " +
-         "every decade (plan-verified), and it is mildly faster at " +
-         "10x (4.40 vs 5.32) but SLOWER at 30x (12.35 vs 8.90, " +
-         "marginal e~0.94): broadcasting the ~1e7-row build costs " +
-         "more than the sort it avoids once the build is 1e2 MB. The " +
-         "claim 'raise the threshold while the build fits' is hereby " +
-         "retired for this shape - the default planner choice (SMJ " +
-         "past the threshold) is the right one, and no dial is " +
-         "needed because the default already scales sublinearly (see " +
-         "j8b_asof_forward)"),
-      "l47_trigram_backoff" ->
-        ("r17 100x decade closes the watchlist: marginal exponents " +
-         "0.71 (1->10x), 1.04 (10->30x), 0.52 (30->100x) - the " +
-         "vocabulary-saturation exponent ROLLS OVER exactly like its " +
-         "l43 bigram core did (distinct trigram vocabulary saturates, " +
-         "so the vocab-sized join sides stop growing while the corpus " +
-         "keeps scaling); overall e at 100x = 0.74, sublinear. The " +
-         "10->30x e~1.18 seen in r16 was the pre-saturation regime, " +
-         "not an asymptote"),
-      "g2_triangles_scaledparts" ->
-        ("r17 verdict task 5: g2 with shuffle partitions proportional " +
-         "to data (32 at 1x -> 320 at 10x -> 960 at 30x; constant " +
-         "rows/partition - what a cluster provides). Marginal " +
-         "10->30x e = 0.91, overall 30x e = 0.94 - confirming the " +
-         "r16 adjudication that the canonical row's superlinearity " +
-         "was rows/partition memory pressure, not the join shape"),
-      "j15_bucketed" ->
-        ("e ~ 0.97 - LINEAR by construction and the right reading: " +
-         "j15 prices the bucketed WRITE of both sides (10x data -> " +
-         "10x write) plus the exchange-free join; the write is the " +
-         "one-time layout investment, the exchange-free join is the " +
-         "recurring payoff (PlanSpec pins zero Exchange in the joined " +
-         "plan)"),
-      "j14_editdist_join" ->
-        ("NEGATIVE exponent (0.60 s -> 0.41 s): the name domain is " +
-         "fixed-size (part names draw from a bounded vocabulary), so " +
-         "the blocked candidate space is scale-invariant and the 10x " +
-         "run merely amortizes fixed costs better - the blocking " +
-         "claim, now measured"),
-      "s16_drift" ->
-        ("e ~ 0: the drift compare runs on aggregate cardinality " +
-         "(closed windows x event types - scale-invariant here) and " +
-         "the streaming stage is per-batch-fixed-cost dominated (the " +
-         "s5-family shape)"),
-      "s21_abandon_timer" ->
-        ("e ~ 0.6, the steepest of the r16 stateful additions and " +
-         "OUTPUT-bound by construction: nearly every view is abandoned " +
-         "in this corpus (purchases are rare), so emissions ~ views and " +
-         "one timer registers per view - both linear in data; the " +
-         "sub-linear first decade is the replay's per-batch fixed cost " +
-         "amortizing, and linear is the asymptote (the timer sweep is " +
-         "range-scanned per batch, O(fired) not O(registered))"),
-      "s4c_and_s20b" ->
-        ("r18 closes the sextet's scale story: the two previously " +
-         "unmeasured members measure e~0.5 (s4c) and e~0.43 (s20b) " +
-         "at 10x - inside the sextet's 0.33-0.60 range. s4c is the " +
-         "WORST-CASE buffer (every event buffers - the temporal join " +
-         "probes on all events - and emits one row per event, the " +
-         "output-bound s4b shape) and still holds sublinear at 10x; " +
-         "its 30x marginal e~1.18 is the fixed-parallelism shape, " +
-         "MEASURED away (see the s4c_temporal_ooo note): re-running " +
-         "the 30x point at STREAM_PARTITIONS=8 instead of the " +
-         "r6-swept 2 drops 40.6 -> 18.6 s = overall e~0.51, the 10x " +
-         "exponent exactly - per-partition RocksDB volume, not the " +
-         "buffer algorithm; the buffer volume itself is rate x " +
-         "(trigger + delay) per key, so 10x rate at the same key " +
-         "count degrades to RocksDB, not to a changed asymptote"),
-      "ooo_reorder_buffer" ->
-        ("s21b/s18b/s22b price the watermark reorder buffer at scale " +
-         "on the disordered ooo replay: the buffer adds one RocksDB " +
-         "ListState rewrite per key per batch plus a walking release " +
-         "timer (O(keys x batches) timer traffic, not O(events)); " +
-         "buffered volume is rate x (trigger + delay) per key, so the " +
-         "expected shape is the wrapped fold's exponent plus a " +
-         "near-constant buffer overhead - s22b is the output-bound " +
-         "one (a delta row per op, like s4b's per-event emission)"),
-      "s20_and_s4b" ->
-        ("s20 e ~ 0.15 (O(pattern) state, per-event work constant - " +
-         "the s5-family fixed-cost shape); s4b e ~ 0.46 (one Scd2State " +
-         "tuple per user, per-event O(1), but OUTPUT is one row per " +
-         "event - the emission volume, not the state, is the linear " +
-         "term)"),
-      "snk10_merge" ->
-        ("e ~ 0.2: the touched-file probe is a column-pruned scan of " +
-         "one int64 column and the rewrite is touched-set-sized (the " +
-         "recent-skewed delta keeps that a constant fraction of " +
-         "files); the production dial - manifest-persisted per-file " +
-         "(min,max) key stats - removes even the probe scan"),
-      "g1b_pagerank_conv" ->
-        ("second decade (r16, both decades re-measured in ONE clean " +
-         "session): 13.6 s -> 33.8 s (10x, e=0.40) -> 44.2 s (30x, " +
-         "e=0.35; marginal 10x->30x e~0.25) - monotone and SUBLINEAR, " +
-         "so the r14 capture's 56 s at 10x was contention (the r14/r15 " +
-         "bench era's known machine-state inflation), not a plan flip: " +
-         "per-round cost is one contribution shuffle + a 1-row dangling-" +
-         "mass collect, rounds grow only with convergence depth (weakly " +
-         "with scale), and per-round fixed costs still dominate at 30x " +
-         "- the asymptote is rounds x linear shuffle, with the " +
-         "documented dial being per-round partition count at cluster " +
-         "frontiers"),
-      "l40_bpe_train" ->
-        ("the trained model is a build-once artifact cached per corpus " +
-         "fingerprint (the IVF-codebook contract), so this row measures " +
-         "the model-READ path the warm-up leaves behind; the " +
-         "l40_bpe_train_fresh row bypasses the cache and measures the " +
-         "50 training rounds themselves - per-round cost is the " +
-         "corpus-linear pair-count aggregation, round count is " +
-         "corpus-independent"),
-      "l34b_semantic_autok" ->
-        ("K tracks the corpus (split = n/2000), so assignment work is " +
-         "n*K compares - quadratic asymptotically, but since the r12 " +
-         "rewrite it runs as a MAP-SIDE batched kernel over broadcast " +
-         "centroids (tight integer loop, repartitioned for core " +
-         "parallelism): the earlier cross-join+groupBy shape " +
-         "materialized the n*K relation and cost 146 s at 30x, vs ~3 s " +
-         "at 10x now; past flat-broadcast index sizes (K ~ 1e5+) the " +
-         "kernel walks a two-level coarse/fine centroid tree - same " +
-         "shape, n*O(sqrt K) compares"),
-      "l34_semantic_dedup" ->
-        ("superlinear BY DESIGN at fixed K: intra-cell pairwise is " +
-         "sum C(|cell|,2) ~ N^2/K with K=10 pinned for oracle " +
-         "determinism; the production dial grows K with N so |cell| " +
-         "and per-cell cost stay constant (Llm.semanticDedup scaladoc)" +
-         " - the _kdial row MEASURES that dial: same big corpus at " +
-         "split=ratio (K = 10*ratio cells, |cell| matching the small " +
-         "scale), exponent vs the canonical K=10 small run"),
-      "s5_family_and_s11" ->
-        ("e ~ 0.2: the 5-file replay's fixed per-micro-batch cost " +
-         "(WAL writes, planning, state-store commits) dominates both " +
-         "scales; per-row state work grows linearly but stays small " +
-         "at 1M rows - at cluster scale batch count, not batch size, " +
-         "is the fixed term"),
-      "j12_recursive" ->
-        ("first decade e ~ 0.5 is per-level UnionLoop machinery " +
-         "amortizing; the SECOND decade (10x->30x marginal e ~ 1.1) " +
-         "is the true asymptote - level count is scale-invariant " +
-         "(max orders-per-customer) and each level does frontier-" +
-         "linear work, so the walk is LINEAR in data once fixed " +
-         "costs are paid; the documented dial raises loop " +
-         "partitions with frontier size"),
-      "l8e_image_neardup" ->
-        ("OUTPUT-BOUND superlinear at the third decade: the synthetic " +
-         "corpus saturates the 64-bit blockhash's effective entropy " +
-         "(600k images collapse onto 49k distinct hashes), so " +
-         "hamming-0 pairs ALONE are 13.6M ~ n^2/distinct - the " +
-         "radius-3 pair RELATION is quadratic in size and no candidate " +
-         "scheme can beat its own output (exact-dup text groups are " +
-         "<= 2, so this is hash-entropy saturation, not corpus " +
-         "duplication). The r12 plan (distinct on raw candidates + two " +
-         "hash re-joins) measured 141 s / marginal e ~ 2.5 at 100x; " +
-         "the r14 rewrite verifies map-side on the band join output " +
-         "(candidates never shuffle) - 16.7 s at 100x, marginal ~ 1.7, " +
-         "the residue being the output itself. The asymptote dial is " +
-         "the l8f row: production consumes near-dup as a " +
-         "representative collapse (one row per image, linear), listing " +
-         "pairs only within cluster-sized working sets"),
-      "l33_span_dedup" ->
-        ("10x->30x marginal e ~ 0.9: the span stream is one row per " +
-         "token position, so linear IS the algorithm's asymptote; " +
-         "the sub-linear first decade was scan/shuffle fixed cost " +
-         "amortizing"),
-      "l10_minhash_lsh" ->
-        ("e ~ 0: the canonical check is slice-bounded (doc_id < 1000" +
-         ", constant work at both scales) - l10b, unbounded, is the " +
-         "scaling measurement for MinHash-LSH"),
-      "j16_scd2" ->
-        ("30x runs FASTER than 10x (verified plan diff, the j8_asof " +
-         "pattern): at 10x both the version-probe and the fact-orders " +
-         "join still fit the broadcast threshold and run as " +
-         "BroadcastHashJoins (broadcast build + per-probe containment " +
-         "residual); at 30x both flip to better-parallelized " +
-         "SortMergeJoins - the flip a real cluster would also make"),
-      "j8_asof" ->
-        ("30x runs FASTER than 10x (verified plan diff, not noise): at " +
-         "10x the 1.5M-row orders side still fits the broadcast " +
-         "threshold and the as-of pre-join runs as a conditional " +
-         "BroadcastHashJoin (broadcast build + per-probe order-list " +
-         "scan); at 30x it crosses the threshold and flips to a " +
-         "better-parallelized SortMergeJoin - the flip a real cluster " +
-         "would also make, and the reason single-point exponents need " +
-         "the second decade"))
-      .map { case (k, v) => s""""$k":"$v"""" }.mkString("{", ",", "}")
-    // this run's specs win; keys only present in the carried file stay
-    // described so carried rows' decade entries keep their provenance
-    val decadesDesc =
-      (if (carried.nonEmpty) readExistingDecades(outFile) else Map.empty[String, String])
-        .++(decadeSpecs.map { case (d, r) => rkey(r) -> d })
-        .toSeq.sortBy(_._1.toDouble)
-        .map { case (r, d) => s""""$r":"$d"""" }.mkString("{", ",", "}")
-    val line =
-      s"""{"metric":"scale_sweep","small":"$small","decades":$decadesDesc,""" +
-      s""""protocol":"p50 of 3 after warm-up; streaming replays on fresh child sessions; """ +
-      s"""index build (IVF/PQ codebooks) amortized by warm-up - timed runs measure search; """ +
-      s"""larger decades re-measure the high-exponent watchlist",""" +
-      s""""queries":{${rows.mkString(",")}},"notes":$notes}"""
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(outFile), line)
-    catch { case e: Throwable => System.err.println(s"[scale] write failed: $e") }
-    println(line)
-    spark.stop()
+      val decadesDesc = decades.map { case (d, r) => s""""${rkey(r)}":"$d"""" }
+      val line =
+        s"""{"metric":"scale_sweep","small":"$small","decades":{${decadesDesc.mkString(",")}},""" +
+        s""""protocol":"per query and scale: 1 warm-up in the shared session, then p50 of """ +
+        s"""3 noop-sink runs, each in a fresh child session",""" +
+        s""""queries":{${rows.mkString(",")}}}"""
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), line)
+      println(line)
+    } finally spark.stop()
   }
 }

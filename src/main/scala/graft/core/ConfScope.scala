@@ -13,14 +13,6 @@ import org.apache.spark.sql.SparkSession
 object ConfScope {
   private val lock = new Object
 
-  /** Validated positive-int env knob (error names the variable). */
-  def envInt(name: String, default: String): String = {
-    val raw = sys.env.getOrElse(name, default)
-    require(scala.util.Try(raw.toInt).toOption.exists(_ > 0),
-      s"$name must be a positive int, got '$raw'")
-    raw
-  }
-
   /** Measured-size broadcast gate (r21, optimization guide §3.1): the
     * iterative loops (graph family, CC) carry checkpointed relations
     * whose PRESERVED stats are join-product estimates that grow per

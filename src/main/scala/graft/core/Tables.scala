@@ -15,13 +15,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // events may ship as legacy TIMESTAMP(NANOS), which the reader rejects
-    // at SCHEMA INFERENCE without this conf — set it before the read so a
-    // direct t(..., "events") reaches the named-column drift diagnosis
-    // below instead of dying with PARQUET_TYPE_ILLEGAL (order-dependent
-    // on which loader ran first otherwise)
-    if (name == "events")
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // legacy TIMESTAMP(NANOS) events read as a nanos Long (not a
+    // PARQUET_TYPE_ILLEGAL failure) because every session is built with
+    // `nanosAsLong` on (Harness.builder); eventsRaw normalizes the type
     val df = spark.read.parquet(s"$dir/$name.parquet")
     Schemas.assertMatches(name, df.schema) // fail fast on testdata drift (§1.3)
     df
@@ -40,7 +36,6 @@ object Tables {
   private def eventsRaw(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = t(s, d, "events")
     raw.schema("ts").dataType match {
       case LongType         => // legacy TIMESTAMP(NANOS) read as nanos Long

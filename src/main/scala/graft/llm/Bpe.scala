@@ -103,12 +103,12 @@ object Bpe {
     cache.computeIfAbsent(key, _ => trainUncached(s, d))
   }
 
-  /** Cache-bypassing trainer, backing ScaleSweep's
-    * `l40_bpe_train_fresh` row and the `l40c_bpe_train_fresh` bench
+  /** Cache-bypassing trainer, backing the `l40c_bpe_train_fresh`
     * query: the cached l40 row measures the model-read path (training
     * is a build-once artifact by the centCache contract); this measures
     * the 50 training rounds themselves, which is the part whose corpus
-    * scaling matters. */
+    * scaling matters (e 0.12 at 10×, the `l40_bpe_train_fresh` row of
+    * SCALE_r19.json). */
   private[graft] def trainFresh(s: SparkSession, d: String): Model =
     trainUncached(s, d)
 

@@ -51,6 +51,11 @@ object Cluster {
     * the graph family's NodeRowBytes convention). */
   private val RowBytes = 32L
 
+  /** Shuffle width of the phase-2 CC loop (see connectedComponents). At
+    * cluster scale this would be O(cores): it bounds per-round tasks,
+    * not correctness. */
+  private val LoopPartitions = "2"
+
   /** Connected components of `edges` (d1, d2) over `nodes` (node):
     * returns (node, label) where label = min node id of the component.
     * Isolated nodes label themselves. Deterministic: min is
@@ -59,14 +64,12 @@ object Cluster {
     * Phase 1 — the edge-pipeline materialization, the full-|E|
     * contraction groupBy and the corpus-sized joins — runs at the
     * caller's full shuffle width. Only the phase-2 loop runs narrow
-    * (SPARK_GRAFT_CC_PARTITIONS, default 2): each round is 4–5 shuffle
-    * stages over the CONTRACTED relation, which is orders of magnitude
-    * smaller than the corpus, so per-task launch overhead dominates at
-    * the default width — the same trade the streaming runs make, under
-    * the same shared ConfScope lock. Safe to scope because every
-    * intermediate inside the loop materializes EAGERLY (localCheckpoint
-    * + count). At cluster scale raise the env knob to O(cores) — it
-    * bounds per-round tasks, not correctness. */
+    * ([[LoopPartitions]]): each round is 4–5 shuffle stages over the
+    * CONTRACTED relation, which is orders of magnitude smaller than the
+    * corpus, so per-task launch overhead dominates at the default width
+    * — the same trade the streaming runs make, under the same shared
+    * ConfScope lock. Safe to scope because every intermediate inside the
+    * loop materializes EAGERLY (localCheckpoint + count). */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
                           maxIter: Int = 30,
                           dumpRound: Option[DataFrame => Unit] = None)
@@ -112,8 +115,7 @@ object Cluster {
     // ---- phase 2 (narrow): iterate only over the contracted graph;
     // the loop checkpoints every round, so nothing lazy escapes the scope
     val small = ConfScope.withConf(nodes.sparkSession,
-      Map("spark.sql.shuffle.partitions" ->
-        ConfScope.envInt("SPARK_GRAFT_CC_PARTITIONS", "2"))) {
+      Map("spark.sql.shuffle.partitions" -> LoopPartitions)) {
       connectedComponentsLoop(init, e1, maxIter, dumpRound)
     }
     // ---- expand (full width): label(u) = loop-label of l0(u); l0(u)
@@ -178,8 +180,6 @@ object Cluster {
       converged = curSum.compareTo(prevSum) == 0
       prevSum = curSum
       iter += 1
-      if (sys.env.contains("SPARK_GRAFT_CC_DEBUG"))
-        println(s"[cc] round $iter labelSum=$curSum")
     }
     require(converged, s"connectedComponents did not converge in $maxIter rounds")
     labels

@@ -411,7 +411,8 @@ object Llm {
     // size (split = max(1, N/2000)). At every shipped sf this resolves
     // to the canonical split=1 quantizer byte-for-byte, so the l34
     // oracle gates it too; the >1 branch is pinned by LlmSpec (rule +
-    // dialed copy-recall) and measured by ScaleSweep's kdial row.
+    // dialed copy-recall); its scaling is the `l34_semantic_dedup_kdial`
+    // row of SCALE_r10.json and SCALE_r19.json.
     "l34b_semantic_autok" -> ((s, d) => semanticDedup(s, d, autoSplit(s, d))),
 
     // L3e — product-quantization ANN: ADC compressed linear scan +
@@ -512,8 +513,9 @@ object Llm {
     * integer Lloyd iterations. split=1 IS the canonical 10-cell
     * quantizer byte-for-byte (seeds, encoding, trajectory). Larger
     * splits are the documented production dial — K grows with corpus so
-    * |cell| stays bounded — measured by ScaleSweep's l34 K-dial run;
-    * the canonical queries stay at split=1 for oracle determinism. */
+    * |cell| stays bounded — measured by the `l34_semantic_dedup_kdial`
+    * row of SCALE_r10.json and SCALE_r19.json; the canonical queries
+    * stay at split=1 for oracle determinism. */
   def trainCentroidsK(s: SparkSession, d: String, iters: Int,
                       split: Int): Seq[(Int, Seq[Long])] = {
     // the trained quantizer is a build-once index artifact (deterministic

@@ -161,7 +161,7 @@ object Retrieval {
     // brute-force side here is the small-corpus face); fusion itself
     // touches ≤ 2k rows per query — one qid-keyed shuffle of top-k
     // lists, corpus-size-independent.
-    "l48_rrf_fusion" -> ((s, d) => rrfFusion(s, d, 17)),
+    "l48_rrf_fusion" -> ((s, d) => rrfFusion(s, d)),
 
 
     // L46 — PASSAGE-level decontamination (L24 × L45): L27 flags whole
@@ -245,18 +245,14 @@ object Retrieval {
     })
   )
 
-  /** L48's fusion body, parameterized by the query-set modulus
-    * (qid = doc_id % qmod == 0). The canonical query runs qmod = 17;
-    * ScaleSweep's `l48_rrf_fusion_fixedq` dial runs qmod = 17 × ratio
-    * at the big scales so the QUERY COUNT stays the small scale's —
-    * the production shape (a fixed eval/RAG query suite over a growing
-    * corpus), whose cost is rankers-linear in the corpus. The
-    * unscaled sweep row deliberately keeps the %17 set (queries grow
-    * WITH the corpus), which squares the brute-force dense side — the
-    * small-corpus face; the IVF family (l3f/l3g) is the priced dense
-    * scale path. */
-  private[graft] def rrfFusion(s: SparkSession, d: String,
-                               qmod: Long): DataFrame = {
+  /** L48's fusion body over L45's query set (qid = doc_id % 17 == 0).
+    * The query count grows with the corpus, which squares the
+    * brute-force dense side — the small-corpus face; the IVF family
+    * (l3f/l3g) is the priced dense scale path. With the query count held
+    * at the small scale's instead, the cost is rankers-linear in the
+    * corpus (e 0.61 at 10×, the `l48_rrf_fusion_fixedq` row of
+    * SCALE_r19.json). */
+  private[graft] def rrfFusion(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     // sparse ranker: L45's exact-integer BM25, widened to top-10 —
     // carrying L45's r22 restructure (map-side dl; qid-independent
@@ -270,7 +266,7 @@ object Retrieval {
       size(split(col("text"), " ")).cast(LongType).as("dl"))
     val stats = dl.agg(sum(col("dl")).as("totdl"),
       count(lit(1)).as("nd"))
-    val qterms = docs.filter(col("doc_id") % qmod === 0)
+    val qterms = docs.filter(col("doc_id") % 17 === 0)
       .select(col("doc_id").as("qid"),
         explode(slice(split(col("text"), " "), 1, 4)).as("token"))
       .distinct()
@@ -298,7 +294,7 @@ object Retrieval {
       .select(col("vec_id"), Llm.qz(col("embedding")).as("q"))
       .withColumn("nrm", Llm.qnorm(col("q")))
     val qv = e.join(
-        broadcast(docs.filter(col("doc_id") % qmod === 0)
+        broadcast(docs.filter(col("doc_id") % 17 === 0)
           .select(col("doc_id").as("qid"))),
         col("vec_id") === col("qid"))
       .select(col("qid"), col("q").as("qq"), col("nrm").as("qn"))

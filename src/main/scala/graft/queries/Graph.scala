@@ -247,9 +247,6 @@ object Graph {
       dangShare = probe.getLong(0) / nv
       pr = next
       rounds += 1
-      if (sys.env.contains("GRAFT_G1B_TRACE"))
-        System.err.println(s"[g1b] round $rounds stationary=$stationary" +
-          f" t=${System.nanoTime() / 1e9}%.3f")
     }
     val out = pr.select(col("nid"),
         when(col("nid") % 2 === 0, lit("customer"))

@@ -163,16 +163,10 @@ object Replayer {
     require(Set("clean", "late", "dup", "dup10", "funnel", "ooo",
         "ooolate", "refire", "shift48", "shift48stop")(variant),
       s"unknown replay variant: $variant")
-    val dir = variantDir(sfDir, variant, "events")
-    val done = dir.resolve("_DONE")
-    if (!Files.exists(done)) {
-      // (re)building this dir — drop any schema cached for a previous
-      // incarnation (a regenerated fixture may carry a changed schema)
-      schemaCache.remove(dir.toString)
+    fixture(variantDir(sfDir, variant, "events")) {
       val ev = Tables.events(s, sfDir)
       val n = ev.count()
-      Files.createDirectories(dir)
-      val batched = variant match {
+      variant match {
         case "clean" => ev.withColumn("b", batchExpr(n, late = false))
         case "late"  => ev.withColumn("b", batchExpr(n, late = true))
         case "ooo" =>
@@ -309,10 +303,28 @@ object Replayer {
                 .when(m === 190, "purchase").otherwise(col("event_type")))
             .withColumn("b", batchExpr(n, late = false))
       }
+    }
+  }
+
+  /** The fixture shell every `ensure*` shares: build `dir` from the
+    * `b`-batched frame unless its _DONE marker exists; returns the dir. */
+  private def fixture(dir: Path)(batched: => DataFrame): String = {
+    val done = dir.resolve("_DONE")
+    if (!Files.exists(done)) {
+      // (re)building this dir — drop any schema cached for a previous
+      // incarnation (a regenerated fixture may carry a changed schema)
+      schemaCache.remove(dir.toString)
+      Files.createDirectories(dir)
       writeBatches(dir, batched)
       Files.createFile(done)
     }
     dir.toString
+  }
+
+  /** `df` split into NumFiles contiguous ranges of the id column `id`. */
+  private def byIdRange(df: DataFrame, id: String): DataFrame = {
+    val b = (df.count() + NumFiles - 1) / NumFiles
+    df.withColumn("b", least(floor(col(id) / b).cast("int"), lit(NumFiles - 1)))
   }
 
   /** Materialize a `b`-batched frame as NumFiles mtime-ordered parquet
@@ -343,19 +355,9 @@ object Replayer {
     * in five deterministic batches. Same _DONE/immutability contract as
     * the events variants. */
   def ensureDocs(s: SparkSession, sfDir: String): String = synchronized {
-    val dir = variantDir(sfDir, "docs", "documents")
-    val done = dir.resolve("_DONE")
-    if (!Files.exists(done)) {
-      schemaCache.remove(dir.toString)
-      val docs = Tables.documents(s, sfDir)
-      val n = docs.count()
-      val b = (n + NumFiles - 1) / NumFiles
-      Files.createDirectories(dir)
-      writeBatches(dir, docs.withColumn("b",
-        least(floor(col("doc_id") / b).cast("int"), lit(NumFiles - 1))))
-      Files.createFile(done)
+    fixture(variantDir(sfDir, "docs", "documents")) {
+      byIdRange(Tables.documents(s, sfDir), "doc_id")
     }
-    dir.toString
   }
 
   /** Embeddings replay fixture (S35 streaming vector-index refresh):
@@ -363,40 +365,20 @@ object Replayer {
     * arriving in five deterministic batches. Same _DONE/immutability
     * contract as the events variants. */
   def ensureEmbeds(s: SparkSession, sfDir: String): String = synchronized {
-    val dir = variantDir(sfDir, "embeds", "embeddings")
-    val done = dir.resolve("_DONE")
-    if (!Files.exists(done)) {
-      schemaCache.remove(dir.toString)
-      val em = Tables.embeddings(s, sfDir)
-      val n = em.count()
-      val b = (n + NumFiles - 1) / NumFiles
-      Files.createDirectories(dir)
-      writeBatches(dir, em.withColumn("b",
-        least(floor(col("vec_id") / b).cast("int"), lit(NumFiles - 1))))
-      Files.createFile(done)
+    fixture(variantDir(sfDir, "embeds", "embeddings")) {
+      byIdRange(Tables.embeddings(s, sfDir), "vec_id")
     }
-    dir.toString
   }
 
   /** Open the embeddings fixture as a file-source stream, one file per
     * micro-batch. */
-  def streamEmbeds(s: SparkSession, sfDir: String): DataFrame = {
-    val dir = ensureEmbeds(s, sfDir)
-    val schema = schemaCache.computeIfAbsent(dir, d => s.read.parquet(d).schema)
-    s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dir)
-  }
+  def streamEmbeds(s: SparkSession, sfDir: String): DataFrame =
+    open(s, ensureEmbeds(s, sfDir))
 
   /** Open the documents fixture as a file-source stream, one file per
     * micro-batch. */
-  def streamDocs(s: SparkSession, sfDir: String): DataFrame = {
-    val dir = ensureDocs(s, sfDir)
-    val schema = schemaCache.computeIfAbsent(dir, d => s.read.parquet(d).schema)
-    s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dir)
-  }
+  def streamDocs(s: SparkSession, sfDir: String): DataFrame =
+    open(s, ensureDocs(s, sfDir))
 
   /** Recursively delete, closing the walk stream (a leaked stream holds a
     * directory fd until GC). */
@@ -415,8 +397,12 @@ object Replayer {
 
   /** Open a fixture dir as a file-source stream (SRC4), one file per
     * micro-batch. */
-  def stream(s: SparkSession, sfDir: String, variant: String): DataFrame = {
-    val dir = ensure(s, sfDir, variant)
+  def stream(s: SparkSession, sfDir: String, variant: String): DataFrame =
+    open(s, ensure(s, sfDir, variant))
+
+  /** The stream opener every `stream*` shares: `dir` as a file-source
+    * stream with its cached schema, one file per micro-batch. */
+  private def open(s: SparkSession, dir: String): DataFrame = {
     val schema = schemaCache.computeIfAbsent(dir, d => s.read.parquet(d).schema)
     s.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)

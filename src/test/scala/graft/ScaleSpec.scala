@@ -258,4 +258,19 @@ class ScaleSpec extends AnyFunSuite {
         s"$n diverged when run concurrently")
     }
   }
+
+  test("ScaleSweep sweeps registered queries and rejects an unknown " +
+       "subset name") {
+    val qs = ScaleSweep.Queries
+    assert(qs.size == 82 && qs.distinct == qs)
+    assert(qs.filterNot(SparkEntry.queries.contains).isEmpty)
+    assert(ScaleSweep.select("-") == qs)
+    // a subset may name any registered query, swept in the given order
+    assert(ScaleSweep.select("s1_tumbling, j12_recursive,s1_tumbling") ==
+      Seq("s1_tumbling", "j12_recursive"))
+    val e = intercept[IllegalArgumentException](
+      ScaleSweep.select("j12_recursive,nope_q"))
+    assert(e.getMessage.contains("nope_q"))
+    intercept[IllegalArgumentException](ScaleSweep.select(","))
+  }
 }
