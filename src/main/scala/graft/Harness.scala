@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.{NioLocalFileSystem, NioLocalFs, NioRawLocalFs}
 
 /** Shared session + measurement protocol for the driver-contract mains
   * (Verify, Bench, TimeOne, AnnBench). One definition of the correctly-
@@ -10,7 +11,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Harness {
   /** The builder every session of this program starts from (Harness,
     * Engine, the test session): UTC, nanos-tolerant parquet reads, no
-    * UI, artifact isolation off, and a 1000-class generated-code cache.
+    * UI, artifact isolation off, a 1000-class generated-code cache, and
+    * an in-process local file system for `file:`.
     *
     * Artifact isolation is off because Spark keys its generated-code
     * cache (`CodeGenerator.cache`) by the task thread's context class
@@ -27,33 +29,39 @@ object Harness {
     * a 25-entry segment can evict a class a warm run still uses, and
     * which classes go differs from one JVM to the next.
     *
-    * `checksumFreeFs` (TIMING sessions only — Bench/TimeOne/AnnBench):
-    * rebinds file:'s AbstractFileSystem to RawLocalFs so FileContext
-    * users — i.e. the structured-streaming checkpoint file manager
-    * (offset/commit WAL, state delta/changelog commits) — skip the .crc
-    * twin Hadoop's default local Fs writes beside every file. On a
-    * per-run tmpfs checkpoint that halves the many small synchronous
-    * writes every micro-batch pays (~35 ms → ~18 ms per write, measured
-    * on the checkpoint commits of a streaming agg). The trade is losing
-    * checksum DETECTION of on-disk checkpoint corruption, so
-    * correctness-gate runs (Verify, tests) keep the default checksummed
-    * FS — a timing capture is re-runnable,
-    * a silently-corrupt correctness verdict is not. Batch parquet I/O
-    * is untouched either way (FileSystem API, fs.file.impl key); a
-    * production deployment points checkpoints at HDFS/S3, whose
-    * AbstractFileSystem carries its own integrity story. */
-  def builder(checksumFreeFs: Boolean = false): SparkSession.Builder = {
-    val b = SparkSession.builder()
+    * `file:` is bound to `graft.core`'s in-process local file system,
+    * for the FileSystem API (`fs.file.impl`: batch writes through
+    * FileOutputCommitter) and for FileContext
+    * (`fs.AbstractFileSystem.file.impl`: the streaming checkpoint
+    * manager's offset, commit and source logs and state files). Spark
+    * ships without Hadoop's native library (`libhadoop`), so Hadoop's
+    * own local file system forks `chmod` on every file create and mkdir
+    * and `readlink` twice on every FileContext rename, about 40
+    * processes per micro-batch. One fork costs about 2 ms in a JVM with
+    * a 3 GB heap; the same `chmod` through `java.nio` costs about
+    * 0.01 ms.
+    *
+    * `checksumFreeFs` (timing sessions only: Bench, TimeOne, AnnBench,
+    * ScaleSweep, PlanDump and perfbench) binds FileContext to the raw
+    * file system, so checkpoint files get no `.crc` twin. Without the
+    * forks that buys nothing measurable: five paired perfbench
+    * `stream-replay` runs on a 4-core host read a median `batch_p50_ms`
+    * of 234.5 ms raw against 229.5 ms checksummed, the raw side lower in
+    * 3 of 5 pairs. The trade is losing
+    * checksum detection of on-disk checkpoint corruption, so
+    * correctness runs (Verify, tests) keep the checksummed FileContext.
+    * The FileSystem API keeps its `.crc` twins either way. */
+  def builder(checksumFreeFs: Boolean = false): SparkSession.Builder =
+    SparkSession.builder()
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", "1000")
-    if (checksumFreeFs)
-      b.config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-               "org.apache.hadoop.fs.local.RawLocalFs")
-    b
-  }
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+              (if (checksumFreeFs) classOf[NioRawLocalFs]
+               else classOf[NioLocalFs]).getName)
 
   /** The driver-contract local session: the shared `builder` at
     * local[$SPARK_GRAFT_CPUS] with matching shuffle parallelism.

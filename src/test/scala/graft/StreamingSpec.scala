@@ -3055,4 +3055,34 @@ class StreamingSpec extends AnyFunSuite {
     assert(compiles == warm,
       s"a fresh session compiled ${compiles - warm} classes")
   }
+
+  test("A stream forks no process: checkpoint and sink writes go through " +
+       "the in-process local file system, not Hadoop's shell commands") {
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    import scala.jdk.CollectionConverters._
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    rec.start()
+    val c = s.newSession()
+    try {
+      // state store, offset and commit logs; foreachBatch parquet writes
+      for (name <- Seq("s3_session", "snk4_upsert"))
+        assert(SparkEntry.queries(name)(c, sf).collect().nonEmpty,
+          s"$name is empty — vacuous")
+    } finally rec.stop()
+    val dump = Files.createTempFile("graft_forks", ".jfr")
+    try {
+      rec.dump(dump)
+      val shellForks = RecordingFile.readAllEvents(dump).asScala
+        .filter(e => Option(e.getStackTrace).exists(_.getFrames.asScala
+          .exists(_.getMethod.getType.getName == "org.apache.hadoop.util.Shell")))
+        .map(_.getString("command"))
+      assert(shellForks.size == 0, "Hadoop shell processes, e.g. " +
+        shellForks.take(3).mkString("; "))
+    } finally {
+      rec.close()
+      Files.deleteIfExists(dump)
+    }
+  }
 }
