@@ -60,8 +60,30 @@ object Bench {
       s.range(0L, 16L * 1024 * 1024, 1L, 32)
         .select(bit_xor(xxhash64(col("id"))).as("h")))
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  private def defaultSfDir =
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** No arguments: the full sweep. `<name>... [sfDir]`: times only the
+    * named queries under the same protocol and prints each p50; writes
+    * no BENCH.json or BENCH_SUMMARY.json. An unknown name fails before a
+    * session starts. */
+  def main(args: Array[String]): Unit =
+    if (args.isEmpty) sweep(defaultSfDir)
+    else {
+      val (names, sfDir) =
+        if (args.last.contains("/")) (args.init.toSeq, args.last)
+        else (args.toSeq, defaultSfDir)
+      val picked = ScaleSweep.select(names.mkString(","))
+      val spark = Harness.session(checksumFreeFs = true)
+      picked.foreach { name =>
+        val timed = Harness.timed3(SparkEntry.queries(name)(spark, sfDir))
+        println(f"[bench] $name p50=${timed(1)}%.3f " +
+          s"all=${timed.map(t => f"$t%.3f").mkString(",")}")
+      }
+      spark.stop()
+    }
+
+  private def sweep(sfDir: String): Unit = {
     val spark = Harness.session(checksumFreeFs = true)
 
     canaryOnce(spark) // warm-up (JIT + range codegen)

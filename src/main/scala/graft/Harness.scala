@@ -3,7 +3,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.core.{NioLocalFileSystem, NioLocalFs, NioRawLocalFs}
 
 /** Shared session + measurement protocol for the driver-contract mains
-  * (Verify, Bench, TimeOne, AnnBench). One definition of the correctly-
+  * (Verify, Bench, AnnBench). One definition of the correctly-
   * configured local session and of BASELINE.md's timing rule (1 warm-up
   * + 3 timed noop-sink runs, report the p50) — so a protocol change
   * (e.g. a new required session conf like the nanosAsLong fix) cannot
@@ -41,7 +41,7 @@ object Harness {
     * a 3 GB heap; the same `chmod` through `java.nio` costs about
     * 0.01 ms.
     *
-    * `checksumFreeFs` (timing sessions only: Bench, TimeOne, AnnBench,
+    * `checksumFreeFs` (timing sessions only: Bench, AnnBench,
     * ScaleSweep, PlanDump and perfbench) binds FileContext to the raw
     * file system, so checkpoint files get no `.crc` twin. Without the
     * forks that buys nothing measurable: five paired perfbench

@@ -153,7 +153,7 @@ object Cluster {
 
   private def connectedComponentsLoop(init: DataFrame, sym: DataFrame,
                                       maxIter: Int,
-                                      dumpRound: Option[DataFrame => Unit] = None)
+                                      dumpRound: Option[DataFrame => Unit])
       : DataFrame = {
     // Convergence metric: Σ label as DECIMAL(38,0). Labels are per-node
     // monotone non-increasing (the min-combine and the jump both only

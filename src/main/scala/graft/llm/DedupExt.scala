@@ -44,7 +44,7 @@ object DedupExt {
 
   /** L10b band-collision candidates over the FULL corpus (exposed so the
     * candidate-reduction property can be asserted in LlmSpec). */
-  def minhashTunedCandidates(s: SparkSession, d: String): DataFrame =
+  private[graft] def minhashTunedCandidates(s: SparkSession, d: String): DataFrame =
     minhashCandidatesFrom(tokens(s, d))
 
   /** The 2×16 tuned banding over an arbitrary (doc_id, th) relation —
@@ -236,7 +236,7 @@ object DedupExt {
   /** L22 edge set: the l10b tuned-banding candidates verified at exact
     * Jaccard ≥ 0.95 — the canonical "near-duplicate pairs" relation that
     * [[Cluster]] closes into components. */
-  def nearDupPairs(s: SparkSession, d: String): DataFrame =
+  private[graft] def nearDupPairs(s: SparkSession, d: String): DataFrame =
     minhashTunedPairs(s, d).select(col("d1"), col("d2"))
 
   /** Rep-level near-dup pair relation + the group map, exposed for

@@ -474,7 +474,7 @@ object Llm {
   /** Exact brute-force cosine top-k for an arbitrary query-id set — the
     * generalization of the canonical l3 (qids 0,1,2) used by LlmSpec to
     * measure IVF recall over a statistically meaningful query pool. */
-  def exactTopK(s: SparkSession, d: String, qids: Seq[Int],
+  private[graft] def exactTopK(s: SparkSession, d: String, qids: Seq[Int],
                 k: Int = 5): DataFrame = {
     val e = qvecs(s, d)
     val qs = e.filter(col("vec_id").isin(qids: _*))
@@ -571,25 +571,12 @@ object Llm {
       if (!childConfs.get(k).contains(v)) child.conf.set(k, v)
     }
     // The unset path removes every child-only key, which is correct
-    // ONLY while nothing customizes the child's confs directly (today
-    // ensure() touches extraOptimizations, never a conf). Any future
-    // child-specific conf must be registered in x5ChildPinnedConfs or
-    // this sync would silently revert it on the next invocation
-    // (advisor r18) — fail loudly instead of reverting.
+    // only while nothing customizes the child's confs directly:
+    // ensure() touches extraOptimizations, never a conf.
     childConfs.keysIterator.filterNot(parentConfs.contains)
-      .foreach { k =>
-        require(!x5ChildPinnedConfs.contains(k),
-          s"x5 conf sync would unset child-pinned conf '$k'; exclude " +
-          "pinned keys from the diff walk before customizing the child")
-        child.conf.unset(k)
-      }
+      .foreach(child.conf.unset)
     child
   }
-
-  /** Conf keys deliberately set ON THE CHILD x5 session only (none
-    * today). The x5Session full-diff sync must never unset these; code
-    * that customizes the child session registers its keys here. */
-  private val x5ChildPinnedConfs: Set[String] = Set.empty
 
   private val centCache = new java.util.concurrent.ConcurrentHashMap[
     (String, Int, String), Seq[(Int, Seq[Long])]]()

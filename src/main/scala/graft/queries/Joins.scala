@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.{Canon, Tables}
@@ -244,9 +245,18 @@ object Joins {
         // from ~sf1 (150k customers × ~24 levels) — scale it with data,
         // it guards only against non-terminating recursion
         "spark.sql.cteRecursionRowLimit" -> "1000000000")) {
-        s.sql(j12SeqSql).repartition(1).localCheckpoint()
-          .createOrReplaceTempView("j12_seq")
-        s.sql("WITH RECURSIVE " + j12Body("j12_seq")).localCheckpoint()
+        val seq = s.sql(j12SeqSql).repartition(1).localCheckpoint()
+        seq.createOrReplaceTempView("j12_seq")
+        // the result is materialized here, so the session keeps neither
+        // the view nor the sequence's checkpointed blocks
+        try s.sql("WITH RECURSIVE " + j12Body("j12_seq")).localCheckpoint()
+        finally {
+          s.catalog.dropTempView("j12_seq")
+          seq.queryExecution.logical.foreach {
+            case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+            case _ =>
+          }
+        }
       }
     }),
 

@@ -1,11 +1,19 @@
 package graft.streaming
 
 import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** One changelog row for the S22 retraction consumer: an UPSERT sets
   * the key's current value to `cents`; a DELETE removes the key. */
 case class CdcOp(tsu: Long, event_id: Long, isUpsert: Boolean, cents: Long)
+
+/** A replayed event as an op: delete iff event_id % 5 == 0, else an
+  * upsert of the row's cents. */
+object CdcOp extends UserEvent[CdcOp] {
+  def wire = Seq(tsu, col("event_id"),
+    (col("event_id") % 5 =!= 0).as("isUpsert"), cents.as("cents"))
+}
 
 /** S22 — CDC/RETRACTION CONSUMER (Flink's retract-stream aggregate,
   * the capability the r16 verdict named as the genre gap): a keyed

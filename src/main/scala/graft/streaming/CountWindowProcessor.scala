@@ -1,11 +1,16 @@
 package graft.streaming
 
 import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** One element of a per-key count window: event time (µs, tie-broken
   * by event_id) and the integer-cents payload the window aggregates. */
 case class CountEvent(tsu: Long, event_id: Long, cents: Long)
+
+object CountEvent extends UserEvent[CountEvent] {
+  def wire = Seq(tsu, col("event_id"), cents.as("cents"))
+}
 
 /** Open count-window state: index of the window being filled, how many
   * elements it holds, their cents sum and max event id. */

@@ -3,16 +3,13 @@ package graft.streaming
 import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
-/** S8 funnel on the Spark 4 `transformWithState` API — the CANONICAL
-  * s8_funnel/s8b path (SURVEY §2.9 names TWS primary; wired via
-  * Streams.funnelTws). The flatMapGroupsWithState form
-  * (Streams.funnelFmgs) is the fallback for state backends without TWS
-  * support, and StreamingSpec asserts the two produce identical
-  * conversions.
+/** S8 funnel on the Spark 4 `transformWithState` API — the one
+  * s8_funnel/s8b/s8c path (SURVEY §2.9 names TWS primary; wired via
+  * Streams.funnelTws).
   *
   * Requires the RocksDB state store provider (a transformWithState
   * constraint, which is also the declared 100 TB state backend).
-  * Semantics identical to Streams.funnel: a purchase converts when some
+  * A purchase converts when some
   * click ≤ it has a view ≤ that click with view ≥ purchase − windowUs;
   * state pruned to the trailing window per user. The window is a
   * constructor parameter: s8/s8b run the 1-hour form, s8c the 24-hour

@@ -168,7 +168,7 @@ object ReorderingProcessor {
     * operators themselves. */
   val maxBuffered = new java.util.concurrent.atomic.AtomicLong(0)
   val lateDropped = new java.util.concurrent.atomic.AtomicLong(0)
-  def resetGauges(): Unit = { maxBuffered.set(0); lateDropped.set(0) }
+  private[graft] def resetGauges(): Unit = { maxBuffered.set(0); lateDropped.set(0) }
   private[streaming] def note(n: Int): Unit =
     maxBuffered.getAndUpdate(m => math.max(m, n.toLong))
 }

@@ -1,12 +1,17 @@
 package graft.streaming
 
 import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** One input record for the S33 retract-stream producer: an
   * append-only fact whose `cents` accumulates into the key's running
   * aggregate. */
 case class RetractOp(tsu: Long, event_id: Long, cents: Long)
+
+object RetractOp extends UserEvent[RetractOp] {
+  def wire = Seq(tsu, col("event_id"), cents.as("cents"))
+}
 
 /** One emitted refinement row. `kind` is Flink's retract-stream flag
   * spelled out: "retract" carries the PREVIOUSLY EMITTED aggregate

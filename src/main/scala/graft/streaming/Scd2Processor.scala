@@ -1,11 +1,16 @@
 package graft.streaming
 
 import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** One purchase routed to the S18 dimension maintainer (keyed by
   * user_id upstream). */
 case class Scd2Event(tsu: Long, event_id: Long, cents: Long)
+
+object Scd2Event extends UserEvent[Scd2Event] {
+  def wire = Seq(tsu, col("event_id"), cents.as("cents"))
+}
 
 /** The S18 per-user dimension state: current band, when it was
   * entered, and the running spend that determines it. */
@@ -34,11 +39,6 @@ class Scd2Processor(midCents: Long, highCents: Long)
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
     st = getHandle.getValueState[Scd2State](
       "scd2", Encoders.product[Scd2State], TTLConfig.NONE)
-
-  // single-sourced with the S4b temporal join (see Scd2Bands) so the
-  // maintainer and its consumer cannot drift
-  private def bandOf(cum: Long): String =
-    Scd2Bands.bandOf(cum, midCents, highCents)
 
   override def handleInputRows(user: Long, rows: Iterator[Scd2Event],
                                timers: TimerValues)

@@ -2,8 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
-  GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode,
+  StreamingQuery, TimeMode, Trigger}
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
 import graft.core.Tables
@@ -12,6 +12,10 @@ import graft.core.Tables
   * long comparisons, no millis truncation). */
 case class FunnelEvent(event_id: Long, tsu: Long, user_id: Long,
                        event_type: String)
+
+object FunnelEvent extends UserEvent[FunnelEvent] {
+  def wire = Seq(col("event_id"), tsu, col("event_type"))
+}
 
 /** Keyed funnel state: open view timestamps + (click_ts, latest view ≤
   * click) pairs, both pruned to the trailing 1 hour per batch. */
@@ -62,7 +66,7 @@ object Streams {
     * unless the caller passes its own `checkpoint` to read or restart
     * on afterwards; then the caller drops it. */
   private def runStream(s: SparkSession, df: DataFrame,
-      extraConf: Map[String, String] = Map.empty,
+      extraConf: Map[String, String],
       checkpoint: Option[String] = None)
       (sink: DataStreamWriter[Row] => DataStreamWriter[Row])
       : StreamingQuery = {
@@ -386,35 +390,11 @@ object Streams {
   private def funnelTws(s: SparkSession, d: String, variant: String,
                         windowUs: Long = 3600L * 1000000L): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    val ev: Dataset[FunnelEvent] = Replayer.stream(s, d, variant)
-      .select(col("event_id"), unix_micros(col("ts")).as("tsu"),
-              col("user_id"), col("event_type"))
-      .as[FunnelEvent]
-    val conversions = ev.groupByKey(_.user_id)
+    val conversions = UserEvent.byUser(s, d, variant, FunnelEvent)
       .transformWithState(new FunnelProcessor(windowUs), TimeMode.None(),
         OutputMode.Append())
     runToMemory(s, conversions.toDF("user_id", "purchase_id"), "append",
                 RocksDbConf ++ NoFinalBatch)
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_conversions"))
-      .orderBy(col("user_id"))
-  }
-
-  /** S8 fallback path — identical funnel on `flatMapGroupsWithState`
-    * (for state backends without TWS support); StreamingSpec asserts it
-    * produces exactly the canonical TWS conversions. */
-  def funnelFmgs(s: SparkSession, d: String, variant: String): DataFrame = {
-    import s.implicits._
-    val ev: Dataset[FunnelEvent] = Replayer.stream(s, d, variant)
-      .select(col("event_id"), unix_micros(col("ts")).as("tsu"),
-              col("user_id"), col("event_type"))
-      .as[FunnelEvent]
-    val conversions = ev.groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelState, (Long, Long)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout)(funnel)
-    runToMemory(s, conversions.toDF("user_id", "purchase_id"), "append",
-                NoFinalBatch)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_conversions"))
       .orderBy(col("user_id"))
@@ -516,13 +496,8 @@ object Streams {
     * test so the pipeline under restart IS the canonical one. */
   private[graft] def s21Abandoned(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    val ev: Dataset[FunnelEvent] = Replayer.stream(s, d, "clean")
-      .withWatermark("ts", WatermarkDelay)
-      .select(col("event_id"), unix_micros(col("ts")).as("tsu"),
-              col("user_id"), col("event_type"))
-      .as[FunnelEvent]
-    ev.groupByKey(_.user_id)
+    UserEvent.byUser(s, d, "clean", FunnelEvent,
+      watermark = Some(WatermarkDelay))
       .transformWithState(new AbandonProcessor(AbandonWindowUs),
         TimeMode.EventTime(), OutputMode.Append())
       .toDF("user_id", "view_id")
@@ -534,13 +509,8 @@ object Streams {
     * with StreamingSpec's S21-projection pin. */
   private[graft] def s21cPartials(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    val ev: Dataset[FunnelEvent] = Replayer.stream(s, d, "clean")
-      .withWatermark("ts", WatermarkDelay)
-      .select(col("event_id"), unix_micros(col("ts")).as("tsu"),
-              col("user_id"), col("event_type"))
-      .as[FunnelEvent]
-    ev.groupByKey(_.user_id)
+    UserEvent.byUser(s, d, "clean", FunnelEvent,
+      watermark = Some(WatermarkDelay))
       .transformWithState(new PartialTimeoutProcessor(AbandonWindowUs),
         TimeMode.EventTime(), OutputMode.Append())
       .toDF("user_id", "view_id", "n_clicks", "max_click_id")
@@ -556,13 +526,8 @@ object Streams {
   private[graft] def s20bRun(s: SparkSession, d: String,
                              variant: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    val ev: Dataset[FunnelEvent] = Replayer.stream(s, d, variant)
-      .withWatermark("ts", Replayer.OooDelay)
-      .select(col("event_id"), unix_micros(col("ts")).as("tsu"),
-              col("user_id"), col("event_type"))
-      .as[FunnelEvent]
-    val completions = ev.groupByKey(_.user_id)
+    val completions = UserEvent.byUser(s, d, variant, FunnelEvent,
+      watermark = Some(Replayer.OooDelay))
       .transformWithState(
         new ReorderedSkipMatch("vcp", graft.queries.Windows.SkipWindowUs),
         TimeMode.EventTime(), OutputMode.Append())
@@ -574,18 +539,8 @@ object Streams {
   private[graft] def s4cRun(s: SparkSession, d: String,
                             variant: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    val ev = Replayer.stream(s, d, variant)
-      .withWatermark("ts", Replayer.OooDelay)
-      .select(unix_micros(col("ts")).as("tsu"), col("event_id"),
-        (col("event_type") === "purchase").as("isPurchase"),
-        when(col("event_type") === "purchase",
-          round(col("value") * 100, 0).cast("long")).otherwise(0L)
-          .as("cents"),
-        col("user_id"))
-      .as[(Long, Long, Boolean, Long, Long)]
-    val joined = ev.groupByKey(_._5)
-      .mapValues(t => TemporalEvent(t._1, t._2, t._3, t._4))
+    val joined = UserEvent.byUser(s, d, variant, TemporalEvent,
+      watermark = Some(Replayer.OooDelay))
       .transformWithState(
         new ReorderedTemporalJoin(midCents = 40000L, highCents = 100000L),
         TimeMode.EventTime(), OutputMode.Append())
@@ -600,13 +555,8 @@ object Streams {
   private[graft] def s21bAbandoned(s: SparkSession, d: String,
                                    variant: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    val ev: Dataset[FunnelEvent] = Replayer.stream(s, d, variant)
-      .withWatermark("ts", Replayer.OooDelay)
-      .select(col("event_id"), unix_micros(col("ts")).as("tsu"),
-              col("user_id"), col("event_type"))
-      .as[FunnelEvent]
-    ev.groupByKey(_.user_id)
+    UserEvent.byUser(s, d, variant, FunnelEvent,
+      watermark = Some(Replayer.OooDelay))
       .transformWithState(new ReorderedAbandon(AbandonWindowUs),
         TimeMode.EventTime(), OutputMode.Append())
       .toDF("user_id", "view_id")
@@ -624,15 +574,7 @@ object Streams {
                                  midCents: Long, highCents: Long)
       : DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    val ev = Replayer.stream(s, d, "clean")
-      .filter(col("event_type") === "purchase")
-      .select(unix_micros(col("ts")).as("tsu"), col("event_id"),
-        round(col("value") * 100, 0).cast("long").as("cents"),
-        col("user_id"))
-      .as[(Long, Long, Long, Long)]
-    ev.groupByKey(_._4)
-      .mapValues(t => Scd2Event(t._1, t._2, t._3))
+    UserEvent.byUser(s, d, "clean", Scd2Event, purchasesOnly = true)
       .transformWithState(new Scd2Processor(midCents, highCents),
         TimeMode.None(), OutputMode.Append())
       .toDF("user_id", "band", "vf_us", "vt_us")
@@ -649,16 +591,8 @@ object Streams {
   private[graft] def s18bVersions(s: SparkSession, d: String,
                                   variant: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    val ev = Replayer.stream(s, d, variant)
-      .filter(col("event_type") === "purchase")
-      .withWatermark("ts", Replayer.OooDelay)
-      .select(unix_micros(col("ts")).as("tsu"), col("event_id"),
-        round(col("value") * 100, 0).cast("long").as("cents"),
-        col("user_id"))
-      .as[(Long, Long, Long, Long)]
-    ev.groupByKey(_._4)
-      .mapValues(t => Scd2Event(t._1, t._2, t._3))
+    UserEvent.byUser(s, d, variant, Scd2Event,
+      purchasesOnly = true, watermark = Some(Replayer.OooDelay))
       .transformWithState(
         new ReorderedScd2(midCents = 40000L, highCents = 100000L),
         TimeMode.EventTime(), OutputMode.Append())
@@ -681,16 +615,8 @@ object Streams {
   private[graft] def s22bRun(s: SparkSession, d: String,
                              variant: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    val ops = Replayer.stream(s, d, variant)
-      .withWatermark("ts", Replayer.OooDelay)
-      .select(unix_micros(col("ts")).as("tsu"), col("event_id"),
-        (col("event_id") % 5 =!= 0).as("isUpsert"),
-        round(col("value") * 100, 0).cast("long").as("cents"),
-        col("user_id"))
-      .as[(Long, Long, Boolean, Long, Long)]
-    val changes = ops.groupByKey(_._5)
-      .mapValues(t => CdcOp(t._1, t._2, t._3, t._4))
+    val changes = UserEvent.byUser(s, d, variant, CdcOp,
+      watermark = Some(Replayer.OooDelay))
       .transformWithState(new ReorderedCdc(),
         TimeMode.EventTime(), OutputMode.Append())
     runToMemory(s, changes.toDF("user_id", "seq_id", "delta"),
@@ -712,15 +638,8 @@ object Streams {
   private[graft] def s33cRun(s: SparkSession, d: String,
                              variant: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    val ops = Replayer.stream(s, d, variant)
-      .withWatermark("ts", Replayer.OooDelay)
-      .select(unix_micros(col("ts")).as("tsu"), col("event_id"),
-        round(col("value") * 100, 0).cast("long").as("cents"),
-        col("user_id"))
-      .as[(Long, Long, Long, Long)]
-    val train = ops.groupByKey(_._4)
-      .mapValues(t => RetractOp(t._1, t._2, t._3))
+    val train = UserEvent.byUser(s, d, variant, RetractOp,
+      watermark = Some(Replayer.OooDelay))
       .transformWithState(new ReorderedRetract(),
         TimeMode.EventTime(), OutputMode.Append())
     runToMemory(s, train.toDF(), "append", RocksDbConf)
@@ -735,13 +654,8 @@ object Streams {
   private[graft] def s8dRun(s: SparkSession, d: String,
                             variant: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    val ev: Dataset[FunnelEvent] = Replayer.stream(s, d, variant)
-      .withWatermark("ts", Replayer.OooDelay)
-      .select(col("event_id"), unix_micros(col("ts")).as("tsu"),
-              col("user_id"), col("event_type"))
-      .as[FunnelEvent]
-    val conversions = ev.groupByKey(_.user_id)
+    val conversions = UserEvent.byUser(s, d, variant, FunnelEvent,
+      watermark = Some(Replayer.OooDelay))
       .transformWithState(new ReorderedFunnel(24L * 3600L * 1000000L),
         TimeMode.EventTime(), OutputMode.Append())
     runToMemory(s, conversions.toDF("user_id", "purchase_id"),
@@ -758,16 +672,8 @@ object Streams {
   private[graft] def s24bRun(s: SparkSession, d: String,
                              variant: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    val ops = Replayer.stream(s, d, variant)
-      .withWatermark("ts", Replayer.OooDelay)
-      .select(unix_micros(col("ts")).as("tsu"), col("event_id"),
-        (col("event_id") % 5 =!= 0).as("isUpsert"),
-        round(col("value") * 100, 0).cast("long").as("cents"),
-        col("user_id"))
-      .as[(Long, Long, Boolean, Long, Long)]
-    val tagged = ops.groupByKey(_._5)
-      .mapValues(t => CdcOp(t._1, t._2, t._3, t._4))
+    val tagged = UserEvent.byUser(s, d, variant, CdcOp,
+      watermark = Some(Replayer.OooDelay))
       .transformWithState(new ReorderedCdcLate(),
         TimeMode.EventTime(), OutputMode.Append())
     runToMemory(s, tagged.toDF("user_id", "ref_id", "delta", "kind"),
@@ -785,13 +691,8 @@ object Streams {
   private[graft] def s24Run(s: SparkSession, d: String,
                             variant: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    val ev: Dataset[FunnelEvent] = Replayer.stream(s, d, variant)
-      .withWatermark("ts", Replayer.OooDelay)
-      .select(col("event_id"), unix_micros(col("ts")).as("tsu"),
-              col("user_id"), col("event_type"))
-      .as[FunnelEvent]
-    val tagged = ev.groupByKey(_.user_id)
+    val tagged = UserEvent.byUser(s, d, variant, FunnelEvent,
+      watermark = Some(Replayer.OooDelay))
       .transformWithState(
         new ReorderedFunnelLate(24L * 3600L * 1000000L),
         TimeMode.EventTime(), OutputMode.Append())
@@ -831,7 +732,6 @@ object Streams {
   private[graft] def s29Run(s: SparkSession, d: String,
                             variant: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
     val ev: Dataset[LateWinEvent] = Replayer.stream(s, d, variant)
       .withWatermark("ts", S29OuterDelay)
       .select(
@@ -858,15 +758,8 @@ object Streams {
     * with StreamingSpec's two-state-stores pin. */
   private[graft] def s22cPlan(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val ops = Replayer.stream(s, d, "clean")
-      .withWatermark("ts", WatermarkDelay)
-      .select(unix_micros(col("ts")).as("tsu"), col("event_id"),
-        (col("event_id") % 5 =!= 0).as("isUpsert"),
-        round(col("value") * 100, 0).cast("long").as("cents"),
-        col("user_id"))
-      .as[(Long, Long, Boolean, Long, Long)]
-    val deltas = ops.groupByKey(_._5)
-      .mapValues(t => CdcOp(t._1, t._2, t._3, t._4))
+    val deltas = UserEvent.byUser(s, d, "clean", CdcOp,
+      watermark = Some(WatermarkDelay))
       .transformWithState(new CdcTimedProcessor(), "ts",
         OutputMode.Append())
     deltas.toDF()
@@ -891,14 +784,8 @@ object Streams {
     * one (window × grp) shuffle into the agg; pairs map-side combine. */
   private[graft] def s33bPlan(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val ops = Replayer.stream(s, d, "clean")
-      .withWatermark("ts", WatermarkDelay)
-      .select(unix_micros(col("ts")).as("tsu"), col("event_id"),
-        round(col("value") * 100, 0).cast("long").as("cents"),
-        col("user_id"))
-      .as[(Long, Long, Long, Long)]
-    val train = ops.groupByKey(_._4)
-      .mapValues(t => RetractOp(t._1, t._2, t._3))
+    val train = UserEvent.byUser(s, d, "clean", RetractOp,
+      watermark = Some(WatermarkDelay))
       .transformWithState(new RetractProcessor(), "ts",
         OutputMode.Append())
     train.toDF()
@@ -1175,12 +1062,7 @@ object Streams {
   private[graft] def s25Run(s: SparkSession, d: String)
       : (DataFrame, org.apache.spark.sql.streaming.StreamingQuery) = {
     import s.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    val ev: Dataset[FunnelEvent] = Replayer.stream(s, d, "funnel")
-      .select(col("event_id"), unix_micros(col("ts")).as("tsu"),
-              col("user_id"), col("event_type"))
-      .as[FunnelEvent]
-    val conv = ev.groupByKey(_.user_id)
+    val conv = UserEvent.byUser(s, d, "funnel", FunnelEvent)
       .transformWithState(
         new FunnelProcessor(HourUs,
           org.apache.spark.sql.streaming.TTLConfig(
@@ -1238,14 +1120,9 @@ object Streams {
     * the export is state-sized by construction. */
   private[graft] def s31Run(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
     val ckpt = Replayer.checkpoint()
     try {
-      val ev: Dataset[FunnelEvent] = Replayer.stream(s, d, "funnel")
-        .select(col("event_id"), unix_micros(col("ts")).as("tsu"),
-                col("user_id"), col("event_type"))
-        .as[FunnelEvent]
-      val conv = ev.groupByKey(_.user_id)
+      val conv = UserEvent.byUser(s, d, "funnel", FunnelEvent)
         .transformWithState(new FunnelProcessor(HourUs),
           TimeMode.None(), OutputMode.Append())
         .toDF("user_id", "purchase_id")
@@ -1320,15 +1197,10 @@ object Streams {
     * collecting (see s31Run's note). */
   private[graft] def s31bRun(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
     val ckpt = Replayer.checkpoint()
     try {
-      val ev: Dataset[FunnelEvent] = Replayer.stream(s, d, "clean")
-        .withWatermark("ts", WatermarkDelay)
-        .select(col("event_id"), unix_micros(col("ts")).as("tsu"),
-                col("user_id"), col("event_type"))
-        .as[FunnelEvent]
-      val out = ev.groupByKey(_.user_id)
+      val out = UserEvent.byUser(s, d, "clean", FunnelEvent,
+        watermark = Some(WatermarkDelay))
         .transformWithState(new AbandonProcessor(S31bWindowUs),
           TimeMode.EventTime(), OutputMode.Append())
         .toDF("user_id", "view_id")
@@ -1365,14 +1237,9 @@ object Streams {
   private[graft] def s26Run(s: SparkSession, d: String)
       : (DataFrame, Boolean) = {
     import s.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
     def pipeline(proc: org.apache.spark.sql.streaming.StatefulProcessor[
         Long, FunnelEvent, (Long, Long)]): DataFrame = {
-      val ev: Dataset[FunnelEvent] = Replayer.stream(s, d, "funnel")
-        .select(col("event_id"), unix_micros(col("ts")).as("tsu"),
-                col("user_id"), col("event_type"))
-        .as[FunnelEvent]
-      ev.groupByKey(_.user_id)
+      UserEvent.byUser(s, d, "funnel", FunnelEvent)
         .transformWithState(proc, TimeMode.None(), OutputMode.Append())
         .toDF("user_id", "purchase_id")
     }
@@ -1825,12 +1692,7 @@ object Streams {
     // user_id shuffle into state, O(|pattern|) work per event.
     "s20_stream_pattern" -> ((s, d) => {
       import s.implicits._
-      import org.apache.spark.sql.streaming.TimeMode
-      val ev: Dataset[FunnelEvent] = Replayer.stream(s, d, "clean")
-        .select(col("event_id"), unix_micros(col("ts")).as("tsu"),
-                col("user_id"), col("event_type"))
-        .as[FunnelEvent]
-      val completions = ev.groupByKey(_.user_id)
+      val completions = UserEvent.byUser(s, d, "clean", FunnelEvent)
         .transformWithState(
           new SkipMatchProcessor("vcp", graft.queries.Windows.SkipWindowUs),
           TimeMode.None(), OutputMode.Append())
@@ -1850,12 +1712,7 @@ object Streams {
     // See OneOrMoreProcessor: 3 longs of state per key, O(1)/event.
     "s20f_oneormore" -> ((s, d) => {
       import s.implicits._
-      import org.apache.spark.sql.streaming.TimeMode
-      val ev: Dataset[FunnelEvent] = Replayer.stream(s, d, "clean")
-        .select(col("event_id"), unix_micros(col("ts")).as("tsu"),
-                col("user_id"), col("event_type"))
-        .as[FunnelEvent]
-      val completions = ev.groupByKey(_.user_id)
+      val completions = UserEvent.byUser(s, d, "clean", FunnelEvent)
         .transformWithState(
           new OneOrMoreProcessor(graft.queries.Windows.SkipWindowUs),
           TimeMode.None(), OutputMode.Append())
@@ -1886,12 +1743,7 @@ object Streams {
     // equals S20's completion set exactly.
     "s20e_all_matches" -> ((s, d) => {
       import s.implicits._
-      import org.apache.spark.sql.streaming.TimeMode
-      val ev: Dataset[FunnelEvent] = Replayer.stream(s, d, "clean")
-        .select(col("event_id"), unix_micros(col("ts")).as("tsu"),
-                col("user_id"), col("event_type"))
-        .as[FunnelEvent]
-      val matches = ev.groupByKey(_.user_id)
+      val matches = UserEvent.byUser(s, d, "clean", FunnelEvent)
         .transformWithState(
           new AllMatchesProcessor(graft.queries.Windows.SkipWindowUs),
           TimeMode.None(), OutputMode.Append())
@@ -1912,12 +1764,7 @@ object Streams {
     // longs per key. 100 TB: identical budget to S20.
     "s20d_quantified_pattern" -> ((s, d) => {
       import s.implicits._
-      import org.apache.spark.sql.streaming.TimeMode
-      val ev: Dataset[FunnelEvent] = Replayer.stream(s, d, "clean")
-        .select(col("event_id"), unix_micros(col("ts")).as("tsu"),
-                col("user_id"), col("event_type"))
-        .as[FunnelEvent]
-      val completions = ev.groupByKey(_.user_id)
+      val completions = UserEvent.byUser(s, d, "clean", FunnelEvent)
         .transformWithState(
           new SkipMatchProcessor("vvcp", graft.queries.Windows.SkipWindowUs),
           TimeMode.None(), OutputMode.Append())
@@ -1937,14 +1784,7 @@ object Streams {
     // output volume = input/5.
     "s27_count_window" -> ((s, d) => {
       import s.implicits._
-      import org.apache.spark.sql.streaming.TimeMode
-      val ev = Replayer.stream(s, d, "clean")
-        .select(unix_micros(col("ts")).as("tsu"), col("event_id"),
-          round(col("value") * 100, 0).cast("long").as("cents"),
-          col("user_id"))
-        .as[(Long, Long, Long, Long)]
-      val wins = ev.groupByKey(_._4)
-        .mapValues(t => CountEvent(t._1, t._2, t._3))
+      val wins = UserEvent.byUser(s, d, "clean", CountEvent)
         .transformWithState(new CountWindowProcessor(5),
           TimeMode.None(), OutputMode.Append())
       runToMemory(s, wins.toDF("user_id", "win_idx", "sum_cents",
@@ -1963,14 +1803,7 @@ object Streams {
     // 7 PRECEDING AND CURRENT ROW frame at every 3rd rank.
     "s27b_sliding_count" -> ((s, d) => {
       import s.implicits._
-      import org.apache.spark.sql.streaming.TimeMode
-      val ev = Replayer.stream(s, d, "clean")
-        .select(unix_micros(col("ts")).as("tsu"), col("event_id"),
-          round(col("value") * 100, 0).cast("long").as("cents"),
-          col("user_id"))
-        .as[(Long, Long, Long, Long)]
-      val wins = ev.groupByKey(_._4)
-        .mapValues(t => CountEvent(t._1, t._2, t._3))
+      val wins = UserEvent.byUser(s, d, "clean", CountEvent)
         .transformWithState(new CountSlideProcessor(8, 3),
           TimeMode.None(), OutputMode.Append())
       runToMemory(s, wins.toDF("user_id", "trig_idx", "n_in_window",
@@ -1990,12 +1823,7 @@ object Streams {
     // pairs per key — the smallest CEP state in the S-series.
     "s20c_strict_pattern" -> ((s, d) => {
       import s.implicits._
-      import org.apache.spark.sql.streaming.TimeMode
-      val ev: Dataset[FunnelEvent] = Replayer.stream(s, d, "funnel")
-        .select(col("event_id"), unix_micros(col("ts")).as("tsu"),
-                col("user_id"), col("event_type"))
-        .as[FunnelEvent]
-      val completions = ev.groupByKey(_.user_id)
+      val completions = UserEvent.byUser(s, d, "funnel", FunnelEvent)
         .transformWithState(
           new StrictMatchProcessor(3600L * 1000000L),
           TimeMode.None(), OutputMode.Append())
@@ -2070,17 +1898,7 @@ object Streams {
     // the ordered replay.
     "s4b_temporal_join" -> ((s, d) => {
       import s.implicits._
-      import org.apache.spark.sql.streaming.TimeMode
-      val ev = Replayer.stream(s, d, "clean")
-        .select(unix_micros(col("ts")).as("tsu"), col("event_id"),
-          (col("event_type") === "purchase").as("isPurchase"),
-          when(col("event_type") === "purchase",
-            round(col("value") * 100, 0).cast("long")).otherwise(0L)
-            .as("cents"),
-          col("user_id"))
-        .as[(Long, Long, Boolean, Long, Long)]
-      val joined = ev.groupByKey(_._5)
-        .mapValues(t => TemporalEvent(t._1, t._2, t._3, t._4))
+      val joined = UserEvent.byUser(s, d, "clean", TemporalEvent)
         .transformWithState(
           new TemporalJoinProcessor(midCents = 40000L, highCents = 100000L),
           TimeMode.None(), OutputMode.Append())
@@ -2390,15 +2208,7 @@ object Streams {
     // shrinks), group deltas map-side combine.
     "s22_cdc_aggregate" -> ((s, d) => {
       import s.implicits._
-      import org.apache.spark.sql.streaming.TimeMode
-      val ops = Replayer.stream(s, d, "clean")
-        .select(unix_micros(col("ts")).as("tsu"), col("event_id"),
-          (col("event_id") % 5 =!= 0).as("isUpsert"),
-          round(col("value") * 100, 0).cast("long").as("cents"),
-          col("user_id"))
-        .as[(Long, Long, Boolean, Long, Long)]
-      val changes = ops.groupByKey(_._5)
-        .mapValues(t => CdcOp(t._1, t._2, t._3, t._4))
+      val changes = UserEvent.byUser(s, d, "clean", CdcOp)
         .transformWithState(new CdcProcessor(),
           TimeMode.None(), OutputMode.Append())
       runToMemory(s, changes.toDF("user_id", "seq_id", "delta"),
@@ -2423,14 +2233,7 @@ object Streams {
     // emission — Flink's own retract price).
     "s33_retract_stream" -> ((s, d) => {
       import s.implicits._
-      import org.apache.spark.sql.streaming.TimeMode
-      val ops = Replayer.stream(s, d, "clean")
-        .select(unix_micros(col("ts")).as("tsu"), col("event_id"),
-          round(col("value") * 100, 0).cast("long").as("cents"),
-          col("user_id"))
-        .as[(Long, Long, Long, Long)]
-      val train = ops.groupByKey(_._4)
-        .mapValues(t => RetractOp(t._1, t._2, t._3))
+      val train = UserEvent.byUser(s, d, "clean", RetractOp)
         .transformWithState(new RetractProcessor(),
           TimeMode.None(), OutputMode.Append())
       runToMemory(s, train.toDF(), "append", RocksDbConf ++ NoFinalBatch)
@@ -2680,9 +2483,7 @@ object Streams {
     // canonical path; SURVEY §2.9 names TWS primary) on the RocksDB
     // state store: a purchase converts when some click ≤ it has a view
     // ≤ that click with view ≥ purchase − 1 h. Emits (user, purchase)
-    // pairs; rollup to per-user conversion counts is batch. The
-    // flatMapGroupsWithState fallback (funnelFmgs) is equivalence-tested
-    // in StreamingSpec.
+    // pairs; rollup to per-user conversion counts is batch.
     "s8_funnel" -> ((s, d) => funnelTws(s, d, "clean")),
 
     // S8b — the SAME funnel over the chain-injected replay (Replayer
@@ -2814,12 +2615,7 @@ object Streams {
     // rate × window — the funnel's exact budget.
     "s14_absence" -> ((s, d) => {
       import s.implicits._
-      import org.apache.spark.sql.streaming.TimeMode
-      val ev: Dataset[FunnelEvent] = Replayer.stream(s, d, "clean")
-        .select(col("event_id"), unix_micros(col("ts")).as("tsu"),
-                col("user_id"), col("event_type"))
-        .as[FunnelEvent]
-      val impulses = ev.groupByKey(_.user_id)
+      val impulses = UserEvent.byUser(s, d, "clean", FunnelEvent)
         .transformWithState(new AbsenceProcessor(), TimeMode.None(),
           OutputMode.Append())
       runToMemory(s, impulses.toDF("user_id", "purchase_id"), "append",
@@ -3079,35 +2875,6 @@ object Streams {
   }
 
   private val HourUs = 3600L * 1000000L
-
-  /** S8 state transition — events of one user in one micro-batch. */
-  private def funnel(user: Long, it: Iterator[FunnelEvent],
-                     state: GroupState[FunnelState]): Iterator[(Long, Long)] = {
-    var st = state.getOption.getOrElse(FunnelState(Nil, Nil))
-    var views = st.views.toList
-    var pairs = st.pairs.toList
-    val out = scala.collection.mutable.ListBuffer[(Long, Long)]()
-    val evs = it.toSeq.sortBy(e => (e.tsu, e.event_id))
-    var maxTs = 0L
-    evs.foreach { e =>
-      maxTs = math.max(maxTs, e.tsu)
-      e.event_type match {
-        case "view" => views ::= e.tsu
-        case "click" =>
-          val v = views.filter(_ <= e.tsu)
-          if (v.nonEmpty) pairs ::= (e.tsu, v.max)
-        case "purchase" =>
-          if (pairs.exists { case (c, v) => c <= e.tsu && v >= e.tsu - HourUs })
-            out += ((user, e.event_id))
-        case _ => ()
-      }
-    }
-    // prune to the trailing hour — nothing older can ever qualify again
-    views = views.filter(_ >= maxTs - HourUs)
-    pairs = pairs.filter(_._2 >= maxTs - HourUs)
-    state.update(FunnelState(views, pairs))
-    out.iterator
-  }
 
   /** Shared oracle fragment: batch index + the per-batch FILTER watermark
     * for the late replay (mirrors Replayer.batchExpr; the 2-PRECEDING

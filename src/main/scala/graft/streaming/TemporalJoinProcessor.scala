@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.functions.{col, when}
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** One event routed to the S4b temporal join (keyed by user_id
@@ -8,6 +9,13 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * band) and every event is a fact probe. */
 case class TemporalEvent(tsu: Long, event_id: Long, isPurchase: Boolean,
                          cents: Long)
+
+/** Every event probes; only a purchase carries cents. */
+object TemporalEvent extends UserEvent[TemporalEvent] {
+  private def isPurchase = col("event_type") === "purchase"
+  def wire = Seq(tsu, col("event_id"), isPurchase.as("isPurchase"),
+    when(isPurchase, cents).otherwise(0L).as("cents"))
+}
 
 /** S4b — STREAMING TEMPORAL DIM JOIN (Flink's event-time temporal
   * table join over a CDC-maintained dimension): each fact event joins

@@ -1,0 +1,43 @@
+package graft.streaming
+
+import scala.reflect.runtime.universe.TypeTag
+import org.apache.spark.sql.{Column, Encoder, Encoders, KeyValueGroupedDataset,
+  SparkSession}
+import org.apache.spark.sql.functions._
+
+/** An event type of the per-user keyed-state pipelines. Its companion
+  * extends this with the type's wire format: the columns, named after
+  * the type's fields, that a replayed `events` row projects into.
+  * `user_id` is not part of it: [[UserEvent.byUser]] adds it as the
+  * grouping key. */
+abstract class UserEvent[E <: Product : TypeTag] {
+  def wire: Seq[Column]
+
+  private[streaming] lazy val encoder: Encoder[E] = Encoders.product[E]
+
+  /** Event time as epoch micros: exact long comparisons, no millis
+    * truncation. */
+  protected def tsu: Column = unix_micros(col("ts")).as("tsu")
+
+  /** `value` as exact integer cents. */
+  protected def cents: Column = round(col("value") * 100, 0).cast("long")
+}
+
+object UserEvent {
+  /** The one typed per-user source: the replay of `variant`, only its
+    * purchases when `purchasesOnly`, watermarked on `ts` by `watermark`
+    * when given, projected into `E` and grouped by `user_id`. The
+    * filter comes before the watermark, so a purchase-only stream's
+    * watermark tracks purchases alone (the S18b oracle's horizon). */
+  def byUser[E <: Product](s: SparkSession, d: String, variant: String,
+      event: UserEvent[E], purchasesOnly: Boolean = false,
+      watermark: Option[String] = None): KeyValueGroupedDataset[Long, E] = {
+    val src = Replayer.stream(s, d, variant)
+    val kept =
+      if (purchasesOnly) src.filter(col("event_type") === "purchase") else src
+    watermark.fold(kept)(kept.withWatermark("ts", _))
+      .select(col("user_id") +: event.wire: _*)
+      .groupBy(col("user_id"))
+      .as[Long, E](Encoders.scalaLong, event.encoder)
+  }
+}

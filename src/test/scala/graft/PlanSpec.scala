@@ -297,6 +297,26 @@ class PlanSpec extends AnyFunSuite {
       s"sequence window re-ranked inside the recursion:\n${p.take(2000)}")
   }
 
+  test("J12: j12_recursive leaves a fresh session's temp views unchanged " +
+       "and keeps at most its result RDD persisted") {
+    val c = TestSpark.spark.newSession()
+    // j12 registers the star schema itself; those views are idempotent
+    graft.core.Tables.registerAll(c, TestSpark.Sf)
+    def views = c.catalog.listTables().collect()
+      .filter(_.isTemporary).map(_.name).toSet
+    val sc = c.sparkContext
+    val viewsBefore = views
+    val rddsBefore = sc.getPersistentRDDs.keySet
+    val df = SparkEntry.queries("j12_recursive")(c, TestSpark.Sf)
+    assert(views == viewsBefore,
+      s"j12_recursive leaked temp views: ${views -- viewsBefore}")
+    val grown = sc.getPersistentRDDs.keySet -- rddsBefore
+    assert(grown.size <= 1,
+      s"j12_recursive left ${grown.size} persisted RDDs: " +
+      grown.map(sc.getPersistentRDDs(_).toDebugString).mkString("\n"))
+    assert(df.count() > 0)
+  }
+
   test("J13: LATERAL decorrelates to a partitioned rank window + join " +
        "(no nested-loop re-scan per outer row)") {
     val df = SparkEntry.queries("j13_lateral")(TestSpark.spark, TestSpark.Sf)

@@ -463,23 +463,15 @@ class StreamingSpec extends AnyFunSuite {
       "changed — recalibrate the s5b/s5c oracles)")
   }
 
-  test("S8b: flatMapGroupsWithState fallback equals the canonical " +
-       "transformWithState funnel on the chain-injected replay") {
+  test("S8b: the transformWithState funnel converts each injected chain " +
+       "exactly once on the chain-injected replay") {
     // the "funnel" variant injects deterministic view→click→purchase
-    // chains (4 at sf0.001) — the equivalence check below compares
-    // NON-EMPTY maps, so the funnel logic is positively exercised. The
-    // canonical s8b path is transformWithState on RocksDB (SURVEY §2.9
-    // primary); funnelFmgs is the declared fallback for state backends
-    // without TWS support.
+    // chains (4 at sf0.001), so the funnel logic is positively exercised
     val tws = SparkEntry.queries("s8b_funnel_injected")(s, sf).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val fmgs = graft.streaming.Streams.funnelFmgs(s, sf, "funnel").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(tws.nonEmpty,
       "chain-injected replay must produce conversions — empty result " +
       "means the funnel never fired")
-    assert(tws == fmgs,
-      s"transformWithState=${tws.toSeq.sorted} vs fmgs=${fmgs.toSeq.sorted}")
     // every injected chain converts exactly once, for a synthetic user
     assert(tws.keys.forall(_ >= Replayer.FunnelUserBase) &&
            tws.values.forall(_ == 1L),
