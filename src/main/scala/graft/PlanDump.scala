@@ -7,7 +7,7 @@ package graft
   * plan captured is the final DataFrame the bench times. For the
   * iterative queries that final plan says nothing about the loop, so
   * the `<query>_iter` names run the real query
-  * and capture the FIRST loop-body iteration's plan via the runners'
+  * and capture the FIRST loop-body iteration's plan via `core.Loop.run`'s
   * dumpRound hook — the per-round plan the bench actually pays.
   * `runMain graft.PlanDump <outDir> <tag> <name> [name...] [sfDir]`. */
 object PlanDump {
@@ -15,7 +15,7 @@ object PlanDump {
 
   /** Per-iteration plan providers: run the real query, hand the round-1
     * pre-checkpoint loop-body DataFrame to the sink. */
-  private val iterDumps: Map[String, (SparkSession, String, DataFrame => Unit) => Unit] = Map(
+  private[graft] val iterDumps: Map[String, (SparkSession, String, DataFrame => Unit) => Unit] = Map(
     "g1_pagerank_iter" -> ((s, d, h) => { queries.Graph.g1Run(s, d, Some(h)); () }),
     "g1b_pagerank_conv_iter" -> ((s, d, h) => { queries.Graph.g1bRun(s, d, Some(h)); () }),
     "g3_labelprop_iter" -> ((s, d, h) => { queries.Graph.g3Run(s, d, Some(h)); () }),

@@ -34,7 +34,7 @@ import graft.core.Tables
   *
   * 100 TB shape: phase 1 is one groupBy shuffle over |E| (the same
   * order as the LSH banding that produced the edges); each phase-2
-  * round shuffles only the contracted relation, and the driver sees
+  * round touches only the contracted relation, and the driver sees
   * per-round convergence label-sums (exact decimals — labels only ever
   * decrease, so a stationary sum means converged), never data.
   * Iteration state is
@@ -44,17 +44,12 @@ import graft.core.Tables
   * `checkpoint()` for fault-tolerant truncation instead).
   */
 object Cluster {
-  import graft.core.ConfScope
+  import graft.core.Loop
 
   /** Conservative per-row byte estimate for the CC relations feeding the
-    * measured-size broadcast gates (two BIGINT doc ids + row overhead —
-    * the graph family's NodeRowBytes convention). */
+    * measured-size broadcast gates and the loop width (two BIGINT doc
+    * ids + row overhead — the graph family's NodeRowBytes convention). */
   private val RowBytes = 32L
-
-  /** Shuffle width of the phase-2 CC loop (see connectedComponents). At
-    * cluster scale this would be O(cores): it bounds per-round tasks,
-    * not correctness. */
-  private val LoopPartitions = "2"
 
   /** Connected components of `edges` (d1, d2) over `nodes` (node):
     * returns (node, label) where label = min node id of the component.
@@ -63,45 +58,42 @@ object Cluster {
     *
     * Phase 1 — the edge-pipeline materialization, the full-|E|
     * contraction groupBy and the corpus-sized joins — runs at the
-    * caller's full shuffle width. Only the phase-2 loop runs narrow
-    * ([[LoopPartitions]]): each round is 4–5 shuffle stages over the
-    * CONTRACTED relation, which is orders of magnitude smaller than the
-    * corpus, so per-task launch overhead dominates at the default width
-    * — the same trade the streaming runs make, under the same shared
-    * ConfScope lock. Safe to scope because every intermediate inside the
-    * loop materializes EAGERLY (localCheckpoint + count). */
+    * caller's shuffle width. The phase-2 loop runs on [[Loop.run]] like
+    * the graph family: the CONTRACTED relation, orders of magnitude
+    * smaller than the corpus, is checkpointed hash-partitioned by node
+    * at [[Loop.loopParts]] width and the labels lookup is
+    * broadcast-gated, so no round shuffles at test scale. */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
                           maxIter: Int = 30,
                           dumpRound: Option[DataFrame => Unit] = None)
       : DataFrame = {
-    // ---- phase 1 (full width): materialize the (possibly expensive)
-    // edge pipeline once, contract every node to min(self, nbrs)
+    val s = nodes.sparkSession
+    // ---- phase 1: materialize the (possibly expensive) edge pipeline
+    // once, contract every node to min(self, nbrs)
     val sym = edges.select(col("d1").as("node"), col("d2").as("nbr"))
       .union(edges.select(col("d2").as("node"), col("d1").as("nbr")))
       .localCheckpoint()
-    // measured broadcast gates (r22 — the graph family's r21 recipe):
-    // every phase-1 relation below rides a checkpointed plan whose
-    // preserved stats are join-product garbage, so autoBroadcast never
-    // fires and the |E|-sized sym was sort-merge-shuffled TWICE into e1
-    // (plans/r22/l22_dup_clusters_iter_before.txt). The true sizes are
+    // measured broadcast gates: every relation below rides a
+    // checkpointed plan whose preserved stats are join-product
+    // estimates, so autoBroadcast never fires and the |E|-sized sym
+    // would be sort-merge-shuffled twice into e1. The true sizes are
     // known: nbrMin/l0 are node-bounded, sym.count() bounds the node
     // side conservatively (nv ≤ |sym| for edge-touched nodes; isolated
     // nodes only enter via `nodes`, gated by its own l0 count below).
-    val bcastE = ConfScope.bcastIfFits(nodes.sparkSession, sym.count(),
-      RowBytes)
+    val bcastE = Loop.bcastIfFits(s, sym.count(), RowBytes)
     val l0 = nodes
       .join(bcastE(sym.groupBy(col("node")).agg(min(col("nbr")).as("mn"))),
             Seq("node"), "left")
       .select(col("node"),
         least(col("node"), coalesce(col("mn"), col("node"))).as("label"))
       .localCheckpoint()
-    val bcastN = ConfScope.bcastIfFits(nodes.sparkSession, l0.count(),
-      RowBytes)
+    val bcastN = Loop.bcastIfFits(s, l0.count(), RowBytes)
     // contracted edge relation: the l0-images of each surviving edge.
     // Component-preserving (u—v implies l0(u) and l0(v) share u or v's
     // component and every component min is its own l0 image). Symmetric
-    // because sym is.
-    val e1 = sym
+    // because sym is. Checkpointed once to count it, then keyed by node
+    // at loop width: the round's neighbour-min groups by node.
+    val contracted = sym
       .join(bcastN(l0.select(col("node"), col("label").as("la"))), "node")
       .join(bcastN(l0.select(col("node").as("nbr"), col("label").as("lb"))),
         "nbr")
@@ -109,19 +101,38 @@ object Cluster {
       .select(col("la").as("node"), col("lb").as("nbr"))
       .distinct()
       .localCheckpoint()
-    val init = e1.select(col("node")).distinct()
-      .select(col("node"), col("node").as("label"))
-      .localCheckpoint()
-    // ---- phase 2 (narrow): iterate only over the contracted graph;
-    // the loop checkpoints every round, so nothing lazy escapes the scope
-    val small = ConfScope.withConf(nodes.sparkSession,
-      Map("spark.sql.shuffle.partitions" -> LoopPartitions)) {
-      connectedComponentsLoop(init, e1, maxIter, dumpRound)
+    val parts = Loop.loopParts(s, contracted.count(), RowBytes)
+    val e1 = Loop.checkpointByKeyN(contracted, parts, col("node"))
+    // every contracted node starts as its own label; min(node) rather
+    // than a `node AS label` alias, which would make Spark report the
+    // checkpoint's partitioning on `label` and shuffle round 1's join
+    val init = Loop.checkpointByKeyN(e1.groupBy(col("node"))
+      .agg(min(col("node")).as("label")), parts, col("node"))
+    // ---- phase 2: iterate only over the contracted graph. Convergence
+    // metric: Σ label as DECIMAL(38,0). Labels are per-node monotone
+    // non-increasing (the min-combine and the jump both only lower
+    // them), so the sum is stationary exactly when no label moved — one
+    // node-sized aggregate per round instead of a join back against the
+    // previous labels. DECIMAL keeps it exact at any node-id scale (a
+    // 64-bit sum would overflow near 1e11 nodes × 1e11 ids). coalesce:
+    // sum over an EMPTY contracted graph (a single contraction pass
+    // collapsed every component — the star-test case) is NULL.
+    def labelSum(df: DataFrame): java.math.BigDecimal =
+      df.agg(coalesce(sum(col("label").cast(DecimalType(38, 0))),
+                      lit(java.math.BigDecimal.ZERO)))
+        .head().getDecimal(0)
+    val ((small, _), rounds) = Loop.run((init, labelSum(init)), maxIter,
+        dumpRound)(st => ccRound(st._1, e1, bcastN)) {
+      case ((_, prevSum), next) =>
+        val curSum = labelSum(next)
+        if (curSum.compareTo(prevSum) == 0) None else Some((next, curSum))
     }
-    // ---- expand (full width): label(u) = loop-label of l0(u); l0(u)
-    // itself when its contracted node was isolated (star collapsed in
-    // phase 1). The loop labels are contracted-node-sized ≤ |l0| —
-    // broadcast under the same gate so l0 streams unshuffled.
+    require(rounds < maxIter,
+      s"connectedComponents did not converge in $maxIter rounds")
+    // ---- expand: label(u) = loop-label of l0(u); l0(u) itself when
+    // its contracted node was isolated (star collapsed in phase 1). The
+    // loop labels are contracted-node-sized ≤ |l0| — broadcast under the
+    // same gate so l0 streams unshuffled.
     l0.join(
         bcastN(small.select(col("node").as("label"),
           col("label").as("label2"))),
@@ -130,13 +141,16 @@ object Cluster {
         coalesce(col("label2"), col("label")).as("label"))
   }
 
-  /** One phase-2 round (pre-checkpoint `jumped`): the neighbour-min step
-    * followed by one pointer jump. Factored out so PlanDump can capture
-    * the loop-body plan (the g1bRound convention). */
-  private[graft] def ccRound(labels: DataFrame, sym: DataFrame): DataFrame = {
+  /** One phase-2 round (pre-checkpoint): the neighbour-min step followed
+    * by one pointer jump — PlanDump's per-iteration plan (the g1bRound
+    * convention). `labels` and `sym` are hash(node)-partitioned and the
+    * two label lookups broadcast, so the round keeps hash(node) without
+    * a shuffle. */
+  private[graft] def ccRound(labels: DataFrame, sym: DataFrame,
+      bcast: DataFrame => DataFrame): DataFrame = {
     // (1) neighbour-min step: label ← min(label, min over nbrs' labels)
     val nbrMin = sym
-      .join(labels.select(col("node").as("nbr"), col("label").as("nl")),
+      .join(bcast(labels.select(col("node").as("nbr"), col("label").as("nl"))),
             "nbr")
       .groupBy(col("node")).agg(min(col("nl")).as("nmin"))
     val stepped = labels.join(nbrMin, Seq("node"), "left")
@@ -147,42 +161,8 @@ object Cluster {
     // node id (invariant label(u) ≤ u from the init + min-combine), so
     // the lookup is an inner self-join that can never drop rows.
     stepped.select(col("node"), col("label").as("mid"))
-      .join(stepped.select(col("node").as("mid"), col("label")), "mid")
+      .join(bcast(stepped.select(col("node").as("mid"), col("label"))), "mid")
       .select(col("node"), col("label"))
-  }
-
-  private def connectedComponentsLoop(init: DataFrame, sym: DataFrame,
-                                      maxIter: Int,
-                                      dumpRound: Option[DataFrame => Unit])
-      : DataFrame = {
-    // Convergence metric: Σ label as DECIMAL(38,0). Labels are per-node
-    // monotone non-increasing (the min-combine and the jump both only
-    // lower them), so the sum is stationary exactly when no label moved —
-    // one node-sized aggregate per round instead of a join back against
-    // the previous labels. DECIMAL keeps it exact at any node-id scale
-    // (a 64-bit sum would overflow near 1e11 nodes × 1e11 ids).
-    // coalesce: sum over an EMPTY contracted graph (a single contraction
-    // pass collapsed every component — the star-test case) is NULL
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(coalesce(sum(col("label").cast(DecimalType(38, 0))),
-                      lit(java.math.BigDecimal.ZERO)))
-        .head().getDecimal(0)
-    var labels = init
-    var prevSum = labelSum(init)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val body = ccRound(labels, sym)
-      if (iter == 0) dumpRound.foreach(_(body))
-      val jumped = body.localCheckpoint()
-      val curSum = labelSum(jumped)
-      labels = jumped
-      converged = curSum.compareTo(prevSum) == 0
-      prevSum = curSum
-      iter += 1
-    }
-    require(converged, s"connectedComponents did not converge in $maxIter rounds")
-    labels
   }
 
   /** The (doc_id, label) component assignment underlying l22: CC over

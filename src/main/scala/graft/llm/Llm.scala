@@ -47,9 +47,13 @@ object Llm {
 
   private val slugifyUdf = udf(slugify)
 
-  /** Register the UDF surface for SQL-text callers (E1); idempotent. */
+  /** Register the UDF surface for SQL-text callers (E1); idempotent: a
+    * session that already has `slugify` keeps it, so repeated
+    * `Engine.open` calls never replace the registration. */
   private[graft] def registerSqlUdfs(sp: SparkSession): Unit =
-    sp.udf.register("slugify", slugify)
+    if (!sp.sessionState.functionRegistry.functionExists(
+        org.apache.spark.sql.catalyst.FunctionIdentifier("slugify")))
+      sp.udf.register("slugify", slugify)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // L1 — exact dedup on normalized text. 100 TB: one hash-groupBy (2-

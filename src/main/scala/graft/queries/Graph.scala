@@ -1,9 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.core.Tables
+import graft.core.{Loop, Tables}
 
 /** SURVEY.md §2 — G1: iterative graph analytics (PageRank).
   *
@@ -42,11 +42,11 @@ object Graph {
 
   /** Conservative per-row byte estimate for the nv-sized loop relations
     * (nid + one BIGINT payload + row overhead) feeding the measured-size
-    * broadcast gate (ConfScope.bcastIfFits — see g1bRun's loop note). */
+    * broadcast gate (Loop.bcastIfFits). */
   private[graft] val NodeRowBytes = 32L
 
-  /** Per-row estimate for the 3-BIGINT oriented edge relation feeding
-    * g2's shuffled-hash build-side budget check. */
+  /** Per-row estimate for the 3-BIGINT edge relations sizing the loop
+    * width and g2's shuffled-hash build-side budget check. */
   private[graft] val EdgeRowBytes = 40L
 
   /** Fixed-point mass scale (1e12: nv up to ~1e9 nodes still leaves
@@ -66,23 +66,11 @@ object Graph {
     * (G1 keeps the canonical 85/100 on the fixed-round form). */
   val ConvCap = 40
 
-  /** The symmetric co-purchase edge list: (src, dst) both directions,
-    * customer nid = 2·custkey, supplier nid = 2·suppkey + 1. */
-  private def edges(s: SparkSession, d: String): DataFrame = {
-    val pairs = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
-      .join(Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey")),
-        col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("c"),
-        (col("l_suppkey") * 2 + 1).as("p"))
-      .distinct()
-    pairs.select(col("c").as("src"), col("p").as("dst"))
-      .unionByName(pairs.select(col("p").as("src"), col("c").as("dst")))
-  }
-
   /** The DIRECTED co-purchase edge list for G1b: customer → supplier
     * only (c bought from s), so every supplier is a DANGLING node (no
     * out-edges) — the real-graph structure G1's symmetric construction
-    * designs away. Same nid key space as G1. */
+    * designs away. customer nid = 2·custkey, supplier nid =
+    * 2·suppkey + 1. */
   private def directedEdges(s: SparkSession, d: String): DataFrame =
     Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
       .join(Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey")),
@@ -91,35 +79,24 @@ object Graph {
         (col("l_suppkey") * 2 + 1).as("dst"))
       .distinct()
 
-  /** G1b body: runs the convergence loop and returns (top-20 result,
-    * rounds actually executed) — the round count is exposed ONLY for
-    * RetrievalGraphSpec's converged-before-cap pin; the query output
-    * never encodes it (the oracle runs the full unconditional unroll).
-    *
-    * Exact-integer iteration with dangling mass, damping 1/2:
-    *
-    *   dang    = Σ pr(u) over out-degree-0 nodes
-    *   in(v)   = Σ_{u→v} (pr(u) div deg(u))        (0 if no in-edges)
-    *   pr'(v)  = Scale div (2·nv)
-    *           + (in(v) + dang div nv) div 2
-    *
-    * Early stop at EXACT stationarity (no tolerance): pr' == pr row-
-    * for-row. That stop is identity-safe — the state map F depends only
-    * on the current state and static relations, so pr_i == pr_{i-1}
-    * implies every later round is a no-op, and the oracle can simply
-    * unroll ConvCap rounds unconditionally; if the integer trajectory
-    * never lands exactly (a floor-noise limit cycle), both sides run
-    * the full cap and still agree. 100 TB: per round one shuffle join
-    * on src + one aggregation on dst (the G1 Pregel shape), a 1-row
-    * dangling-mass aggregate collected as a driver scalar (bounded by
-    * construction — and load-bearing for planner health, see the loop
-    * comment), and a changed-row probe joining the two checkpointed
-    * (nv-sized) rank relations — round count is bounded by the cap and
-    * in practice ~log2(Scale/nv). */
+  /** The symmetric co-purchase edge list for G1: the directed edges
+    * and their reverse. */
+  private def edges(s: SparkSession, d: String): DataFrame = {
+    val de = directedEdges(s, d)
+    de.unionByName(de.select(col("dst").as("src"), col("src").as("dst")))
+  }
+
+  /** G1/G1b output: the top-20 ranks as (nid, kind, key, pr). */
+  private def top20(pr: DataFrame): DataFrame =
+    pr.select(col("nid"),
+        when(col("nid") % 2 === 0, lit("customer"))
+          .otherwise(lit("supplier")).as("kind"),
+        expr("nid div 2").as("key"), col("pr"))
+      .orderBy(col("pr").desc, col("nid").asc)
+      .limit(20)
+
   /** One g1b round's pre-checkpoint `next` relation — the loop-body plan
-    * the bench pays ConvCap-ish times. Factored out so PlanDump can
-    * capture the PER-ITERATION plan (the final checkpointed plan says
-    * nothing about the loop — the r21 evidence gap).
+    * the bench pays ConvCap-ish times, and the one PlanDump captures.
     *
     * `pr` is the previous round's (nid, pr) slice; `nodes2` the static
     * (nid, dang) node relation. edeg is hash(dst)-partitioned and nodes2
@@ -146,49 +123,63 @@ object Graph {
         col("dang"))
   }
 
+  /** G1b body: runs the convergence loop and returns (top-20 result,
+    * rounds actually executed) — the round count is exposed ONLY for
+    * RetrievalGraphSpec's converged-before-cap pin; the query output
+    * never encodes it (the oracle runs the full unconditional unroll).
+    *
+    * Exact-integer iteration with dangling mass, damping 1/2:
+    *
+    *   dang    = Σ pr(u) over out-degree-0 nodes
+    *   in(v)   = Σ_{u→v} (pr(u) div deg(u))        (0 if no in-edges)
+    *   pr'(v)  = Scale div (2·nv)
+    *           + (in(v) + dang div nv) div 2
+    *
+    * Early stop at EXACT stationarity (no tolerance): pr' == pr row-
+    * for-row. That stop is identity-safe — the state map F depends only
+    * on the current state and static relations, so pr_i == pr_{i-1}
+    * implies every later round is a no-op, and the oracle can simply
+    * unroll ConvCap rounds unconditionally; if the integer trajectory
+    * never lands exactly (a floor-noise limit cycle), both sides run
+    * the full cap and still agree. 100 TB: per round one shuffle join
+    * on src + one aggregation on dst (the G1 Pregel shape), a 1-row
+    * dangling-mass aggregate collected as a driver scalar (bounded by
+    * construction — and load-bearing for planner health, see below),
+    * and a changed-row probe joining the two checkpointed (nv-sized)
+    * rank relations — round count is bounded by the cap and in practice
+    * ~log2(Scale/nv). */
   private[graft] def g1bRun(s: SparkSession, d: String,
       dumpRound: Option[DataFrame => Unit] = None): (DataFrame, Int) = {
     val e = directedEdges(s, d).localCheckpoint()
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .localCheckpoint()
     val ndeg = deg.count()
-    val bcastDeg = graft.core.ConfScope.bcastIfFits(s, ndeg, NodeRowBytes)
-    // loop width sized from the MEASURED edge bytes (guide §2.2): the
-    // exchange-free loop never gives AQE a shuffle to coalesce, so the
-    // width is derived here — 1–2 tasks per round at test scale, the
-    // full configured width at cluster scale.
-    val parts = graft.core.ConfScope.loopParts(s, e.count(), EdgeRowBytes)
-    // static e⋈deg hoisted OUT of the loop (r16): every round used to
-    // re-join edges with out-degrees; both are loop-invariant, so the
-    // join runs once and pins one more O(|E|) relation (the same
-    // storage/fault-tolerance trade `e` itself makes — on executor
-    // loss production re-runs the stage from the scans). deg is
-    // nv-bounded → the measured broadcast gate (r21) spares e the
-    // build-side shuffle. r22 (guide §2.4): edeg is checkpointed
-    // HASH-PARTITIONED BY dst — the per-round in-mass aggregate groups
-    // by dst, so the preserved partitioning removes the per-round
-    // Exchange of the map-side-combined in-mass rows (the one shuffle
-    // the r21 plan still paid — plans/r22/g1b_*_iter_before.txt node 10).
-    val edeg = graft.core.ConfScope.checkpointByKeyN(
+    val bcastDeg = Loop.bcastIfFits(s, ndeg, NodeRowBytes)
+    val parts = Loop.loopParts(s, e.count(), EdgeRowBytes)
+    // the loop-invariant e⋈deg runs once, checkpointed hash-partitioned
+    // by dst: the per-round in-mass aggregate groups by dst, so no round
+    // shuffles its rows (guide §2.4). It pins one more O(|E|) relation
+    // (the storage/fault-tolerance trade `e` itself makes: on executor
+    // loss production re-runs the stage from the scans).
+    val edeg = Loop.checkpointByKeyN(
       e.join(bcastDeg(deg), "src")
         .select(col("src"), col("dst"), col("deg")), parts, col("dst"))
     // static (nid, dang) node relation, hash-partitioned by nid: the
     // dangling flag is a per-node constant, so computing it ONCE here
-    // removes the probe's per-round deg join; the nid partitioning
+    // keeps a deg join out of every round's probe; the nid partitioning
     // keeps the nodes2 ⋈ in join exchange-free when the gate is off
     // (in-mass is keyed dst = nid and partitioned by it).
-    val nodes2 = graft.core.ConfScope.checkpointByKeyN(
+    val nodes2 = Loop.checkpointByKeyN(
       e.select(col("src").as("nid"))
         .unionByName(e.select(col("dst").as("nid"))).distinct()
         .join(bcastDeg(deg), col("nid") === deg("src"), "left")
         .select(col("nid"), col("src").isNull.as("dang")), parts, col("nid"))
     val nv = nodes2.count()
-    val bcast = graft.core.ConfScope.bcastIfFits(s, nv, NodeRowBytes)
+    // every nv-sized loop relation rides a checkpointed plan whose size
+    // stats are join-product estimates, so autoBroadcast never fires on
+    // them; the true size nv is counted, so gate on it.
+    val bcast = Loop.bcastIfFits(s, nv, NodeRowBytes)
     val tele = Scale / (2L * nv)
-    var pr = nodes2.select(col("nid"), lit(Scale / nv).as("pr"),
-      col("dang"))
-    var rounds = 0
-    var stationary = false
     // dangling mass as a driver scalar (1 row per round — the L22
     // convergence-scalar idiom). Besides being the natural way to
     // feed a scalar into the next step, it keeps `pr` referenced
@@ -201,39 +192,21 @@ object Graph {
     // measured: rounds 18/19/20 at 4.5/8.4/39 s on sf0.001 with
     // k = 3). Single-reference keeps the digit growth linear — which is
     // why each round's `next` joins the STATIC nodes2, never pr itself.
-    // The INITIAL mass is closed-form (r22): pr0 is uniform, so
-    // Σ pr0 over dangling = (Scale div nv) · (nv − |deg|) — two counted
-    // scalars replace the left-anti aggregation job the loop used to pay.
-    var dangShare = (Scale / nv) * (nv - ndeg) / nv
-    // Join-strategy gate (r21, guide §3.1): every nv-sized loop relation
-    // (pr, deg, in) rides a checkpointed plan whose PRESERVED join-
-    // estimate stats are join-product estimates that grow per round (see
-    // the dangling-mass comment), so autoBroadcast never fires and each
-    // round sort-merge-shuffled the FULL edge relation — 2 Exchanges +
-    // 2 Sorts of |E| per round. The true size is KNOWN (nv, counted
-    // above): broadcast the nv-sized side when it fits the session's own
-    // broadcast threshold — exactly the decision correct stats would
-    // produce, at any scale (a 1e9-node graph fails the gate and keeps
-    // the shuffle plan — which the r22 pre-partitioning keeps
-    // exchange-free on the aggregate and the nodes2 join even then).
-    while (rounds < ConvCap && !stationary) {
-      val body = g1bRound(nodes2, edeg,
+    // The initial mass is closed-form: pr0 is uniform, so
+    // Σ pr0 over dangling = (Scale div nv) · (nv − |deg|).
+    val pr0 = nodes2.select(col("nid"), lit(Scale / nv).as("pr"), col("dang"))
+    val ((pr, _), rounds) = Loop.run(
+        (pr0, (Scale / nv) * (nv - ndeg) / nv), ConvCap, dumpRound) {
+      case (pr, dangShare) => g1bRound(nodes2, edeg,
         pr.select(col("nid"), col("pr")), bcast, tele, dangShare)
-      if (rounds == 0) dumpRound.foreach(_(body))
-      // checkpoint WITH partitioning: the body is a left-outer join whose
-      // left side is hash(nid), so next inherits hash(nid) — which makes
-      // the probe below co-partitioned with the previous round's next.
-      val next = graft.core.ConfScope.checkpointKeepPartitioning(body)
-      // ONE fused probe job per round (r16 — was two): stationarity
-      // against the PREVIOUS checkpoint AND the NEXT round's dangling
-      // mass, both over the just-materialized `next`. Outside the
-      // checkpointed plan, so the joins never inflate carried stats;
-      // the full-scan aggregate replaces limit(1).isEmpty — nv rows
-      // cost less than the job the short-circuit used to save. The
-      // dangling flag rides `next` as a column (from nodes2), so the
-      // probe joins ONE relation (the previous ranks) — and both sides
-      // carry hash(nid), so the probe is a zero-exchange, zero-broadcast
-      // single job (r22).
+    } { case ((pr, _), next) =>
+      // one probe job per round: stationarity against the previous
+      // ranks AND the next round's dangling mass, both over the
+      // just-checkpointed `next`. Outside the checkpointed plan, so the
+      // join never inflates carried stats; the full-scan aggregate is
+      // cheaper than a second short-circuit job. The dangling flag rides
+      // `next` as a column (from nodes2), and both sides carry
+      // hash(nid), so the probe is one zero-exchange, zero-broadcast job.
       val probe = next
         .join(pr.select(col("nid").as("pnid"), col("pr").as("prev")),
           next("nid") === col("pnid"))
@@ -243,18 +216,10 @@ object Graph {
           coalesce(max(when(next("pr") =!= col("prev"), 1)), lit(0))
             .as("changed"))
         .head()
-      stationary = probe.getInt(1) == 0
-      dangShare = probe.getLong(0) / nv
-      pr = next
-      rounds += 1
+      if (probe.getInt(1) == 0) None else Some((next, probe.getLong(0) / nv))
     }
-    val out = pr.select(col("nid"),
-        when(col("nid") % 2 === 0, lit("customer"))
-          .otherwise(lit("supplier")).as("kind"),
-        expr("nid div 2").as("key"), col("pr"))
-      .orderBy(col("pr").desc, col("nid").asc)
-      .limit(20)
-    (out, rounds)
+    // the round that found the fixpoint ran too
+    (top20(pr), if (rounds < ConvCap) rounds + 1 else rounds)
   }
 
   /** G1 body (see the g1_pagerank registration comment for semantics). */
@@ -264,34 +229,21 @@ object Graph {
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .localCheckpoint()
     val nv = deg.count()
-    // measured broadcast gate + loop-invariant e⋈deg hoist (r21 —
-    // the g1b recipe, see g1bRun): without it every round SMJ-
-    // shuffled |E| twice (pr/deg carry grown checkpoint stats).
-    // r22: edeg checkpointed hash-partitioned by dst so the per-round
-    // rank aggregate (groupBy dst) is exchange-free (guide §2.4).
-    val bcast = graft.core.ConfScope.bcastIfFits(s, nv, NodeRowBytes)
-    val parts = graft.core.ConfScope.loopParts(s, e.count(), EdgeRowBytes)
-    val edeg = graft.core.ConfScope.checkpointByKeyN(
-      e.join(bcast(deg), "src")
-        .select(col("src"), col("dst"), col("deg")), parts, col("dst"))
+    // the g1b recipe: deg broadcast-gated, e⋈deg run once and
+    // checkpointed hash-partitioned by dst, so the per-round rank
+    // aggregate (groupBy dst) is exchange-free
+    val bcast = Loop.bcastIfFits(s, nv, NodeRowBytes)
+    val edeg = Loop.checkpointByKeyN(
+      e.join(bcast(deg), "src").select(col("src"), col("dst"), col("deg")),
+      Loop.loopParts(s, e.count(), EdgeRowBytes), col("dst"))
     val tele = (15L * Scale) / (100L * nv)
-    var pr = deg.select(col("src").as("nid"),
-      lit(Scale / nv).as("pr"))
-    for (i <- 1 to Rounds) {
-      val body = g1Round(edeg, pr, bcast, tele)
-      if (i == 1) dumpRound.foreach(_(body))
-      pr = body.localCheckpoint()
-    }
-    pr.select(col("nid"),
-        when(col("nid") % 2 === 0, lit("customer"))
-          .otherwise(lit("supplier")).as("kind"),
-        expr("nid div 2").as("key"), col("pr"))
-      .orderBy(col("pr").desc, col("nid").asc)
-      .limit(20)
+    val pr0 = deg.select(col("src").as("nid"), lit(Scale / nv).as("pr"))
+    top20(Loop.run(pr0, Rounds, dumpRound)(g1Round(edeg, _, bcast, tele))(
+      (_, next) => Some(next))._1)
   }
 
-  /** One g1 Pregel round (pre-checkpoint) — factored out for PlanDump's
-    * per-iteration plan capture (see g1bRound). */
+  /** One g1 Pregel round (pre-checkpoint) — PlanDump's per-iteration
+    * plan (see g1bRound). */
   private[graft] def g1Round(edeg: DataFrame, pr: DataFrame,
       bcast: DataFrame => DataFrame, tele: Long): DataFrame =
     edeg.join(bcast(pr), edeg("src") === pr("nid"))
@@ -300,19 +252,47 @@ object Graph {
       .select(col("dst").as("nid"),
         (lit(tele) + expr("(85 * sumin) div 100")).as("pr"))
 
-  /** G2: the co-order PART graph — undirected edge {p1, p2} iff some
-    * order's lineitems contain both parts (the market-basket structure;
-    * the G1 customer×supplier graph is bipartite, hence triangle-free
-    * by construction, so triangle analytics needs this unipartite
-    * projection). Edges canonical as (a < b), distinct. */
-  private def partEdges(s: SparkSession, d: String): DataFrame = {
+  /** The co-order part pairs (a, b, c): every two parts a < b that
+    * share c ≥ 1 distinct orders, from one o_orderkey-keyed self-join
+    * (never all-pairs).
+    *
+    *  - G2/G3 take every pair: the unipartite market-basket graph (the
+    *    G1 customer×supplier graph is bipartite, hence triangle-free by
+    *    construction).
+    *  - G4 takes c ≥ 2, the market-basket support threshold. The
+    *    unthresholded graph is near-complete at test scale (every
+    *    4-lineitem order contributes 6 pairs over a small part
+    *    universe), so every hop distance would be ≤ 2; support-2 keeps
+    *    only repeatedly co-purchased pairs, giving the graph real
+    *    diameter (measured 2 / 7 / 5 at the shipped sfs) and genuinely
+    *    disconnected components (unreached nodes are absent from the
+    *    output — part of the canonical check).
+    *  - G5 takes c ≥ 2 with a support-derived weight (see g5Run). */
+  private def coOrderPairs(s: SparkSession, d: String): DataFrame = {
     val op = Tables.lineitem(s, d)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       .distinct()
     op.as("x").join(op.as("y"),
         col("x.ok") === col("y.ok") && col("x.pk") < col("y.pk"))
-      .select(col("x.pk").as("a"), col("y.pk").as("b"))
-      .distinct()
+      .groupBy(col("x.pk").as("a"), col("y.pk").as("b"))
+      .agg(count(lit(1)).as("c"))
+  }
+
+  /** Both orientations of an undirected (a, b, …) edge list as a
+    * (src, dst, …) relation, checkpointed hash-partitioned by dst at
+    * loop width: every g3/g4/g5 round aggregates on dst, so no round
+    * shuffles (guide §2.4). The pairs are checkpointed first so their
+    * self-join runs once (the symmetrization reads them twice) and
+    * their count sizes the width (guide §2.2). */
+  private def loopEdges(pairs: DataFrame): DataFrame = {
+    val und = pairs.localCheckpoint()
+    val rest = und.columns.toSeq.drop(2).map(col)
+    Loop.checkpointByKeyN(
+      und.select(col("a").as("src") +: col("b").as("dst") +: rest: _*)
+        .unionByName(
+          und.select(col("b").as("src") +: col("a").as("dst") +: rest: _*)),
+      Loop.loopParts(und.sparkSession, 2L * und.count(), EdgeRowBytes),
+      col("dst"))
   }
 
   /** G3 label-propagation rounds — fixed, part of the canonical
@@ -323,40 +303,23 @@ object Graph {
   /** G3 body (see the g3_labelprop registration comment for semantics). */
   private[graft] def g3Run(s: SparkSession, d: String,
       dumpRound: Option[DataFrame => Unit] = None): DataFrame = {
-    // r22: und checkpointed so partEdges runs once (the symmetrization
-    // references it twice) and its count can size the loop width; the
-    // symmetric edge relation is then checkpointed hash-partitioned by
-    // dst — both per-round aggregates key on dst ((dst, lbl) then dst;
-    // hash(dst) satisfies both ClusteredDistributions), so every LPA
-    // round runs with zero exchanges (guide §2.4) at a width derived
-    // from the measured edge bytes (guide §2.2).
-    val und = partEdges(s, d).localCheckpoint()
-    val parts = graft.core.ConfScope.loopParts(s, 2L * und.count(),
-      EdgeRowBytes)
-    val e = graft.core.ConfScope.checkpointByKeyN(
-      und.select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(und.select(col("b").as("src"), col("a").as("dst"))),
-      parts, col("dst"))
-    var lbl = e.select(col("src").as("nid")).distinct()
+    // both per-round aggregates key on dst ((dst, lbl) then dst), and
+    // hash(dst) satisfies both
+    val e = loopEdges(coOrderPairs(s, d).select(col("a"), col("b")))
+    val lbl0 = e.select(col("src").as("nid")).distinct()
       .select(col("nid"), col("nid").as("lbl"))
       .localCheckpoint()
-    // measured broadcast gate (r21 — the g1b recipe): lbl is nv-sized
-    // but its checkpoint stats grow per round, so autoBroadcast never
-    // fired and every round SMJ-shuffled the |E|-sized edge relation.
-    val bcast = graft.core.ConfScope.bcastIfFits(s, lbl.count(),
-      NodeRowBytes)
-    for (i <- 1 to LpaRounds) {
-      val body = g3Round(e, lbl, bcast)
-      if (i == 1) dumpRound.foreach(_(body))
-      lbl = body.localCheckpoint()
-    }
-    lbl.groupBy(col("lbl").as("community"))
+    // lbl is nv-sized: gate its broadcast on the counted nv
+    val bcast = Loop.bcastIfFits(s, lbl0.count(), NodeRowBytes)
+    Loop.run(lbl0, LpaRounds, dumpRound)(g3Round(e, _, bcast))(
+        (_, next) => Some(next))._1
+      .groupBy(col("lbl").as("community"))
       .agg(count(lit(1)).as("n_members"))
       .orderBy(col("n_members").desc, col("community").asc)
   }
 
-  /** One g3 synchronous LPA round (pre-checkpoint) — factored out for
-    * PlanDump's per-iteration plan capture (see g1bRound). */
+  /** One g3 synchronous LPA round (pre-checkpoint) — PlanDump's
+    * per-iteration plan (see g1bRound). */
   private[graft] def g3Round(e: DataFrame, lbl: DataFrame,
       bcast: DataFrame => DataFrame): DataFrame =
     e.join(bcast(lbl), e("src") === lbl("nid"))
@@ -378,94 +341,58 @@ object Graph {
     * sf0.001 / 0.01 / 0.1). */
   val BfsSrcMod = 53L
 
-  /** The SUPPORT-2 co-order part graph for G4: edge {p1, p2} iff the
-    * parts co-occur in ≥ 2 DISTINCT orders — the market-basket support
-    * threshold. The unthresholded G2/G3 graph is near-complete at test
-    * scale (every 4-lineitem order contributes 6 pairs over a small
-    * part universe), so every hop distance would be ≤ 2; support-2
-    * keeps only repeatedly co-purchased pairs, giving the graph real
-    * diameter (measured 2 / 7 / 5 at the shipped sfs) and genuinely
-    * disconnected components (unreached nodes are absent from the
-    * output — part of the canonical check). Same co-order pair join as
-    * G2/G3 (one o_orderkey-keyed self-join, never all-pairs), with the
-    * distinct collapsed into the support count. */
-  private def supportEdges(s: SparkSession, d: String): DataFrame = {
-    val op = Tables.lineitem(s, d)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      .distinct()
-    op.as("x").join(op.as("y"),
-        col("x.ok") === col("y.ok") && col("x.pk") < col("y.pk"))
-      .groupBy(col("x.pk").as("a"), col("y.pk").as("b"))
-      .agg(count(lit(1)).as("c"))
-      .filter(col("c") >= 2)
-      .select(col("a"), col("b"))
-  }
+  /** The support-2 source nodes of G4/G5 with their initial distance. */
+  private def sources(e: DataFrame, d0: Column): DataFrame =
+    e.select(col("src").as("nid")).distinct()
+      .filter(col("nid") % BfsSrcMod === 0)
+      .select(col("nid"), d0)
+      .localCheckpoint()
 
   /** G4 body: multi-source frontier BFS (k-hop / unit-weight SSSP) —
     * the "how far" member of the Pregel family (G1/G1b rank, G2 count,
     * G3 cluster, L22 component). Exact-integer hop distance from the
-    * BfsSrcMod source set; each round joins the FRONTIER (not the full
-    * settled set) against the edge relation, drops already-settled
-    * nodes with one left-anti join, and settles survivors at the round
-    * index — equivalent to the min-aggregate formulation because in
-    * unit-weight BFS the first discovery IS the minimum distance, so no
-    * per-node min is ever recomputed. Stops on the first empty
-    * frontier (G1b's convergence machinery, with the cheaper emptiness
-    * probe replacing the stationarity join). Returns (result, rounds
-    * executed) — rounds exposed only for RetrievalGraphSpec's
-    * stopped-before-cap pin. 100 TB: per round one shuffle join of the
-    * |frontier|-sized relation against edges + one anti join against
-    * settled; total work Σ|frontier_i| · deg = O(|E|) across all
-    * rounds (each edge relaxes at most twice), round count = graph
-    * eccentricity (~O(log n) on small-world graphs); per-round
+    * BfsSrcMod source set over the support-2 co-order graph; each round
+    * joins the FRONTIER (not the full settled set) against the edge
+    * relation, drops already-settled nodes with one left-anti join, and
+    * settles survivors at the round index — equivalent to the
+    * min-aggregate formulation because in unit-weight BFS the first
+    * discovery IS the minimum distance, so no per-node min is ever
+    * recomputed. Stops on the first empty frontier. Returns (result,
+    * rounds that settled nodes) — rounds exposed only for
+    * RetrievalGraphSpec's stopped-before-cap pin. 100 TB: per round one
+    * shuffle join of the |frontier|-sized relation against edges + one
+    * anti join against settled; total work Σ|frontier_i| · deg = O(|E|)
+    * across all rounds (each edge relaxes at most twice), round count =
+    * graph eccentricity (~O(log n) on small-world graphs); per-round
     * localCheckpoint truncates lineage, the G1 Pregel hygiene. */
   private[graft] def g4Run(s: SparkSession, d: String,
       dumpRound: Option[DataFrame => Unit] = None): (DataFrame, Int) = {
-    // r22: und checkpointed (supportEdges referenced twice by the
-    // symmetrization, and its count sizes the loop width); e then
-    // checkpointed hash-partitioned by dst — the per-round frontier
-    // expansion's distinct() keys on dst, so it needs no exchange
-    // (guide §2.4; the left-anti against settled is broadcast-gated).
-    val und = supportEdges(s, d).localCheckpoint()
-    val parts = graft.core.ConfScope.loopParts(s, 2L * und.count(),
-      EdgeRowBytes)
-    val e = graft.core.ConfScope.checkpointByKeyN(
-      und.select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(und.select(col("b").as("src"), col("a").as("dst"))),
-      parts, col("dst"))
-    var settled = e.select(col("src").as("nid")).distinct()
-      .filter(col("nid") % BfsSrcMod === 0)
-      .select(col("nid"), lit(0).as("dist"))
-      .localCheckpoint()
-    var frontier = settled.select(col("nid"))
-    var rounds = 0
-    var done = frontier.isEmpty
-    // measured broadcast gate (r21 — the g1b recipe): frontier and
-    // settled are nv-bounded and nv ≤ |e| (every node of this relation
-    // is some edge's src), so gating on the cheap checkpointed edge
-    // count is a conservative upper bound — it can only SKIP a
-    // broadcast that would have fit, never force one that doesn't.
-    val bcast = graft.core.ConfScope.bcastIfFits(s, e.count(), NodeRowBytes)
-    while (rounds < BfsCap && !done) {
-      val body = g4Round(e, frontier, settled, bcast)
-      if (rounds == 0) dumpRound.foreach(_(body))
-      val next = body.localCheckpoint()
-      done = next.isEmpty
-      if (!done) {
-        rounds += 1
-        settled = settled
-          .unionByName(next.select(col("nid"), lit(rounds).as("dist")))
-          .localCheckpoint()
-        frontier = next
-      }
+    // the frontier expansion's distinct() keys on dst
+    val e = loopEdges(coOrderPairs(s, d).filter(col("c") >= 2)
+      .select(col("a"), col("b")))
+    val settled0 = sources(e, lit(0).as("dist"))
+    // frontier and settled are nv-bounded and nv ≤ |e| (every node of
+    // this relation is some edge's src), so gating on the cheap
+    // checkpointed edge count is a conservative upper bound — it can
+    // only SKIP a broadcast that would have fit, never force one that
+    // doesn't.
+    val bcast = Loop.bcastIfFits(s, e.count(), NodeRowBytes)
+    val ((settled, _, _), rounds) = Loop.run(
+        (settled0, settled0.select(col("nid")), 0), BfsCap, dumpRound) {
+      case (settled, frontier, _) => g4Round(e, frontier, settled, bcast)
+    } { case ((settled, _, depth), next) =>
+      if (next.isEmpty) None
+      else Some((settled.unionByName(
+          next.select(col("nid"), lit(depth + 1).as("dist"))).localCheckpoint(),
+        next, depth + 1))
     }
     (settled.select(col("nid").as("p_partkey"),
         col("dist").cast(IntegerType).as("dist"))
       .orderBy(col("dist"), col("p_partkey")), rounds)
   }
 
-  /** One g4 BFS frontier-expansion round (pre-checkpoint) — factored out
-    * for PlanDump's per-iteration plan capture (see g1bRound). */
+  /** One g4 BFS frontier-expansion round (pre-checkpoint) — PlanDump's
+    * per-iteration plan (see g1bRound). */
   private[graft] def g4Round(e: DataFrame, frontier: DataFrame,
       settled: DataFrame, bcast: DataFrame => DataFrame): DataFrame =
     e.join(bcast(frontier), e("src") === frontier("nid"))
@@ -481,44 +408,8 @@ object Graph {
     * hop eccentricity ≤ 7); 24 is the replayable budget. */
   val SsspCap = 24
 
-  /** The support-2 co-order graph with SUPPORT-DERIVED integer edge
-    * weights for G5: strong ties are short — support ≥ 4 → w = 1,
-    * support 3 → w = 2, support 2 → w = 3. Same single o_orderkey
-    * self-join as supportEdges, the count reused as the weight
-    * source instead of dropped. */
-  private def weightedSupportEdges(s: SparkSession, d: String): DataFrame = {
-    val op = Tables.lineitem(s, d)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      .distinct()
-    op.as("x").join(op.as("y"),
-        col("x.ok") === col("y.ok") && col("x.pk") < col("y.pk"))
-      .groupBy(col("x.pk").as("a"), col("y.pk").as("b"))
-      .agg(count(lit(1)).as("c"))
-      .filter(col("c") >= 2)
-      .select(col("a"), col("b"),
-        when(col("c") >= 4, lit(1L)).when(col("c") === 3, lit(2L))
-          .otherwise(lit(3L)).as("w"))
-  }
-
-  /** G5 body: multi-source WEIGHTED single-source-shortest-paths —
-    * G4 answers "how many hops", G5 answers "how far" when edges
-    * carry cost (Bellman-Ford with an improved-only frontier, the
-    * distributed relaxation every Pregel SSSP uses). Each round joins
-    * the frontier (nodes whose distance just improved) against the
-    * weighted edges, takes the per-target min of (frontier dist + w),
-    * keeps only targets that BEAT their settled distance, and merges.
-    * Unlike unit-weight BFS a node can improve more than once (a
-    * longer-hop cheaper path arriving later), which is exactly what
-    * the improved-only frontier re-propagates; stops on the first
-    * improvement-free round under the identity-safe SsspCap. 100 TB:
-    * per round one shuffle join of |frontier| against edges + one
-    * node-keyed min merge; total relaxations bounded by Σ improvements
-    * (≤ |V| · max-dist-levels), round count ≤ max edges on a shortest
-    * path; per-round localCheckpoint truncates lineage (the G1 Pregel
-    * hygiene). Returns (result, rounds) — rounds for the spec's
-    * stopped-before-cap pin. */
-  /** One g5 relaxation round (pre-checkpoint `improved`) — factored out
-    * for PlanDump's per-iteration plan capture (see g1bRound). */
+  /** One g5 relaxation round (pre-checkpoint `improved`) — PlanDump's
+    * per-iteration plan (see g1bRound). */
   private[graft] def g5Round(e: DataFrame, frontier: DataFrame,
       dist: DataFrame, bcast: DataFrame => DataFrame): DataFrame = {
     val cand = e.join(bcast(frontier), e("src") === frontier("nid"))
@@ -529,43 +420,44 @@ object Graph {
       .select(col("nid"), col("nd").as("d"))
   }
 
+  /** G5 body: multi-source WEIGHTED single-source-shortest-paths —
+    * G4 answers "how many hops", G5 answers "how far" when edges
+    * carry cost (Bellman-Ford with an improved-only frontier, the
+    * distributed relaxation every Pregel SSSP uses). The graph is G4's
+    * support-2 co-order graph with SUPPORT-DERIVED integer weights:
+    * strong ties are short — support ≥ 4 → w = 1, support 3 → w = 2,
+    * support 2 → w = 3. Each round joins the frontier (nodes whose
+    * distance just improved) against the weighted edges, takes the
+    * per-target min of (frontier dist + w), keeps only targets that
+    * BEAT their settled distance, and merges. Unlike unit-weight BFS a
+    * node can improve more than once (a longer-hop cheaper path
+    * arriving later), which is exactly what the improved-only frontier
+    * re-propagates; stops on the first improvement-free round under the
+    * identity-safe SsspCap. 100 TB: per round one shuffle join of
+    * |frontier| against edges + one node-keyed min merge; total
+    * relaxations bounded by Σ improvements (≤ |V| · max-dist-levels),
+    * round count ≤ max edges on a shortest path; per-round
+    * localCheckpoint truncates lineage (the G1 Pregel hygiene). Returns
+    * (result, improving rounds) — rounds for the spec's
+    * stopped-before-cap pin. */
   private[graft] def g5Run(s: SparkSession, d: String,
       dumpRound: Option[DataFrame => Unit] = None): (DataFrame, Int) = {
-    // r22: und checkpointed (weightedSupportEdges referenced twice by
-    // the symmetrization, count sizes the loop width); e checkpointed
-    // hash-partitioned by dst — the per-round candidate-min aggregate
-    // keys on dst, so it needs no exchange (guide §2.4).
-    val und = weightedSupportEdges(s, d).localCheckpoint()
-    val parts = graft.core.ConfScope.loopParts(s, 2L * und.count(),
-      EdgeRowBytes)
-    val e = graft.core.ConfScope.checkpointByKeyN(
-      und.select(col("a").as("src"), col("b").as("dst"), col("w"))
-        .unionByName(
-          und.select(col("b").as("src"), col("a").as("dst"), col("w"))),
-      parts, col("dst"))
-    var dist = e.select(col("src").as("nid")).distinct()
-      .filter(col("nid") % BfsSrcMod === 0)
-      .select(col("nid"), lit(0L).as("d"))
-      .localCheckpoint()
-    var frontier = dist
-    var rounds = 0
-    var done = frontier.isEmpty
-    // measured broadcast gate (r21 — the g1b recipe): frontier and dist
-    // are nv-bounded and nv ≤ |e| — the g4 conservative edge-count
-    // bound spares the edge relation a per-round SMJ shuffle.
-    val bcast = graft.core.ConfScope.bcastIfFits(s, e.count(), NodeRowBytes)
-    while (rounds < SsspCap && !done) {
-      val body = g5Round(e, frontier, dist, bcast)
-      if (rounds == 0) dumpRound.foreach(_(body))
-      val improved = body.localCheckpoint()
-      done = improved.isEmpty
-      if (!done) {
-        rounds += 1
-        dist = dist.unionByName(improved)
-          .groupBy(col("nid")).agg(min(col("d")).as("d"))
-          .localCheckpoint()
-        frontier = improved
-      }
+    // the per-round candidate-min aggregate keys on dst
+    val e = loopEdges(coOrderPairs(s, d).filter(col("c") >= 2)
+      .select(col("a"), col("b"),
+        when(col("c") >= 4, lit(1L)).when(col("c") === 3, lit(2L))
+          .otherwise(lit(3L)).as("w")))
+    val dist0 = sources(e, lit(0L).as("d"))
+    // the g4 conservative edge-count bound on the nv-bounded frontier
+    // and dist
+    val bcast = Loop.bcastIfFits(s, e.count(), NodeRowBytes)
+    val ((dist, _), rounds) = Loop.run((dist0, dist0), SsspCap, dumpRound) {
+      case (dist, frontier) => g5Round(e, frontier, dist, bcast)
+    } { case ((dist, _), improved) =>
+      if (improved.isEmpty) None
+      else Some((dist.unionByName(improved)
+        .groupBy(col("nid")).agg(min(col("d")).as("d"))
+        .localCheckpoint(), improved))
     }
     (dist.select(col("nid").as("p_partkey"),
         col("d").cast(IntegerType).as("dist"))
@@ -600,17 +492,18 @@ object Graph {
     // ties by partkey.
     "g2_triangles" -> ((s, d) => {
       // lineage truncation (the G1/G3/G4 convention): without it the
-      // partEdges self-join re-executes once for the orientation join's
+      // co-order self-join re-executes once for the orientation join's
       // probe side and FOUR more times inside the two `ord` joins (each
-      // embeds deg's union of two partEdges scans). Verified effect of
-      // these two checkpoints (r15 judge, exclusive subset Bench at sf0.1):
-      // 13.1 s → 6.02 s wall p50, in band [3.2, 8.5]. Note `und` is an
+      // embeds deg's union of two pair scans). Measured effect of these
+      // two checkpoints (exclusive subset Bench at sf0.1): 13.1 s →
+      // 6.02 s wall p50. Note `und` is an
       // EDGE-cardinality relation: checkpointing it pins O(|E|) rows in
       // block-manager storage with lineage discarded (non-recomputable
       // on executor loss — the same storage/fault-tolerance trade G3
       // already makes for its symmetrized edge list; production re-runs
       // the stage from the parquet scan on loss).
-      val und = partEdges(s, d).localCheckpoint()
+      val und = coOrderPairs(s, d).select(col("a"), col("b"))
+        .localCheckpoint()
       val ne = und.count()
       val deg = und.select(col("a").as("nid"))
         .unionByName(und.select(col("b").as("nid")))
@@ -621,9 +514,9 @@ object Graph {
       val ord = deg.select(col("nid"),
         (col("deg") * lit(4294967296L) + col("nid")).as("okey"))
         .localCheckpoint()
-      // join strategies (r21, guide §3.1): checkpoint stats here are
-      // join-product estimates, so the planner defaulted every join to
-      // sort-merge — including a SORT of the wedge relation
+      // join strategies (guide §3.1): checkpoint stats here are
+      // join-product estimates, so the planner would default every join
+      // to sort-merge — including a SORT of the wedge relation
       // (Σ C(d_out, 2) rows, the dominant intermediate) into the
       // closing join. Measured gates restore the right strategies:
       // ord is node-sized → broadcast into the orientation join; dir
@@ -631,21 +524,19 @@ object Graph {
       // (hash |E|/partitions rows per task, STREAM the wedges — no
       // wedge sort), gated by Spark's own per-partition build budget
       // so a cluster-scale edge list falls back to sort-merge.
-      val bcast = graft.core.ConfScope.bcastIfFits(s, ord.count(),
-        NodeRowBytes)
+      val bcast = Loop.bcastIfFits(s, ord.count(), NodeRowBytes)
       val conf = s.sessionState.conf
       val shjFits = ne / math.max(1, conf.numShufflePartitions) *
         EdgeRowBytes < conf.getConf(org.apache.spark.sql.internal.SQLConf
           .ADVISORY_PARTITION_SIZE_IN_BYTES)
       val shj: DataFrame => DataFrame =
         if (shjFits) df => df.hint("shuffle_hash") else identity
-      // r22 note: checkpointing `dir` hash(src)-partitioned (computing it
-      // once and making the wedge join co-partitioned) was tried and
-      // MEASURED SLOWER (6.2 s vs 4.2 s p50 exclusive at sf0.1): the
-      // wedge volume ΣC(d_out,2) dwarfs |E|, so the wedge joins are
-      // compute-bound and the pre-partitioning starves them of width
-      // while the rebuilt dir is broadcast-join-only and cheap. Kept in
-      // the r21 recompute form deliberately.
+      // `dir` is rebuilt per use, not checkpointed hash(src)-partitioned:
+      // that form measured slower (6.2 s vs 4.2 s p50 exclusive at
+      // sf0.1), since the wedge volume ΣC(d_out,2) dwarfs |E|, so the
+      // wedge joins are compute-bound and the pre-partitioning starves
+      // them of width while the rebuilt dir is broadcast-join-only and
+      // cheap.
       val dir = und
         .join(bcast(ord.select(col("nid").as("a"), col("okey").as("oa"))),
           "a")

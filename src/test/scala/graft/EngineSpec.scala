@@ -45,6 +45,18 @@ class EngineSpec extends AnyFunSuite {
     assert(viaSql == viaApi && viaSql.nonEmpty)
   }
 
+  test("Engine.open twice keeps the first slugify registration") {
+    val c = s.newSession()
+    def builder = c.sessionState.functionRegistry.lookupFunctionBuilder(
+      org.apache.spark.sql.catalyst.FunctionIdentifier("slugify"))
+    Engine.open(c, TestSpark.Sf)
+    val first = builder
+    assert(first.isDefined, "Engine.open registered no slugify")
+    Engine.open(c, TestSpark.Sf)
+    assert(builder.exists(_ eq first.get),
+      "the second Engine.open replaced slugify")
+  }
+
   test("salting pattern: skew-safe join equals the plain join") {
     import org.apache.spark.sql.functions._
     // 100 TB pattern: a hot key (here: the most common nationkey) is

@@ -261,6 +261,22 @@ class PlanSpec extends AnyFunSuite {
       s"redaction shuffled before the sort:\n$p")
   }
 
+  test("Loop rounds: the round-1 body of g1, g1b, g3, g4, g5 and l22 " +
+       "plans no shuffle Exchange at test scale") {
+    // each loop runs in full through its PlanDump hook in a fresh child
+    // session; the broadcast gates' BroadcastExchange does not match
+    val shuffled = PlanDump.iterDumps.toSeq.sortBy(_._1).flatMap {
+      case (name, run) =>
+        var plan = ""
+        run(TestSpark.spark.newSession(), TestSpark.Sf,
+          body => plan = body.queryExecution.executedPlan.toString)
+        assert(plan.nonEmpty, s"$name ran no round")
+        val exchanges = "Exchange [a-z]+partitioning".r.findAllIn(plan).size
+        if (exchanges == 0) None else Some(s"$name ($exchanges):\n$plan")
+    }
+    assert(shuffled.isEmpty, shuffled.mkString("\n"))
+  }
+
   test("J11: the correlated scalar subquery decorrelates to one " +
        "aggregate + join (no per-row subquery)") {
     val df = SparkEntry.queries("j11_scalar_subquery")(
