@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.core.Tables
+import graft.core.{BuildOnce, Tables}
 
 /** L40 — BPE merge training (SURVEY §2.10): learn a byte-pair-encoding
   * merge table from the corpus (Sennrich et al. 2016, "Neural Machine
@@ -74,38 +74,16 @@ object Bpe {
   final case class Model(merges: Seq[(Int, String, String, Long)],
                          seg: Seq[(String, Long, Seq[String])])
 
-  /** Build-once model cache, fingerprint-invalidated (the centCache
-    * idiom — a regenerated corpus at the same path must retrain, never
-    * serve stale merges). */
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), Model]()
-
-  /** Cheap content fingerprint of the documents source: every file's
-    * (name, size, mtime) under the table path. */
-  private def docFingerprint(d: String): String = {
-    import scala.jdk.CollectionConverters._
-    val p = java.nio.file.Paths.get(d, "documents.parquet")
-    if (!java.nio.file.Files.exists(p)) "absent"
-    else {
-      val walk = java.nio.file.Files.walk(p)
-      try walk.iterator().asScala
-        .filter(java.nio.file.Files.isRegularFile(_))
-        .map(f => s"$f:${java.nio.file.Files.size(f)}:" +
-          java.nio.file.Files.getLastModifiedTime(f).toMillis)
-        .toSeq.sorted.mkString("|")
-      finally walk.close()
-    }
-  }
-
-  def train(s: SparkSession, d: String): Model = {
-    val key = (d, docFingerprint(d))
-    cache.keySet.removeIf(k => k._1 == d && k._2 != key._2)
-    cache.computeIfAbsent(key, _ => trainUncached(s, d))
-  }
+  /** The trained model of the corpus at `d`: a build-once artifact
+    * ([[graft.core.BuildOnce]]) keyed by the documents' fingerprint, so
+    * a regenerated corpus at the same path retrains, never serves stale
+    * merges. */
+  def train(s: SparkSession, d: String): Model =
+    BuildOnce("bpe-model", (), d, "documents")(trainUncached(s, d))
 
   /** Cache-bypassing trainer, backing the `l40c_bpe_train_fresh`
     * query: the cached l40 row measures the model-read path (training
-    * is a build-once artifact by the centCache contract); this measures
+    * is a build-once artifact, see [[train]]); this measures
     * the 50 training rounds themselves, which is the part whose corpus
     * scaling matters (e 0.12 at 10×, the `l40_bpe_train_fresh` row of
     * SCALE_r19.json). */

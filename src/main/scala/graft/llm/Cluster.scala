@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType, StringType}
-import graft.core.Tables
+import graft.core.{BuildOnce, Tables}
 
 /** SURVEY §2.10 L22 — near-duplicate CLUSTERING: close the verified
   * pair relation (l10b's MinHash-banded, Jaccard-verified near-dup
@@ -25,9 +25,9 @@ import graft.core.Tables
   *     edges, 380× fewer), so the iterative phase never touches the
   *     full edge set again.
   *  2. MIN-LABEL PROPAGATION with POINTER JUMPING over the contracted
-  *     graph: each round takes the min label over self + neighbours,
-  *     then compresses one hop (label ← label(label), the path-halving
-  *     step of parallel union-find). Labels are per-node monotone
+  *     graph: each round compresses one hop (label ← label(label), the
+  *     path-halving step of parallel union-find), then takes the min
+  *     label over self + neighbours. Labels are per-node monotone
   *     non-increasing and bounded below by the component min, so the
   *     loop terminates; jumping makes the round count O(log diameter)
   *     instead of O(diameter).
@@ -141,28 +141,30 @@ object Cluster {
         coalesce(col("label2"), col("label")).as("label"))
   }
 
-  /** One phase-2 round (pre-checkpoint): the neighbour-min step followed
-    * by one pointer jump — PlanDump's per-iteration plan (the g1bRound
-    * convention). `labels` and `sym` are hash(node)-partitioned and the
-    * two label lookups broadcast, so the round keeps hash(node) without
-    * a shuffle. */
+  /** One phase-2 round (pre-checkpoint): one pointer jump followed by
+    * the neighbour-min step — PlanDump's per-iteration plan (the
+    * g1bRound convention). The jump runs first, on the checkpointed
+    * `labels`, so the round reads the costly neighbour-min subtree once
+    * (the jump reads its input twice: as the stream and as the lookup).
+    * `labels` and `sym` are hash(node)-partitioned and the two label
+    * lookups broadcast, so the round keeps hash(node) without a shuffle. */
   private[graft] def ccRound(labels: DataFrame, sym: DataFrame,
       bcast: DataFrame => DataFrame): DataFrame = {
-    // (1) neighbour-min step: label ← min(label, min over nbrs' labels)
+    // (1) pointer jump: label ← label(label). Every label value is a
+    // node id (invariant label(u) ≤ u from the init + min-combine), so
+    // the lookup is an inner self-join that can never drop rows.
+    val jumped = labels.select(col("node"), col("label").as("mid"))
+      .join(bcast(labels.select(col("node").as("mid"), col("label"))), "mid")
+      .select(col("node"), col("label"))
+    // (2) neighbour-min step: label ← min(label, min over nbrs' labels)
     val nbrMin = sym
-      .join(bcast(labels.select(col("node").as("nbr"), col("label").as("nl"))),
+      .join(bcast(jumped.select(col("node").as("nbr"), col("label").as("nl"))),
             "nbr")
       .groupBy(col("node")).agg(min(col("nl")).as("nmin"))
-    val stepped = labels.join(nbrMin, Seq("node"), "left")
+    jumped.join(nbrMin, Seq("node"), "left")
       .select(col("node"),
         least(col("label"), coalesce(col("nmin"), col("label")))
           .as("label"))
-    // (2) pointer jump: label ← label(label). Every label value is a
-    // node id (invariant label(u) ≤ u from the init + min-combine), so
-    // the lookup is an inner self-join that can never drop rows.
-    stepped.select(col("node"), col("label").as("mid"))
-      .join(bcast(stepped.select(col("node").as("mid"), col("label"))), "mid")
-      .select(col("node"), col("label"))
   }
 
   /** The (doc_id, label) component assignment underlying l22: CC over
@@ -182,19 +184,16 @@ object Cluster {
   }
 
   /** The component relation as a build-once artifact for the DERIVED
-    * queries (l36 election, l37 split) — the same pattern as the
-    * trained IVF quantizer (Llm.centCache) and the shared streaming
-    * cores: one corpus, one CC build, many consumers. The canonical
-    * l22 query does NOT use this cache, so its bench line keeps
-    * measuring the full CC build; l36/l37 lines measure their
+    * queries (l36 election, l37 split) — one corpus, one CC build, many
+    * consumers ([[graft.core.BuildOnce]], keyed by the documents'
+    * fingerprint). The canonical l22 query does NOT use it, so its bench
+    * line keeps measuring the full CC build; l36/l37 lines measure their
     * derivation (first touch pays the build in bench warm-up —
-    * documented in BASELINE.md). Keyed by dataset dir: fixtures are
-    * immutable (the Replayer _DONE contract) and GenScale writes new
-    * dirs. localCheckpoint so reuse replays no lineage. */
-  private val ccCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    * documented in BASELINE.md). localCheckpoint so reuse replays no
+    * lineage. */
   private[llm] def cachedComponents(s: SparkSession, d: String): DataFrame =
-    ccCache.computeIfAbsent(d, _ => docComponents(s, d).localCheckpoint())
+    BuildOnce("cc-components", (), d, "documents")(
+      docComponents(s, d).localCheckpoint())
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // L22 — dup-cluster assignment + canonical election over the l10b

@@ -1,10 +1,11 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.core.Tables
+import scala.jdk.CollectionConverters._
+import graft.core.{BuildOnce, Tables}
 
 /** SURVEY.md §2.10 LLM-data-pipeline operators L1–L9, L28–L29 + the X1 scalar UDF
   * (§2.11). This is the north-star track: every operator is written as the
@@ -498,14 +499,14 @@ object Llm {
   }
 
   /** Train the IVF coarse quantizer: deterministic integer Lloyd's
-    * k-means. Seeds = per-label floor-quantized means (K = 10 cells);
-    * each of the fixed `iters` iterations assigns every vector to its
-    * nearest cell (exact BIGINT L2, ties to the lowest cell id via the
-    * dist*16+cell encoding) and recomputes centroids as floor(sum/count)
-    * per dimension; a cell that loses all members keeps its previous
-    * centroid. Only K·64 longs come back to the driver per iteration —
-    * the index's own size, independent of corpus size (the same
-    * driver-held-centroids shape as Spark MLlib's KMeans). Every
+    * k-means ([[lloyd]]). Seeds = per-label floor-quantized means
+    * (K = 10 cells); each of the fixed `iters` iterations assigns every
+    * vector to its nearest cell (exact BIGINT L2, ties to the lowest cell
+    * id via the dist*16+cell encoding) and recomputes centroids as
+    * floor(sum/count) per dimension; a cell that loses all members keeps
+    * its previous centroid. Only K·64 longs come back to the driver per
+    * iteration — the index's own size, independent of corpus size (the
+    * same driver-held-centroids shape as Spark MLlib's KMeans). Every
     * operation is integer-exact, so DuckDB replays the identical
     * trajectory from the identical seeds (see ivfSql). */
   def trainCentroids(s: SparkSession, d: String,
@@ -519,46 +520,37 @@ object Llm {
     * splits are the documented production dial — K grows with corpus so
     * |cell| stays bounded — measured by the `l34_semantic_dedup_kdial`
     * row of SCALE_r10.json and SCALE_r19.json; the canonical queries
-    * stay at split=1 for oracle determinism. */
+    * stay at split=1 for oracle determinism. A build-once artifact
+    * ([[graft.core.BuildOnce]]) keyed by the embeddings' fingerprint. */
   def trainCentroidsK(s: SparkSession, d: String, iters: Int,
-                      split: Int): Seq[(Int, Seq[Long])] = {
-    // the trained quantizer is a build-once index artifact (deterministic
-    // for a given corpus + iteration count) — cache it so repeated
-    // queries/bench runs don't re-pay the training jobs. The key includes
-    // a data fingerprint (file sizes + mtimes) so regenerating the
-    // dataset at the same path invalidates the cached index instead of
-    // silently serving stale centroids. A stale entry is never SERVED
-    // (lookups always use the current fingerprint); the sweep below only
-    // bounds memory, and it runs BEFORE computeIfAbsent so a slow trainer
-    // that started on an old fingerprint can never evict a fresher
-    // entry — at worst its own stale insert survives until the next call.
-    // computeIfAbsent locks per hash bin, so training may briefly block a
-    // colliding lookup of another corpus, never the whole cache.
-    val key = (d, iters * 1000 + split, embedFingerprint(d))
-    centCache.keySet.removeIf(k =>
-      k._1 == d && k._2 == key._2 && k._3 != key._3)
-    centCache.computeIfAbsent(key,
-      _ => trainCentroidsUncached(s, d, iters, split))
-  }
+                      split: Int): Seq[(Int, Seq[Long])] =
+    BuildOnce("ivf-centroids", (iters, split), d, "embeddings") {
+      val seed =
+        if (split == 1) col("label").cast(IntegerType)
+        else (col("label") * split + pmod(col("vec_id"), lit(split)))
+          .cast(IntegerType)
+      // min-encoding multiplier: 16 for the canonical split=1 (the value
+      // the oracle SQL replays), 16·split above — always > K = 10·split
+      lloyd(labelledVecs(s, d), seed, Nil, 16 * split, iters)
+        .toSeq.map { case (k, c) => (k.head, c) }.sortBy(_._1)
+    }
 
-  /** X5's rule-scoped child session, one per SparkContext (the
-    * centCache idiom): owns the DotProductRewrite installation so the
-    * driver-supplied session is never mutated, reused across
-    * invocations so the bench's repeat runs skip sessionState init.
+  /** X5's rule-scoped child session, one per SparkContext: owns the
+    * DotProductRewrite installation so the driver-supplied session is
+    * never mutated, reused across invocations so the bench's repeat runs
+    * skip sessionState init.
     *
-    * Conf staleness (advisor r16, widened r17): `newSession()`
-    * snapshots the parent's SQLConf at creation, so a cached child
-    * would silently freeze any runtime conf the driver sets LATER
-    * (ConfScope-style) — x5 would then run under different
-    * ansi/partition settings than the l3/l3b queries it must
-    * hash-match. Every invocation therefore re-syncs the FULL conf
-    * diff from the parent (advisor r17: the earlier four-key
-    * hard-coded list silently froze every other conf): any key whose
-    * value diverges is copied over, and keys the parent dropped are
-    * unset. Divergence can only arise from post-snapshot RUNTIME sets
-    * on the parent (the child inherits the creation snapshot
-    * verbatim), so every synced key is runtime-settable by
-    * construction. The diff walk is a driver-side map compare per
+    * Conf staleness: `newSession()` snapshots the parent's SQLConf at
+    * creation, so a cached child would silently freeze any runtime conf
+    * the driver sets LATER (ConfScope-style) — x5 would then run under
+    * different ansi/partition settings than the l3/l3b queries it must
+    * hash-match. Every invocation therefore re-syncs the FULL conf diff
+    * from the parent (a hard-coded key list would silently freeze every
+    * other conf): any key whose value diverges is copied over, and keys
+    * the parent dropped are unset. Divergence can only arise from
+    * post-snapshot RUNTIME sets on the parent (the child inherits the
+    * creation snapshot verbatim), so every synced key is runtime-settable
+    * by construction. The diff walk is a driver-side map compare per
     * invocation — no sessionState rebuild, the cache still pays init
     * once. */
   private val x5SessionCache = new java.util.concurrent.ConcurrentHashMap[
@@ -582,78 +574,75 @@ object Llm {
     child
   }
 
-  private val centCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, String), Seq[(Int, Seq[Long])]]()
+  /** (vec_id, label, q): the quantized embeddings with their labels —
+    * the training input of the coarse quantizer and the PQ codebooks. */
+  private def labelledVecs(s: SparkSession, d: String): DataFrame =
+    Tables.embeddings(s, d)
+      .select(col("vec_id"), col("label"), qz(col("embedding")).as("q"))
 
-  /** Cheap content fingerprint of the embeddings source: every file's
-    * (name, size, mtime) under the table path. */
-  private def embedFingerprint(d: String): String = {
-    import scala.jdk.CollectionConverters._
-    val p = java.nio.file.Paths.get(d, "embeddings.parquet")
-    if (!java.nio.file.Files.exists(p)) "absent"
-    else {
-      val walk = java.nio.file.Files.walk(p)
-      try walk.iterator().asScala
-        .filter(java.nio.file.Files.isRegularFile(_))
-        .map(f => s"$f:${java.nio.file.Files.size(f)}:" +
-          java.nio.file.Files.getLastModifiedTime(f).toMillis)
-        .toSeq.sorted.mkString("|")
-      finally walk.close()
-    }
-  }
-
-  private def trainCentroidsUncached(s: SparkSession, d: String,
-                                     iters: Int, split: Int)
-      : Seq[(Int, Seq[Long])] = {
-    // persist the quantized vectors for the duration of training — each
-    // Lloyd iteration launches 2 jobs and would otherwise re-scan and
-    // re-quantize the corpus every time (~2·iters redundant scans)
-    val e = qvecs(s, d).persist()
-    try trainLoop(s, d, e, iters, split) finally e.unpersist()
-  }
-
-  private def trainLoop(s: SparkSession, d: String, e: DataFrame,
-                        iters: Int, split: Int): Seq[(Int, Seq[Long])] = {
-    // min-encoding multiplier: 16 for the canonical split=1 (the value
-    // the oracle SQL replays), 16·split above — always > K = 10·split
-    val enc = 16 * split
-    def collectCells(df: DataFrame): Map[Int, Seq[Long]] =
-      df.groupBy(col("cell"), col("pos"))
+  /** The one integer Lloyd's k-means of the vector-index family. `v`
+    * carries (vec_id, keys…, q); `seed` is each vector's initial cell.
+    * Cells are keyed (keys…, cell): a vector only ever competes for its
+    * own key's cells — no keys for the coarse quantizer, `m` for the PQ
+    * subspaces, (ccell, m) for the per-cell residual codebooks — so
+    * every key's codebook trains in the SAME distributed jobs (one
+    * assign + one update per iteration). Centroids are floor(sum/count)
+    * per dimension; a cell that loses all members keeps its previous
+    * centroid, and an empty seed stratum never exists as a cell (both
+    * engines build the cell set from the same non-empty groupBy). `enc`
+    * must exceed every cell id (the [[nearestCell]] tie-break). Returns
+    * (keys… :+ cell) → centroid; driver traffic per iteration is the
+    * codebook itself, corpus-size-independent. */
+  private def lloyd(v: DataFrame, seed: Column, keys: Seq[String],
+                    enc: Int, iters: Int): Map[Seq[Int], Seq[Long]] = {
+    val kc = keys.map(col)
+    val n = keys.size
+    // persisted for the duration of training — each iteration launches
+    // 2 jobs and would otherwise re-scan and re-quantize the corpus
+    val vs = v.select(col("vec_id") +: kc :+ col("q") :+ seed.as("seed"): _*)
+      .persist()
+    def means(cells: DataFrame): Map[Seq[Int], Seq[Long]] =
+      cells.select(kc :+ col("cell") :+ posexplode(col("q")): _*)
+        .groupBy(kc :+ col("cell") :+ col("pos"): _*)
         .agg(sum(col("col")).as("sv"), count(lit(1)).as("cnt"))
-        .withColumn("cv",
-          floor(col("sv").cast(DoubleType) / col("cnt")).cast(LongType))
+        .select(kc :+ col("cell") :+ col("pos") :+
+          floor(col("sv").cast(DoubleType) / col("cnt")).cast(LongType): _*)
         .collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getLong(4)))
-        .groupBy(_._1).view
-        .mapValues(_.sortBy(_._2).map(_._3).toSeq).toMap
-    val seedCell =
-      if (split == 1) col("label").cast(IntegerType)
-      else (col("label") * split + pmod(col("vec_id"), lit(split)))
-        .cast(IntegerType)
-    var cent: Seq[(Int, Seq[Long])] = collectCells(
-      Tables.embeddings(s, d)
-        .select(seedCell.as("cell"), posexplode(qz(col("embedding")))))
-      .toSeq.sortBy(_._1)
-    for (_ <- 1 to iters) {
-      val cdf = centroidsDf(s, cent)
-      val assign = e.join(broadcast(cdf))
-        .select(col("vec_id"),
-          (qdist(col("q"), col("c")) * enc + col("cell")).as("ok"))
-        .groupBy(col("vec_id")).agg(min(col("ok")).as("mo"))
-        .select(col("vec_id").as("a_vid"),
-                (col("mo") % enc).cast(IntegerType).as("cell"))
-      val upd = collectCells(
-        e.join(assign, col("vec_id") === col("a_vid"))
-          .select(col("cell"), posexplode(col("q"))))
-      cent = cent.map { case (cell, c) => (cell, upd.getOrElse(cell, c)) }
-    }
-    cent
+        .groupBy(r => (0 to n).map(r.getInt)).view
+        .mapValues(_.sortBy(_.getInt(n + 1)).map(_.getLong(n + 2)).toSeq)
+        .toMap
+    try (1 to iters).foldLeft(means(vs.withColumnRenamed("seed", "cell"))) {
+      (cent, _) =>
+        val upd = means(vs.join(
+          nearestCell(vs, centTable(vs.sparkSession, keys, cent), keys, enc),
+          "vec_id" +: keys))
+        cent.map { case (k, c) => (k, upd.getOrElse(k, c)) }
+    } finally vs.unpersist()
   }
 
-  private def centroidsDf(s: SparkSession,
-                          cent: Seq[(Int, Seq[Long])]): DataFrame = {
-    import s.implicits._
-    cent.map { case (cell, c) => (cell, c.toArray) }.toDF("cell", "c")
+  /** (vec_id, keys…, cell): each vector's nearest centroid among the
+    * cells of its own key — argmin of qdist(q, c)·enc + cell, exact
+    * BIGINT L2 with ties to the lowest cell id (`enc` > every cell id
+    * keeps the cell in the low digits). `cdf` is a [[centTable]]. */
+  private def nearestCell(v: DataFrame, cdf: DataFrame, keys: Seq[String],
+                          enc: Int): DataFrame = {
+    val kc = keys.map(col)
+    (if (keys.isEmpty) v.join(cdf) else v.join(cdf, keys))
+      .select(col("vec_id") +: kc :+
+        (qdist(col("q"), col("c")) * enc + col("cell")).as("ok"): _*)
+      .groupBy(col("vec_id") +: kc: _*).agg(min(col("ok")).as("mo"))
+      .select(col("vec_id") +: kc :+
+        (col("mo") % enc).cast(IntegerType).as("cell"): _*)
+  }
+
+  /** The broadcast (keys…, cell, c) table of a driver-held codebook. */
+  private def centTable(s: SparkSession, keys: Seq[String],
+                        cent: Iterable[(Seq[Int], Seq[Long])]): DataFrame = {
+    val schema = StructType((keys :+ "cell").map(StructField(_, IntegerType,
+      nullable = false)) :+ StructField("c", ArrayType(LongType, false)))
+    broadcast(s.createDataFrame(
+      cent.map { case (k, c) => Row.fromSeq(k :+ c.toArray) }
+        .toSeq.asJava, schema))
   }
 
   /** L3c canonical constants — the Spark pipeline and the generated
@@ -708,12 +697,12 @@ object Llm {
     rankTopK(scored, k)
   }
 
-  /** The trained coarse quantizer as a broadcast (cell, centroid)
-    * frame — the BUILD-ONCE index artifact (centCache-backed), exposed
-    * so the streaming fold assigns arriving vectors to the same cells
-    * the batch build would. */
+  /** The trained coarse quantizer as a broadcast (cell, c) frame — the
+    * build-once index artifact ([[graft.core.BuildOnce]]), exposed so
+    * the streaming fold assigns arriving vectors to the same cells the
+    * batch build would. */
   private[graft] def coarseCells(s: SparkSession, d: String): DataFrame =
-    broadcast(centroidsDf(s, trainCentroids(s, d)))
+    centTable(s, Nil, trainCentroids(s, d).map { case (c, v) => (Seq(c), v) })
 
   /** (vec_id, cell) multi-assignment of `e` under the trained cells:
     * each vector under its `rassign` nearest (exact BIGINT L2, ties to
@@ -721,7 +710,9 @@ object Llm {
     * 2-phase min-peeling (no window over N·K rows — each peel is a
     * partial-agg'd groupBy on vec_id, the 100 TB shape). Per-vector
     * arithmetic against broadcast centroids — batch-decomposable,
-    * which is WHY the S35 incremental build is answer-preserving. */
+    * which is WHY the S35 incremental build is answer-preserving. Not
+    * [[nearestCell]]: each peel filters the encoded distances the
+    * previous peel left, so the distances are built once and kept. */
   private[graft] def assignCells(e: DataFrame, cdf: DataFrame,
                                  rassign: Int): DataFrame = {
     val dists = e.join(cdf)
@@ -743,7 +734,9 @@ object Llm {
   /** Probe the `nprobe` nearest cells per query and join against an
     * ALREADY-BUILT (vec_id, cell) assignment — the index-read half of
     * the candidate path, shared by the in-memory build (l3c/l3d) and
-    * the streaming snapshot read (S35). */
+    * the streaming snapshot read (S35). The probe is a top-`nprobe`
+    * ranking per query, not a single argmin, so it ranks the same
+    * dist·16 + cell encoding [[nearestCell]] takes the minimum of. */
   private[graft] def candidatesFromAssigns(e: DataFrame, cdf: DataFrame,
                                            assigns: DataFrame, nprobe: Int,
                                            qids: Seq[Int]): DataFrame = {
@@ -887,25 +880,22 @@ object Llm {
     val enc = 16 * split
     val cent = trainCentroidsK(s, d, IvfIters, split)
     // Assignment is a MAP-SIDE batched kernel over broadcast centroids
-    // (r12, the L8b idiom): the previous shape — cross join against a
-    // broadcast centroid DF + groupBy(vec_id).min — computed the
-    // identical min(qdist·enc + cell) but materialized an n·K-row
-    // relation to do it, which the 30× sweep measured as the dominant
-    // cost of the auto-K dial (146 s; n·K grows quadratically when K
-    // tracks the corpus). A Catalyst HOF argmin-fold was measured 2.4×
-    // WORSE than that (interpreted nested-lambda overhead per
-    // compare); the tight integer loop below does the same
-    // min(Σ(x−y)²·enc + cell) per row at nanoseconds per
-    // multiply-add, with index-sized broadcast state (K·64 longs) and
-    // zero n·K materialization anywhere. Same arithmetic, same
-    // tie-break (cell id in the low digits), so the split=1 oracle
-    // hash is unchanged by construction. The repartition exists
-    // because the kernel's parallelism is otherwise the SCAN's — a
-    // few-MB embeddings parquet reads as ONE partition, single-coring
-    // the compares; an n-row shuffle is the price that deletes the
-    // n·K one. At index scales past a flat broadcast (K ~ 10^5+) the
-    // kernel walks a two-level coarse/fine centroid tree — same
-    // shape, n·O(√K) compares.
+    // (the L8b idiom), not [[nearestCell]]: the cross join against a
+    // broadcast centroid DF + groupBy(vec_id).min computes the identical
+    // min(qdist·enc + cell) but materializes an n·K-row relation to do
+    // it, which the 30× sweep measured as the dominant cost of the
+    // auto-K dial (146 s; n·K grows quadratically when K tracks the
+    // corpus). A Catalyst HOF argmin-fold measured 2.4× WORSE than that
+    // (interpreted nested-lambda overhead per compare); the tight
+    // integer loop below does the same min(Σ(x−y)²·enc + cell) per row
+    // at nanoseconds per multiply-add, with index-sized broadcast state
+    // (K·64 longs) and zero n·K materialization anywhere. Same
+    // arithmetic, same tie-break (cell id in the low digits), so the
+    // split=1 oracle hash is unchanged by construction. The repartition
+    // exists because the kernel's parallelism is otherwise the SCAN's —
+    // a few-MB embeddings parquet reads as ONE partition, single-coring
+    // the compares; an n-row shuffle is the price that deletes the n·K
+    // one.
     val bcCent = s.sparkContext.broadcast(
       cent.map { case (c, v) => (c, v.toArray) }.toArray)
     val encL = enc.toLong
@@ -958,7 +948,7 @@ object Llm {
   /** L3e product-quantization constants: PqM 8-dim subspaces, 10
     * label-seeded cells per subspace (the l3c seeding rule applied
     * per-subspace), PqIters Lloyd rounds, ADC shortlist of PqShort
-    * rerank candidates. The r7 sweep that fixed these: this corpus is
+    * rerank candidates. The sweep that fixed these: this corpus is
     * near-random unit vectors (all pairwise cos < 0.52), so ADC
     * neighbor separation is intrinsically weak — M=16 subspaces,
     * K=20 parity-split codebooks and 12 Lloyd rounds each MEASURED
@@ -971,189 +961,66 @@ object Llm {
   val PqIters = 5
   val PqShort = 150
 
-  /** (vec_id, m, sq): the M 8-dim subvectors of every vector. */
-  private def subVecs(e: DataFrame): DataFrame =
-    e.select(col("vec_id"), explode(expr(
-        s"transform(sequence(0, ${PqM - 1}), m -> " +
-        s"named_struct('m', m, 'sq', slice(q, m * ${64 / PqM} + 1, ${64 / PqM})))"))
-        .as("x"))
-      .select(col("vec_id"), col("x.m").as("m"), col("x.sq").as("sq"))
+  /** `e` with its vector `q` cut into the M 8-dim subvectors: one row
+    * per (vec_id, m) carrying the subvector as `q`, every other column
+    * kept. */
+  private def subVecs(e: DataFrame): DataFrame = {
+    val w = 64 / PqM
+    val rest = e.columns.toSeq.filter(_ != "q").map(col)
+    e.select(rest :+ explode(expr(s"transform(sequence(0, ${PqM - 1}), " +
+        s"m -> named_struct('m', m, 'q', slice(q, m * $w + 1, $w)))")).as("x"): _*)
+      .select(rest :+ col("x.m").as("m") :+ col("x.q").as("q"): _*)
+  }
 
   /** Train the PQ codebooks: per-subspace deterministic integer Lloyd's
-    * k-means — the l3c trainer run jointly across all PqM subspaces in
-    * the SAME distributed jobs (cells keyed (m, cell); one assign + one
-    * update job per iteration regardless of M). Returns
-    * ((m, cell) -> centroid). Driver traffic per iteration is the
-    * codebook itself (M·K·8 longs), corpus-size-independent. */
+    * k-means — [[lloyd]] keyed by subspace, so all PqM subspaces train
+    * in the SAME distributed jobs. Returns ((m, cell) -> centroid). A
+    * build-once artifact ([[graft.core.BuildOnce]]) keyed by the
+    * embeddings' fingerprint. */
   def trainPqCodebooks(s: SparkSession, d: String,
-                       iters: Int = PqIters): Map[(Int, Int), Seq[Long]] = {
-    val key = (d, iters, embedFingerprint(d))
-    pqCache.keySet.removeIf(k =>
-      k._1 == d && k._2 == iters && k._3 != key._3)
-    pqCache.computeIfAbsent(key, _ =>
-      pqLloyd(Tables.embeddings(s, d)
-        .select(col("vec_id"), col("label"), qz(col("embedding")).as("q")),
-        iters))
-  }
+                       iters: Int = PqIters): Map[(Int, Int), Seq[Long]] =
+    BuildOnce("pq-codebooks", iters, d, "embeddings") {
+      lloyd(subVecs(labelledVecs(s, d)), col("label").cast(IntegerType),
+        Seq("m"), 32, iters)
+        .map { case (Seq(m, cell), c) => ((m, cell), c) }
+    }
 
   /** L3g's residual codebooks — trained PER COARSE CELL (the full
-    * IVFADC refinement): the joint Lloyd trainer keyed (ccell, m, cell)
-    * over the coarse-quantization residuals (vec − nearest l3c
-    * centroid). Per-cell training matters doubly here: (a) the
-    * codebook adapts to each cell's local residual distribution —
-    * strictly finer reconstruction than one shared codebook at the
-    * same stored bytes per vector (still one cell id + M codes);
-    * (b) seeds stripe by vec_id % 10 WITHIN the cell, not by label —
-    * residuals are precisely the variance the label-correlated coarse
-    * structure does not explain, so per-label residual means are all
-    * ≈ 0 and label seeding collapses the trajectory (measured:
-    * recall@5 0.867 vs the 0.933 target). Codebook traffic is
-    * K·M·K_pq centroids — index-sized, corpus-independent. Same
-    * cache/fingerprint contract as trainPqCodebooks. */
+    * IVFADC refinement): [[lloyd]] keyed (ccell, m) over the
+    * coarse-quantization residuals (vec − nearest l3c centroid).
+    * Per-cell training matters doubly here: (a) the codebook adapts to
+    * each cell's local residual distribution — strictly finer
+    * reconstruction than one shared codebook at the same stored bytes
+    * per vector (still one cell id + M codes); (b) seeds stripe by
+    * vec_id % 10 WITHIN the cell, not by label — residuals are precisely
+    * the variance the label-correlated coarse structure does not
+    * explain, so per-label residual means are all ≈ 0 and label seeding
+    * collapses the trajectory (measured: recall@5 0.867 vs the 0.933
+    * target). Codebook traffic is K·M·K_pq centroids — index-sized,
+    * corpus-independent. Same build-once contract as trainPqCodebooks. */
   def trainResidualCodebooks(s: SparkSession, d: String,
                              iters: Int = PqIters)
-      : Map[(Int, Int, Int), Seq[Long]] = {
-    val key = (d, iters, embedFingerprint(d))
-    pqResCache.keySet.removeIf(k =>
-      k._1 == d && k._2 == iters && k._3 != key._3)
-    pqResCache.computeIfAbsent(key, _ =>
-      pqLloydGrouped(residualVecs(s, d)
-        .select(col("vec_id"), col("ccell"),
-                pmod(col("vec_id"), lit(10)).cast(IntegerType).as("scell"),
-                col("q")), iters))
-  }
+      : Map[(Int, Int, Int), Seq[Long]] =
+    BuildOnce("pq-residual-codebooks", iters, d, "embeddings") {
+      lloyd(subVecs(residualVecs(s, d)),
+        pmod(col("vec_id"), lit(10)).cast(IntegerType),
+        Seq("ccell", "m"), 32, iters)
+        .map { case (Seq(g, m, cell), c) => ((g, m, cell), c) }
+    }
 
-  private val pqResCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, String), Map[(Int, Int, Int), Seq[Long]]]()
-
-  /** The joint Lloyd trainer keyed (g, m, cell) — the pqLloyd shape
-    * with a grouping column, so every group's subspace codebooks train
-    * in the SAME distributed jobs (one assign + one update per
-    * iteration regardless of |groups|·M). ev: (vec_id, ccell, scell,
-    * q); a vector only ever competes for its own group's cells (the
-    * join is keyed on the group), and a (g, m, cell) that loses all
-    * members keeps its previous centroid, exactly as in pqLloyd. An
-    * empty seed stratum simply never exists as a cell — both engines
-    * agree because both build the cell set from the same non-empty
-    * groupBy. */
-  private def pqLloydGrouped(ev: DataFrame, iters: Int)
-      : Map[(Int, Int, Int), Seq[Long]] = {
-    val s = ev.sparkSession
-    val sub = subVecs(ev.select(col("vec_id"), col("q")))
-      .join(ev.select(col("vec_id"), col("ccell")), "vec_id")
-      .persist()
-    try {
-      def collect(df: DataFrame): Map[(Int, Int, Int), Seq[Long]] =
-        df.groupBy(col("g"), col("m"), col("cell"), col("pos"))
-          .agg(sum(col("col")).as("sv"), count(lit(1)).as("cnt"))
-          .withColumn("cv",
-            floor(col("sv").cast(DoubleType) / col("cnt")).cast(LongType))
-          .collect()
-          .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3),
-                     r.getLong(6)))
-          .groupBy(t => (t._1, t._2, t._3)).view
-          .mapValues(_.sortBy(_._4).map(_._5).toSeq).toMap
-      var cent: Map[(Int, Int, Int), Seq[Long]] = collect(
-        sub.join(ev.select(col("vec_id"), col("scell")), "vec_id")
-          .select(col("ccell").as("g"), col("m"),
-                  col("scell").as("cell"), posexplode(col("sq"))))
-      for (_ <- 1 to iters) {
-        val cdf = broadcast(grpCentDf(s, cent))
-        val assign = sub
-          .join(cdf, sub("ccell") === cdf("g") && sub("m") === cdf("cm"))
-          .select(col("vec_id"), col("m"),
-            (qdist(col("sq"), col("c")) * 32 + col("cell")).as("ok"))
-          .groupBy(col("vec_id"), col("m")).agg(min(col("ok")).as("mo"))
-          .select(col("vec_id"), col("m"),
-                  (col("mo") % 32).cast(IntegerType).as("cell"))
-        val upd = collect(
-          sub.join(assign, Seq("vec_id", "m"))
-            .select(col("ccell").as("g"), col("m"), col("cell"),
-                    posexplode(col("sq"))))
-        cent = cent.map { case (k, c) => (k, upd.getOrElse(k, c)) }
-      }
-      cent
-    } finally sub.unpersist()
-  }
-
-  private def grpCentDf(s: SparkSession,
-                        cent: Map[(Int, Int, Int), Seq[Long]]): DataFrame = {
-    import s.implicits._
-    cent.toSeq.map { case ((g, m, cell), c) => (g, m, cell, c.toArray) }
-      .toDF("g", "cm", "cell", "c")
-  }
-
-  /** (vec_id, label, q = vec − its single nearest coarse centroid,
-    * ccell): the residual relation of the l3c quantizer — one broadcast
-    * assignment pass (the l34 single-cell argmin), then a map-side
-    * zip_with subtraction. All-integer, oracle-replayable. */
+  /** (vec_id, q = vec − its single nearest coarse centroid, ccell): the
+    * residual relation of the l3c quantizer — one broadcast assignment
+    * pass, then a map-side zip_with subtraction. All-integer,
+    * oracle-replayable. */
   private def residualVecs(s: SparkSession, d: String): DataFrame = {
-    val cdf = broadcast(centroidsDf(s, trainCentroids(s, d)))
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("label"), qz(col("embedding")).as("q"))
-    val assign = e.join(cdf)
-      .select(col("vec_id"),
-        (qdist(col("q"), col("c")) * 16 + col("cell")).as("ok"))
-      .groupBy(col("vec_id")).agg(min(col("ok")).as("mo"))
-      .select(col("vec_id"),
-              (col("mo") % 16).cast(IntegerType).as("ccell"))
-    e.join(assign, Seq("vec_id"))
+    val cdf = coarseCells(s, d)
+    val e = labelledVecs(s, d)
+    e.join(nearestCell(e, cdf, Nil, 16).withColumnRenamed("cell", "ccell"),
+        Seq("vec_id"))
       .join(cdf, col("ccell") === col("cell"))
-      .select(col("vec_id"), col("label"),
+      .select(col("vec_id"),
         zip_with(col("q"), col("c"), (x, y) => x - y).as("q"),
         col("ccell"))
-  }
-
-  /** The joint per-subspace Lloyd trainer over an arbitrary
-    * (vec_id, label, q) relation — shared by the raw-vector (l3e/l3f)
-    * and residual (l3g) codebooks so the training trajectory is
-    * definitionally the same algorithm. */
-  private def pqLloyd(ev: DataFrame, iters: Int)
-      : Map[(Int, Int), Seq[Long]] = {
-      val s = ev.sparkSession
-      val e = ev
-      val sub = subVecs(e).persist()
-      try {
-        def collect(df: DataFrame): Map[(Int, Int), Seq[Long]] =
-          df.groupBy(col("m"), col("cell"), col("pos"))
-            .agg(sum(col("col")).as("sv"), count(lit(1)).as("cnt"))
-            .withColumn("cv",
-              floor(col("sv").cast(DoubleType) / col("cnt")).cast(LongType))
-            .collect()
-            .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getLong(5)))
-            .groupBy(t => (t._1, t._2)).view
-            .mapValues(_.sortBy(_._3).map(_._4).toSeq).toMap
-        var cent: Map[(Int, Int), Seq[Long]] = collect(
-          subVecs(e.select(col("vec_id"), col("q")))
-            .join(e.select(col("vec_id"), col("label")), "vec_id")
-            .select(col("m"),
-                    col("label").cast(IntegerType).as("cell"),
-                    posexplode(col("sq"))))
-        for (_ <- 1 to iters) {
-          val cdf = broadcast(pqCentDf(s, cent))
-          val assign = sub.join(cdf, Seq("m"))
-            .select(col("vec_id"), col("m"),
-              (qdist(col("sq"), col("c")) * 32 + col("cell")).as("ok"))
-            .groupBy(col("vec_id"), col("m")).agg(min(col("ok")).as("mo"))
-            .select(col("vec_id"), col("m"),
-                    (col("mo") % 32).cast(IntegerType).as("cell"))
-          val upd = collect(
-            sub.join(assign, Seq("vec_id", "m"))
-              .select(col("m"), col("cell"), posexplode(col("sq"))))
-          cent = cent.map { case (k, c) => (k, upd.getOrElse(k, c)) }
-        }
-        cent
-      } finally sub.unpersist()
-  }
-
-  private val pqCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, String), Map[(Int, Int), Seq[Long]]]()
-
-  private def pqCentDf(s: SparkSession,
-                       cent: Map[(Int, Int), Seq[Long]]): DataFrame = {
-    import s.implicits._
-    cent.toSeq.map { case ((m, cell), c) => (m, cell, c.toArray) }
-      .toDF("m", "cell", "c")
   }
 
   /** L3e — product-quantization ANN with ADC scoring + exact rerank (the
@@ -1195,24 +1062,19 @@ object Llm {
   private def pqParts(s: SparkSession, d: String, e: DataFrame,
                       qids: Seq[Int])
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val cent = trainPqCodebooks(s, d)
-    val cdf = broadcast(pqCentDf(s, cent))
+    val cdf = centTable(s, Seq("m"), trainPqCodebooks(s, d).map {
+      case ((m, cell), c) => (Seq(m, cell), c) })
     val sub = subVecs(e)
-    val codes = sub.join(cdf, Seq("m"))
-      .select(col("vec_id"), col("m"),
-        (qdist(col("sq"), col("c")) * 32 + col("cell")).as("ok"))
-      .groupBy(col("vec_id"), col("m")).agg(min(col("ok")).as("mo"))
-      .select(col("vec_id"), col("m"),
-              (col("mo") % 32).cast(IntegerType).as("cell"))
-    val cn = broadcast(pqCentDf(s, cent)
+    val codes = nearestCell(sub, cdf, Seq("m"), 32)
+    val cn = broadcast(cdf
       .select(col("m"), col("cell"), qnorm(col("c")).as("cn2")))
     val rn = codes.join(cn, Seq("m", "cell"))
       .groupBy(col("vec_id")).agg(sum(col("cn2")).as("rn"))
     val qsubs = sub.filter(col("vec_id").isin(qids: _*))
-      .select(col("vec_id").as("qid"), col("m"), col("sq"))
+      .select(col("vec_id").as("qid"), col("m"), col("q"))
     val dots = broadcast(qsubs.join(cdf, Seq("m"))
       .select(col("qid"), col("m"), col("cell"),
-              qdot(col("sq"), col("c")).as("dt")))
+              qdot(col("q"), col("c")).as("dt")))
     val qn = broadcast(e.filter(col("vec_id").isin(qids: _*))
       .select(col("vec_id").as("qid"), col("nrm").as("qn")))
     (codes, rn, dots, qn)
@@ -1310,21 +1172,15 @@ object Llm {
     import s.implicits._
     val e = qvecs(s, d)
     val cand = ivfCandidates(s, d, e, nprobe, rassign, qids)
-    val res = residualVecs(s, d)
     val rcent = trainResidualCodebooks(s, d)
-    val rcdf = broadcast(grpCentDf(s, rcent))
+    val rcdf = centTable(s, Seq("ccell", "m"), rcent.map {
+      case ((g, m, cell), c) => (Seq(g, m, cell), c) })
     // stored index: (vid, ccell) + argmin residual code per subspace —
     // each vector only competes for ITS coarse cell's codebook
-    val rsub = subVecs(res.select(col("vec_id"), col("q")))
-      .join(res.select(col("vec_id"), col("ccell")), "vec_id")
-    val codes = rsub
-      .join(rcdf, rsub("ccell") === rcdf("g") && rsub("m") === rcdf("cm"))
-      .select(col("vec_id"), col("m"),
-        (qdist(col("sq"), col("c")) * 32 + col("cell")).as("ok"))
-      .groupBy(col("vec_id"), col("m")).agg(min(col("ok")).as("mo"))
-      .select(col("vec_id").as("vid"), col("m"),
-              (col("mo") % 32).cast(IntegerType).as("pcell"))
-    val asg = res.select(col("vec_id").as("vid"), col("ccell"))
+    val codes = nearestCell(subVecs(residualVecs(s, d)), rcdf,
+        Seq("ccell", "m"), 32)
+      .select(col("vec_id").as("vid"), col("ccell"), col("m"),
+              col("cell").as("pcell"))
     // combined reconstruction table (ccell, m, pcell) → c_m + r_m:
     // driver-built from the two driver-held codebooks
     val w = 64 / PqM
@@ -1337,21 +1193,18 @@ object Llm {
     val combDf = broadcast(comb.toDF("ccell", "m", "pcell", "cc"))
     val n2 = broadcast(combDf.select(col("ccell"), col("m"), col("pcell"),
       qnorm(col("cc")).as("cn2")))
-    val rn = codes.join(asg, Seq("vid"))
-      .join(n2, Seq("ccell", "m", "pcell"))
+    val rn = codes.join(n2, Seq("ccell", "m", "pcell"))
       .groupBy(col("vid")).agg(sum(col("cn2")).as("rn"))
     // per-query dot tables vs the combined reconstructions (broadcast)
-    val qsubs = subVecs(e.filter(col("vec_id").isin(qids: _*))
-        .select(col("vec_id"), col("q")))
-      .select(col("vec_id").as("qid"), col("m"), col("sq"))
+    val qsubs = subVecs(e.filter(col("vec_id").isin(qids: _*)))
+      .select(col("vec_id").as("qid"), col("m"), col("q"))
     val dots = broadcast(qsubs.join(combDf, Seq("m"))
       .select(col("qid"), col("ccell"), col("m"), col("pcell"),
-              qdot(col("sq"), col("cc")).as("dt")))
+              qdot(col("q"), col("cc")).as("dt")))
     val qn = broadcast(e.filter(col("vec_id").isin(qids: _*))
       .select(col("vec_id").as("qid"), col("nrm").as("qn")))
     val adc = cand
       .join(codes, Seq("vid"))
-      .join(asg, Seq("vid"))
       .join(dots, Seq("qid", "ccell", "m", "pcell"))
       .groupBy(col("qid"), col("vid")).agg(sum(col("dt")).as("dot"))
       .join(rn, Seq("vid")).join(qn, Seq("qid"))

@@ -87,28 +87,17 @@ object Replayer {
     Paths.get(sys.props("java.io.tmpdir"), "graft_fixtures_v2", key)
   }
 
-  /** Fingerprint of a source table's physical files (names, sizes,
-    * mtimes) — the centCache idiom applied to fixtures. The r9/r10
-    * lesson: the driver regenerates /root/testdata IN PLACE between
-    * rounds (same path, new files), and a fixture keyed by path alone
-    * would keep serving the OLD data under its _DONE marker — the
-    * oracle hash would catch it, but as a cryptic mismatch rather than
-    * a rebuild. Folding the fingerprint into the fixture dir name makes
-    * regeneration force a rebuild automatically. */
-  private def fingerprint(sfDir: String, table: String): String = {
-    val p = Paths.get(sfDir, s"$table.parquet")
-    val entries =
-      if (Files.isDirectory(p)) {
-        val l = Files.list(p)
-        try {
-          import scala.jdk.CollectionConverters._
-          l.iterator().asScala.toSeq.sortBy(_.toString)
-        } finally l.close()
-      } else Seq(p)
-    val desc = entries.map(e => s"${e.getFileName}:${Files.size(e)}:" +
-      s"${Files.getLastModifiedTime(e).toMillis}").mkString("|")
-    f"${scala.util.hashing.MurmurHash3.stringHash(desc)}%08x"
-  }
+  /** Hash of a source table's file fingerprint
+    * ([[graft.core.BuildOnce.fingerprint]]: every file's path, size and
+    * mtime). The testdata can be regenerated IN PLACE (same path, new
+    * files), and a fixture keyed by path alone would keep serving the
+    * OLD data under its _DONE marker — the oracle hash would catch it,
+    * but as a cryptic mismatch rather than a rebuild. Folding the
+    * fingerprint into the fixture dir name makes regeneration force a
+    * rebuild automatically. */
+  private def fingerprint(sfDir: String, table: String): String =
+    f"${scala.util.hashing.MurmurHash3.stringHash(
+      graft.core.BuildOnce.fingerprint(sfDir, table))}%08x"
 
   /** Resolve (and stale-sweep) the fingerprinted dir for one variant:
     * `<root>/<variant>-<fp>`; sibling dirs of the same variant with a

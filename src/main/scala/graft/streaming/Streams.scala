@@ -991,7 +991,7 @@ object Streams {
     * the streaming and ANN north-star families the r19 verdict named):
     * S13's foreachBatch fold applied to the IVF index. The coarse
     * quantizer is trained ONCE before the stream (l3c's build-once
-    * artifact, centCache-backed — production IVF trains the quantizer
+    * artifact (core.BuildOnce) — production IVF trains the quantizer
     * on a sample and appends codes forever); each arriving batch of
     * vectors is assigned to its rassign nearest trained cells
     * (Llm.assignCells — per-vector arithmetic against the broadcast

@@ -695,4 +695,55 @@ class LlmSpec extends AnyFunSuite {
       assert(score > 0)
     }
   }
+
+  test("Build-once models: a second train returns the cached instance, " +
+       "and a table rewritten in place retrains to a fresh train's model") {
+    import java.nio.file.{Files, Path, Paths}
+    import org.apache.spark.sql.functions.col
+    import graft.llm.{Bpe, Llm}
+    def deleteTree(p: Path): Unit = {
+      val walk = Files.walk(p)
+      try walk.sorted(java.util.Comparator.reverseOrder())
+        .forEach(f => Files.delete(f))
+      finally walk.close()
+    }
+    def copyTables(from: String, to: String): Unit =
+      Seq("embeddings", "documents").foreach(t =>
+        s.read.parquet(s"$from/$t.parquet").write.parquet(s"$to/$t.parquet"))
+    def models(d: String) =
+      (Llm.trainCentroids(s, d), Llm.trainPqCodebooks(s, d), Bpe.train(s, d))
+    val dir = Files.createTempDirectory("buildonce").toString
+    val fresh = Files.createTempDirectory("buildonce-fresh").toString
+    try {
+      copyTables(TestSpark.Sf, dir)
+      val first = models(dir)
+      val again = models(dir)
+      assert(first._1 eq again._1, "IVF centroids retrained on unchanged files")
+      assert(first._2 eq again._2, "PQ codebooks retrained on unchanged files")
+      assert(first._3 eq again._3, "BPE model retrained on unchanged files")
+      // rewrite each table in place with a row subset: same path, new files
+      Seq("embeddings" -> "vec_id", "documents" -> "doc_id").foreach {
+        case (t, id) =>
+          val sub = s"$dir/${t}_sub.parquet"
+          s.read.parquet(s"$dir/$t.parquet").filter(col(id) % 3 =!= 0)
+            .write.parquet(sub)
+          deleteTree(Paths.get(dir, s"$t.parquet"))
+          Files.move(Paths.get(sub), Paths.get(dir, s"$t.parquet"))
+      }
+      val rewritten = models(dir)
+      // the same files under another dir miss the cache: a fresh train
+      copyTables(dir, fresh)
+      val expected = models(fresh)
+      assert(rewritten._1 == expected._1 && rewritten._1 != first._1,
+        "IVF centroids not retrained after the rewrite")
+      assert(rewritten._2 == expected._2 && rewritten._2 != first._2,
+        "PQ codebooks not retrained after the rewrite")
+      assert(rewritten._3 == expected._3 && rewritten._3 != first._3,
+        "BPE model not retrained after the rewrite")
+      assert(Bpe.trainFresh(s, dir) == rewritten._3)
+    } finally {
+      deleteTree(Paths.get(dir))
+      deleteTree(Paths.get(fresh))
+    }
+  }
 }
