@@ -4,11 +4,11 @@ import org.apache.spark.sql.types._
 
 /** Declared schemas for the driver-generated testdata tables (SURVEY §1.3:
   * "parquet self-describes but we assert equality at load — fail fast on
-  * drift"). Motivated by the r9 incident: a driver-side regeneration moved
-  * `events.ts` from parquet TIMESTAMP(NANOS) to TIMESTAMP_MICROS(NTZ) and
-  * 35 queries failed with cryptic analysis errors instead of one clear
-  * "column X: expected T, got U" message. This module makes the next drift
-  * a one-line diagnosis.
+  * drift"). A regeneration of the testdata once moved `events.ts` from
+  * parquet TIMESTAMP(NANOS) to TIMESTAMP_MICROS(NTZ) and 35 queries failed
+  * with cryptic analysis errors instead of one clear "column X: expected
+  * T, got U" message. This module makes the next drift a one-line
+  * diagnosis.
   *
   * Timestamp columns are declared as [[TimestampType]] but the checker
   * tolerates the known physical readings of driver-generated data:
@@ -17,8 +17,10 @@ import org.apache.spark.sql.types._
   * loaders in [[Tables]] normalize those variants to session-TZ timestamps;
   * anything else is drift and throws.
   *
-  * 100 TB note: the assertion inspects only the inferred schema (parquet
-  * footer metadata) — zero data read, zero cost at any scale.
+  * Cost: the assertion inspects only the inferred schema, which reads
+  * parquet footers, not data. Inferring it is one Spark job, which
+  * [[Tables.t]] runs once per JVM and file version ([[BuildOnce]]); the
+  * assertion itself runs on every read and costs no job.
   */
 object Schemas {
   private def st(fields: (String, DataType)*): StructType =

@@ -12,15 +12,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * these loaders are the right primitive at any scale; partition discovery
   * and predicate pushdown happen per-file, so a 100 TB lineitem directory
   * behaves identically to the single test file.
+  *
+  * A table's schema is a build-once artifact ([[BuildOnce]], keyed by the
+  * table's file fingerprint): it is inferred by one footer-read Spark job
+  * per JVM and file version, and every read passes it to the reader, so
+  * a read plans and scans but runs no inference job. The key needs no
+  * session conf: the one conf that changes an inferred type here is
+  * `nanosAsLong` (`events.ts`), and every session is built by
+  * [[graft.Harness.builder]], which sets it.
   */
 object Tables {
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     // legacy TIMESTAMP(NANOS) events read as a nanos Long (not a
     // PARQUET_TYPE_ILLEGAL failure) because every session is built with
     // `nanosAsLong` on (Harness.builder); eventsRaw normalizes the type
-    val df = spark.read.parquet(s"$dir/$name.parquet")
-    Schemas.assertMatches(name, df.schema) // fail fast on testdata drift (§1.3)
-    df
+    val path = s"$dir/$name.parquet"
+    val schema = BuildOnce("table-schema", (), path)(spark.read.parquet(path).schema)
+    Schemas.assertMatches(name, schema) // fail fast on testdata drift (§1.3)
+    spark.read.schema(schema).parquet(path)
   }
 
   /** `events.parquet` has shipped `ts` under different physical types across

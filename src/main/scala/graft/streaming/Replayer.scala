@@ -120,7 +120,6 @@ object Replayer {
             (n.startsWith(variant + "-") || n == variant) && p != dir
           }
           .foreach { stale =>
-            schemaCache.remove(stale.toString)
             try deleteTree(stale) catch { case _: Throwable => }
           }
       } finally l.close()
@@ -300,9 +299,6 @@ object Replayer {
   private def fixture(dir: Path)(batched: => DataFrame): String = {
     val done = dir.resolve("_DONE")
     if (!Files.exists(done)) {
-      // (re)building this dir — drop any schema cached for a previous
-      // incarnation (a regenerated fixture may carry a changed schema)
-      schemaCache.remove(dir.toString)
       Files.createDirectories(dir)
       writeBatches(dir, batched)
       Files.createFile(done)
@@ -378,21 +374,18 @@ object Replayer {
     finally walk.close()
   }
 
-  /** Schema per fixture dir, inferred once per process — every timed
-    * replay otherwise pays a footer-read job just to restate a schema
-    * that cannot change under the _DONE marker. */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]
-
   /** Open a fixture dir as a file-source stream (SRC4), one file per
     * micro-batch. */
   def stream(s: SparkSession, sfDir: String, variant: String): DataFrame =
     open(s, ensure(s, sfDir, variant))
 
   /** The stream opener every `stream*` shares: `dir` as a file-source
-    * stream with its cached schema, one file per micro-batch. */
+    * stream, one file per micro-batch. Its schema is inferred once per
+    * fixture version ([[graft.core.BuildOnce]], keyed by the dir's file
+    * fingerprint), so a timed replay pays no footer-read job. */
   private def open(s: SparkSession, dir: String): DataFrame = {
-    val schema = schemaCache.computeIfAbsent(dir, d => s.read.parquet(d).schema)
+    val schema =
+      graft.core.BuildOnce("replay-schema", (), dir)(s.read.parquet(dir).schema)
     s.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(dir)

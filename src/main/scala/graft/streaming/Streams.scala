@@ -163,9 +163,11 @@ object Streams {
     val snap = root.resolve(s"v$id")
     val prev = root.resolve(s"v${id - 1}")
     val bAgg = batch.groupBy(col("user_id")).agg(max(best).as("best"))
+    // the snapshot chain's schema is bAgg's (the merge keeps it), so
+    // passing it spares each batch a footer-read inference job
     val merged =
       if (java.nio.file.Files.exists(prev))
-        batch.sparkSession.read.parquet(prev.toString)
+        batch.sparkSession.read.schema(bAgg.schema).parquet(prev.toString)
           .unionByName(bAgg)
           .groupBy(col("user_id")).agg(max(col("best")).as("best"))
       else bAgg
@@ -237,8 +239,14 @@ object Streams {
     * StreamingSpec so the pin and the operator read one schedule. */
   private[graft] val S23Rules = Seq((0, 50.0), (2, 150.0))
 
+  /** The rules log's schema: its writer builds the log with it and every
+    * per-batch read passes it, so no batch pays an inference job. */
+  private val S23RulesSchema = StructType(Seq(
+    StructField("effective_batch", IntegerType),
+    StructField("threshold", DoubleType)))
+
   private[graft] def s23WriteRules(s: SparkSession, dir: String): Unit =
-    s.createDataFrame(S23Rules).toDF("effective_batch", "threshold")
+    s.createDataFrame(S23Rules.map(Row.fromTuple).asJava, S23RulesSchema)
       .coalesce(1).write.mode("overwrite").parquet(dir)
 
   /** Latest rule version ≤ this batch id — the per-batch
@@ -248,7 +256,7 @@ object Streams {
     * as a bare NoSuchElementException (advisor r17). */
   private[graft] def s23RuleFor(s: SparkSession, rulesDir: String,
                                 id: Long): Double = {
-    val rows = s.read.parquet(rulesDir)
+    val rows = s.read.schema(S23RulesSchema).parquet(rulesDir)
       .filter(col("effective_batch") <= id)
       .orderBy(col("effective_batch").desc)
       .head(1)
@@ -271,13 +279,19 @@ object Streams {
     * at batches 0, 2 and 4 — two mutations inside one replay. */
   private[graft] val S36Versions = Seq(0L, 2L, 4L)
 
+  /** The S36 dim log's schema, shared by its writer and its per-batch
+    * reads (the [[S23RulesSchema]] discipline). */
+  private val S36DimSchema = StructType(Seq(
+    StructField("effective_batch", LongType), StructField("grp", LongType),
+    StructField("mult", LongType)))
+
   /** Write the S36 versioned dim log: one complete 10-key snapshot per
     * version (the lookup-table contract — a version is a whole dim,
     * not a delta). */
   private[graft] def s36WriteDim(s: SparkSession, dir: String): Unit = {
     val rows = for (v <- S36Versions; g <- 0L until 10L)
-      yield (v, g, s36Mult(v, g))
-    s.createDataFrame(rows).toDF("effective_batch", "grp", "mult")
+      yield Row(v, g, s36Mult(v, g))
+    s.createDataFrame(rows.asJava, S36DimSchema)
       .coalesce(1).write.mode("overwrite").parquet(dir)
   }
 
@@ -285,7 +299,7 @@ object Streams {
     * for a KEYED dim (driver read of KB-sized control data). */
   private[graft] def s36VersionFor(s: SparkSession, dimDir: String,
                                    id: Long): Long = {
-    val rows = s.read.parquet(dimDir)
+    val rows = s.read.schema(S36DimSchema).parquet(dimDir)
       .filter(col("effective_batch") <= id)
       .agg(max(col("effective_batch"))).head(1)
     require(rows.nonEmpty && !rows(0).isNullAt(0),
@@ -306,7 +320,7 @@ object Streams {
                               (batch: DataFrame, id: Long): Unit = {
     val s = batch.sparkSession
     val v = s36VersionFor(s, dimDir, id)
-    val dimV = s.read.parquet(dimDir)
+    val dimV = s.read.schema(S36DimSchema).parquet(dimDir)
       .filter(col("effective_batch") === v)
       .select(col("grp"), col("mult"))
     batch.select((col("user_id") % 10).as("grp"),
@@ -1404,14 +1418,17 @@ object Streams {
           // store 1: raw log, batch-addressed (idempotent on replay)
           batch.write.mode("overwrite")
             .parquet(rawDir.resolve(s"b$id").toString)
-          // store 2: per-type running (n, sum_value) snapshot chain
+          // store 2: per-type running (n, sum_value) snapshot chain. sv
+          // is widened to the merge's own result type, decimal(38, 4),
+          // so every snapshot has part's schema and the read of v(id−1)
+          // passes it instead of running an inference job per batch
           val part = batch.groupBy(col("event_type"))
             .agg(count(lit(1)).as("n"),
-              sum(vdec).as("sv"))
+              sum(vdec).cast(DecimalType(38, 4)).as("sv"))
           val prev = aggRoot.resolve(s"v${id - 1}")
           val merged =
             if (java.nio.file.Files.exists(prev))
-              batch.sparkSession.read.parquet(prev.toString)
+              batch.sparkSession.read.schema(part.schema).parquet(prev.toString)
                 .unionByName(part)
                 .groupBy(col("event_type"))
                 .agg(sum(col("n")).as("n"), sum(col("sv")).as("sv"))
