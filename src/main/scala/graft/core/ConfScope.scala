@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** JVM-wide serialization + save/restore for session-global SQL conf
   * mutations. Its src/main callers: `Streams.runStream` (every stream's
-  * confs), `j12_recursive`, `snk7Write`, `snk8Write`, and
-  * [[Loop.checkpointByKeyN]] / [[Loop.checkpointKeepPartitioning]],
+  * confs, across `start()` only), `j12_recursive`, `snk7Write`,
+  * `snk8Write`, and [[Loop.checkpointByKeyN]] / [[Loop.checkpointKeepPartitioning]],
   * which scope AQE off for their materialize job. One shared lock: two
   * independent locks each saving/restoring the same conf key can
   * interleave as save(32)/set(8)/save(8)/restore(32)/restore(8) and

@@ -347,7 +347,7 @@ object Joins {
     // side can't take); output = a1-style decimal-exact aggregate.
     "j15_bucketed" -> ((s, dir) => {
       val nb = 8
-      // table names keyed by the dataset dir (the stagingDir convention):
+      // table names keyed by the dataset dir:
       // two sessions in one warehouse running j15 against different sf
       // dirs must not race on one global table pair
       val key = dir.replaceAll("[^a-zA-Z0-9.]", "_").replace(".", "_")

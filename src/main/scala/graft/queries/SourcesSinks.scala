@@ -1,11 +1,10 @@
 package graft.queries
 
-import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.core.{Canon, ConfScope, Tables}
+import graft.core.{Canon, ConfScope, Scratch, Tables}
 
 /** SURVEY.md §2.1 SRC2/SRC3 (CSV/JSON scans with declared schema) +
   * SNK1 (batch sinks — the write half of each round-trip).
@@ -30,44 +29,11 @@ object SourcesSinks {
     * and the checksum would catch it. */
   private val TsFmt = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
 
-  /** FIXED round-trip staging dir per (process, format, sf) —
-    * `mode("overwrite")` replaces it on every run, so repeated
-    * bench/verify runs reuse one bounded location instead of leaking a
-    * fresh createTempDirectory copy of the table each invocation. The
-    * PID component keeps two CONCURRENT processes running the same
-    * round-trip (e.g. bench alongside tests) from overwriting the
-    * directory one of them is still reading back. */
-  private[graft] def stagingDir(kind: String, sfDir: String): String = {
-    val key = sfDir.replaceAll("[^a-zA-Z0-9.]", "_")
-    val p = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft_roundtrip",
-      s"p${ProcessHandle.current().pid()}", s"${kind}_$key")
-    Files.createDirectories(p.getParent)
-    stagingCleanup // ensure the shutdown hook is registered
-    p.toString
-  }
-
-  /** Delete this process's staging root on JVM exit — without this, the
-    * per-PID isolation would leak a full table copy per process run
-    * (each new JVM gets a new PID, so nothing would ever reuse them). */
-  private lazy val stagingCleanup: Unit = {
-    val root = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft_roundtrip",
-      s"p${ProcessHandle.current().pid()}")
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      if (Files.exists(root)) {
-        val walk = Files.walk(root)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => Files.deleteIfExists(f))
-        finally walk.close()
-      }))
-  }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // SRC2 + SNK1 — CSV round-trip of lineitem.
     "src2_csv_roundtrip" -> ((s, dir) => {
       val src = Tables.lineitem(s, dir)
-      val tmp = stagingDir("csv", dir)
+      val tmp = Scratch.dir("csv", dir).toString
       src.write.mode("overwrite")
         .option("header", "true").option("timestampFormat", TsFmt)
         .csv(tmp)
@@ -92,7 +58,7 @@ object SourcesSinks {
     // (they're encoded in directory names, not data files).
     "snk3_partitioned_roundtrip" -> ((s, dir) => {
       val src = Tables.lineitem(s, dir)
-      val tmp = stagingDir("part", dir)
+      val tmp = Scratch.dir("part", dir).toString
       src.write.mode("overwrite").partitionBy("l_returnflag").parquet(tmp)
       s.read.parquet(tmp)
         .filter(col("l_returnflag") === "R")
@@ -111,7 +77,7 @@ object SourcesSinks {
     // the original parquet: three formats, one table, one hash.
     "src7_orc_roundtrip" -> ((s, dir) => {
       val src = Tables.lineitem(s, dir)
-      val tmp = stagingDir("orc", dir)
+      val tmp = Scratch.dir("orc", dir).toString
       src.write.mode("overwrite").orc(tmp)
       s.read.orc(tmp)
         .agg(count(lit(1)).as("n"),
@@ -134,7 +100,7 @@ object SourcesSinks {
     // prove the source works, not to recommend it at scale.
     "src8_xml_roundtrip" -> ((s, dir) => {
       val src = Tables.orders(s, dir)
-      val tmp = stagingDir("xml", dir)
+      val tmp = Scratch.dir("xml", dir).toString
       src.write.mode("overwrite").option("rowTag", "row")
         .format("xml").save(tmp)
       s.read.schema(src.schema).option("rowTag", "row")
@@ -150,7 +116,7 @@ object SourcesSinks {
     // SRC3 + SNK1 — JSON-lines round-trip of events (µs timestamps).
     "src3_json_roundtrip" -> ((s, dir) => {
       val src = Tables.events(s, dir)
-      val tmp = stagingDir("json", dir)
+      val tmp = Scratch.dir("json", dir).toString
       src.write.mode("overwrite").option("timestampFormat", TsFmt).json(tmp)
       s.read.schema(src.schema)
         .option("timestampFormat", TsFmt).json(tmp)
@@ -248,7 +214,7 @@ object SourcesSinks {
     // "J17" pins the dynamic filter in the scan and that the scan
     // decodes exactly the surviving partitions' rows.
     "j17_dpp" -> ((s, dir) => {
-      val out = stagingDir("j17dpp", dir)
+      val out = Scratch.dir("j17dpp", dir).toString
       Tables.events(s, dir)
         .select(col("event_id"), col("user_id"), col("value"),
           col("event_type"))
@@ -312,7 +278,7 @@ object SourcesSinks {
     // "SRC9" pins the physical asymmetry (gen-1 files alone lack the
     // column) and the per-generation null pattern.
     "src9_schema_evolution" -> ((s, dir) => {
-      val out = stagingDir("src9evolve", dir)
+      val out = Scratch.dir("src9evolve", dir).toString
       val li = Tables.lineitem(s, dir)
       li.filter(col("l_orderkey") % 2 === 0)
         .select(col("l_orderkey"), col("l_quantity"), col("l_returnflag"))
@@ -351,8 +317,8 @@ object SourcesSinks {
     }),
 
     "snk6_compaction" -> ((s, dir) => {
-      val frag = stagingDir("snk6frag", dir)
-      val comp = stagingDir("snk6comp", dir)
+      val frag = Scratch.dir("snk6frag", dir).toString
+      val comp = Scratch.dir("snk6comp", dir).toString
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("user_id"), col("value"),
           col("event_type"))
@@ -386,7 +352,7 @@ object SourcesSinks {
     * predicate shows up in PushedFilters and silently prunes nothing
     * (EngineSpec's scan-metric pin exists to catch exactly that). */
   private[graft] def snk7Write(s: SparkSession, dir: String): String = {
-    val out = stagingDir("snk7sorted", dir)
+    val out = Scratch.dir("snk7sorted", dir).toString
     ConfScope.withConf(s, Map(
       "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")) {
       Tables.events(s, dir)
@@ -402,7 +368,7 @@ object SourcesSinks {
   /** SNK7 filtered read-back over the sorted layout — exposed for
     * EngineSpec's PushedFilters + scan-metric pins. */
   private[graft] def snk7Read(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(stagingDir("snk7sorted", dir))
+    s.read.parquet(Scratch.dir("snk7sorted", dir).toString)
       .filter(col("ts") >= lit(Snk7From).cast(TimestampType) &&
               col("ts") < lit(Snk7To).cast(TimestampType))
 
@@ -428,7 +394,7 @@ object SourcesSinks {
     * TIMESTAMP_MICROS for the same reason as SNK7 (INT96 carries no
     * usable parquet statistics). */
   private[graft] def snk8Write(s: SparkSession, dir: String): String = {
-    val out = stagingDir("snk8zorder", dir)
+    val out = Scratch.dir("snk8zorder", dir).toString
     val ev = Tables.events(s, dir)
       .select(col("event_id"), col("user_id"), col("value"),
         col("event_type"), col("ts"))
@@ -461,7 +427,7 @@ object SourcesSinks {
     * files (one absolute path per line), written to a temp name and
     * ATOMIC_MOVE-renamed — the publish point. */
   private[graft] def snk9Root(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(stagingDir("snk9snap", dir))
+    Scratch.dir("snk9snap", dir)
 
   /** List one data dir's parquet files — the WRITER-side listing of
     * the manifest protocol (readers never list). */
@@ -530,7 +496,7 @@ object SourcesSinks {
 
   /** SNK10 root (own staging dir — snk9's versions stay untouched). */
   private[graft] def snk10Root(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(stagingDir("snk10merge", dir))
+    Scratch.dir("snk10merge", dir)
 
   /** The SNK10 keyed delta, deterministic and disjoint by
     * construction, and RECENT-SKEWED — confined to the top quarter of
@@ -696,7 +662,7 @@ object SourcesSinks {
   /** SNK8 two-predicate read-back — exposed for EngineSpec's
     * PushedFilters + bounding-box + scan-metric pins. */
   private[graft] def snk8Read(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(stagingDir("snk8zorder", dir))
+    s.read.parquet(Scratch.dir("snk8zorder", dir).toString)
       .filter(col("ts") >= lit(Snk7From).cast(TimestampType) &&
               col("ts") < lit(Snk7To).cast(TimestampType) &&
               col("value") >= lit(Snk8ValLo) &&

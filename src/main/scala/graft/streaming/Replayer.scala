@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 import java.nio.file.attribute.FileTime
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Scratch, Tables}
 
 /** Multi-batch replay fixtures for the S-series (SURVEY §2.9, FIXTURES.md
   * "Streaming fixtures to DERIVE"). The `events` table is split into
@@ -120,7 +120,7 @@ object Replayer {
             (n.startsWith(variant + "-") || n == variant) && p != dir
           }
           .foreach { stale =>
-            try deleteTree(stale) catch { case _: Throwable => }
+            try Scratch.delete(stale) catch { case _: Throwable => }
           }
       } finally l.close()
     }
@@ -330,7 +330,7 @@ object Replayer {
         Files.move(part, target)
         // pin replay order: FileStreamSource sorts by mtime
         Files.setLastModifiedTime(target, FileTime.fromMillis(1000000000000L + i * 1000L))
-        deleteTree(Paths.get(tmp)) // clean staging dir
+        Scratch.delete(tmp) // clean staging dir
       }
     } finally batched.unpersist()
   }
@@ -365,15 +365,6 @@ object Replayer {
   def streamDocs(s: SparkSession, sfDir: String): DataFrame =
     open(s, ensureDocs(s, sfDir))
 
-  /** Recursively delete, closing the walk stream (a leaked stream holds a
-    * directory fd until GC). */
-  private[streaming] def deleteTree(p: Path): Unit = if (Files.exists(p)) {
-    val walk = Files.walk(p)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .forEach(f => Files.deleteIfExists(f))
-    finally walk.close()
-  }
-
   /** Open a fixture dir as a file-source stream (SRC4), one file per
     * micro-batch. */
   def stream(s: SparkSession, sfDir: String, variant: String): DataFrame =
@@ -390,26 +381,4 @@ object Replayer {
       .option("maxFilesPerTrigger", 1)
       .parquet(dir)
   }
-
-  /** Fresh checkpoint dir for one streaming run. Prefers tmpfs
-    * (/dev/shm): checkpoint commits are many small synchronous writes
-    * (offset log, commit log, one delta file per state store per batch),
-    * so memory-backed storage removes the fsync tax from every
-    * micro-batch. Durability is irrelevant here — each run starts from a
-    * fresh checkpoint; a production deployment points this at HDFS/S3.
-    * Falls back to java.io.tmpdir when /dev/shm is absent or low on
-    * space (containers commonly cap it at 64 MB), and callers delete the
-    * dir after query termination via [[dropCheckpoint]] so repeated runs
-    * never accumulate state in RAM-backed tmpfs. */
-  def checkpoint(): String = {
-    val shm = Paths.get("/dev/shm")
-    val base = if (Files.isDirectory(shm) && Files.isWritable(shm) &&
-                   shm.toFile.getUsableSpace > 64L * 1024 * 1024) {
-      val d = shm.resolve("graft_ckpt"); Files.createDirectories(d); d
-    } else Paths.get(sys.props("java.io.tmpdir"))
-    Files.createTempDirectory(base, "ckpt").toString
-  }
-
-  /** Recursively delete a checkpoint dir created by [[checkpoint]]. */
-  def dropCheckpoint(dir: String): Unit = deleteTree(Paths.get(dir))
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode,
   StreamingQuery, TimeMode, Trigger}
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
-import graft.core.Tables
+import graft.core.{Scratch, Tables}
 
 /** Typed row for the S8 funnel (event time kept as epoch MICROS — exact
   * long comparisons, no millis truncation). */
@@ -58,30 +58,31 @@ object Streams {
     * `Trigger.AvailableNow` with the state parallelism above plus
     * `extraConf` (per-query confs the stream must see at start, e.g. the
     * RocksDB provider for transformWithState). `sink` picks the sink and
-    * output mode: the memory sink or a `foreachBatch`. The confs are
-    * baked into the checkpoint only; batch queries are untouched because
-    * ConfScope restores them (under the shared JVM-wide lock, see its
-    * scaladoc) before this returns. A failed query is stopped and its
-    * exception rethrown. The checkpoint is a fresh one dropped on return,
-    * unless the caller passes its own `checkpoint` to read or restart
-    * on afterwards; then the caller drops it. */
+    * output mode: the memory sink or a `foreachBatch`. ConfScope sets the
+    * confs (under its JVM-wide lock, see its scaladoc) across `start()`
+    * only: the query clones the session when it is constructed and runs
+    * every batch on the clone, so the shared session is restored before
+    * the first batch and batch queries never see the stream's confs. A
+    * failed query is stopped and its exception rethrown. The checkpoint
+    * is a fresh one dropped on return, unless the caller passes its own
+    * `checkpoint` to read or restart on afterwards; then the caller
+    * drops it. */
   private def runStream(s: SparkSession, df: DataFrame,
       extraConf: Map[String, String],
       checkpoint: Option[String] = None)
       (sink: DataStreamWriter[Row] => DataStreamWriter[Row])
       : StreamingQuery = {
-    val ckpt = checkpoint.getOrElse(Replayer.checkpoint())
+    val ckpt = checkpoint.getOrElse(Scratch.checkpoint())
     try {
-      ConfScope.withConf(s,
+      val q = ConfScope.withConf(s,
         Map("spark.sql.shuffle.partitions" -> StreamPartitions) ++ extraConf) {
-        val q = sink(df.writeStream)
-          .option("checkpointLocation", ckpt)
+        sink(df.writeStream).option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow()).start()
-        try q.awaitTermination()
-        catch { case e: Throwable => q.stop(); throw e }
-        q
       }
-    } finally if (checkpoint.isEmpty) Replayer.dropCheckpoint(ckpt)
+      try q.awaitTermination()
+      catch { case e: Throwable => q.stop(); throw e }
+      q
+    } finally if (checkpoint.isEmpty) Scratch.delete(ckpt)
   }
 
   /** Run `df` into a memory sink and return its final table. The sink's
@@ -98,48 +99,23 @@ object Streams {
     } finally s.catalog.dropTempView(name)
   }
 
-  /** SNK4 snapshot root for a dataset dir — pid-scoped (two concurrent
-    * processes must not merge into each other's table) and exposed so
-    * StreamingSpec asserts against the same path construction. First use
-    * sweeps snapshot roots left by DEAD pids and registers a shutdown
-    * hook for this process's root, so repeated bench/test JVMs do not
-    * accumulate orphans under tmpdir. */
-  private[graft] def upsertRoot(d: String): java.nio.file.Path = {
-    val base = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft_upsert")
-    if (java.nio.file.Files.exists(base)) {
-      // best-effort: two processes may sweep the same orphan
-      // concurrently — a lost race must not fail the query
-      try {
-        val kids = java.nio.file.Files.list(base)
-        try kids.iterator().forEachRemaining { p =>
-          val name = p.getFileName.toString
-          val dead = name.startsWith("p") &&
-            name.drop(1).toLongOption.exists { pid =>
-              val h = ProcessHandle.of(pid)
-              !h.isPresent || !h.get().isAlive
-            }
-          if (dead) Replayer.deleteTree(p)
-        } finally kids.close()
-      } catch { case _: java.io.IOException | _: java.io.UncheckedIOException => }
-    }
-    upsertShutdownHook // register once
-    // sha-8 suffix keeps the dir→root mapping injective: sanitization
-    // alone could collide two distinct dataset paths onto one snapshot
-    // root, and a colliding concurrent run would merge into (and
-    // delete) the other's table
-    val sha8 = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(d.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    base.resolve(s"p${ProcessHandle.current().pid()}")
-      .resolve(d.replaceAll("[^a-zA-Z0-9.]", "_") + "_" + sha8)
+  /** Run `df` through `body` once per micro-batch, write each batch's
+    * frame to `root/b<id>` (a replayed id rewrites the same path: the
+    * idempotent sink), and read the committed set back with the schema
+    * the batches wrote. `root` starts empty. */
+  private def runToBatches(s: SparkSession, df: DataFrame,
+      root: java.nio.file.Path)(body: (DataFrame, Long) => DataFrame)
+      : DataFrame = {
+    Scratch.delete(root)
+    val schema = new java.util.concurrent.atomic.AtomicReference[StructType]
+    runStream(s, df, NoFinalBatch)(
+      _.foreachBatch { (b: DataFrame, id: Long) =>
+        val out = body(b, id)
+        out.write.mode("overwrite").parquet(root.resolve(s"b$id").toString)
+        schema.set(out.schema)
+      })
+    Scratch.read(s, schema.get, Scratch.committed(root, "b"))
   }
-
-  private lazy val upsertShutdownHook: Unit =
-    sys.addShutdownHook {
-      Replayer.deleteTree(java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), "graft_upsert",
-        s"p${ProcessHandle.current().pid()}"))
-    }
 
   /** SNK4's per-batch merge — the previous snapshot is addressed by
     * BATCH ID on disk, never by in-memory state: after a checkpoint
@@ -152,17 +128,9 @@ object Streams {
     * so the recovery path under test IS the canonical one. */
   private[graft] def upsertMerge(root: java.nio.file.Path)
                                 (batch: DataFrame, id: Long): Unit = {
-    // the struct max orders by (ts, event_id) and only then by the
-    // payload fields; the oracle orders by ts DESC, event_id DESC alone.
-    // The two agree because event_id is UNIQUE in events (asserted in
-    // StreamingSpec "events event_id is unique"), so the payload
-    // positions never decide — if uniqueness ever broke, the spec fails
-    // loudly instead of the hash diverging silently.
-    val best = struct(col("ts"), col("event_id"), col("event_type"),
-                      col("value"))
     val snap = root.resolve(s"v$id")
     val prev = root.resolve(s"v${id - 1}")
-    val bAgg = batch.groupBy(col("user_id")).agg(max(best).as("best"))
+    val bAgg = upsertBest(batch)
     // the snapshot chain's schema is bAgg's (the merge keeps it), so
     // passing it spares each batch a footer-read inference job
     val merged =
@@ -174,20 +142,28 @@ object Streams {
     merged.write.mode("overwrite").parquet(snap.toString)
   }
 
+  /** SNK4's per-batch reduction: one best-row struct per user. Its
+    * schema is every snapshot's, so the final read passes it too. */
+  private def upsertBest(events: DataFrame): DataFrame =
+    // the struct max orders by (ts, event_id) and only then by the
+    // payload fields; the oracle orders by ts DESC, event_id DESC alone.
+    // The two agree because event_id is UNIQUE in events (asserted in
+    // StreamingSpec "events event_id is unique"), so the payload
+    // positions never decide — if uniqueness ever broke, the spec fails
+    // loudly instead of the hash diverging silently.
+    events.groupBy(col("user_id")).agg(max(struct(col("ts"),
+      col("event_id"), col("event_type"), col("value"))).as("best"))
+
   /** S19's per-batch manifest publication (shared with StreamingSpec's
     * empty-batch and restart tests so the path under test IS the
-    * canonical one). r16 fix (advisor): a ZERO-FILE micro-batch —
-    * possible under sparser replays or AvailableNow's trailing
-    * no-data batch — previously either crashed batch 0 on
-    * publishManifest's `require(files.nonEmpty)` or published a
-    * non-extending duplicate manifest, breaking the strict-prefix
-    * chain pin. Now an empty batch publishes NOTHING (its version id
-    * is simply absent from the chain — every manifest still names a
-    * batch-atomic prefix), and the previous file set is resolved as
-    * the LATEST manifest with version < id rather than exactly id−1,
-    * so the chain tolerates the gap. Replay of a non-empty batch id
-    * stays idempotent: the dir rewrite produces the same bytes and the
-    * manifest is re-listed from the rewrite. */
+    * canonical one). A ZERO-FILE micro-batch (possible under sparser
+    * replays or AvailableNow's trailing no-data batch) publishes
+    * NOTHING: its version id is simply absent from the chain, and
+    * every manifest still names a batch-atomic prefix. The previous
+    * file set is the LATEST manifest with version < id rather than
+    * exactly id−1, so the chain tolerates the gap. Replay of a
+    * non-empty batch id stays idempotent: the dir rewrite produces the
+    * same bytes and the manifest is re-listed from the rewrite. */
   private[graft] def s19PublishBatch(root: java.nio.file.Path)
                                     (batch: DataFrame, id: Long): Unit = {
     import graft.queries.SourcesSinks
@@ -195,7 +171,7 @@ object Streams {
     // trivial job per batch; an empty single-partition batch would
     // otherwise write one 0-row part file and pad the chain with it)
     if (batch.isEmpty) return
-    // replay idempotence WITHOUT a published-file rewrite (advisor r16):
+    // replay idempotence WITHOUT a published-file rewrite:
     // Spark part-file names embed a per-job UUID, so a mode=overwrite
     // replay of an already-published id would DELETE the exact files the
     // committed v$id manifest names and rewrite them under new names —
@@ -213,22 +189,10 @@ object Streams {
       .write.mode("overwrite").parquet(dataDir.toString)
     val files = SourcesSinks.listParquet(dataDir)
     if (files.isEmpty) return // zero-FILE batch (0 partitions): same skip
-    val mdir = root.resolve("manifests")
-    val prev: Seq[String] =
-      if (!java.nio.file.Files.isDirectory(mdir)) Seq.empty
-      else {
-        val ls = java.nio.file.Files.list(mdir)
-        val vs =
-          try ls.iterator().asScala.map(_.getFileName.toString)
-            .filter(_.endsWith(".list"))
-            .flatMap(_.stripPrefix("v").stripSuffix(".list").toLongOption)
-            .filter(_ < id).toSeq
-          finally ls.close()
-        if (vs.isEmpty) Seq.empty
-        else java.nio.file.Files
-          .readString(mdir.resolve(s"v${vs.max}.list"))
-          .split("\n").toSeq.filter(_.nonEmpty)
-      }
+    val prev = Scratch.latest(root.resolve("manifests"), "v", below = id,
+        suffix = ".list").toSeq
+      .flatMap(java.nio.file.Files.readString(_).split("\n"))
+      .filter(_.nonEmpty)
     SourcesSinks.publishManifest(root, id, prev ++ files)
   }
 
@@ -253,7 +217,7 @@ object Streams {
     * "re-broadcast": a 1-row driver read of KB-sized control data. A
     * schedule with no rule at or before `id` is a configuration error
     * (the log must carry a base rule), named loudly rather than leaked
-    * as a bare NoSuchElementException (advisor r17). */
+    * as a bare NoSuchElementException. */
   private[graft] def s23RuleFor(s: SparkSession, rulesDir: String,
                                 id: Long): Double = {
     val rows = s.read.schema(S23RulesSchema).parquet(rulesDir)
@@ -311,13 +275,11 @@ object Streams {
   /** S36's per-batch body: resolve the dim version in effect at THIS
     * batch, broadcast-join the batch's events against that keyed
     * snapshot (the generalization of S23's scalar literal to a real
-    * per-key lookup), enrich cents × mult, write batch-id-named
-    * (idempotent replay — the SNK4 discipline). Every event in the
-    * batch sees ONE dim version — batch-atomic staleness, the Flink
+    * per-key lookup) and enrich cents × mult. Every event in the batch
+    * sees ONE dim version — batch-atomic staleness, the Flink
     * lookup-cache contract. */
-  private[graft] def s36Enrich(dimDir: String,
-                               outRoot: java.nio.file.Path)
-                              (batch: DataFrame, id: Long): Unit = {
+  private[graft] def s36Enrich(dimDir: String)
+                              (batch: DataFrame, id: Long): DataFrame = {
     val s = batch.sparkSession
     val v = s36VersionFor(s, dimDir, id)
     val dimV = s.read.schema(S36DimSchema).parquet(dimDir)
@@ -330,48 +292,26 @@ object Streams {
       .agg(count(lit(1)).as("n"),
            sum(col("cents") * col("mult")).as("adj_cents"))
       .withColumn("b", lit(id))
-      .write.mode("overwrite").parquet(outRoot.resolve(s"b$id").toString)
   }
 
   /** S23's per-batch body: resolve the current rule, flag events above
-    * its threshold, aggregate, write batch-id-named (idempotent
-    * replay — same id, same bytes, same path). */
-  private[graft] def s23ApplyRules(rulesDir: String,
-                                   outRoot: java.nio.file.Path)
-                                  (batch: DataFrame, id: Long): Unit = {
+    * its threshold, aggregate. */
+  private[graft] def s23ApplyRules(rulesDir: String)
+                                  (batch: DataFrame, id: Long): DataFrame = {
     val thr = s23RuleFor(batch.sparkSession, rulesDir, id)
     batch.filter(col("value") > thr)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
            sum(round(col("value") * 100, 0).cast("long")).as("sc"))
-      .write.mode("overwrite").parquet(outRoot.resolve(s"b$id").toString)
   }
 
-  private[graft] def s23BatchDirs(outRoot: java.nio.file.Path): Seq[String] = {
-    val kids = java.nio.file.Files.list(outRoot)
-    try kids.iterator().asScala.map(_.toString)
-      .filter(_.split("/").last.startsWith("b")).toSeq.sorted
-    finally kids.close()
-  }
-
-  /** Highest-batch-id committed snapshot under `root`. */
-  private[graft] def latestSnapshot(root: java.nio.file.Path): String = {
-    val kids = java.nio.file.Files.list(root)
-    val ids =
-      try kids.iterator().asScala.flatMap(
-        _.getFileName.toString.stripPrefix("v").toLongOption).toSeq
-      finally kids.close()
-    require(ids.nonEmpty, "upsert sink committed no snapshot")
-    root.resolve(s"v${ids.max}").toString
-  }
-
-  /** RocksDB provider conf for transformWithState runs (TWS requires it;
-    * it is also the declared 100 TB state backend). */
   /** S21 abandonment window (µs): 2 h — abandoned, answered, and
     * horizon-suppressed views all exist naturally at every shipped sf
     * (178/1/9 at sf0.001, 1912/8/62 at sf0.01). */
   private[graft] val AbandonWindowUs: Long = 2L * 3600L * 1000000L
 
+  /** RocksDB provider conf for transformWithState runs (TWS requires it;
+    * it is also the declared 100 TB state backend). */
   private[graft] val RocksDbConf = Map(
     "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
@@ -456,10 +396,6 @@ object Streams {
       runToMemory(s, agg, "complete", NoFinalBatch)
     }
 
-  /** The s5-family stateful core: the full-outer interval join (runs
-    * WITH the final no-data batch — outer rows emit on the last
-    * watermark advance; inner derivations are unaffected because a
-    * no-data batch can only emit null-padded rows). */
   /** S17 body — the left-semi interval join with the click-horizon
     * width as a parameter: the canonical query runs the s5 family's
     * 1-hour production condition; StreamingSpec "S17" additionally
@@ -841,30 +777,13 @@ object Streams {
     * custom face). */
   private[graft] val S34IdleBatches = 2
 
-  /** S34b body — WATERMARK ALIGNMENT WITH AN IDLENESS DIAL, modeled in
-    * a per-batch coordinator (foreachBatch) because Spark's engine
-    * watermark has no idleness escape: the `min` policy means one
-    * stopped source FREEZES append output forever (the production
-    * incident class; the spec pins the stall on the engine path). Here
-    * the coordinator owns event time: per batch it folds each DECLARED
-    * source's running max event time and an idle counter (no rows →
-    * +1, rows → reset), computes the aligned watermark = min over
-    * NON-IDLE sources of (runmax − 10 min), stages the batch's
-    * (window × type) partial counts, and RELEASES every window whose
-    * end falls in [prevWm, wm) — emit-once by construction — stamped
-    * with its release batch. The laggard (shift48stop) delivers files
-    * 0–1 then stops: the aligned watermark stalls with it through
-    * batch 2 (idle count still below the dial), then the dial expels
-    * it at batch 3 and the frozen tail releases — the release-batch
-    * column makes the stall AND the release hash-gated facts, not
-    * log lines. Window counts = arrivals in batches ≤ release batch
-    * (both sides model arrival by the deterministic file assignment,
-    * so a post-release arrival — impossible here — would divide the
-    * hash loudly).
-    * 100 TB: per-source maxima/idle counters are O(sources) driver
-    * state; staging holds (window × type) PARTIAL aggregates (never
-    * events — the map-side combine runs before the write); each
-    * release scans aggregate-sized staging. */
+  /** The S34b release log's schema: the coordinator writes every release
+    * with it and the final read passes it. */
+  private[graft] val S34bOutSchema = StructType(Seq(
+    StructField("win_start", TimestampType),
+    StructField("event_type", StringType),
+    StructField("n", LongType), StructField("rel_b", LongType)))
+
   /** The S34b per-batch coordinator with DURABLE state: the aligned
     * watermark's inputs (per-source running maxima, idle counters,
     * prevWm) are committed to `stageRoot/coord_b<id>.properties` after
@@ -940,20 +859,21 @@ object Streams {
         if (active.nonEmpty && active.forall(runmax.contains))
           active.map(runmax).min - delayUs
         else prevWm
-      b.groupBy(window(col("ts"), "1 hour"), col("event_type"))
+      val part = b.groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"))
         .select(col("window.start").as("win_start"),
           col("event_type"), col("n"))
-        .write.mode("overwrite")
+      part.write.mode("overwrite")
         .parquet(stageRoot.resolve(s"b$id").toString)
       if (wm > prevWm) {
-        ss.read.parquet(s23BatchDirs(stageRoot): _*)
+        Scratch.read(ss, part.schema, Scratch.committed(stageRoot, "b"))
           .withColumn("end_us",
             unix_micros(col("win_start")) + 3600L * 1000000L)
           .filter(col("end_us") < wm && col("end_us") >= prevWm)
           .groupBy(col("win_start"), col("event_type"))
           .agg(sum(col("n")).as("n"))
           .withColumn("rel_b", lit(id))
+          .select(S34bOutSchema.map(f => col(f.name).cast(f.dataType)): _*)
           .write.mode("overwrite")
           .parquet(outRoot.resolve(s"b$id").toString)
         prevWm = wm
@@ -987,22 +907,43 @@ object Streams {
       })
   }
 
+  /** S34b body — WATERMARK ALIGNMENT WITH AN IDLENESS DIAL, modeled in
+    * a per-batch coordinator (foreachBatch) because Spark's engine
+    * watermark has no idleness escape: the `min` policy means one
+    * stopped source FREEZES append output forever (the production
+    * incident class; the spec pins the stall on the engine path). Here
+    * the coordinator owns event time: per batch it folds each DECLARED
+    * source's running max event time and an idle counter (no rows →
+    * +1, rows → reset), computes the aligned watermark = min over
+    * NON-IDLE sources of (runmax − 10 min), stages the batch's
+    * (window × type) partial counts, and RELEASES every window whose
+    * end falls in [prevWm, wm) — emit-once by construction — stamped
+    * with its release batch. The laggard (shift48stop) delivers files
+    * 0–1 then stops: the aligned watermark stalls with it through
+    * batch 2 (idle count still below the dial), then the dial expels
+    * it at batch 3 and the frozen tail releases — the release-batch
+    * column makes the stall AND the release hash-gated facts, not
+    * log lines. Window counts = arrivals in batches ≤ release batch
+    * (both sides model arrival by the deterministic file assignment,
+    * so a post-release arrival — impossible here — would divide the
+    * hash loudly).
+    * 100 TB: per-source maxima/idle counters are O(sources) driver
+    * state; staging holds (window × type) PARTIAL aggregates (never
+    * events — the map-side combine runs before the write); each
+    * release scans aggregate-sized staging. */
   private[graft] def s34bRun(s: SparkSession, d: String): DataFrame = {
-    val root = java.nio.file.Paths.get(
-      graft.queries.SourcesSinks.stagingDir("s34align", d))
+    val root = Scratch.dir("s34align", d)
     val stageRoot = root.resolve("stage")
     val outRoot = root.resolve("out")
-    Replayer.deleteTree(stageRoot); Replayer.deleteTree(outRoot)
+    Scratch.delete(stageRoot); Scratch.delete(outRoot)
     java.nio.file.Files.createDirectories(stageRoot)
     s34bAttempt(s, d, stageRoot, outRoot, None, None)
-    s.read.parquet(s23BatchDirs(outRoot): _*)
-      .select(col("win_start"), col("event_type"), col("n"),
-        col("rel_b"))
+    Scratch.read(s, S34bOutSchema, Scratch.committed(outRoot, "b"))
       .orderBy(col("win_start"), col("event_type"))
   }
 
   /** S35 body — STREAMING VECTOR-INDEX MAINTENANCE (the junction of
-    * the streaming and ANN north-star families the r19 verdict named):
+    * the streaming and ANN north-star families):
     * S13's foreachBatch fold applied to the IVF index. The coarse
     * quantizer is trained ONCE before the stream (l3c's build-once
     * artifact (core.BuildOnce) — production IVF trains the quantizer
@@ -1024,18 +965,10 @@ object Streams {
     * l3c. */
   private[graft] def s35Run(s: SparkSession, d: String): DataFrame = {
     import graft.llm.Llm
-    val root = java.nio.file.Paths.get(
-      graft.queries.SourcesSinks.stagingDir("s35index", d))
-    val idxRoot = root.resolve("index")
-    Replayer.deleteTree(idxRoot)
     val cdf = Llm.coarseCells(s, d) // build-once, BEFORE the stream
-    runStream(s, Replayer.streamEmbeds(s, d), NoFinalBatch)(
-      _.foreachBatch { (b: DataFrame, id: Long) =>
-        Llm.assignCells(Llm.vecsOf(b), cdf, Llm.IvfRassign)
-          .write.mode("overwrite")
-          .parquet(idxRoot.resolve(s"b$id").toString)
-      })
-    val assigns = s.read.parquet(s23BatchDirs(idxRoot): _*)
+    val assigns = runToBatches(s, Replayer.streamEmbeds(s, d),
+        Scratch.dir("s35index", d).resolve("index"))(
+      (b, _) => Llm.assignCells(Llm.vecsOf(b), cdf, Llm.IvfRassign))
     val e = Llm.vecsOf(graft.core.Tables.embeddings(s, d))
     val cands = Llm.candidatesFromAssigns(e, cdf, assigns,
       Llm.IvfNprobe, Llm.IvfQids)
@@ -1055,16 +988,15 @@ object Streams {
     * restriction of the funnel. The 2.5× gap/TTL margin absorbs
     * wall-clock steps between batch-timestamp samples.
     *
-    * r22 (guide §1.2 — the 4 pacing sleeps were ~70% of s25's
-    * wall-clock): both constants shrink 4× keeping the 2.5× ratio.
-    * Correctness is ratio-shaped, not absolute: the sleep is a strict
-    * LOWER bound on the distance between consecutive batch timestamps
-    * (batch b+1 is planned only after b's foreachBatch — including the
-    * sleep — returns and b commits), so gap ≥ ttl with margin is the
-    * whole argument; no path can compress the observed gap below the
-    * slept 250 ms, and in-batch non-expiry never depended on the
-    * values at all (same timestamp both sides). Oracle unchanged —
-    * its rule is the batch-boundary restriction, not the ms values. */
+    * The constants are small because the 4 pacing sleeps dominate
+    * s25's wall-clock; correctness is ratio-shaped, not absolute: the
+    * sleep is a strict LOWER bound on the distance between consecutive
+    * batch timestamps (batch b+1 is planned only after b's foreachBatch
+    * — including the sleep — returns and b commits), so gap ≥ ttl with
+    * margin is the whole argument; no path can compress the observed
+    * gap below the slept 250 ms, and in-batch non-expiry never depends
+    * on the values at all (same timestamp both sides). The oracle's
+    * rule is the batch-boundary restriction, not the ms values. */
   private[graft] val S25TtlMs = 100L
   private[graft] val S25GapMs = 250L
 
@@ -1097,7 +1029,7 @@ object Streams {
     // (maxFilesPerTrigger=1, no final batch). If the source ever splits
     // or merges batches, cross-batch TTL expiry would turn wall-clock-
     // dependent and surface only as an opaque hash mismatch downstream —
-    // fail loudly here instead (advisor r18).
+    // fail loudly here instead.
     require(nBatches.get() == Replayer.NumFiles,
       s"s25 pacing contract broken: ${nBatches.get()} batches observed, " +
       s"expected ${Replayer.NumFiles} (one per file; TTL determinism " +
@@ -1134,7 +1066,7 @@ object Streams {
     * the export is state-sized by construction. */
   private[graft] def s31Run(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val ckpt = Replayer.checkpoint()
+    val ckpt = Scratch.checkpoint()
     try {
       val conv = UserEvent.byUser(s, d, "funnel", FunnelEvent)
         .transformWithState(new FunnelProcessor(HourUs),
@@ -1162,7 +1094,7 @@ object Streams {
       s.createDataFrame(rows.toIndexedSeq)
         .toDF("user_id", "kind", "a_us", "b_us")
         .orderBy(col("user_id"), col("kind"), col("a_us"), col("b_us"))
-    } finally Replayer.dropCheckpoint(ckpt)
+    } finally Scratch.delete(ckpt)
   }
 
   /** The S32 STREAMING plan — two windowed aggregations feeding a
@@ -1211,7 +1143,7 @@ object Streams {
     * collecting (see s31Run's note). */
   private[graft] def s31bRun(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val ckpt = Replayer.checkpoint()
+    val ckpt = Scratch.checkpoint()
     try {
       val out = UserEvent.byUser(s, d, "clean", FunnelEvent,
         watermark = Some(WatermarkDelay))
@@ -1237,7 +1169,7 @@ object Streams {
       s.createDataFrame(rows.toIndexedSeq)
         .toDF("user_id", "kind", "a_ms", "ref")
         .orderBy(col("user_id"), col("kind"), col("a_ms"), col("ref"))
-    } finally Replayer.dropCheckpoint(ckpt)
+    } finally Scratch.delete(ckpt)
   }
 
   /** S26 body — the state-schema-UPGRADE run: phase 1 processes the
@@ -1263,7 +1195,7 @@ object Streams {
     val conf = Map(
       "spark.sql.streaming.stateStore.encodingFormat" -> "avro") ++
       RocksDbConf ++ NoFinalBatch
-    val ckpt = Replayer.checkpoint()
+    val ckpt = Scratch.checkpoint()
     var crashed = false
     try {
       try runStream(s, pipeline(new FunnelProcessor(HourUs)), conf,
@@ -1284,7 +1216,7 @@ object Streams {
       runStream(s, pipeline(new FunnelProcessorV2(HourUs)), conf,
         Some(ckpt))(
         _.foreachBatch((b: DataFrame, _: Long) => collect(b)))
-    } finally Replayer.dropCheckpoint(ckpt)
+    } finally Scratch.delete(ckpt)
     import scala.jdk.CollectionConverters._
     (s.createDataFrame(buf.asScala.toSeq).toDF("user_id", "purchase_id")
       .groupBy(col("user_id"))
@@ -1292,6 +1224,10 @@ object Streams {
       .orderBy(col("user_id")), crashed)
   }
 
+  /** The s5-family stateful core: the full-outer interval join (runs
+    * WITH the final no-data batch — outer rows emit on the last
+    * watermark advance; inner derivations are unaffected because a
+    * no-data batch can only emit null-padded rows). */
   private def intervalJoinCore(s: SparkSession, d: String): DataFrame =
     sharedCore(s, d, "interval_full_clean") {
       val src = Replayer.stream(s, d, "clean")
@@ -1376,12 +1312,12 @@ object Streams {
     // at scale; here it is dim-sized). The final state equals the batch
     // argmax-per-key, which is what the oracle hashes.
     "snk4_upsert" -> ((s, d) => {
-      val root = upsertRoot(d)
-      Replayer.deleteTree(root) // fresh run: no stale snapshots
+      val root = Scratch.dir("upsert", d)
+      Scratch.delete(root) // fresh run: no stale snapshots
       java.nio.file.Files.createDirectories(root)
-      runStream(s, Replayer.stream(s, d, "clean"), NoFinalBatch)(
-        _.foreachBatch(upsertMerge(root) _))
-      s.read.parquet(latestSnapshot(root))
+      val src = Replayer.stream(s, d, "clean")
+      runStream(s, src, NoFinalBatch)(_.foreachBatch(upsertMerge(root) _))
+      Scratch.read(s, upsertBest(src).schema, Scratch.latest(root, "v").toSeq)
         .select(col("user_id"), col("best.ts").as("last_ts"),
           col("best.event_id").as("last_event_id"),
           col("best.event_type").as("last_type"),
@@ -1406,25 +1342,26 @@ object Streams {
     // batch truth. 100 TB: this is the standard ingest topology — raw
     // append scales with the batch, the agg merge with |dimension|.
     "snk5_fanout" -> ((s, d) => {
-      val root = upsertRoot(d + "#fanout")
-      Replayer.deleteTree(root)
+      val root = Scratch.dir("fanout", d)
+      Scratch.delete(root)
       val rawDir = root.resolve("raw")
       val aggRoot = root.resolve("agg")
       java.nio.file.Files.createDirectories(rawDir)
       java.nio.file.Files.createDirectories(aggRoot)
+      // per-type running (n, sum_value). sv is widened to the merge's own
+      // result type, decimal(38, 4), so every snapshot has this schema
+      // and each read of one passes it instead of running an inference job
+      def rollup(events: DataFrame): DataFrame =
+        events.groupBy(col("event_type")).agg(count(lit(1)).as("n"),
+          sum(vdec).cast(DecimalType(38, 4)).as("sv"))
       def fanout(batch: DataFrame, id: Long): Unit = {
         batch.persist()
         try {
           // store 1: raw log, batch-addressed (idempotent on replay)
           batch.write.mode("overwrite")
             .parquet(rawDir.resolve(s"b$id").toString)
-          // store 2: per-type running (n, sum_value) snapshot chain. sv
-          // is widened to the merge's own result type, decimal(38, 4),
-          // so every snapshot has part's schema and the read of v(id−1)
-          // passes it instead of running an inference job per batch
-          val part = batch.groupBy(col("event_type"))
-            .agg(count(lit(1)).as("n"),
-              sum(vdec).cast(DecimalType(38, 4)).as("sv"))
+          // store 2: the rollup's snapshot chain
+          val part = rollup(batch)
           val prev = aggRoot.resolve(s"v${id - 1}")
           val merged =
             if (java.nio.file.Files.exists(prev))
@@ -1437,30 +1374,14 @@ object Streams {
             .parquet(aggRoot.resolve(s"v$id").toString)
         } finally batch.unpersist()
       }
-      runStream(s, Replayer.stream(s, d, "clean"), NoFinalBatch)(
-        _.foreachBatch(fanout _))
-      // explicit batch-dir listing, not a "/b*" glob: the glob path
-      // made DataSource's FileStreamSink-metadata probe log a benign
-      // but full-stack FileNotFoundException on every run (it probes
-      // the literal glob as a path), which reads like a query failure
-      // in the Verify/bench logs
-      val rawDirs = {
-        val ls = java.nio.file.Files.list(rawDir)
-        try {
-          val it = ls.iterator()
-          val buf = scala.collection.mutable.ArrayBuffer[String]()
-          while (it.hasNext) {
-            val p = it.next()
-            if (p.getFileName.toString.startsWith("b")) buf += p.toString
-          }
-          buf.toSeq.sorted
-        } finally ls.close()
-      }
-      val raw = s.read.parquet(rawDirs: _*)
+      val src = Replayer.stream(s, d, "clean")
+      runStream(s, src, NoFinalBatch)(_.foreachBatch(fanout _))
+      val raw = Scratch.read(s, src.schema, Scratch.committed(rawDir, "b"))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_raw"),
           sum(vdec).as("sv_raw"))
-      val agg = s.read.parquet(latestSnapshot(aggRoot))
+      val agg = Scratch.read(s, rollup(src).schema,
+        Scratch.latest(aggRoot, "v").toSeq)
       raw.join(agg, "event_type")
         .select(col("event_type"), col("n_raw"),
           col("sv_raw").cast(DoubleType).as("value_raw"),
@@ -1667,25 +1588,14 @@ object Streams {
     // batch rewrite when versions age out.
     "s19_stream_snapshot" -> ((s, d) => {
       import graft.queries.SourcesSinks
-      val root = upsertRoot(d + "#s19snap")
-      Replayer.deleteTree(root)
+      val root = Scratch.dir("s19snap", d)
+      Scratch.delete(root)
       java.nio.file.Files.createDirectories(root)
       runStream(s, Replayer.stream(s, d, "clean"), NoFinalBatch)(
         _.foreachBatch(s19PublishBatch(root) _))
-      val latest = {
-        val mdir = root.resolve("manifests")
-        val ls = java.nio.file.Files.list(mdir)
-        val names =
-          try {
-            val it = ls.iterator()
-            val buf = scala.collection.mutable.ArrayBuffer[String]()
-            while (it.hasNext) buf += it.next().toString
-            buf.toSeq
-          } finally ls.close()
-        names.filter(_.endsWith(".list"))
-          .maxBy(n => n.split("/v").last.stripSuffix(".list").toLong)
-      }
-      SourcesSinks.snk9ReadSnapshot(s, latest)
+      val latest = Scratch.latest(root.resolve("manifests"), "v",
+        suffix = ".list").getOrElse(sys.error("s19 published no manifest"))
+      SourcesSinks.snk9ReadSnapshot(s, latest.toString)
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n"),
              sum(col("event_id")).as("sum_id"),
@@ -2322,15 +2232,11 @@ object Streams {
     // rules are KB-sized control data; the event stream never
     // re-shuffles — the rule rides the closure as a literal.
     "s23_dynamic_rules" -> ((s, d) => {
-      val root = java.nio.file.Paths.get(
-        graft.queries.SourcesSinks.stagingDir("s23rules", d))
-      val rulesDir = root.resolve("rules")
-      s23WriteRules(s, rulesDir.toString)
-      val outRoot = root.resolve("out")
-      Replayer.deleteTree(outRoot) // fresh run: no stale batch outputs
-      runStream(s, Replayer.stream(s, d, "clean"), NoFinalBatch)(
-        _.foreachBatch(s23ApplyRules(rulesDir.toString, outRoot) _))
-      s.read.parquet(s23BatchDirs(outRoot): _*)
+      val root = Scratch.dir("s23rules", d)
+      val rulesDir = root.resolve("rules").toString
+      s23WriteRules(s, rulesDir)
+      runToBatches(s, Replayer.stream(s, d, "clean"), root.resolve("out"))(
+        s23ApplyRules(rulesDir))
         .groupBy(col("event_type"))
         .agg(sum(col("n")).as("n_flagged"), sum(col("sc")).as("sum_cents"))
         .orderBy(col("event_type"))
@@ -2418,15 +2324,11 @@ object Streams {
     // broadcast per batch; events never shuffle for the join (map-side
     // BHJ), one (grp) shuffle for the per-batch aggregate.
     "s36_lookup_join" -> ((s, d) => {
-      val root = java.nio.file.Paths.get(
-        graft.queries.SourcesSinks.stagingDir("s36dim", d))
-      val dimDir = root.resolve("dim")
-      s36WriteDim(s, dimDir.toString)
-      val outRoot = root.resolve("out")
-      Replayer.deleteTree(outRoot)
-      runStream(s, Replayer.stream(s, d, "late"), NoFinalBatch)(
-        _.foreachBatch(s36Enrich(dimDir.toString, outRoot) _))
-      s.read.parquet(s23BatchDirs(outRoot): _*)
+      val root = Scratch.dir("s36dim", d)
+      val dimDir = root.resolve("dim").toString
+      s36WriteDim(s, dimDir)
+      runToBatches(s, Replayer.stream(s, d, "late"), root.resolve("out"))(
+        s36Enrich(dimDir))
         .select(col("b"), col("grp"), col("n"), col("adj_cents"))
         .orderBy(col("b"), col("grp"))
     }),
@@ -2761,7 +2663,7 @@ object Streams {
     * same path construction (rows under bid=k == batch k's accepted —
     * write ∝ |batch|, never an |index| snapshot rewrite). */
   private[graft] def s13StoreDir(d: String): java.nio.file.Path =
-    upsertRoot(d + "#sigref").resolve("sig").resolve("store")
+    Scratch.dir("sigref", d).resolve("sig").resolve("store")
 
   /** Injected signature-collision texts for S13 (≥2 tokens each so the
     * token-set signature is well-formed; disjoint vocabularies). */
@@ -2774,8 +2676,8 @@ object Streams {
     * under test IS the canonical one. Returns (decision log, query). */
   private[graft] def s13Run(s: SparkSession, d: String)
       : (DataFrame, org.apache.spark.sql.streaming.StreamingQuery) = {
-    val root = upsertRoot(d + "#sigref")
-    Replayer.deleteTree(root)
+    val root = Scratch.dir("sigref", d)
+    Scratch.delete(root)
     val sigDir = root.resolve("sig")
     val outDir = root.resolve("out")
     java.nio.file.Files.createDirectories(sigDir)
@@ -2807,6 +2709,11 @@ object Streams {
     val storeSchema = StructType(Seq(
       StructField("sig", StringType), StructField("canon", LongType),
       StructField("pfx", StringType), StructField("bid", LongType)))
+    // the decision log's schema: both per-batch writes below produce it
+    val logSchema = StructType(Seq(
+      StructField("doc_id", LongType), StructField("batch_id", LongType),
+      StructField("status", StringType),
+      StructField("canon_doc_id", LongType), StructField("n_toks", LongType)))
     def refresh(batch: DataFrame, id: Long): Unit = {
       val arrInput = batch.filter(col("doc_id") % 7 === 0) // arriving slice
         .withColumn("text", inject)
@@ -2821,7 +2728,7 @@ object Streams {
       // the empty path explicit (write the empty decision log so the
       // batch-dir enumeration stays complete, skip the index read/write)
       // rather than rely on isin(<empty>) and the arrInput-is-empty
-      // invariant lining up (advisor r13)
+      // invariant lining up
       if (touched.isEmpty) {
         arrInput.select(col("doc_id"), lit(id).as("batch_id"),
             lit("dup").as("status"), col("doc_id").as("canon_doc_id"),
@@ -2863,16 +2770,8 @@ object Streams {
     }
     val q = runStream(s, Replayer.streamDocs(s, d), NoFinalBatch)(
       _.foreachBatch(refresh _))
-    // enumerate the committed batch dirs explicitly (a glob path makes
-    // the reader's FileStreamSink probe log a scary-looking WARN)
-    val batches = {
-      val l = java.nio.file.Files.list(outDir)
-      try {
-        import scala.jdk.CollectionConverters._
-        l.iterator().asScala.map(_.toString).toSeq.sorted
-      } finally l.close()
-    }
-    (s.read.parquet(batches: _*).orderBy(col("doc_id")), q)
+    (Scratch.read(s, logSchema, Scratch.committed(outDir, "b"))
+      .orderBy(col("doc_id")), q)
   }
 
   /** S11's streaming plan, shared with StreamingSpec's two-state-stores

@@ -87,12 +87,9 @@ class EngineSpec extends AnyFunSuite {
     val out = SparkEntry.queries("snk6_compaction")(s, TestSpark.Sf)
       .collect()
     assert(out.nonEmpty)
-    val key = TestSpark.Sf.replaceAll("[^a-zA-Z0-9.]", "_")
-    val root = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft_roundtrip",
-      s"p${ProcessHandle.current().pid()}")
+    def staged(kind: String) = graft.core.Scratch.dir(kind, TestSpark.Sf)
     def partFiles(kind: String): Map[String, Int] = {
-      val base = root.resolve(s"${kind}_$key")
+      val base = staged(kind)
       assert(java.nio.file.Files.isDirectory(base), s"missing $base")
       import scala.jdk.CollectionConverters._
       val ls = java.nio.file.Files.list(base)
@@ -115,9 +112,9 @@ class EngineSpec extends AnyFunSuite {
     assert(comp.values.forall(_ == 1),
       s"compaction left multiple files somewhere: $comp")
     // content identity beyond the checksum columns: full row-set equal
-    val a = s.read.parquet(root.resolve(s"snk6frag_$key").toString)
+    val a = s.read.parquet(staged("snk6frag").toString)
       .collect().map(_.toString).sorted
-    val b = s.read.parquet(root.resolve(s"snk6comp_$key").toString)
+    val b = s.read.parquet(staged("snk6comp").toString)
       .collect().map(_.toString).sorted
     assert(a.sameElements(b), "row sets differ between fragment and compact")
   }
@@ -242,8 +239,7 @@ class EngineSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     // the query writes the staging layout as a side effect
     SparkEntry.queries("src9_schema_evolution")(s, TestSpark.Sf).collect()
-    val base = graft.queries.SourcesSinks
-      .stagingDir("src9evolve", TestSpark.Sf)
+    val base = graft.core.Scratch.dir("src9evolve", TestSpark.Sf).toString
     val gen1 = s.read.parquet(base + "/gen=1")
     assert(!gen1.columns.contains("l_extendedprice"),
       s"gen-1 files must PHYSICALLY lack the evolved column, " +

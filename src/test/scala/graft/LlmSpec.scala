@@ -444,7 +444,7 @@ class LlmSpec extends AnyFunSuite {
     assert(a.toSeq === b.toSeq, "auto-K diverged from canonical at split=1")
     // rule above the calibration point: a synthetic 6000-vector corpus
     // (the sf0.001 embeddings fanned 12×, ids offset per copy) → split 3
-    val dir = java.nio.file.Files.createTempDirectory("autok").toString
+    val dir = graft.core.Scratch.fresh("autok").toString
     val e = graft.core.Tables.embeddings(s, TestSpark.Sf)
     e.select(col("vec_id"), col("embedding"), col("label"),
         explode(sequence(lit(0L), lit(11L))).as("cp"))
@@ -712,8 +712,8 @@ class LlmSpec extends AnyFunSuite {
         s.read.parquet(s"$from/$t.parquet").write.parquet(s"$to/$t.parquet"))
     def models(d: String) =
       (Llm.trainCentroids(s, d), Llm.trainPqCodebooks(s, d), Bpe.train(s, d))
-    val dir = Files.createTempDirectory("buildonce").toString
-    val fresh = Files.createTempDirectory("buildonce-fresh").toString
+    val dir = graft.core.Scratch.fresh("buildonce").toString
+    val fresh = graft.core.Scratch.fresh("buildonce-fresh").toString
     try {
       copyTables(TestSpark.Sf, dir)
       val first = models(dir)

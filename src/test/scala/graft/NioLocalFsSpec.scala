@@ -15,7 +15,7 @@ class NioLocalFsSpec extends AnyFunSuite {
   private def withFs[T](body: (NioRawLocalFileSystem, java.nio.file.Path) => T): T = {
     val fs = new NioRawLocalFileSystem
     fs.initialize(URI.create("file:///"), new Configuration())
-    val dir = Files.createTempDirectory("graft_niofs")
+    val dir = graft.core.Scratch.fresh("graft_niofs")
     try body(fs, dir)
     finally {
       Files.walk(dir).sorted(java.util.Comparator.reverseOrder())

@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
-import graft.core.Tables
+import graft.core.{Scratch, Tables}
 import graft.streaming.Replayer
 
 /** Scale-path demonstrations that local[N] can actually prove:
@@ -23,6 +23,7 @@ class ScaleSpec extends AnyFunSuite {
     def run(provider: Option[String]): Set[String] = {
       val name = "rocks_" + java.util.UUID.randomUUID().toString.take(8)
       val old = s.conf.getOption(key)
+      val ckpt = Scratch.checkpoint()
       provider.foreach(s.conf.set(key, _)) // session conf, read at start
       try {
         val q = s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
@@ -31,7 +32,7 @@ class ScaleSpec extends AnyFunSuite {
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
           .agg(count(lit(1)).as("n"))
           .writeStream.format("memory").queryName(name).outputMode("complete")
-          .option("checkpointLocation", Replayer.checkpoint())
+          .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
         // the provider must actually have been used
@@ -40,7 +41,8 @@ class ScaleSpec extends AnyFunSuite {
             s.conf.get(key) == p)
         }
       } finally old.fold(s.conf.unset(key))(s.conf.set(key, _))
-      s.table(name).collect().map(_.toString).toSet
+      try s.table(name).collect().map(_.toString).toSet
+      finally { s.catalog.dropTempView(name); Scratch.delete(ckpt) }
     }
     val rocks = run(Some(
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
@@ -65,8 +67,8 @@ class ScaleSpec extends AnyFunSuite {
       case (k, v) => s.conf.set(k, v) }
     val restoreConfs = () => olds.foreach {
       case (k, v) => v.fold(s.conf.unset(k))(s.conf.set(k, _)) }
-    val ckpt = Files.createTempDirectory("graft_rocks_ckpt").toString
-    val out = Files.createTempDirectory("graft_rocks_out").toString
+    val ckpt = Scratch.fresh("graft_rocks_ckpt").toString
+    val out = Scratch.fresh("graft_rocks_out").toString
     def stream(path: String) = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(path)
       .withWatermark("ts", "10 minutes").dropDuplicates("event_id")
@@ -232,7 +234,7 @@ class ScaleSpec extends AnyFunSuite {
     def run(names: Seq[String]): Map[String, Set[String]] = {
       val started = names.map { n =>
         val (mode, df, table) = mk(n)
-        val ckpt = Replayer.checkpoint()
+        val ckpt = Scratch.checkpoint()
         val q = df.writeStream.format("memory")
           .queryName(table + names.size) // distinct per run shape
           .outputMode(mode)
@@ -243,7 +245,7 @@ class ScaleSpec extends AnyFunSuite {
       started.foreach(_._3.awaitTermination())
       val out = started.map { case (n, table, _, ckpt) =>
         val rows = s.table(table).collect().map(_.toString).toSet
-        Replayer.dropCheckpoint(ckpt)
+        Scratch.delete(ckpt)
         s.catalog.dropTempView(table)
         n -> rows
       }.toMap

@@ -21,7 +21,7 @@ class SchemasSpec extends AnyFunSuite {
 
   test("mis-typed column fails fast with a named-column message") {
     val s = TestSpark.spark
-    val dir = java.nio.file.Files.createTempDirectory("drift").toString
+    val dir = graft.core.Scratch.fresh("drift").toString
     // 'events' with ts as a String — drift that must be caught at load
     Tables.events(s, TestSpark.Sf)
       .withColumn("ts", col("ts").cast("string"))
@@ -34,7 +34,7 @@ class SchemasSpec extends AnyFunSuite {
   test("raw-Long timestamp is tolerated ONLY for events.ts (the one " +
        "column with a nanos normalizer)") {
     val s = TestSpark.spark
-    val dir = java.nio.file.Files.createTempDirectory("drift3").toString
+    val dir = graft.core.Scratch.fresh("drift3").toString
     // orders with o_orderdate as epoch-long: the exact r9 drift class on
     // a column Tables does NOT normalize — must fail with the name
     Tables.t(s, TestSpark.Sf, "orders")
@@ -47,7 +47,7 @@ class SchemasSpec extends AnyFunSuite {
 
   test("missing/renamed column fails fast naming the column sets") {
     val s = TestSpark.spark
-    val dir = java.nio.file.Files.createTempDirectory("drift2").toString
+    val dir = graft.core.Scratch.fresh("drift2").toString
     Tables.t(s, TestSpark.Sf, "documents").drop("lang")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val e = intercept[IllegalArgumentException](Tables.t(s, dir, "documents"))
@@ -57,7 +57,7 @@ class SchemasSpec extends AnyFunSuite {
 
   /** A fresh temp dir holding a copy of one seed table. */
   private def tableCopy(table: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory("schemamemo")
+    val dir = graft.core.Scratch.fresh("schemamemo")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(TestSpark.Sf, s"$table.parquet"),
       dir.resolve(s"$table.parquet"))
@@ -119,5 +119,16 @@ class SchemasSpec extends AnyFunSuite {
     assert(jobsOf(s)(Tables.t(s, dir, "nation")) === 1)
     val child = s.newSession()
     assert(jobsOf(child)(Tables.t(child, dir, "nation")) === 0)
+  }
+
+  test("reading committed outputs back with their writer's schema runs " +
+       "no Spark job before its action") {
+    val s = TestSpark.spark
+    val root = graft.core.Scratch.fresh("committed")
+    val nation = Tables.t(s, TestSpark.Sf, "nation")
+    (0 until 3).foreach(i =>
+      nation.write.parquet(root.resolve(s"b$i").toString))
+    val outputs = graft.core.Scratch.committed(root, "b")
+    assert(jobsOf(s)(graft.core.Scratch.read(s, nation.schema, outputs)) === 0)
   }
 }

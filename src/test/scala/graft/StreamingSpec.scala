@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
-import graft.core.Tables
+import graft.core.{Scratch, Tables}
 import graft.streaming.Replayer
 
 /** Streaming-specific tiers: SRC5 (memory/rate test sources), SNK2
@@ -25,7 +25,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(r1.nonEmpty)
     // batch-id-named snapshots: exactly one per data batch of the replay
     // (path construction shared with the sink itself, not duplicated)
-    val root = graft.streaming.Streams.upsertRoot(sf)
+    val root = Scratch.dir("upsert", sf)
     val listing = Files.list(root)
     val names =
       try {
@@ -42,7 +42,7 @@ class StreamingSpec extends AnyFunSuite {
   test("S11: the chained pipeline executes TWO stateful operators in " +
        "one streaming query (dedup + windowed agg)") {
     import graft.streaming.Streams
-    val ckpt = Files.createTempDirectory("graft_s11_pin").toString
+    val ckpt = Scratch.fresh("graft_s11_pin").toString
     val q = Streams.s11Plan(s, sf).writeStream.format("memory")
       .queryName("s11_pin").outputMode("append")
       .option("checkpointLocation", ckpt)
@@ -68,7 +68,7 @@ class StreamingSpec extends AnyFunSuite {
     // dup10: every event re-sent 9x in later files — 10x the ingested
     // rows over the same distinct keys. If either store scaled with
     // ingest instead of its declared bound, this replay exposes it.
-    val ckpt = Files.createTempDirectory("graft_s11_bound").toString
+    val ckpt = Scratch.fresh("graft_s11_bound").toString
     val q = Streams.s11Plan(s, sf, variant = "dup10").writeStream
       .format("memory").queryName("s11_bound").outputMode("append")
       .option("checkpointLocation", ckpt)
@@ -148,8 +148,8 @@ class StreamingSpec extends AnyFunSuite {
     import graft.streaming.Streams
     val dir = Replayer.ensure(s, sf, "clean")
     val schema = s.read.parquet(dir).schema
-    val ckpt = Files.createTempDirectory("graft_snk4_ckpt").toString
-    val root = Files.createTempDirectory("graft_snk4_snap")
+    val ckpt = Scratch.fresh("graft_snk4_ckpt").toString
+    val root = Scratch.fresh("graft_snk4_snap")
     def stream() = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(dir)
 
@@ -180,7 +180,7 @@ class StreamingSpec extends AnyFunSuite {
       "phase 2 processed nothing — the restart path was not exercised")
 
     // the committed table equals the batch argmax per key
-    val got = s.read.parquet(Streams.latestSnapshot(root))
+    val got = s.read.parquet(Scratch.latest(root, "v").get.toString)
       .select(col("user_id"), col("best.event_id").as("last_event_id"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val exp = s.read.parquet(dir)
@@ -200,7 +200,7 @@ class StreamingSpec extends AnyFunSuite {
       .partitionBy(col("event_type")).orderBy(col("value"))
     val bad = st.withColumn("rn",
       org.apache.spark.sql.functions.row_number().over(w))
-    val ckpt = Files.createTempDirectory("graft_s10_neg").toString
+    val ckpt = Scratch.fresh("graft_s10_neg").toString
     val e = intercept[org.apache.spark.sql.AnalysisException] {
       val q = bad.writeStream.format("memory").queryName("s10_neg")
         .outputMode("append").option("checkpointLocation", ckpt)
@@ -278,8 +278,8 @@ class StreamingSpec extends AnyFunSuite {
   test("SNK2: kill-and-restart from checkpoint is exactly-once") {
     val dir = Replayer.ensure(s, sf, "clean")
     val schema = s.read.parquet(dir).schema
-    val ckpt = Files.createTempDirectory("graft_snk2_ckpt").toString
-    val out = Files.createTempDirectory("graft_snk2_out").toString
+    val ckpt = Scratch.fresh("graft_snk2_ckpt").toString
+    val out = Scratch.fresh("graft_snk2_out").toString
     // phase 1's source dir holds only 2 of the 5 replay files, so the
     // strict-prefix premise holds BY CONSTRUCTION no matter how many
     // trigger firings land before the kill (racing stop() against the
@@ -287,7 +287,7 @@ class StreamingSpec extends AnyFunSuite {
     // this test keeps the parquet FORMAT sink on purpose — its
     // _spark_metadata-log exactly-once across the restart is the thing
     // under test (the stateful restarts pin the foreachBatch face)
-    val srcDir = Files.createTempDirectory("graft_snk2_src")
+    val srcDir = Scratch.fresh("graft_snk2_src")
     val parts = {
       val ls = Files.list(Paths.get(dir))
       try {
@@ -359,11 +359,11 @@ class StreamingSpec extends AnyFunSuite {
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"))
     val name = "s1_append_" + java.util.UUID.randomUUID().toString.take(8)
-    val ckpt = Replayer.checkpoint()
+    val ckpt = Scratch.checkpoint()
     val q = src.writeStream.format("memory").queryName(name)
       .outputMode("append").option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow()).start()
-    try q.awaitTermination() finally Replayer.dropCheckpoint(ckpt)
+    try q.awaitTermination() finally Scratch.delete(ckpt)
     val stateRows = q.recentProgress.filter(_.stateOperators.nonEmpty)
       .map(_.stateOperators.head.numRowsTotal)
     // every (window, event_type) group the replay contains — what a
@@ -396,11 +396,11 @@ class StreamingSpec extends AnyFunSuite {
       .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"))
     val name = "s2_append_" + java.util.UUID.randomUUID().toString.take(8)
-    val ckpt = Replayer.checkpoint()
+    val ckpt = Scratch.checkpoint()
     val q = src.writeStream.format("memory").queryName(name)
       .outputMode("append").option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow()).start()
-    try q.awaitTermination() finally Replayer.dropCheckpoint(ckpt)
+    try q.awaitTermination() finally Scratch.delete(ckpt)
     val stateRows = q.recentProgress.filter(_.stateOperators.nonEmpty)
       .map(_.stateOperators.head.numRowsTotal)
     // the full 4x-fanned (window, event_type) group set a no-eviction
@@ -444,11 +444,11 @@ class StreamingSpec extends AnyFunSuite {
         col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
         col("c_ts") <= col("p_ts"))
     val name = "wmpin_" + java.util.UUID.randomUUID().toString.take(8)
-    val ckpt = Replayer.checkpoint()
+    val ckpt = Scratch.checkpoint()
     val q = joined.writeStream.format("memory").queryName(name)
       .outputMode("append").option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow()).start()
-    try q.awaitTermination() finally Replayer.dropCheckpoint(ckpt)
+    try q.awaitTermination() finally Scratch.delete(ckpt)
     val reported = java.time.Instant.parse(
       q.lastProgress.eventTime.get("watermark")).toEpochMilli
     val ev = Tables.events(s, sf)
@@ -578,12 +578,12 @@ class StreamingSpec extends AnyFunSuite {
     // the S1 production-shape pin, on S15's (window × user_id) state —
     // the key whose cardinality makes heavy-hitter state a real budget
     val name = "s15_pin_" + java.util.UUID.randomUUID().toString.take(8)
-    val ckpt = Replayer.checkpoint()
+    val ckpt = Scratch.checkpoint()
     val q = graft.streaming.Streams.s15Agg(s, sf).writeStream
       .format("memory").queryName(name)
       .outputMode("append").option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow()).start()
-    try q.awaitTermination() finally Replayer.dropCheckpoint(ckpt)
+    try q.awaitTermination() finally Scratch.delete(ckpt)
     val stateRows = q.recentProgress.filter(_.stateOperators.nonEmpty)
       .map(_.stateOperators.head.numRowsTotal)
     val totalGroups = Tables.events(s, sf)
@@ -700,7 +700,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("S9: windowed aggregation rejects append output without watermark") {
-    val ckpt = Replayer.checkpoint()
+    val ckpt = Scratch.checkpoint()
     val err = try intercept[Exception] {
       Replayer.stream(s, sf, "clean") // no withWatermark
         .groupBy(window(col("ts"), "1 hour")).count()
@@ -708,7 +708,7 @@ class StreamingSpec extends AnyFunSuite {
         .outputMode("append")
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start().awaitTermination()
-    } finally Replayer.dropCheckpoint(ckpt)
+    } finally Scratch.delete(ckpt)
     assert(err.getMessage.toLowerCase.contains("watermark") ||
            err.getMessage.toLowerCase.contains("append"))
   }
@@ -728,14 +728,14 @@ class StreamingSpec extends AnyFunSuite {
       .withColumn("sig", sig)
       .join(hist, Seq("sig"), "left_anti")
       .withColumn("n_toks", size(toks).cast("long"))
-    val ckpt = Replayer.checkpoint()
+    val ckpt = Scratch.checkpoint()
     val q = try {
       val q = gated.writeStream.format("memory").queryName("s12_pin")
         .outputMode("append")
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination(); q
-    } finally Replayer.dropCheckpoint(ckpt)
+    } finally Scratch.delete(ckpt)
     val progress = q.recentProgress.filter(_.numInputRows > 0)
     assert(progress.flatMap(_.stateOperators).isEmpty,
       "the stateless gate opened a state store")
@@ -749,7 +749,7 @@ class StreamingSpec extends AnyFunSuite {
     // the r9/r10 failure class: the driver rewrites /root/testdata at
     // the same path; a path-keyed fixture would keep serving old data
     import org.apache.spark.sql.functions._
-    val sfTmp = Files.createTempDirectory("fixfp").toString
+    val sfTmp = Scratch.fresh("fixfp").toString
     graft.core.Tables.documents(s, sf).limit(50)
       .write.mode("overwrite").parquet(s"$sfTmp/documents.parquet")
     val d1 = Replayer.ensureDocs(s, sfTmp)
@@ -909,7 +909,7 @@ class StreamingSpec extends AnyFunSuite {
     val finalRows = SparkEntry.queries("s19_stream_snapshot")(s, sf)
       .collect()
     assert(finalRows.nonEmpty, "empty final snapshot")
-    val root = graft.streaming.Streams.upsertRoot(sf + "#s19snap")
+    val root = Scratch.dir("s19snap", sf)
     val mdir = root.resolve("manifests")
     import scala.jdk.CollectionConverters._
     val versions = {
@@ -966,8 +966,8 @@ class StreamingSpec extends AnyFunSuite {
        "version train exactly-once (the SNK2 pin on the stateful " +
        "processor whose replay-idempotence was comment-argued only)") {
     import graft.streaming.Streams
-    val ckpt = Files.createTempDirectory("graft_s18_ckpt").toString
-    val out = Files.createTempDirectory("graft_s18_out").toString
+    val ckpt = Scratch.fresh("graft_s18_ckpt").toString
+    val out = Scratch.fresh("graft_s18_out").toString
     // the RocksDB provider conf must be in effect AT QUERY START (the
     // conf snapshot happens there), so withConf wraps start(), not
     // just the writer construction
@@ -1019,8 +1019,8 @@ class StreamingSpec extends AnyFunSuite {
        "already-published versions are byte-identical after the " +
        "restart and the final snapshot equals the batch table") {
     import graft.streaming.Streams
-    val root = Files.createTempDirectory("graft_s19_restart")
-    val ckpt = Files.createTempDirectory("graft_s19r_ckpt").toString
+    val root = Scratch.fresh("graft_s19_restart")
+    val ckpt = Scratch.fresh("graft_s19r_ckpt").toString
     val mdir = root.resolve("manifests")
     def manifests: Map[String, String] =
       if (!Files.isDirectory(mdir)) Map.empty
@@ -1155,7 +1155,7 @@ class StreamingSpec extends AnyFunSuite {
         .transformWithState(new AbandonProcessor(winUs),
           TimeMode.EventTime(), OutputMode.Append())
       val name = "s21_pin_" + java.util.UUID.randomUUID().toString.take(8)
-      val ckpt = Replayer.checkpoint()
+      val ckpt = Scratch.checkpoint()
       val q = graft.core.ConfScope.withConf(s,
           graft.streaming.Streams.RocksDbConf) {
         out.toDF("user_id", "view_id").writeStream
@@ -1183,7 +1183,7 @@ class StreamingSpec extends AnyFunSuite {
         else mem.addData((4L, 14000000L, 8L, "click"))
         q.processAllAvailable()
         s.table(name).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      } finally { q.stop(); Replayer.dropCheckpoint(ckpt) }
+      } finally { q.stop(); Scratch.delete(ckpt) }
     }
     assert(run(0) == Seq((7L, 1L)),
       "control: deadline at exactly the watermark must fire (inclusive)")
@@ -1199,8 +1199,8 @@ class StreamingSpec extends AnyFunSuite {
        "pending at the crash still fire after recovery and the " +
        "emission multiset matches the uninterrupted run") {
     import graft.streaming.Streams
-    val ckpt = Files.createTempDirectory("graft_s21_ckpt").toString
-    val out = Files.createTempDirectory("graft_s21_out").toString
+    val ckpt = Scratch.fresh("graft_s21_ckpt").toString
+    val out = Scratch.fresh("graft_s21_out").toString
     def start(t: Trigger, poisonFrom: Long) =
       graft.core.ConfScope.withConf(s,
           graft.streaming.Streams.RocksDbConf) {
@@ -1391,7 +1391,7 @@ class StreamingSpec extends AnyFunSuite {
       .transformWithState(new SkipMatchProcessor("vcv", winUs),
         TimeMode.None(), OutputMode.Append())
     val name = "s20_pin_" + java.util.UUID.randomUUID().toString.take(8)
-    val ckpt = Replayer.checkpoint()
+    val ckpt = Scratch.checkpoint()
     val q = graft.core.ConfScope.withConf(s,
         graft.streaming.Streams.RocksDbConf) {
       completions.toDF("user_id", "completion_id").writeStream
@@ -1403,7 +1403,7 @@ class StreamingSpec extends AnyFunSuite {
       evs.grouped(3).foreach { chunk =>
         mem.addData(chunk: _*); q.processAllAvailable()
       }
-    } finally { q.stop(); Replayer.dropCheckpoint(ckpt) }
+    } finally { q.stop(); Scratch.delete(ckpt) }
     val emitted = s.table(name).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     // fold-equivalent count, completing events identified exactly: the
@@ -1561,7 +1561,7 @@ class StreamingSpec extends AnyFunSuite {
           col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
           col("c_ts") <= col("p_ts"), "fullOuter")
       val name = "s5ooo_" + variant
-      val ckpt = Files.createTempDirectory("graft_s5ooo").toString
+      val ckpt = Scratch.fresh("graft_s5ooo").toString
       val q = j.select(col("p_id"), col("c_id")).writeStream
         .format("memory").queryName(name).outputMode("append")
         .option("checkpointLocation", ckpt)
@@ -1820,7 +1820,7 @@ class StreamingSpec extends AnyFunSuite {
     val fullDir = Replayer.ensure(s, sf, "funnel")
     // stage the tail files (3, 4) into their own source dir for the
     // migrated query — a FRESH checkpoint must not re-read the head
-    val dirB = Files.createTempDirectory("graft_s31_tail")
+    val dirB = Scratch.fresh("graft_s31_tail")
     Seq(3, 4).foreach { i =>
       val name = f"batch$i%02d.parquet"
       val srcP = Paths.get(fullDir, name)
@@ -1866,7 +1866,7 @@ class StreamingSpec extends AnyFunSuite {
       buf.asScala.toSeq
     }
     // phase 1 at parallelism 2: head files 0-2, then a poison crash
-    val ckpt1 = Files.createTempDirectory("graft_s31_ck1").toString
+    val ckpt1 = Scratch.fresh("graft_s31_ck1").toString
     val e1 = collectRun(fold(src(fullDir)), ckpt1, "2", 3L)
     assert(e1.nonEmpty, "phase 1 produced no conversions — vacuous")
     // EXPORT: the s31 state source read at the last committed batch
@@ -1886,10 +1886,10 @@ class StreamingSpec extends AnyFunSuite {
       .transformWithState(new FunnelProcessorWithInit(winUs),
         TimeMode.None(), OutputMode.Append(), initDs)
       .toDF("user_id", "purchase_id")
-    val ckpt2 = Files.createTempDirectory("graft_s31_ck2").toString
+    val ckpt2 = Scratch.fresh("graft_s31_ck2").toString
     val e2 = collectRun(migrated, ckpt2, "4", 99L)
     // the migrated halves must equal an uninterrupted run exactly
-    val ckptR = Files.createTempDirectory("graft_s31_ckr").toString
+    val ckptR = Scratch.fresh("graft_s31_ckr").toString
     val ref = collectRun(fold(src(fullDir)), ckptR, "2", 99L)
     assert((e1 ++ e2).sorted == ref.sorted,
       s"migration changed the result: ${(e1 ++ e2).size} vs ${ref.size}")
@@ -1913,7 +1913,7 @@ class StreamingSpec extends AnyFunSuite {
        "streaming query (two windowed aggs + a symmetric-hash join " +
        "over their outputs), all non-vacuous") {
     import graft.streaming.Streams
-    val ckpt = Files.createTempDirectory("graft_s32_pin").toString
+    val ckpt = Scratch.fresh("graft_s32_pin").toString
     val q = Streams.s32Plan(s, sf).writeStream.format("memory")
       .queryName("s32_pin").outputMode("append")
       .option("checkpointLocation", ckpt)
@@ -1995,7 +1995,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.streaming.{Replayer, Streams}
     val got = new java.util.concurrent.ConcurrentLinkedQueue[
       (Long, Long, Boolean)]() // (batchId, winEndMs, isNull)
-    val ckpt = Files.createTempDirectory("graft_s32b_pin").toString
+    val ckpt = Scratch.fresh("graft_s32b_pin").toString
     val q = Streams.s32Plan(s, sf, "left_outer")
       .select(col("window.end").as("we"), col("n_purchases"))
       .writeStream
@@ -2006,7 +2006,7 @@ class StreamingSpec extends AnyFunSuite {
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
-    Replayer.dropCheckpoint(ckpt)
+    Scratch.delete(ckpt)
     // operative watermark per batch, from Spark's own progress
     val wmByBatch = q.recentProgress.map { p =>
       val w = Option(p.eventTime.get("watermark"))
@@ -2149,8 +2149,8 @@ class StreamingSpec extends AnyFunSuite {
        "the crash are restored from the checkpoint and the emission " +
        "multiset matches the uninterrupted disordered run") {
     import graft.streaming.Streams
-    val ckpt = Files.createTempDirectory("graft_s21b_ckpt").toString
-    val out = Files.createTempDirectory("graft_s21b_out").toString
+    val ckpt = Scratch.fresh("graft_s21b_ckpt").toString
+    val out = Scratch.fresh("graft_s21b_out").toString
     // both phases sink via the SAME foreachBatch append (a format
     // "parquet" sink would leave a _spark_metadata log that hides
     // phase-1 files from the final read); a poisoned batch writes
@@ -2271,8 +2271,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed.map(key).toSeq == batch.map(key).toSeq,
       "streamed-index answer diverged from the batch-built index")
     // per-batch prefixes: the canonical run left the batch-id snapshots
-    val idxRoot = java.nio.file.Paths.get(
-      graft.queries.SourcesSinks.stagingDir("s35index", sf), "index")
+    val idxRoot = Scratch.dir("s35index", sf).resolve("index")
     val cdf = Llm.coarseCells(s, sf)
     val allE = Llm.vecsOf(Tables.embeddings(s, sf))
     val nVec = allE.count()
@@ -2309,13 +2308,13 @@ class StreamingSpec extends AnyFunSuite {
        "engine's watermark equals the 48 h LAGGARD's, and the fast " +
        "stream's last two days stay frozen") {
     import graft.streaming.Streams
-    val ckpt = Files.createTempDirectory("graft_s34_pin").toString
+    val ckpt = Scratch.fresh("graft_s34_pin").toString
     val q = Streams.s34Plan(s, sf, "shift48").writeStream.format("memory")
       .queryName("s34_pin").outputMode("append")
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
-    Replayer.dropCheckpoint(Paths.get(ckpt).toString)
+    Scratch.delete(Paths.get(ckpt).toString)
     val wmMs = q.recentProgress.flatMap(p =>
       Option(p.eventTime.get("watermark"))
         .map(java.time.Instant.parse(_).toEpochMilli)).max
@@ -2337,13 +2336,13 @@ class StreamingSpec extends AnyFunSuite {
        "append output — the production incident the idleness dial exists " +
        "for") {
     import graft.streaming.Streams
-    val ckpt = Files.createTempDirectory("graft_s34stop_pin").toString
+    val ckpt = Scratch.fresh("graft_s34stop_pin").toString
     val q = Streams.s34Plan(s, sf, "shift48stop").writeStream
       .format("memory").queryName("s34stop_pin").outputMode("append")
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
-    Replayer.dropCheckpoint(Paths.get(ckpt).toString)
+    Scratch.delete(Paths.get(ckpt).toString)
     val wmMs = q.recentProgress.flatMap(p =>
       Option(p.eventTime.get("watermark"))
         .map(java.time.Instant.parse(_).toEpochMilli)).max
@@ -2487,7 +2486,7 @@ class StreamingSpec extends AnyFunSuite {
           col("n_rows")).collect()
         .foreach(r => buf.add(
           (r.getTimestamp(0), r.getLong(1), r.getLong(2), r.getLong(3))))
-    val ckpt = Files.createTempDirectory("graft_s33b_ckpt").toString
+    val ckpt = Scratch.fresh("graft_s33b_ckpt").toString
     val q1 = graft.core.ConfScope.withConf(s, Streams.RocksDbConf) {
       Streams.s33bPlan(s, sf).writeStream
         .foreachBatch { (df: DataFrame, id: Long) =>
@@ -2530,10 +2529,10 @@ class StreamingSpec extends AnyFunSuite {
        "process resumes from the persisted coordinator files and the " +
        "final release train is identical to the uninterrupted run") {
     import graft.streaming.{Replayer, Streams}
-    val root = Files.createTempDirectory("graft_s34b_restart")
+    val root = Scratch.fresh("graft_s34b_restart")
     val stage = root.resolve("stage"); val out = root.resolve("out")
     Files.createDirectories(stage)
-    val ckpt = Files.createTempDirectory("graft_s34b_ckpt").toString
+    val ckpt = Scratch.fresh("graft_s34b_ckpt").toString
     // phase 1: poison at batch 3 — the batch whose watermark jump IS
     // the idleness release, so the restart must restore the laggard's
     // idle count to make the same decision
@@ -2555,8 +2554,8 @@ class StreamingSpec extends AnyFunSuite {
     // phase 2: a FRESH coordinator (new instance = restarted driver)
     // resumes from the same checkpoint + staging roots
     Streams.s34bAttempt(s, sf, stage, out, Some(ckpt), None)
-    Replayer.dropCheckpoint(ckpt)
-    val got = s.read.parquet(Streams.s23BatchDirs(out): _*)
+    Scratch.delete(ckpt)
+    val got = s.read.parquet(Scratch.committed(out, "b").map(_.toString): _*)
       .select(col("win_start"), col("event_type"), col("n"),
         col("rel_b"))
       .orderBy(col("win_start"), col("event_type"))
@@ -2567,7 +2566,7 @@ class StreamingSpec extends AnyFunSuite {
         r.getLong(2), r.getLong(3)))
     assert(got.toSeq == expected.toSeq,
       "restarted coordinator diverged from the uninterrupted release train")
-    Replayer.dropCheckpoint(root.toString)
+    Scratch.delete(root.toString)
   }
 
   test("S36: batch-atomic lookup staleness is REAL — displaced events " +
@@ -2667,7 +2666,7 @@ class StreamingSpec extends AnyFunSuite {
        "TWO state stores in ONE query, and some closed window contains " +
        "a genuine retraction") {
     import graft.streaming.Streams
-    val ckpt = Files.createTempDirectory("graft_s33b_pin").toString
+    val ckpt = Scratch.fresh("graft_s33b_pin").toString
     val q = graft.core.ConfScope.withConf(s, Streams.RocksDbConf) {
       val q = Streams.s33bPlan(s, sf).writeStream.format("memory")
         .queryName("s33b_pin").outputMode("append")
@@ -2701,7 +2700,7 @@ class StreamingSpec extends AnyFunSuite {
        "TWO state stores in ONE query, and closed windows genuinely " +
        "contain retractions") {
     import graft.streaming.Streams
-    val ckpt = Files.createTempDirectory("graft_s22c_pin").toString
+    val ckpt = Scratch.fresh("graft_s22c_pin").toString
     val q = graft.core.ConfScope.withConf(s, Streams.RocksDbConf) {
       val q = Streams.s22cPlan(s, sf).writeStream.format("memory")
         .queryName("s22c_pin").outputMode("append")
@@ -2749,7 +2748,7 @@ class StreamingSpec extends AnyFunSuite {
           col("n_changes")).collect()
         .foreach(r => buf.add(
           (r.getTimestamp(0), r.getLong(1), r.getLong(2), r.getLong(3))))
-    val ckpt = Files.createTempDirectory("graft_s22c_ckpt").toString
+    val ckpt = Scratch.fresh("graft_s22c_ckpt").toString
     // phase 1: crash DETERMINISTICALLY on batch 3 via a poison
     // foreachBatch (the s19/SNK2 discipline — never race stop()); the
     // poisoned batch collects nothing, so its rows arrive exactly once
@@ -2898,9 +2897,8 @@ class StreamingSpec extends AnyFunSuite {
     import graft.streaming.Streams
     val out = SparkEntry.queries("s23_dynamic_rules")(s, sf).collect()
     assert(out.nonEmpty)
-    val root = java.nio.file.Paths.get(
-      graft.queries.SourcesSinks.stagingDir("s23rules", sf)).resolve("out")
-    val dirs = Streams.s23BatchDirs(root)
+    val root = Scratch.dir("s23rules", sf).resolve("out")
+    val dirs = Scratch.committed(root, "b")
     assert(dirs.size == Replayer.NumFiles,
       s"expected one output dir per batch, got $dirs")
     val cleanDir = Replayer.ensure(s, sf, "clean")
@@ -2928,7 +2926,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.streaming.Streams
     import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
     import org.apache.spark.sql.Row
-    val root = Files.createTempDirectory("graft_s19_empty")
+    val root = Scratch.fresh("graft_s19_empty")
     val schema = StructType(Seq(
       StructField("event_id", LongType), StructField("user_id", LongType),
       StructField("value", DoubleType), StructField("event_type", StringType)))

@@ -83,7 +83,7 @@ class TimerOrderProbe extends AnyFunSuite {
       .transformWithState(new OrderProbeProcessor(),
         TimeMode.EventTime(), OutputMode.Append())
     val name = "probe_" + java.util.UUID.randomUUID().toString.take(8)
-    val ckpt = graft.streaming.Replayer.checkpoint()
+    val ckpt = graft.core.Scratch.checkpoint()
     val q = graft.core.ConfScope.withConf(s,
         graft.streaming.Streams.RocksDbConf +
         ("spark.sql.streaming.noDataMicroBatches.enabled" ->
@@ -102,7 +102,7 @@ class TimerOrderProbe extends AnyFunSuite {
       mem.addData((7L, 14000000L)); q.processAllAvailable()
       s.table(name).collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    } finally { q.stop(); graft.streaming.Replayer.dropCheckpoint(ckpt) }
+    } finally { q.stop(); graft.core.Scratch.delete(ckpt) }
   }
 
   test("TWS scheduling: within a DATA batch, input rows run BEFORE " +
