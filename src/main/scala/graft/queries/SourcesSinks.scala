@@ -429,6 +429,24 @@ object SourcesSinks {
   private[graft] def snk9Root(dir: String): java.nio.file.Path =
     Scratch.dir("snk9snap", dir)
 
+  /** The columns every snapshot version holds — SNK9's, SNK10's and
+    * S19's writers all publish this projection of `events` — and their
+    * schema, which every snapshot read passes, so no read pays a
+    * footer-read job to infer it. */
+  private[graft] val SnapshotSchema: StructType = StructType(
+    Seq("event_id", "user_id", "value", "event_type")
+      .map(graft.core.Schemas.events(_)))
+
+  /** `df` projected to the snapshot columns, ready to publish. */
+  private[graft] def snapshotRows(df: DataFrame): DataFrame =
+    df.select(SnapshotSchema.fieldNames.toIndexedSeq.map(col): _*)
+
+  /** Read snapshot data files (or data dirs) with their writer's
+    * schema. */
+  private def readSnapshotFiles(s: SparkSession,
+                                paths: Seq[String]): DataFrame =
+    s.read.schema(SnapshotSchema).parquet(paths: _*)
+
   /** List one data dir's parquet files — the WRITER-side listing of
     * the manifest protocol (readers never list). */
   private[graft] def listParquet(dataDir: java.nio.file.Path): Seq[String] = {
@@ -474,12 +492,10 @@ object SourcesSinks {
   private[graft] def snk9PublishBoth(s: SparkSession, dir: String)
       : (String, String) = {
     val root = snk9Root(dir)
-    val ev = Tables.events(s, dir)
-      .select(col("event_id"), col("user_id"), col("value"),
-        col("event_type"))
+    val ev = snapshotRows(Tables.events(s, dir))
     val v1 = snk9Publish(root, 1, ev.repartition(8))
     val v2 = snk9Publish(root, 2,
-      s.read.parquet(root.resolve("data").resolve("v1").toString)
+      readSnapshotFiles(s, Seq(root.resolve("data").resolve("v1").toString))
         .repartition(2))
     (v1, v2)
   }
@@ -583,9 +599,7 @@ object SourcesSinks {
     * merged content against an independent batch reference. */
   private[graft] def snk10Run(s: SparkSession, dir: String): Snk10Result = {
     val root = snk10Root(dir)
-    val ev = Tables.events(s, dir)
-      .select(col("event_id"), col("user_id"), col("value"),
-        col("event_type"))
+    val ev = snapshotRows(Tables.events(s, dir))
     val v1m = snk9Publish(root, 1,
       ev.repartitionByRange(8, col("event_id"))
         .sortWithinPartitions(col("event_id")))
@@ -621,7 +635,7 @@ object SourcesSinks {
     // exact touched set: column-pruned probe over CANDIDATE files only
     val touched =
       if (candidates.isEmpty) Seq.empty[String]
-      else s.read.parquet(candidates: _*)
+      else readSnapshotFiles(s, candidates)
         .filter(isUpdate || isDelete)
         .select(col("_metadata.file_path").as("fp"))
         .distinct().collect().map(_.getString(0))
@@ -635,7 +649,7 @@ object SourcesSinks {
       .toDF("event_id", "user_id", "value", "event_type")
     val rewritten =
       if (touched.isEmpty) inserts
-      else s.read.parquet(touched: _*)
+      else readSnapshotFiles(s, touched)
         .filter(!isDelete)
         .withColumn("value",
           when(isUpdate, col("value") + 1000.0d).otherwise(col("value")))
@@ -656,7 +670,7 @@ object SourcesSinks {
     val files = java.nio.file.Files
       .readString(java.nio.file.Paths.get(manifest))
       .split("\n").toSeq.filter(_.nonEmpty)
-    s.read.parquet(files: _*)
+    readSnapshotFiles(s, files)
   }
 
   /** SNK8 two-predicate read-back — exposed for EngineSpec's

@@ -17,18 +17,17 @@ case class AbandonState(views: Seq[(Long, Long)])
   * the purchase; this one must fire on the NON-arrival of one, which
   * only a timer can observe).
   *
-  * Mechanics (empirically pinned on this Spark build; the scheduling
-  * half CORRECTED in r19 by TimerOrderProbe): a timer registered at
-  * expiry E ms fires in the first micro-batch whose event-time
-  * watermark ≥ E (inclusive at equality); the watermark is
-  * floor-ms(max event ts seen in PRIOR batches) − delay. Within one
-  * DATA batch, input rows run BEFORE expired timers (the r16 probe's
-  * "timers-first" reading actually observed the NO-DATA batch that
-  * the default `noDataMicroBatches` interposes whenever the watermark
-  * advances with no input pending — MemoryStream tests with per-batch
-  * processAllAvailable always get one; a continuous file replay with
-  * files still queued does not). For THIS operator the distinction is
-  * immaterial: a same-batch answering purchase would now suppress
+  * Mechanics (empirically pinned on this Spark build by
+  * TimerOrderProbe): a timer registered at expiry E ms fires in the
+  * first micro-batch whose event-time watermark ≥ E (inclusive at
+  * equality); the watermark is floor-ms(max event ts seen in PRIOR
+  * batches) − delay. Within one DATA batch, input rows run BEFORE
+  * expired timers; a "timers-first" order shows only in the NO-DATA
+  * batch that the default `noDataMicroBatches` interposes whenever the
+  * watermark advances with no input pending (MemoryStream tests with
+  * per-batch processAllAvailable always get one; a continuous file
+  * replay with files still queued does not). For THIS operator the
+  * distinction is immaterial: a same-batch answering purchase would now suppress
   * (input applies first), but on an event-time-ordered stream that
   * row cannot exist — the firing batch's watermark requires a PRIOR
   * event at ts ≥ deadline + delay, and an answering purchase
@@ -66,7 +65,7 @@ class AbandonProcessor(windowUs: Long)
                                timers: TimerValues): Iterator[(Long, Long)] = {
     val pending0 = Option(st.get()).map(_.views.toList).getOrElse(Nil)
     val (pending, deadlines) = AbandonProcessor.applyOrdered(windowUs,
-      pending0, rows.toSeq.sortBy(e => (e.tsu, e.event_id)))
+      pending0, Timed.order(rows.toSeq))
     deadlines.foreach(getHandle.registerTimer)
     st.update(AbandonState(pending))
     Iterator.empty
@@ -83,6 +82,41 @@ class AbandonProcessor(windowUs: Long)
     val (expired, keep) = prev.partition(v => v._1 / 1000 + winMs <= horizon)
     st.update(AbandonState(keep))
     expired.sortBy(v => (v._1, v._2)).map(v => (user, v._2)).iterator
+  }
+}
+
+/** S21b — timer-fired abandonment behind the watermark reorder buffer:
+  * [[AbandonProcessor.fold]] keeps the open views, each released view
+  * registers a timer at its deadline + 1, and the sweep runs on every
+  * watermark. The sweep convention is STRICT (deadline < wm) where the
+  * in-order S21 is inclusive: a suppressing purchase at
+  * ts_ms == deadline may still sit in the buffer when wm == deadline
+  * (the release bound is strict), so firing at equality could emit an
+  * answered view. Strictness shifts the stream-tail horizon by one
+  * ms-boundary case: a view emits iff unanswered AND
+  * deadline_ms < final wm — the s21b oracle models exactly that. */
+class ReorderedAbandon(windowUs: Long)
+    extends ReorderingProcessor(AbandonProcessor.fold(windowUs),
+      FunnelEvent.encoder) {
+
+  override protected def applyOrdered(user: Long, events: Seq[FunnelEvent])
+      : Seq[(Long, Long)] = {
+    events.filter(_.event_type == "view")
+      .map(AbandonProcessor.deadlineMs(windowUs, _)).distinct
+      .foreach(d => getHandle.registerTimer(d + 1))
+    super.applyOrdered(user, events)
+  }
+
+  override protected def onWatermark(user: Long,
+                                     wmMs: Long): Seq[(Long, Long)] = {
+    val winMs = windowUs / 1000
+    val prev = Option(state.get()).map(_.views.toList).getOrElse(Nil)
+    val (expired, keep) = prev.partition(v => v._1 / 1000 + winMs < wmMs)
+    if (expired.isEmpty) Seq.empty
+    else {
+      state.update(AbandonState(keep))
+      expired.sortBy(v => (v._1, v._2)).map(v => (user, v._2))
+    }
   }
 }
 
@@ -128,7 +162,7 @@ class PartialTimeoutProcessor(windowUs: Long)
       : Iterator[(Long, Long, Long, Long)] = {
     val pending0 = Option(st.get()).map(_.views.toList).getOrElse(Nil)
     val (pending, deadlines) = PartialTimeoutProcessor.applyOrdered(
-      windowUs, pending0, rows.toSeq.sortBy(e => (e.tsu, e.event_id)))
+      windowUs, pending0, Timed.order(rows.toSeq))
     deadlines.foreach(getHandle.registerTimer)
     st.update(PartialState(pending))
     Iterator.empty
@@ -180,24 +214,37 @@ object PartialTimeoutProcessor {
 }
 
 object AbandonProcessor {
-  /** The ordered event fold shared with the out-of-order
-    * (watermark-reordering) variant: apply `events` — ALREADY in
+  /** The open-view list as a keyed fold for [[ReorderedAbandon]]: the
+    * "abandon" state, which S31b reads back; it emits nothing itself —
+    * rows emit from the watermark sweep. */
+  def fold(windowUs: Long)
+      : KeyedFold[FunnelEvent, AbandonState, (Long, Long)] =
+    KeyedFold("abandon", Encoders.product[AbandonState],
+      (prev, _, events) => {
+        val (pending, _) = applyOrdered(windowUs,
+          prev.fold(List.empty[(Long, Long)])(_.views.toList), events)
+        (Some(AbandonState(pending)), Seq.empty)
+      })
+
+  /** The ms deadline (view_ts_ms + W_ms) of a view's window. */
+  def deadlineMs(windowUs: Long, view: FunnelEvent): Long =
+    view.tsu / 1000 + windowUs / 1000
+
+  /** The ordered event step: apply `events` — ALREADY in
     * (tsu, event_id) order — to the open-view list; returns the new
-    * list and the ms deadlines (view_ts_ms + W_ms) the caller must
-    * register timers for (the in-order processor registers them
-    * verbatim; the reordering variant registers deadline+1 — its
-    * strict-sweep convention, see ReorderProcessors). */
+    * list and the deadlines of its views, which the in-order processor
+    * registers timers for verbatim ([[ReorderedAbandon]] registers
+    * deadline+1 — its strict-sweep convention). */
   def applyOrdered(windowUs: Long, pending0: List[(Long, Long)],
                    events: Seq[FunnelEvent])
       : (List[(Long, Long)], Seq[Long]) = {
-    val winMs = windowUs / 1000
     var pending = pending0
     val deadlines = scala.collection.mutable.ListBuffer[Long]()
     events.foreach { e =>
       e.event_type match {
         case "view" =>
           pending ::= ((e.tsu, e.event_id))
-          deadlines += e.tsu / 1000 + winMs
+          deadlines += deadlineMs(windowUs, e)
         case "purchase" =>
           pending = pending.filterNot(v =>
             v._1 <= e.tsu && e.tsu <= v._1 + windowUs)

@@ -48,9 +48,9 @@ case class LateWinState(n: Long, fired: Boolean)
   * end (⟺ semantic wm ≥ end + allowance).
   *
   * Within a DATA batch input rows run BEFORE expired timers (the TWS
-  * scheduling contract pinned by TimerOrderProbe — the r16
-  * "timers-first" reading only described the interposed no-data
-  * batches of MemoryStream tests), so in-allowance rows arriving in
+  * scheduling contract pinned by TimerOrderProbe — a "timers-first"
+  * order shows only in the interposed no-data batches of MemoryStream
+  * tests), so in-allowance rows arriving in
   * the very fire batch fold INTO the on-time pane (the input path
   * emits it, the timer then no-ops on fired state); rows arriving in
   * LATER in-allowance batches produce the genuine re-fires. The

@@ -62,7 +62,7 @@ import graft.core.{Scratch, Tables}
   *           synthetic view→click→purchase chains (chain g = event_id/211
   *           gets user FunnelUserBase+g, timestamps base + 2h·g + 10min·member)
   *           so the S8 funnel provably fires: the natural corpus has ZERO
-  *           conversions below sf0.1, which made the round-2 S8 oracle
+  *           conversions below sf0.1, which would make the S8 oracle
   *           match vacuous (0 = 0). Pure per-row arithmetic on event_id —
   *           the oracle SQL reproduces the rewrite exactly. The 95-id
   *           member spacing makes chains straddle batch-file boundaries,

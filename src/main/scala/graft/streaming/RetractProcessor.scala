@@ -2,12 +2,11 @@ package graft.streaming
 
 import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** One input record for the S33 retract-stream producer: an
   * append-only fact whose `cents` accumulates into the key's running
   * aggregate. */
-case class RetractOp(tsu: Long, event_id: Long, cents: Long)
+case class RetractOp(tsu: Long, event_id: Long, cents: Long) extends Timed
 
 object RetractOp extends UserEvent[RetractOp] {
   def wire = Seq(tsu, col("event_id"), cents.as("cents"))
@@ -21,54 +20,42 @@ object RetractOp extends UserEvent[RetractOp] {
 case class RetractRow(user_id: Long, seq_id: Long, kind: String,
                       agg_cents: Long, ts: java.sql.Timestamp)
 
-/** S33 — RETRACT-STREAM PRODUCER (Flink's `toRetractStream`, the half
-  * of the CDC axis the r19 verdict named missing): S22/S22b/S22c
-  * CONSUME a changelog; this operator EMITS one. A keyed running
-  * aggregate (sum of cents per user over the append-only event
-  * replay) that, on EVERY refinement, emits the (−old, +new) DELTA
-  * PAIR — first a "retract" row carrying the previously emitted
-  * aggregate, then an "upsert" row carrying the new one — so a
-  * downstream consumer that cannot diff state (a plain sum, a
-  * non-stateful sink) stays correct by construction: summing
-  * sign(kind)·agg_cents telescopes to the key's current aggregate.
-  *
-  * Refinement granularity is PER INPUT RECORD (Flink's contract — one
-  * retraction pair per arriving row), applied in (tsu, event_id)
-  * order within the batch; across batches the clean replay is
-  * ts-ordered (the S8/S14/S18 batch-sequential contract), so the full
-  * per-key refinement sequence is the global (ts, event_id) order and
-  * the DuckDB oracle replays it in closed form: run = running
-  * sum(cents) over (user ORDER BY ts, event_id); each record emits
-  * retract(lag(run)) — absent for the key's first record ever — and
-  * upsert(run). State = ONE value per key (the last emitted
-  * aggregate), exactly Flink's retract-agg state budget.
-  *
-  * 100 TB: one key shuffle, O(1) state per key, O(1) work per record;
-  * emission volume is 2× input (the price of retraction semantics —
-  * identical to Flink's), and the train itself needs no further
-  * shuffle: the pair is produced where the key lives. */
-class RetractProcessor
-    extends StatefulProcessor[Long, RetractOp, RetractRow] {
-
-  @transient private var st: ValueState[Long] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[Long](
-      "agg", Encoders.scalaLong, TTLConfig.NONE)
-
-  override def handleInputRows(user: Long, rows: Iterator[RetractOp],
-                               timers: TimerValues)
-      : Iterator[RetractRow] = {
-    val cur0 = if (st.exists()) Some(st.get()) else None
-    val (cur, out) = RetractProcessor.refine(cur0, user,
-      rows.toSeq.sortBy(o => (o.tsu, o.event_id)))
-    cur.foreach(st.update)
-    out.iterator
-  }
-}
-
 object RetractProcessor {
-  /** The refinement fold, unit-testable without a streaming harness:
+  /** S33 — RETRACT-STREAM PRODUCER (Flink's `toRetractStream`, the
+    * producing half of the CDC axis): S22/S22b/S22c CONSUME a
+    * changelog; this operator EMITS one. A keyed running aggregate
+    * (sum of cents per user over the append-only event replay) that,
+    * on EVERY refinement, emits the (−old, +new) DELTA PAIR — first a
+    * "retract" row carrying the previously emitted aggregate, then an
+    * "upsert" row carrying the new one — so a
+    * downstream consumer that cannot diff state (a plain sum, a
+    * non-stateful sink) stays correct by construction: summing
+    * sign(kind)·agg_cents telescopes to the key's current aggregate.
+    *
+    * Refinement granularity is PER INPUT RECORD (Flink's contract — one
+    * retraction pair per arriving row), applied in (tsu, event_id)
+    * order within the batch; across batches the clean replay is
+    * ts-ordered (the S8/S14/S18 batch-sequential contract), so the full
+    * per-key refinement sequence is the global (ts, event_id) order and
+    * the DuckDB oracle replays it in closed form: run = running
+    * sum(cents) over (user ORDER BY ts, event_id); each record emits
+    * retract(lag(run)) — absent for the key's first record ever — and
+    * upsert(run). State = ONE value per key (the last emitted
+    * aggregate), exactly Flink's retract-agg state budget.
+    *
+    * 100 TB: one key shuffle, O(1) state per key, O(1) work per record;
+    * emission volume is 2× input (the price of retraction semantics —
+    * identical to Flink's), and the train itself needs no further
+    * shuffle: the pair is produced where the key lives.
+    *
+    * S33c runs it behind the watermark reorder buffer: the producer is
+    * ORDER-SENSITIVE by construction (disorder would emit retractions of
+    * values never published), so a real CDC producer fed by an
+    * out-of-order source must reorder before it may speak. */
+  val fold: KeyedFold[RetractOp, Long, RetractRow] =
+    KeyedFold("agg", Encoders.scalaLong, refine)
+
+  /** The refinement step, unit-testable without a streaming harness:
     * apply `ops` — ALREADY in (tsu, event_id) order — to the key's
     * last emitted aggregate; returns the new aggregate (None only when
     * ops is empty and cur0 was None) and the emitted retract/upsert

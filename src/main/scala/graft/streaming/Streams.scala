@@ -11,7 +11,7 @@ import graft.core.{Scratch, Tables}
 /** Typed row for the S8 funnel (event time kept as epoch MICROS — exact
   * long comparisons, no millis truncation). */
 case class FunnelEvent(event_id: Long, tsu: Long, user_id: Long,
-                       event_type: String)
+                       event_type: String) extends Timed
 
 object FunnelEvent extends UserEvent[FunnelEvent] {
   def wire = Seq(col("event_id"), tsu, col("event_type"))
@@ -184,8 +184,7 @@ object Streams {
     if (java.nio.file.Files.exists(
         root.resolve("manifests").resolve(s"v$id.list"))) return
     val dataDir = root.resolve("data").resolve(s"b$id")
-    batch.select(col("event_id"), col("user_id"), col("value"),
-        col("event_type"))
+    SourcesSinks.snapshotRows(batch)
       .write.mode("overwrite").parquet(dataDir.toString)
     val files = SourcesSinks.listParquet(dataDir)
     if (files.isEmpty) return // zero-FILE batch (0 partitions): same skip
@@ -345,8 +344,8 @@ object Streams {
                         windowUs: Long = 3600L * 1000000L): DataFrame = {
     import s.implicits._
     val conversions = UserEvent.byUser(s, d, variant, FunnelEvent)
-      .transformWithState(new FunnelProcessor(windowUs), TimeMode.None(),
-        OutputMode.Append())
+      .transformWithState(new InOrderProcessor(FunnelProcessor.fold(windowUs)),
+        TimeMode.None(), OutputMode.Append())
     runToMemory(s, conversions.toDF("user_id", "purchase_id"), "append",
                 RocksDbConf ++ NoFinalBatch)
       .groupBy(col("user_id"))
@@ -426,12 +425,12 @@ object Streams {
   }
 
   /** S18 body — streaming SCD2 dimension maintenance (see
-    * Scd2Processor): purchases keyed by user through transformWithState
-    * (RocksDB, the declared 100 TB state backend); closed version rows
-    * surface as timestamps. Thresholds are cents parameters so
-    * StreamingSpec can pin threshold-sensitivity; the canonical query
-    * runs $400 / $1000 — both transitions fire naturally at every
-    * shipped sf (3 / 11 / 156 users reach 'high'). */
+    * [[Scd2Processor.fold]]): purchases keyed by user through
+    * transformWithState (RocksDB, the declared 100 TB state backend);
+    * closed version rows surface as timestamps. Thresholds are cents
+    * parameters so StreamingSpec can pin threshold-sensitivity; the
+    * canonical query runs $400 / $1000 — both transitions fire
+    * naturally at every shipped sf (3 / 11 / 156 users reach 'high'). */
   private[graft] def s18Run(s: SparkSession, d: String,
                             midCents: Long, highCents: Long): DataFrame =
     runToMemory(s, s18Versions(s, d, midCents, highCents), "append",
@@ -479,7 +478,8 @@ object Streams {
     val completions = UserEvent.byUser(s, d, variant, FunnelEvent,
       watermark = Some(Replayer.OooDelay))
       .transformWithState(
-        new ReorderedSkipMatch("vcp", graft.queries.Windows.SkipWindowUs),
+        new ReorderingProcessor(SkipMatchProcessor.fold("vcp",
+          graft.queries.Windows.SkipWindowUs), FunnelEvent.encoder),
         TimeMode.EventTime(), OutputMode.Append())
     runToMemory(s, completions.toDF("user_id", "completion_id"),
                 "append", RocksDbConf)
@@ -492,7 +492,8 @@ object Streams {
     val joined = UserEvent.byUser(s, d, variant, TemporalEvent,
       watermark = Some(Replayer.OooDelay))
       .transformWithState(
-        new ReorderedTemporalJoin(midCents = 40000L, highCents = 100000L),
+        new ReorderingProcessor(TemporalJoinProcessor.fold(
+          midCents = 40000L, highCents = 100000L), TemporalEvent.encoder),
         TimeMode.EventTime(), OutputMode.Append())
     runToMemory(s, joined.toDF("user_id", "event_id", "band"),
                 "append", RocksDbConf)
@@ -525,14 +526,15 @@ object Streams {
       : DataFrame = {
     import s.implicits._
     UserEvent.byUser(s, d, "clean", Scd2Event, purchasesOnly = true)
-      .transformWithState(new Scd2Processor(midCents, highCents),
+      .transformWithState(
+        new InOrderProcessor(Scd2Processor.fold(midCents, highCents)),
         TimeMode.None(), OutputMode.Append())
       .toDF("user_id", "band", "vf_us", "vt_us")
   }
 
   /** The S18b STREAMING frame (user_id, band, vf_us, vt_us) — S18's
     * SCD2 maintainer behind the watermark reorder buffer (see
-    * [[ReorderedScd2]]), variant-parameterized so StreamingSpec can pin
+    * [[Scd2Processor.fold]]), variant-parameterized so StreamingSpec can pin
     * replay-order invariance. The watermark node sits AFTER the
     * purchase filter, so only purchases flow through the buffer and the
     * release horizon is floor-ms(max PURCHASE ts) − 24 h — the s18b
@@ -544,7 +546,8 @@ object Streams {
     UserEvent.byUser(s, d, variant, Scd2Event,
       purchasesOnly = true, watermark = Some(Replayer.OooDelay))
       .transformWithState(
-        new ReorderedScd2(midCents = 40000L, highCents = 100000L),
+        new ReorderingProcessor(Scd2Processor.fold(
+          midCents = 40000L, highCents = 100000L), Scd2Event.encoder),
         TimeMode.EventTime(), OutputMode.Append())
       .toDF("user_id", "band", "vf_us", "vt_us")
   }
@@ -558,7 +561,7 @@ object Streams {
       .orderBy(col("user_id"), col("valid_from"))
 
   /** The S22b runner — S22's CDC/retraction consumer behind the
-    * watermark reorder buffer (see [[ReorderedCdc]]), variant-
+    * watermark reorder buffer (see [[CdcProcessor.fold]]), variant-
     * parameterized for the replay-order-invariance pin. Every event is
     * an op, so the watermark rides the full stream and the release
     * horizon is the trio's floor-ms(max ts) − 24 h. */
@@ -567,7 +570,8 @@ object Streams {
     import s.implicits._
     val changes = UserEvent.byUser(s, d, variant, CdcOp,
       watermark = Some(Replayer.OooDelay))
-      .transformWithState(new ReorderedCdc(),
+      .transformWithState(
+        new ReorderingProcessor(CdcProcessor.fold, CdcOp.encoder),
         TimeMode.EventTime(), OutputMode.Append())
     runToMemory(s, changes.toDF("user_id", "seq_id", "delta"),
                 "append", RocksDbConf)
@@ -578,7 +582,7 @@ object Streams {
   }
 
   /** The S33c runner — the retract PRODUCER behind the watermark
-    * reorder buffer (see [[ReorderedRetract]]), variant-parameterized
+    * reorder buffer (see [[RetractProcessor.fold]]), variant-parameterized
     * for the replay-order-invariance pin: the producer's pairs depend
     * on per-key prefix order, so disorder without the buffer would
     * emit retractions of never-published values — reorder-then-refine
@@ -590,7 +594,8 @@ object Streams {
     import s.implicits._
     val train = UserEvent.byUser(s, d, variant, RetractOp,
       watermark = Some(Replayer.OooDelay))
-      .transformWithState(new ReorderedRetract(),
+      .transformWithState(
+        new ReorderingProcessor(RetractProcessor.fold, RetractOp.encoder),
         TimeMode.EventTime(), OutputMode.Append())
     runToMemory(s, train.toDF(), "append", RocksDbConf)
       .select(col("user_id"), col("seq_id"), col("kind"),
@@ -599,14 +604,15 @@ object Streams {
   }
 
   /** The S8d runner — the 24 h (s8c) funnel behind the watermark
-    * reorder buffer (see [[ReorderedFunnel]]), variant-parameterized
+    * reorder buffer (see [[FunnelProcessor.fold]]), variant-parameterized
     * for the replay-order-invariance pin. */
   private[graft] def s8dRun(s: SparkSession, d: String,
                             variant: String): DataFrame = {
     import s.implicits._
     val conversions = UserEvent.byUser(s, d, variant, FunnelEvent,
       watermark = Some(Replayer.OooDelay))
-      .transformWithState(new ReorderedFunnel(24L * 3600L * 1000000L),
+      .transformWithState(new ReorderingProcessor(
+          FunnelProcessor.fold(24L * 3600L * 1000000L), FunnelEvent.encoder),
         TimeMode.EventTime(), OutputMode.Append())
     runToMemory(s, conversions.toDF("user_id", "purchase_id"),
                 "append", RocksDbConf)
@@ -615,36 +621,68 @@ object Streams {
       .orderBy(col("user_id"))
   }
 
-  /** The S24b runner — the CDC consumer with the late-data side output
-    * (see [[ReorderedCdcLate]]): applied ops emit their delta tagged
-    * 'delta', dropped ops emit tagged 'late'. Raw rows, no rollup —
-    * the per-op changelog IS the audit artifact here. */
+  /** The S24b runner — the S22b CDC consumer with the LATE-DATA SIDE
+    * OUTPUT ([[ReorderingProcessor]]'s `onLate`) on the MOST
+    * order-sensitive fold (a reversed upsert/delete pair corrupts final
+    * state, so dropping a late op silently is the worst place to do it
+    * — exactly where an auditable late channel matters most). Applied
+    * ops emit (user, seq_id, delta, 'delta'); dropped ops emit
+    * (user, event_id, 0, 'late'). Raw rows, no rollup — the per-op
+    * changelog IS the audit artifact here. Proves the side-output face
+    * is a property of the reorder buffer, not of the S24 funnel host. */
   private[graft] def s24bRun(s: SparkSession, d: String,
                              variant: String): DataFrame = {
     import s.implicits._
     val tagged = UserEvent.byUser(s, d, variant, CdcOp,
       watermark = Some(Replayer.OooDelay))
-      .transformWithState(new ReorderedCdcLate(),
+      .transformWithState(new ReorderingProcessor(
+          CdcProcessor.fold.mapOut { case (u, sid, d) =>
+            (u, sid, d, "delta") },
+          CdcOp.encoder,
+          (user: Long, ops: Seq[CdcOp]) =>
+            ops.map(o => (user, o.event_id, 0L, "late"))),
         TimeMode.EventTime(), OutputMode.Append())
     runToMemory(s, tagged.toDF("user_id", "ref_id", "delta", "kind"),
                 "append", RocksDbConf)
       .orderBy(col("kind"), col("user_id"), col("ref_id"))
   }
 
-  /** The S24 runner — the 24 h funnel with the LATE-DATA SIDE OUTPUT
-    * (see [[ReorderedFunnelLate]]), variant-parameterized: the
-    * canonical query runs "ooolate" (its beyond-delay % 23 subset makes
-    * the drop branch fire deterministically); StreamingSpec also runs
-    * "ooo", where the late channel must be EMPTY and the conv rows must
-    * equal s8d's conversion set — the side output never perturbs the
-    * main fold. */
+  /** The S24 runner — the S8d funnel with a LATE-DATA SIDE OUTPUT
+    * (Flink's `sideOutputLateData` + `getSideOutput` pair, re-expressed
+    * as a tagged union on the one output stream Spark's TWS provides):
+    * rows the reorder buffer's drop branch discards emit as
+    * (user, event_id, 'late') alongside the fold's
+    * (user, purchase_id, 'conv') conversions, so late data lands in an
+    * auditable channel instead of vanishing into a gauge.
+    * Variant-parameterized: the canonical query runs "ooolate", whose
+    * % 23 == 5 beyond-delay subset makes the drop branch fire
+    * deterministically (the plain ooo fixture's disorder is bounded
+    * BELOW the delay by design, so it never drops); StreamingSpec also
+    * runs "ooo", where the late channel must be EMPTY and the conv rows
+    * must equal s8d's conversion set — the side output never perturbs
+    * the main fold.
+    *
+    * Semantics the oracle models in closed form: a row is late iff its
+    * ts_ms is below the operative watermark of its arrival batch
+    * (floor-ms(max ts arrived in PRIOR batches) − 24 h — computable
+    * because the fixture's file assignment is deterministic); late rows
+    * are EXCLUDED from the fold, so conversions are s8c's 24 h funnel
+    * over the SURVIVING rows, restricted to purchases under the final
+    * release horizon. The s24 oracle uses exact (ts, event_id) row
+    * comparisons (the tie-exact form), not the s8 family's ts-only
+    * convention. */
   private[graft] def s24Run(s: SparkSession, d: String,
                             variant: String): DataFrame = {
     import s.implicits._
     val tagged = UserEvent.byUser(s, d, variant, FunnelEvent,
       watermark = Some(Replayer.OooDelay))
       .transformWithState(
-        new ReorderedFunnelLate(24L * 3600L * 1000000L),
+        new ReorderingProcessor(
+          FunnelProcessor.fold(24L * 3600L * 1000000L).mapOut {
+            case (u, pid) => (u, pid, "conv") },
+          FunnelEvent.encoder,
+          (user: Long, events: Seq[FunnelEvent]) =>
+            events.map(e => (user, e.event_id, "late"))),
         TimeMode.EventTime(), OutputMode.Append())
     runToMemory(s, tagged.toDF("user_id", "ref_id", "kind"),
                 "append", RocksDbConf)
@@ -710,7 +748,8 @@ object Streams {
     import s.implicits._
     val deltas = UserEvent.byUser(s, d, "clean", CdcOp,
       watermark = Some(WatermarkDelay))
-      .transformWithState(new CdcTimedProcessor(), "ts",
+      .transformWithState(new InOrderProcessor(CdcTimedProcessor.fold),
+        "ts",
         OutputMode.Append())
     deltas.toDF()
       .groupBy(window(col("ts"), "1 hour"),
@@ -722,7 +761,7 @@ object Streams {
   /** S33b's chained plan — the RETRACT TRAIN consumed by a DOWNSTREAM
     * EVENT-TIME WINDOWED AGGREGATE in the SAME streaming query (the
     * s22c junction run over a PRODUCED changelog instead of a consumed
-    * one): [[RetractProcessor]]'s (−old, +new) pairs, each carrying
+    * one): [[RetractProcessor.fold]]'s (−old, +new) pairs, each carrying
     * its record's event time, are signed (retract → −agg, upsert →
     * +agg) and fed into a 1 h tumbling window × (user % 10) aggregate
     * inside one IncrementalExecution via transformWithState's
@@ -736,7 +775,8 @@ object Streams {
     import s.implicits._
     val train = UserEvent.byUser(s, d, "clean", RetractOp,
       watermark = Some(WatermarkDelay))
-      .transformWithState(new RetractProcessor(), "ts",
+      .transformWithState(new InOrderProcessor(RetractProcessor.fold),
+        "ts",
         OutputMode.Append())
     train.toDF()
       .select(col("user_id"), col("ts"),
@@ -1001,7 +1041,7 @@ object Streams {
   private[graft] val S25GapMs = 250L
 
   /** S25 body — the s8b funnel with a REAL state TTL (see the
-    * FunnelProcessor ttl param; TimeMode.ProcessingTime as TTL
+    * InOrderProcessor ttl param; TimeMode.ProcessingTime as TTL
     * requires), paced so every batch boundary exceeds the TTL. Returns
     * (result, query) — the spec reads the query's TTL-eviction metrics,
     * the canonical entry takes the table (the s13Run shape). */
@@ -1010,7 +1050,7 @@ object Streams {
     import s.implicits._
     val conv = UserEvent.byUser(s, d, "funnel", FunnelEvent)
       .transformWithState(
-        new FunnelProcessor(HourUs,
+        new InOrderProcessor(FunnelProcessor.fold(HourUs),
           org.apache.spark.sql.streaming.TTLConfig(
             java.time.Duration.ofMillis(S25TtlMs))),
         TimeMode.ProcessingTime(), OutputMode.Append())
@@ -1069,7 +1109,7 @@ object Streams {
     val ckpt = Scratch.checkpoint()
     try {
       val conv = UserEvent.byUser(s, d, "funnel", FunnelEvent)
-        .transformWithState(new FunnelProcessor(HourUs),
+        .transformWithState(new InOrderProcessor(FunnelProcessor.fold(HourUs)),
           TimeMode.None(), OutputMode.Append())
         .toDF("user_id", "purchase_id")
       runStream(s, conv, RocksDbConf ++ NoFinalBatch, Some(ckpt))(
@@ -1176,7 +1216,7 @@ object Streams {
     * first three files under the v1 state schema and crashes at a
     * deterministic upgrade point (poison batch — the s19/SNK2 restart
     * discipline); phase 2 resumes the SAME checkpoint under the
-    * EVOLVED schema ([[FunnelProcessorV2]] — adds a counter field) and
+    * EVOLVED schema ([[FunnelProcessor.foldV2]] — adds a counter field) and
     * must decode every v1 state row. Avro state encoding on, as
     * evolution requires. Returns (result, sawUpgradeCrash) — the crash
     * flag lets the spec assert the upgrade point genuinely fired. */
@@ -1198,7 +1238,8 @@ object Streams {
     val ckpt = Scratch.checkpoint()
     var crashed = false
     try {
-      try runStream(s, pipeline(new FunnelProcessor(HourUs)), conf,
+      try runStream(s,
+          pipeline(new InOrderProcessor(FunnelProcessor.fold(HourUs))), conf,
           Some(ckpt))(
         _.foreachBatch { (b: DataFrame, id: Long) =>
           if (id >= 3L) throw new RuntimeException("upgrade point")
@@ -1213,7 +1254,8 @@ object Streams {
       }
       require(crashed, "s26 upgrade point never fired — fixture has " +
         "fewer batches than the poison id")
-      runStream(s, pipeline(new FunnelProcessorV2(HourUs)), conf,
+      runStream(s,
+        pipeline(new InOrderProcessor(FunnelProcessor.foldV2(HourUs))), conf,
         Some(ckpt))(
         _.foreachBatch((b: DataFrame, _: Long) => collect(b)))
     } finally Scratch.delete(ckpt)
@@ -1404,7 +1446,7 @@ object Streams {
         .orderBy(col("win_start"), col("event_type"))
     }),
 
-    // S2b — the PRODUCTION shape of s2 (added r9): the same 1 h / 15 min
+    // S2b — the PRODUCTION shape of s2: the same 1 h / 15 min
     // sliding aggregate in APPEND mode, so the sliding-window operator's
     // scale story is hash-gated, not just documented. Only windows the
     // final watermark has closed emit (strict rule, same protocol as
@@ -1440,7 +1482,7 @@ object Streams {
         .orderBy(col("user_id"), col("first_ts"))
     }),
 
-    // S3b — DYNAMIC-gap session windows (added r7): the gap is a per-ROW
+    // S3b — DYNAMIC-gap session windows: the gap is a per-ROW
     // expression (15 min after a view, 30 after a click, 60 after a
     // purchase, 20 otherwise), so a session is the union of overlapping
     // [ts, ts+gap) intervals — the general form of session windowing
@@ -1449,7 +1491,7 @@ object Streams {
     // interval-union merge as a running-max-end island scan (new
     // session exactly when ts ≥ max prior end — the same half-open
     // [start, end) convention Spark applies; verified row-for-row vs
-    // the engine at sf0.01 in the r7 probe).
+    // the engine at sf0.01).
     // 100 TB: identical state story to s3 — one shuffle on user_id,
     // state = open sessions only, watermark-evicted; the gap expression
     // is evaluated map-side and adds no state.
@@ -1621,7 +1663,8 @@ object Streams {
       import s.implicits._
       val completions = UserEvent.byUser(s, d, "clean", FunnelEvent)
         .transformWithState(
-          new SkipMatchProcessor("vcp", graft.queries.Windows.SkipWindowUs),
+          new InOrderProcessor(SkipMatchProcessor.fold("vcp",
+            graft.queries.Windows.SkipWindowUs)),
           TimeMode.None(), OutputMode.Append())
       runToMemory(s, completions.toDF("user_id", "completion_id"),
                   "append", RocksDbConf ++ NoFinalBatch)
@@ -1629,8 +1672,8 @@ object Streams {
     }),
 
     // S20f — CEP GREEDY UNBOUNDED QUANTIFIER (Flink's
-    // oneOrMore.greedy + until, MATCH_RECOGNIZE's C+; the r19 verdict
-    // task 6): v c+ p within 24 h — the unbounded self-looping slot
+    // oneOrMore.greedy + until, MATCH_RECOGNIZE's C+): v c+ p within
+    // 24 h — the unbounded self-looping slot
     // S20d's times(2) cannot express — emitting (user, purchase,
     // n_clicks) with the greedy loop count. Same completion set as
     // S20 (the axis pin: quantifier payload, not match existence);
@@ -1641,7 +1684,8 @@ object Streams {
       import s.implicits._
       val completions = UserEvent.byUser(s, d, "clean", FunnelEvent)
         .transformWithState(
-          new OneOrMoreProcessor(graft.queries.Windows.SkipWindowUs),
+          new InOrderProcessor(
+            OneOrMoreProcessor.fold(graft.queries.Windows.SkipWindowUs)),
           TimeMode.None(), OutputMode.Append())
       runToMemory(s, completions.toDF("user_id", "completion_id",
                     "n_clicks"),
@@ -1672,7 +1716,8 @@ object Streams {
       import s.implicits._
       val matches = UserEvent.byUser(s, d, "clean", FunnelEvent)
         .transformWithState(
-          new AllMatchesProcessor(graft.queries.Windows.SkipWindowUs),
+          new InOrderProcessor(
+            AllMatchesProcessor.fold(graft.queries.Windows.SkipWindowUs)),
           TimeMode.None(), OutputMode.Append())
       runToMemory(s, matches.toDF("user_id", "v_id", "c_id", "p_id"),
                   "append", RocksDbConf ++ NoFinalBatch)
@@ -1693,7 +1738,8 @@ object Streams {
       import s.implicits._
       val completions = UserEvent.byUser(s, d, "clean", FunnelEvent)
         .transformWithState(
-          new SkipMatchProcessor("vvcp", graft.queries.Windows.SkipWindowUs),
+          new InOrderProcessor(SkipMatchProcessor.fold("vvcp",
+            graft.queries.Windows.SkipWindowUs)),
           TimeMode.None(), OutputMode.Append())
       runToMemory(s, completions.toDF("user_id", "completion_id"),
                   "append", RocksDbConf ++ NoFinalBatch)
@@ -1712,7 +1758,7 @@ object Streams {
     "s27_count_window" -> ((s, d) => {
       import s.implicits._
       val wins = UserEvent.byUser(s, d, "clean", CountEvent)
-        .transformWithState(new CountWindowProcessor(5),
+        .transformWithState(new InOrderProcessor(CountWindowProcessor.fold(5)),
           TimeMode.None(), OutputMode.Append())
       runToMemory(s, wins.toDF("user_id", "win_idx", "sum_cents",
                                "max_event_id"),
@@ -1731,7 +1777,8 @@ object Streams {
     "s27b_sliding_count" -> ((s, d) => {
       import s.implicits._
       val wins = UserEvent.byUser(s, d, "clean", CountEvent)
-        .transformWithState(new CountSlideProcessor(8, 3),
+        .transformWithState(
+          new InOrderProcessor(CountSlideProcessor.fold(8, 3)),
           TimeMode.None(), OutputMode.Append())
       runToMemory(s, wins.toDF("user_id", "trig_idx", "n_in_window",
                                "sum_cents"),
@@ -1752,7 +1799,7 @@ object Streams {
       import s.implicits._
       val completions = UserEvent.byUser(s, d, "funnel", FunnelEvent)
         .transformWithState(
-          new StrictMatchProcessor(3600L * 1000000L),
+          new InOrderProcessor(StrictMatchProcessor.fold(3600L * 1000000L)),
           TimeMode.None(), OutputMode.Append())
       runToMemory(s, completions.toDF("user_id", "completion_id"),
                   "append", RocksDbConf ++ NoFinalBatch)
@@ -1827,7 +1874,8 @@ object Streams {
       import s.implicits._
       val joined = UserEvent.byUser(s, d, "clean", TemporalEvent)
         .transformWithState(
-          new TemporalJoinProcessor(midCents = 40000L, highCents = 100000L),
+          new InOrderProcessor(TemporalJoinProcessor.fold(
+            midCents = 40000L, highCents = 100000L)),
           TimeMode.None(), OutputMode.Append())
       runToMemory(s, joined.toDF("user_id", "event_id", "band"),
                   "append", RocksDbConf ++ NoFinalBatch)
@@ -1877,8 +1925,8 @@ object Streams {
     // S24 — LATE-DATA SIDE OUTPUT (Flink's sideOutputLateData tag):
     // the S8d funnel on the `ooolate` replay, whose % 23 == 5
     // beyond-delay subset arrives BELOW the operative watermark by
-    // construction — the reorder buffer's drop branch (untested until
-    // this round: the plain ooo fixture bounds disorder under the
+    // construction — the reorder buffer's drop branch (which the
+    // plain ooo fixture never reaches: it bounds disorder under the
     // delay BY DESIGN) fires deterministically and emits each dropped
     // row as (user_id, event_id, 'late') alongside the fold's 'conv'
     // rows, so late data lands in an auditable channel instead of
@@ -1921,7 +1969,7 @@ object Streams {
     // lifecycle on the reconstructed 24 h semantic watermark — the
     // two-clock construction in AllowedLatenessProcessor's scaladoc;
     // (b) within a data batch input runs BEFORE expired timers (the
-    // TWS scheduling contract corrected in r19 by TimerOrderProbe), so
+    // TWS scheduling contract pinned by TimerOrderProbe), so
     // fire-batch arrivals fold into the on-time pane and only
     // later-batch arrivals re-fire — which the time-split `refire`
     // fixture makes non-vacuous (1-day watermark steps < allowance;
@@ -2136,7 +2184,7 @@ object Streams {
     "s22_cdc_aggregate" -> ((s, d) => {
       import s.implicits._
       val changes = UserEvent.byUser(s, d, "clean", CdcOp)
-        .transformWithState(new CdcProcessor(),
+        .transformWithState(new InOrderProcessor(CdcProcessor.fold),
           TimeMode.None(), OutputMode.Append())
       runToMemory(s, changes.toDF("user_id", "seq_id", "delta"),
                   "append", RocksDbConf ++ NoFinalBatch)
@@ -2161,7 +2209,7 @@ object Streams {
     "s33_retract_stream" -> ((s, d) => {
       import s.implicits._
       val train = UserEvent.byUser(s, d, "clean", RetractOp)
-        .transformWithState(new RetractProcessor(),
+        .transformWithState(new InOrderProcessor(RetractProcessor.fold),
           TimeMode.None(), OutputMode.Append())
       runToMemory(s, train.toDF(), "append", RocksDbConf ++ NoFinalBatch)
         .select(col("user_id"), col("seq_id"), col("kind"),
@@ -2535,8 +2583,9 @@ object Streams {
     "s14_absence" -> ((s, d) => {
       import s.implicits._
       val impulses = UserEvent.byUser(s, d, "clean", FunnelEvent)
-        .transformWithState(new AbsenceProcessor(), TimeMode.None(),
-          OutputMode.Append())
+        .transformWithState(
+          new InOrderProcessor(AbsenceProcessor.fold(HourUs)),
+          TimeMode.None(), OutputMode.Append())
       runToMemory(s, impulses.toDF("user_id", "purchase_id"), "append",
                   RocksDbConf ++ NoFinalBatch)
         .orderBy(col("user_id"), col("purchase_id"))
@@ -2821,8 +2870,8 @@ object Streams {
   lazy val oracle: Map[String, String] = oracleBase +
     ("s26_state_evolution" -> oracleBase("s8b_funnel_injected"))
 
-  // lazy so the `oracle` forward reference above is order-proof
-  // (advisor r18): an eager val here would be null if anything forced
+  // lazy so the `oracle` forward reference above is order-proof: an
+  // eager val here would be null if anything forced
   // `oracle` during object initialization before this line ran.
   private lazy val oracleBase: Map[String, String] = Map(
     "src4_stream_scan" ->
@@ -3258,8 +3307,8 @@ object Streams {
         |FROM agg a CROSS JOIN fw
         |WHERE a.win_start + INTERVAL 1 HOUR < fw.w
         |ORDER BY a.win_start, a.event_type""".stripMargin,
-    // TIE CONVENTION for the whole s8 family (s8/s8b/s8c/s8d; advisor
-    // r17): these oracles compare on ts alone (c.ts <= p.ts,
+    // TIE CONVENTION for the whole s8 family (s8/s8b/s8c/s8d): these
+    // oracles compare on ts alone (c.ts <= p.ts,
     // v.ts <= c.ts), while the engine's fold applies events in strict
     // (ts, event_id) order — a click sharing a timestamp with its
     // purchase but carrying a HIGHER event_id would count for the

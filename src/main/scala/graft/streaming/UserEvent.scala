@@ -5,12 +5,26 @@ import org.apache.spark.sql.{Column, Encoder, Encoders, KeyValueGroupedDataset,
   SparkSession}
 import org.apache.spark.sql.functions._
 
+/** An event a [[KeyedFold]] applies: its event time in epoch micros
+  * and the id that breaks ties between equal times. */
+trait Timed {
+  def tsu: Long
+  def event_id: Long
+}
+
+object Timed {
+  /** `events` in (tsu, event_id) order, the one order every fold
+    * applies its events in. */
+  def order[E <: Timed](events: Seq[E]): Seq[E] =
+    events.sortBy(e => (e.tsu, e.event_id))
+}
+
 /** An event type of the per-user keyed-state pipelines. Its companion
   * extends this with the type's wire format: the columns, named after
   * the type's fields, that a replayed `events` row projects into.
   * `user_id` is not part of it: [[UserEvent.byUser]] adds it as the
   * grouping key. */
-abstract class UserEvent[E <: Product : TypeTag] {
+abstract class UserEvent[E <: Product with Timed : TypeTag] {
   def wire: Seq[Column]
 
   private[streaming] lazy val encoder: Encoder[E] = Encoders.product[E]
@@ -29,8 +43,8 @@ object UserEvent {
     * when given, projected into `E` and grouped by `user_id`. The
     * filter comes before the watermark, so a purchase-only stream's
     * watermark tracks purchases alone (the S18b oracle's horizon). */
-  def byUser[E <: Product](s: SparkSession, d: String, variant: String,
-      event: UserEvent[E], purchasesOnly: Boolean = false,
+  def byUser[E <: Product with Timed](s: SparkSession, d: String,
+      variant: String, event: UserEvent[E], purchasesOnly: Boolean = false,
       watermark: Option[String] = None): KeyValueGroupedDataset[Long, E] = {
     val src = Replayer.stream(s, d, variant)
     val kept =

@@ -1370,7 +1370,8 @@ class StreamingSpec extends AnyFunSuite {
     // rejects completions; one hyperactive key carries every event, so
     // a per-event or per-history state design would show >1 state row
     // or growth across batches
-    import graft.streaming.{FunnelEvent, SkipMatchProcessor}
+    import graft.streaming.{FunnelEvent, InOrderProcessor,
+      SkipMatchProcessor}
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     implicit val sqlCtx = s.sqlContext
     import s.implicits._
@@ -1388,7 +1389,8 @@ class StreamingSpec extends AnyFunSuite {
     assert(expected(7L) > 0, "synthetic sequence has no completions — vacuous")
     val mem = MemoryStream[FunnelEvent]
     val completions = mem.toDS().groupByKey(_.user_id)
-      .transformWithState(new SkipMatchProcessor("vcv", winUs),
+      .transformWithState(
+        new InOrderProcessor(SkipMatchProcessor.fold("vcv", winUs)),
         TimeMode.None(), OutputMode.Append())
     val name = "s20_pin_" + java.util.UUID.randomUUID().toString.take(8)
     val ckpt = Scratch.checkpoint()
@@ -1813,7 +1815,7 @@ class StreamingSpec extends AnyFunSuite {
        "initial-state overload migrates to a DIFFERENT parallelism " +
        "with the emission multiset preserved") {
     import graft.streaming.{FunnelEvent, FunnelProcessor,
-      FunnelProcessorWithInit, FunnelState, Replayer, Streams}
+      InOrderProcessor, FunnelState, Replayer, Streams}
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import s.implicits._
     val winUs = 3600L * 1000000L
@@ -1837,7 +1839,7 @@ class StreamingSpec extends AnyFunSuite {
         .as[FunnelEvent]
     def fold(ev: org.apache.spark.sql.Dataset[FunnelEvent]) =
       ev.groupByKey(_.user_id)
-        .transformWithState(new FunnelProcessor(winUs),
+        .transformWithState(new InOrderProcessor(FunnelProcessor.fold(winUs)),
           TimeMode.None(), OutputMode.Append())
         .toDF("user_id", "purchase_id")
     def collectRun(out: org.apache.spark.sql.DataFrame, ckpt: String,
@@ -1883,7 +1885,7 @@ class StreamingSpec extends AnyFunSuite {
         .map { case (u, v, p) => (u, FunnelState(v, p)) })
       .groupByKey(_._1).mapValues(_._2)
     val migrated = src(dirB.toString).groupByKey(_.user_id)
-      .transformWithState(new FunnelProcessorWithInit(winUs),
+      .transformWithState(new InOrderProcessor(FunnelProcessor.fold(winUs)),
         TimeMode.None(), OutputMode.Append(), initDs)
       .toDF("user_id", "purchase_id")
     val ckpt2 = Scratch.fresh("graft_s31_ck2").toString
@@ -2865,6 +2867,63 @@ class StreamingSpec extends AnyFunSuite {
     val (s3, o3) = CountSlideProcessor.applyOrdered(4, 3, s2, es.slice(6, 10))
     assert(o1 ++ o2 ++ o3 == ow && s3 == stw,
       "sliding fold is not chunking-invariant")
+  }
+
+  test("Keyed folds: on every user's event sequence, each fold emits " +
+       "the same rows whether the events arrive in one chunk, one event " +
+       "per chunk or three chunks") {
+    import graft.streaming._
+    import org.apache.spark.sql.Encoder
+    import s.implicits._
+    val ev = Tables.events(s, sf)
+    val purchases = ev.filter(col("event_type") === "purchase")
+    // each user's events, projected through the type's wire format and
+    // put in the (tsu, event_id) order the processors apply them in
+    def byUser[E <: Product with Timed : Encoder](e: UserEvent[E],
+        rows: org.apache.spark.sql.DataFrame = ev): Map[Long, Seq[E]] =
+      rows.select(col("user_id") +: e.wire: _*)
+        .select(col("user_id"), struct(col("*")).as("e"))
+        .as(org.apache.spark.sql.Encoders.tuple(
+          org.apache.spark.sql.Encoders.scalaLong, implicitly[Encoder[E]]))
+        .collect().toSeq.groupBy(_._1)
+        .map { case (u, es) => u -> Timed.order(es.map(_._2)) }
+    def run[I <: Timed, S, O](f: KeyedFold[I, S, O], user: Long,
+                              chunks: Seq[Seq[I]]): Seq[O] =
+      chunks.foldLeft((Option.empty[S], Vector.empty[O])) {
+        case ((st, acc), chunk) =>
+          val (next, out) = f.step(st, user, chunk)
+          (next, acc ++ out)
+      }._2
+    def bag[O](rows: Seq[O]): Map[O, Int] =
+      rows.groupBy(identity).map { case (r, rs) => r -> rs.size }
+    def check[I <: Timed, S, O](name: String, f: KeyedFold[I, S, O],
+                                users: Map[Long, Seq[I]]): Unit = {
+      var emitted = 0
+      users.foreach { case (u, es) =>
+        val whole = run(f, u, Seq(es))
+        val ones = run(f, u, es.map(Seq(_)))
+        val thirds = run(f, u, es.grouped((es.size + 2) / 3).toSeq)
+        assert(bag(ones) == bag(whole) && bag(thirds) == bag(whole),
+          s"$name: user $u emits differently when chunked")
+        emitted += whole.size
+      }
+      assert(emitted > 0, s"$name emitted nothing — the check is vacuous")
+    }
+    val funnel = byUser(FunnelEvent)
+    val day = 24L * 3600L * 1000000L
+    check("funnel", FunnelProcessor.fold(day), funnel)
+    check("absence", AbsenceProcessor.fold(3600L * 1000000L), funnel)
+    check("skipmatch", SkipMatchProcessor.fold("vcp", day), funnel)
+    check("oneormore", OneOrMoreProcessor.fold(day), funnel)
+    check("allmatches", AllMatchesProcessor.fold(day), funnel)
+    check("scd2", Scd2Processor.fold(40000L, 100000L),
+      byUser(Scd2Event, purchases))
+    check("temporaljoin", TemporalJoinProcessor.fold(40000L, 100000L),
+      byUser(TemporalEvent))
+    val ops = byUser(CdcOp)
+    check("cdc", CdcProcessor.fold, ops)
+    check("cdctimed", CdcTimedProcessor.fold, ops)
+    check("retract", RetractProcessor.fold, byUser(RetractOp))
   }
 
   test("S26: state schema evolution across a checkpoint restart — the " +
