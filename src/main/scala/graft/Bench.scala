@@ -9,8 +9,9 @@ package graft
   * reported in the JSON (`errors` map) instead of being swallowed.
   *
   * Contention canary: machine-state CPU contention has mispriced
-  * individual captures by up to 8.8× (r6 driver capture: l21 4.99 s vs
-  * 0.52–0.68 s across eight committed captures at the same commit). A
+  * individual captures by up to 8.8× (one driver capture priced l21 at
+  * 4.99 s against 0.52–0.68 s in eight committed captures of the same
+  * commit). A
   * FIXED-WORK data-independent calibration job runs before and after
   * the sweep; its times ship in the JSON (`canary`) so any capture can
   * be priced against the committed history of the same fixed work —
@@ -20,15 +21,15 @@ package graft
   * Output protocol: the FULL JSON (all per-query timings) is written to
   * BENCH.json; on stdout a SHORT self-contained summary line is printed
   * both FIRST and LAST (with the full line between) because the
-  * driver's stdout buffer has truncated from either end before (r6:
-  * head of the full line clipped → `parsed: null`; r7: tail-only
-  * parsing missed it). Whichever end survives carries complete,
+  * driver's stdout buffer has truncated from either end before (a
+  * clipped head of the full line parsed as `null`; tail-only parsing
+  * missed it). Whichever end survives carries complete,
   * parseable JSON with the totals, the canary, and the slowest queries.
   *
   * Per-query bands: BANDS.json (committed) holds [lo, hi] p50 bands per
   * query from the committed capture history. Any query priced outside
   * its band ships in `out_of_band` next to the canary, so a capture
-  * self-flags machine-state outliers (r7: the driver capture priced
+  * self-flags machine-state outliers (one driver capture priced
   * j8_asof/l10_minhash_lsh 4× over their committed values while the
   * whole-capture canary stayed in-band).
   */
@@ -115,7 +116,7 @@ object Bench {
     val total = results.map(_._2).sum
     // end/start ratio: >1 means the machine degraded DURING the capture;
     // either value far above the committed nominal means it was
-    // contended THROUGHOUT (the r6 failure mode).
+    // contended THROUGHOUT (the l21 mispricing above).
     val canary = s"""{"start_sec":${ms(canaryStart)},"end_sec":${ms(canaryEnd)},"ratio":${ms(canaryEnd / math.max(canaryStart, 1e-9))}}"""
     // Per-query band check against the committed capture history.
     val outOfBand: Seq[(String, Double, Array[Double])] = loadBands() match {

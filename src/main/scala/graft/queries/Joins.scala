@@ -227,7 +227,7 @@ object Joins {
     // Execution form: the loop is 24 SEQUENTIAL width-1 levels, so it
     // runs under a width-1 scope (shuffle.partitions=1 and AQE off —
     // AQE re-plans a query stage per level for nothing at this width;
-    // r7 sweep: 4.0 → 2.3 s loop-only). A conf scope covers
+    // a width sweep: 4.0 → 2.3 s loop-only). A conf scope covers
     // CONSTRUCTION, not a later lazy execution, so the result is
     // materialized (localCheckpoint) inside the scope and the cached
     // ~|customers| relation is returned — the driver's write then

@@ -566,8 +566,8 @@ object SourcesSinks {
     * carried into version v+1's manifest verbatim, and readers pinned
     * to v see nothing until the v+1 manifest's atomic rename.
     *
-    * Touched-file identification, two stages (r17 — the manifest-side
-    * pruning the r16 scaladoc promised as the production dial):
+    * Touched-file identification, two stages (the manifest-side
+    * pruning is the production dial):
     * 1. MANIFEST-side candidate pruning: v1 is RANGE-CLUSTERED on the
     *    merge key (repartitionByRange + sortWithinPartitions — the SNK7
     *    layout) and publishes per-file (min,max) key stats alongside

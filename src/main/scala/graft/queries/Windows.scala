@@ -186,7 +186,7 @@ object Windows {
     // per (user, session_window) — the composition is w8 ∘ w9, no new
     // machinery. No window function, no self-join per pattern step —
     // MATCH_RECOGNIZE semantics from one aggregate + one regex.
-    // Hyperactive-key GUARD (w9/w9b shared, r14): the sorted array is
+    // Hyperactive-key GUARD (w9/w9b shared): the sorted array is
     // sliced to MaxEventsPerKey before matching — a deterministic
     // truncation (first cap events by (ts, event_id)) that bounds the
     // per-task array regardless of key skew; n_events stays the FULL
@@ -215,7 +215,7 @@ object Windows {
     // event cardinality — session-bounded in this corpus; for
     // adversarial keys compose with w8's session_window (w8 ∘ w9) or
     // pre-aggregate per (user, day) — the fold state itself is O(1).
-    // Plus the r14 hyperactive-key guard (see w9): slice to
+    // Plus the hyperactive-key guard (see w9): slice to
     // MaxEventsPerKey post-sort, overflow detectable via n_events.
     "w9b_skip_pattern" -> ((s, dir) =>
       w9bCounts(Tables.events(s, dir), "vcp", SkipWindowUs,
@@ -243,7 +243,7 @@ object Windows {
       .select(col("user_id"), size(col("es")).cast("long").as("n_events"),
         // explicit letter map, NOT substring(type,1,1): a future event
         // type sharing an initial with v/c/p must not silently alias
-        // into the pattern (advisor r13) — unknown types map to 'x'
+        // into the pattern — unknown types map to 'x'
         concat_ws("", transform(slice(col("es"), 1, cap),
           x => when(x.getField("event_type") === "view", lit("v"))
             .when(x.getField("event_type") === "click", lit("c"))

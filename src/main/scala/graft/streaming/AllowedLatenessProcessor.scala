@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulPro
 /** One event of the allowed-lateness windowed count: the tumbling hour
   * it belongs to (µs start), its type, event time and id. */
 case class LateWinEvent(win_us: Long, event_type: String,
-                        tsu: Long, event_id: Long)
+                        tsu: Long, event_id: Long) extends Timed
 
 /** Per-(window, type) pane state: running count and whether the pane
   * has fired at least once. */
@@ -81,11 +81,15 @@ class AllowedLatenessProcessor(allowMs: Long)
     extends StatefulProcessor[(Long, String), LateWinEvent,
                               (Long, String, String, Long, Long)] {
 
+  // built once, on the driver, and carried with the processor: `init`
+  // runs once per partition per micro-batch
+  private val stateEncoder = Encoders.product[LateWinState]
+
   @transient private var st: ValueState[LateWinState] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
     st = getHandle.getValueState[LateWinState](
-      "lateWin", Encoders.product[LateWinState], TTLConfig.NONE)
+      "lateWin", stateEncoder, TTLConfig.NONE)
 
   private def endMs(key: (Long, String)): Long =
     key._1 / 1000 + 3600000L
@@ -106,7 +110,7 @@ class AllowedLatenessProcessor(allowMs: Long)
       // coexist with late rows here; it is emitted and cleared by the
       // same-batch cleanup timer's pendingFire. Either way this branch
       // must not touch it.
-      rs.sortBy(e => (e.tsu, e.event_id)).iterator
+      Timed.order(rs).iterator
         .map(e => (key._1, key._2, "late", e.event_id, 0L))
     } else {
       val prev = Option(st.get()).getOrElse {
@@ -142,7 +146,7 @@ class AllowedLatenessProcessor(allowMs: Long)
         Iterator.single((key._1, key._2, "ontime", 0L, v.n))
       case _ => Iterator.empty
     }
-    if (info.getExpiryTimeInMs >= end) {
+    if (info.getExpiryTimeInMs() >= end) {
       // cleanup (outer wm ≥ end ⟺ semantic wm ≥ end + allowance):
       // emit a still-pending on-time pane first (fire and cleanup can
       // expire in the same batch in either order), then drop the

@@ -1,7 +1,25 @@
 package graft.streaming
 
 import org.apache.spark.sql.Encoder
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode, StatefulProcessor, StatefulProcessorWithInitialState, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode, StatefulProcessor, StatefulProcessorHandle, StatefulProcessorWithInitialState, TimeMode, TimerValues, TTLConfig, ValueState}
+
+/** What a runner applies to each key: a [[KeyedFold]] or a
+  * [[TimeoutFold]], over one state variable. */
+sealed trait KeyedOp[I <: Timed, S, O] {
+  def stateName: String
+  def stateEncoder: Encoder[S]
+
+  /** Apply `events` — ALREADY in (tsu, event_id) order — to the key's
+    * `state` and return the rows to emit. A [[TimeoutFold]] emits
+    * nothing here; it registers a timer at each deadline + `lagMs`. */
+  private[streaming] def run(state: ValueState[S],
+      handle: StatefulProcessorHandle, key: Long, events: Seq[I],
+      lagMs: Long): Seq[O]
+
+  /** Expire every deadline ≤ `horizonMs`; the rows that emits. */
+  private[streaming] def sweep(state: ValueState[S], key: Long,
+                               horizonMs: Long): Seq[O]
+}
 
 /** A stateful operator as a pure per-key fold: the name and encoder of
   * its one state variable, and a step that applies one key's events —
@@ -15,7 +33,8 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode, 
   * "funnel". */
 final case class KeyedFold[I <: Timed, S, O](
     stateName: String, stateEncoder: Encoder[S],
-    step: (Option[S], Long, Seq[I]) => (Option[S], Seq[O])) {
+    step: (Option[S], Long, Seq[I]) => (Option[S], Seq[O]))
+    extends KeyedOp[I, S, O] {
 
   /** The same fold with every emitted row mapped by `f`. */
   def mapOut[P](f: O => P): KeyedFold[I, S, P] =
@@ -38,6 +57,63 @@ final case class KeyedFold[I <: Timed, S, O](
     }
     out
   }
+
+  private[streaming] def run(state: ValueState[S],
+      handle: StatefulProcessorHandle, key: Long, events: Seq[I],
+      lagMs: Long): Seq[O] = applyTo(state, key, events)
+
+  private[streaming] def sweep(state: ValueState[S], key: Long,
+                               horizonMs: Long): Seq[O] = Seq.empty
+}
+
+/** A timeout operator (S21, S21b, S21c, S31b — Flink's
+  * `notFollowedBy … within` with its onTimer firing): a [[KeyedFold]]
+  * whose step emits the ms deadlines of the views it opens, and a sweep
+  * `expire(key, state, horizonMs)` that drops every view whose deadline
+  * is ≤ `horizonMs` and returns the kept state and the expired views'
+  * rows, in (tsu, event_id) order. A sweep that expires nothing leaves
+  * the state as it was.
+  *
+  * Answered views are pruned from state by the step; their timers are
+  * left to fire and sweep nothing (one no-op firing each) rather than
+  * tracked for deleteTimer — timer count per key is bounded by the
+  * user's view rate × (W + delay) either way. S31b reads that
+  * difference back: a registered timer outlives its answered view. */
+final case class TimeoutFold[I <: Timed, S, O](
+    fold: KeyedFold[I, S, Long], expire: (Long, S, Long) => (S, Seq[O]))
+    extends KeyedOp[I, S, O] {
+
+  def stateName: String = fold.stateName
+  def stateEncoder: Encoder[S] = fold.stateEncoder
+
+  private[streaming] def run(state: ValueState[S],
+      handle: StatefulProcessorHandle, key: Long, events: Seq[I],
+      lagMs: Long): Seq[O] = {
+    fold.applyTo(state, key, events).distinct
+      .foreach(d => handle.registerTimer(d + lagMs))
+    Seq.empty
+  }
+
+  private[streaming] def sweep(state: ValueState[S], key: Long,
+                               horizonMs: Long): Seq[O] =
+    Option(state.get()).fold(Seq.empty[O]) { prev =>
+      val (next, out) = expire(key, prev, horizonMs)
+      if (out.nonEmpty) state.update(next)
+      out
+    }
+}
+
+/** A processor of keyed state on transformWithState, with the run
+  * policy of every pipeline it runs ([[UserEvent.keyed]]): its time
+  * mode, its input's watermark delay, and whether the run keeps the
+  * trailing no-data micro-batch. A run with no timer and no reorder
+  * buffer emits only on data, so it may skip that batch; a timer or
+  * reorder run emits on the final watermark advance, which only that
+  * batch makes. */
+sealed trait KeyedRunner[I, O] extends StatefulProcessor[Long, I, O] {
+  def timeMode: TimeMode
+  def watermarkDelay: Option[String]
+  def finalBatch: Boolean
 }
 
 /** Runs a [[KeyedFold]] over input that arrives in event-time order:
@@ -45,10 +121,11 @@ final case class KeyedFold[I <: Timed, S, O](
   * (tsu, event_id) and applies them. Across batches the clean replay
   * is (ts, event_id)-ordered per key (pinned in StreamingSpec
   * "replay-order contract"), so every row of a call follows the rows
-  * the state has absorbed.
+  * the state has absorbed. No watermark, no trailing batch.
   *
   * `ttl` (S25) evicts a key's state once it goes unwritten that long;
-  * TTL requires TimeMode.ProcessingTime. A query that passes a keyed
+  * TTL requires TimeMode.ProcessingTime, the run's time mode when a
+  * TTL is given (TimeMode.None otherwise). A query that passes a keyed
   * initial state (S31's rescale recipe) seeds each key's state with it
   * as is.
   *
@@ -61,9 +138,15 @@ final case class KeyedFold[I <: Timed, S, O](
   * cap would silently change results (dropped events = missed matches
   * or joins). [[ReorderingProcessor]] persists its buffer in the state
   * store instead, so there disorder volume degrades to disk. */
-class InOrderProcessor[I <: Timed, S, O](fold: KeyedFold[I, S, O],
-                                         ttl: TTLConfig = TTLConfig.NONE)
-    extends StatefulProcessorWithInitialState[Long, I, O, S] {
+final class InOrderProcessor[I <: Timed, S, O](fold: KeyedFold[I, S, O],
+                                               ttl: TTLConfig = TTLConfig.NONE)
+    extends StatefulProcessorWithInitialState[Long, I, O, S]
+    with KeyedRunner[I, O] {
+
+  def timeMode: TimeMode =
+    if (ttl.ttlDuration.isZero) TimeMode.None() else TimeMode.ProcessingTime()
+  def watermarkDelay: Option[String] = None
+  def finalBatch: Boolean = false
 
   @transient private var st: ValueState[S] = _
 
@@ -79,8 +162,60 @@ class InOrderProcessor[I <: Timed, S, O](fold: KeyedFold[I, S, O],
     fold.applyTo(st, key, Timed.order(rows.toSeq)).iterator
 }
 
+/** Runs a [[TimeoutFold]] over input that arrives in event-time order
+  * (S21, S21c, S31b), on the event-time watermark
+  * ([[Replayer.WatermarkDelay]]) and with the trailing no-data batch,
+  * whose watermark advance fires the last deadlines. Each call applies
+  * the key's rows of one micro-batch in (tsu, event_id) order and
+  * registers a timer at each deadline; a fired timer sweeps EVERY view
+  * whose deadline ≤ its expiry, not just the one it was registered
+  * for — robust to shared-expiry coalescing, and exact either way
+  * (deadline ≤ fired expiry ≤ wm).
+  *
+  * Mechanics (pinned on this Spark build by TimerOrderProbe): a timer
+  * registered at expiry E ms fires in the first micro-batch whose
+  * watermark ≥ E (inclusive at equality); the watermark is
+  * floor-ms(max event ts seen in PRIOR batches) − delay. Within one
+  * DATA batch, input rows run BEFORE expired timers; a "timers-first"
+  * order shows only in the NO-DATA batch that `noDataMicroBatches`
+  * interposes whenever the watermark advances with no input pending.
+  * For a timeout the distinction is immaterial: the firing batch's
+  * watermark requires a PRIOR event at ts ≥ deadline + delay, and an
+  * answering purchase (ts ≤ deadline) precedes that event in stream
+  * order, so it always lands in a strictly earlier batch (StreamingSpec
+  * pins the no-data-batch firing and the prior-batch suppression).
+  * Views whose deadline the final watermark never reaches correctly
+  * never emit; the oracles model that horizon exactly.
+  *
+  * 100 TB: one user_id shuffle, state = open views per user (rate × W),
+  * timers RocksDB-range-scanned per batch — O(fired), not
+  * O(registered). */
+final class TimeoutProcessor[I <: Timed, S, O](timeouts: TimeoutFold[I, S, O])
+    extends StatefulProcessor[Long, I, O] with KeyedRunner[I, O] {
+
+  def timeMode: TimeMode = TimeMode.EventTime()
+  def watermarkDelay: Option[String] = Some(Replayer.WatermarkDelay)
+  def finalBatch: Boolean = true
+
+  @transient private var st: ValueState[S] = _
+
+  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+    st = getHandle.getValueState[S](timeouts.stateName,
+      timeouts.stateEncoder, TTLConfig.NONE)
+
+  override def handleInputRows(key: Long, rows: Iterator[I],
+                               timerValues: TimerValues): Iterator[O] =
+    timeouts.run(st, getHandle, key, Timed.order(rows.toSeq), 0L).iterator
+
+  override def handleExpiredTimer(key: Long, timerValues: TimerValues,
+                                  info: ExpiredTimerInfo): Iterator[O] =
+    timeouts.sweep(st, key, info.getExpiryTimeInMs()).iterator
+}
+
 /** WATERMARK REORDER BUFFER — the Flink-parity out-of-order front end
-  * of a [[KeyedFold]]. [[InOrderProcessor]] assumes each key's events
+  * of a [[KeyedOp]], on the event-time watermark
+  * ([[Replayer.OooDelay]]) and with the trailing no-data batch, whose
+  * watermark advance fires the last release. [[InOrderProcessor]] assumes each key's events
   * arrive in global (ts, event_id) order across micro-batches — true
   * on the clean replay, false on any real stream. This processor
   * restores that order under disorder bounded by the watermark delay,
@@ -117,10 +252,18 @@ class InOrderProcessor[I <: Timed, S, O](fold: KeyedFold[I, S, O],
   * O(keys × batches), not O(events) — a per-event timer would cost a
   * RocksDB timer write AND a fired-timer invocation per event.
   * AvailableNow's trailing watermark-advance batch fires the last
-  * chain step; `onWatermark` (the S21b sweep hook) runs after every
-  * flush in the SAME invocation, so work whose deadline the final
-  * watermark already passed cannot be stranded behind a timer
-  * registered in the past.
+  * chain step.
+  *
+  * A [[TimeoutFold]] (S21b) registers each released view's timer at
+  * deadline + 1 and sweeps deadline < wm, after every flush in the SAME
+  * invocation, so a view whose deadline the final watermark already
+  * passed cannot be stranded behind a timer registered in the past.
+  * The sweep is STRICT where the in-order [[TimeoutProcessor]] is
+  * inclusive: a suppressing purchase at ts_ms == deadline may still
+  * sit in the buffer when wm == deadline (the release bound is
+  * strict), so firing at equality could emit an answered view. A view
+  * emits iff unanswered AND deadline_ms < final wm — the s21b oracle's
+  * model.
   *
   * LATE-DATA SIDE OUTPUT (Flink's `sideOutputLateData` tag): `onLate`
   * gets the rows the drop branch is about to discard — admitted by
@@ -145,11 +288,15 @@ class InOrderProcessor[I <: Timed, S, O](fold: KeyedFold[I, S, O],
   * per-event work O(log buffer) amortized for the sort at release,
   * timers RocksDB-range-scanned per batch — O(fired), not
   * O(registered). */
-class ReorderingProcessor[I <: Timed, S, O](
-    fold: KeyedFold[I, S, O], eventEncoder: Encoder[I],
+final class ReorderingProcessor[I <: Timed, S, O](
+    op: KeyedOp[I, S, O], eventEncoder: Encoder[I],
     onLate: (Long, Seq[I]) => Seq[O] = (_: Long, _: Seq[I]) => Seq.empty[O])(
     implicit ct: scala.reflect.ClassTag[I])
-    extends StatefulProcessor[Long, I, O] {
+    extends StatefulProcessor[Long, I, O] with KeyedRunner[I, O] {
+
+  def timeMode: TimeMode = TimeMode.EventTime()
+  def watermarkDelay: Option[String] = Some(Replayer.OooDelay)
+  def finalBatch: Boolean = true
 
   @transient private var buf: ListState[I] = _
   @transient private var st: ValueState[S] = _
@@ -166,23 +313,11 @@ class ReorderingProcessor[I <: Timed, S, O](
   @transient private var lastTimerWm: Long = _
   @transient private var lastTimerSet: Boolean = false
 
-  /** The fold's state variable, for a subclass's hooks. */
-  protected def state: ValueState[S] = st
-
-  /** Apply watermark-cleared events — ALREADY in (tsu, event_id)
-    * order — to the fold; eager (state updates happen before return). */
-  protected def applyOrdered(key: Long, events: Seq[I]): Seq[O] =
-    fold.applyTo(st, key, events)
-
-  /** Watermark-driven work independent of event arrival (the S21b
-    * sweep); runs after every flush with the same wm. */
-  protected def onWatermark(key: Long, wmMs: Long): Seq[O] = Seq.empty
-
-  final override def init(outputMode: OutputMode,
+  override def init(outputMode: OutputMode,
                           timeMode: TimeMode): Unit = {
     buf = getHandle.getListState[I]("reorderBuf", eventEncoder,
       TTLConfig.NONE)
-    st = getHandle.getValueState[S](fold.stateName, fold.stateEncoder,
+    st = getHandle.getValueState[S](op.stateName, op.stateEncoder,
       TTLConfig.NONE)
     lastTimerSet = false
   }
@@ -204,11 +339,11 @@ class ReorderingProcessor[I <: Timed, S, O](
     }
     ReorderingProcessor.note(keep.size)
     if (ready.isEmpty) Seq.empty
-    else applyOrdered(key, Timed.order(ready))
+    else op.run(st, getHandle, key, Timed.order(ready), 1L)
   }
 
-  final override def handleInputRows(key: Long, rows: Iterator[I],
-                                     timers: TimerValues): Iterator[O] = {
+  override def handleInputRows(key: Long, rows: Iterator[I],
+                               timers: TimerValues): Iterator[O] = {
     val wm = timers.getCurrentWatermarkInMs()
     // Flink late-row semantics: a row already below the operative
     // watermark (admitted through Spark's one-batch filter lag) cannot
@@ -221,17 +356,18 @@ class ReorderingProcessor[I <: Timed, S, O](
         ReorderingProcessor.lateDropped.addAndGet(late.size)
         onLate(key, Timed.order(late))
       }
-    (lateOut ++ flush(key, wm, incoming) ++ onWatermark(key, wm)).iterator
+    // the sweep expires every deadline < wm (see the scaladoc)
+    (lateOut ++ flush(key, wm, incoming) ++ op.sweep(st, key, wm - 1))
+      .iterator
   }
 
-  final override def handleExpiredTimer(key: Long, timers: TimerValues,
-                                        info: ExpiredTimerInfo)
-      : Iterator[O] = {
+  override def handleExpiredTimer(key: Long, timers: TimerValues,
+                                  info: ExpiredTimerInfo): Iterator[O] = {
     val wm = timers.getCurrentWatermarkInMs()
     if (lastTimerSet && lastTimerKey == key && lastTimerWm == wm)
       return Iterator.empty // flushed+swept at this (key, wm) already
     lastTimerKey = key; lastTimerWm = wm; lastTimerSet = true
-    (flush(key, wm, Seq.empty) ++ onWatermark(key, wm)).iterator
+    (flush(key, wm, Seq.empty) ++ op.sweep(st, key, wm - 1)).iterator
   }
 }
 

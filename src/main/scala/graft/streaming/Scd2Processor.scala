@@ -9,6 +9,7 @@ case class Scd2Event(tsu: Long, event_id: Long, cents: Long) extends Timed
 
 object Scd2Event extends UserEvent[Scd2Event] {
   def wire = Seq(tsu, col("event_id"), cents.as("cents"))
+  override def purchasesOnly = true
 }
 
 /** The S18 per-user dimension state: current band, when it was

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode,
   StreamingQuery, TimeMode, Trigger}
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
+import scala.reflect.runtime.universe.TypeTag
 import graft.core.{Scratch, Tables}
 
 /** Typed row for the S8 funnel (event time kept as epoch MICROS — exact
@@ -328,8 +329,8 @@ object Streams {
     * aggregations (the final table is recomputed from full state either
     * way), inner stream-stream joins (matches emit in the data batch where
     * the second side arrives; the final batch only evicts state), dedup
-    * (first-seen rows emit immediately), and TimeMode.None
-    * transformWithState (output is data-driven). Append-mode windowed/
+    * (first-seen rows emit immediately), and the keyed-state runs whose
+    * runner declares no trailing batch ([[keyedConf]]). Append-mode windowed/
     * session aggs and OUTER joins (s3, s7, s5b, s5c) emit ON the final
     * watermark advance and must keep the default. Saves one full
     * state-commit round per query at replay scale; at 100 TB (continuous
@@ -337,21 +338,31 @@ object Streams {
   private val NoFinalBatch = Map(
     "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
 
+  /** The confs a keyed-state run starts with: the RocksDB provider, and
+    * no trailing no-data batch unless its runner needs one
+    * ([[KeyedRunner.finalBatch]]). */
+  private def keyedConf(runner: KeyedRunner[_, _]): Map[String, String] =
+    if (runner.finalBatch) RocksDbConf else RocksDbConf ++ NoFinalBatch
+
+  /** Run a keyed-state pipeline ([[UserEvent.keyed]]) into a memory sink
+    * under the confs its runner declares, and return its final table. */
+  private def runKeyed[E <: Product with Timed, O <: Product : TypeTag](
+      s: SparkSession, d: String, variant: String, event: UserEvent[E],
+      runner: KeyedRunner[E, O], cols: String*): DataFrame =
+    runToMemory(s, UserEvent.keyed(s, d, variant, event, runner, cols: _*),
+      "append", keyedConf(runner))
+
   /** S8 canonical path — the funnel on Spark 4's `transformWithState`
     * (SURVEY §2.9 names TWS primary) with the RocksDB state store.
     * Emits (user, purchase) pairs; rollup to per-user counts is batch. */
   private def funnelTws(s: SparkSession, d: String, variant: String,
-                        windowUs: Long = 3600L * 1000000L): DataFrame = {
-    import s.implicits._
-    val conversions = UserEvent.byUser(s, d, variant, FunnelEvent)
-      .transformWithState(new InOrderProcessor(FunnelProcessor.fold(windowUs)),
-        TimeMode.None(), OutputMode.Append())
-    runToMemory(s, conversions.toDF("user_id", "purchase_id"), "append",
-                RocksDbConf ++ NoFinalBatch)
+                        windowUs: Long = 3600L * 1000000L): DataFrame =
+    runKeyed(s, d, variant, FunnelEvent,
+        new InOrderProcessor(FunnelProcessor.fold(windowUs)),
+        "user_id", "purchase_id")
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_conversions"))
       .orderBy(col("user_id"))
-  }
 
   /** Money-grade exact cast for the events `value` column. */
   private def vdec = col("value").cast(DecimalType(18, 4))
@@ -433,37 +444,23 @@ object Streams {
     * naturally at every shipped sf (3 / 11 / 156 users reach 'high'). */
   private[graft] def s18Run(s: SparkSession, d: String,
                             midCents: Long, highCents: Long): DataFrame =
-    runToMemory(s, s18Versions(s, d, midCents, highCents), "append",
-        RocksDbConf ++ NoFinalBatch)
+    runKeyed(s, d, "clean", Scd2Event, scd2(midCents, highCents),
+        S18Cols: _*)
       .select(col("user_id"), col("band"),
         timestamp_micros(col("vf_us")).as("valid_from"),
         timestamp_micros(col("vt_us")).as("valid_to"))
       .orderBy(col("user_id"), col("valid_from"))
 
   /** The S21 STREAMING frame before any sink (columns user_id,
-    * view_id) — shared with StreamingSpec's timer kill-and-restart
-    * test so the pipeline under restart IS the canonical one. */
-  private[graft] def s21Abandoned(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    UserEvent.byUser(s, d, "clean", FunnelEvent,
-      watermark = Some(WatermarkDelay))
-      .transformWithState(new AbandonProcessor(AbandonWindowUs),
-        TimeMode.EventTime(), OutputMode.Append())
-      .toDF("user_id", "view_id")
-  }
+    * view_id) for StreamingSpec's timer kill-and-restart test: the
+    * canonical query's call and arguments, without the sink. */
+  private[graft] def s21Abandoned(s: SparkSession, d: String): DataFrame =
+    UserEvent.keyed(s, d, "clean", FunnelEvent, abandonTimer(AbandonWindowUs),
+      "user_id", "view_id")
 
-  /** The S21c STREAMING frame (user_id, view_id, n_clicks,
-    * max_click_id) — S21's timer machinery extended with the
-    * partial-match payload (see [[PartialTimeoutProcessor]]); shared
-    * with StreamingSpec's S21-projection pin. */
-  private[graft] def s21cPartials(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    UserEvent.byUser(s, d, "clean", FunnelEvent,
-      watermark = Some(WatermarkDelay))
-      .transformWithState(new PartialTimeoutProcessor(AbandonWindowUs),
-        TimeMode.EventTime(), OutputMode.Append())
-      .toDF("user_id", "view_id", "n_clicks", "max_click_id")
-  }
+  /** The abandonment timeout on in-order input (S21, S31b). */
+  private def abandonTimer(windowUs: Long) =
+    new TimeoutProcessor(AbandonProcessor.timeouts(windowUs))
 
   /** The OOO runners (S20b/S4c/S21b here; S18b/S22b/S8d below follow
     * the same shape), variant-parameterized so
@@ -473,88 +470,66 @@ object Streams {
     * [[ReorderingProcessor]] for the buffering design and its safety
     * argument; the canonical queries run variant "ooo". */
   private[graft] def s20bRun(s: SparkSession, d: String,
-                             variant: String): DataFrame = {
-    import s.implicits._
-    val completions = UserEvent.byUser(s, d, variant, FunnelEvent,
-      watermark = Some(Replayer.OooDelay))
-      .transformWithState(
+                             variant: String): DataFrame =
+    runKeyed(s, d, variant, FunnelEvent,
         new ReorderingProcessor(SkipMatchProcessor.fold("vcp",
           graft.queries.Windows.SkipWindowUs), FunnelEvent.encoder),
-        TimeMode.EventTime(), OutputMode.Append())
-    runToMemory(s, completions.toDF("user_id", "completion_id"),
-                "append", RocksDbConf)
+        "user_id", "completion_id")
       .orderBy(col("user_id"), col("completion_id"))
-  }
 
   private[graft] def s4cRun(s: SparkSession, d: String,
-                            variant: String): DataFrame = {
-    import s.implicits._
-    val joined = UserEvent.byUser(s, d, variant, TemporalEvent,
-      watermark = Some(Replayer.OooDelay))
-      .transformWithState(
+                            variant: String): DataFrame =
+    runKeyed(s, d, variant, TemporalEvent,
         new ReorderingProcessor(TemporalJoinProcessor.fold(
           midCents = 40000L, highCents = 100000L), TemporalEvent.encoder),
-        TimeMode.EventTime(), OutputMode.Append())
-    runToMemory(s, joined.toDF("user_id", "event_id", "band"),
-                "append", RocksDbConf)
+        "user_id", "event_id", "band")
       .orderBy(col("user_id"), col("event_id"))
-  }
 
-  /** The S21b STREAMING frame before any sink — shared with
-    * StreamingSpec's reorder-buffer kill-and-restart test so the
-    * pipeline under restart IS the canonical one. */
+  /** The S21b STREAMING frame before any sink, for StreamingSpec's
+    * reorder-buffer kill-and-restart test: [[s21bRun]]'s call and
+    * arguments, without the sink. */
   private[graft] def s21bAbandoned(s: SparkSession, d: String,
-                                   variant: String): DataFrame = {
-    import s.implicits._
-    UserEvent.byUser(s, d, variant, FunnelEvent,
-      watermark = Some(Replayer.OooDelay))
-      .transformWithState(new ReorderedAbandon(AbandonWindowUs),
-        TimeMode.EventTime(), OutputMode.Append())
-      .toDF("user_id", "view_id")
-  }
+                                   variant: String): DataFrame =
+    UserEvent.keyed(s, d, variant, FunnelEvent, abandonReorder,
+      "user_id", "view_id")
 
   private[graft] def s21bRun(s: SparkSession, d: String,
                              variant: String): DataFrame =
-    runToMemory(s, s21bAbandoned(s, d, variant), "append", RocksDbConf)
+    runKeyed(s, d, variant, FunnelEvent, abandonReorder, "user_id", "view_id")
       .orderBy(col("user_id"), col("view_id"))
 
+  /** The S21 timeout behind the reorder buffer (S21b). */
+  private def abandonReorder = new ReorderingProcessor(
+    AbandonProcessor.timeouts(AbandonWindowUs), FunnelEvent.encoder)
+
   /** The S18 STREAMING frame before any sink (columns user_id, band,
-    * vf_us, vt_us) — shared with StreamingSpec's kill-and-restart test
-    * so the pipeline under restart IS the canonical one. */
+    * vf_us, vt_us) for StreamingSpec's kill-and-restart test:
+    * [[s18Run]]'s call and arguments, without the sink. */
   private[graft] def s18Versions(s: SparkSession, d: String,
                                  midCents: Long, highCents: Long)
-      : DataFrame = {
-    import s.implicits._
-    UserEvent.byUser(s, d, "clean", Scd2Event, purchasesOnly = true)
-      .transformWithState(
-        new InOrderProcessor(Scd2Processor.fold(midCents, highCents)),
-        TimeMode.None(), OutputMode.Append())
-      .toDF("user_id", "band", "vf_us", "vt_us")
-  }
+      : DataFrame =
+    UserEvent.keyed(s, d, "clean", Scd2Event, scd2(midCents, highCents),
+      S18Cols: _*)
 
-  /** The S18b STREAMING frame (user_id, band, vf_us, vt_us) — S18's
-    * SCD2 maintainer behind the watermark reorder buffer (see
-    * [[Scd2Processor.fold]]), variant-parameterized so StreamingSpec can pin
-    * replay-order invariance. The watermark node sits AFTER the
-    * purchase filter, so only purchases flow through the buffer and the
-    * release horizon is floor-ms(max PURCHASE ts) − 24 h — the s18b
-    * oracle's wmo; filtering before the shuffle is also the 100 TB
-    * shape (non-purchases never leave the scan stage). */
-  private[graft] def s18bVersions(s: SparkSession, d: String,
-                                  variant: String): DataFrame = {
-    import s.implicits._
-    UserEvent.byUser(s, d, variant, Scd2Event,
-      purchasesOnly = true, watermark = Some(Replayer.OooDelay))
-      .transformWithState(
-        new ReorderingProcessor(Scd2Processor.fold(
-          midCents = 40000L, highCents = 100000L), Scd2Event.encoder),
-        TimeMode.EventTime(), OutputMode.Append())
-      .toDF("user_id", "band", "vf_us", "vt_us")
-  }
+  /** S18's SCD2 maintainer on in-order input, and its frame's columns. */
+  private def scd2(midCents: Long, highCents: Long) =
+    new InOrderProcessor(Scd2Processor.fold(midCents, highCents))
+  private val S18Cols = Seq("user_id", "band", "vf_us", "vt_us")
 
+  /** The S18b runner — S18's SCD2 maintainer behind the watermark
+    * reorder buffer (see [[Scd2Processor.fold]]), variant-parameterized
+    * so StreamingSpec can pin replay-order invariance. The watermark
+    * node sits AFTER the purchase filter, so only purchases flow
+    * through the buffer and the release horizon is floor-ms(max
+    * PURCHASE ts) − 24 h — the s18b oracle's wmo; filtering before the
+    * shuffle is also the 100 TB shape (non-purchases never leave the
+    * scan stage). */
   private[graft] def s18bRun(s: SparkSession, d: String,
                              variant: String): DataFrame =
-    runToMemory(s, s18bVersions(s, d, variant), "append", RocksDbConf)
+    runKeyed(s, d, variant, Scd2Event,
+        new ReorderingProcessor(Scd2Processor.fold(
+          midCents = 40000L, highCents = 100000L), Scd2Event.encoder),
+        S18Cols: _*)
       .select(col("user_id"), col("band"),
         timestamp_micros(col("vf_us")).as("valid_from"),
         timestamp_micros(col("vt_us")).as("valid_to"))
@@ -566,20 +541,14 @@ object Streams {
     * an op, so the watermark rides the full stream and the release
     * horizon is the trio's floor-ms(max ts) − 24 h. */
   private[graft] def s22bRun(s: SparkSession, d: String,
-                             variant: String): DataFrame = {
-    import s.implicits._
-    val changes = UserEvent.byUser(s, d, variant, CdcOp,
-      watermark = Some(Replayer.OooDelay))
-      .transformWithState(
+                             variant: String): DataFrame =
+    runKeyed(s, d, variant, CdcOp,
         new ReorderingProcessor(CdcProcessor.fold, CdcOp.encoder),
-        TimeMode.EventTime(), OutputMode.Append())
-    runToMemory(s, changes.toDF("user_id", "seq_id", "delta"),
-                "append", RocksDbConf)
+        "user_id", "seq_id", "delta")
       .groupBy((col("user_id") % 10).as("grp"))
       .agg(sum(col("delta")).as("net_cents"),
            count(lit(1)).as("n_changes"))
       .orderBy(col("grp"))
-  }
 
   /** The S33c runner — the retract PRODUCER behind the watermark
     * reorder buffer (see [[RetractProcessor.fold]]), variant-parameterized
@@ -590,36 +559,29 @@ object Streams {
     * the released train; release horizon = the trio's
     * floor-ms(max ts) − 24 h. */
   private[graft] def s33cRun(s: SparkSession, d: String,
-                             variant: String): DataFrame = {
-    import s.implicits._
-    val train = UserEvent.byUser(s, d, variant, RetractOp,
-      watermark = Some(Replayer.OooDelay))
-      .transformWithState(
+                             variant: String): DataFrame =
+    runKeyed(s, d, variant, RetractOp,
         new ReorderingProcessor(RetractProcessor.fold, RetractOp.encoder),
-        TimeMode.EventTime(), OutputMode.Append())
-    runToMemory(s, train.toDF(), "append", RocksDbConf)
+        RetractCols: _*)
       .select(col("user_id"), col("seq_id"), col("kind"),
         col("agg_cents"))
       .orderBy(col("user_id"), col("seq_id"), col("kind"))
-  }
+
+  /** [[RetractRow]]'s columns, the S33 trains' output. */
+  private val RetractCols = Seq("user_id", "seq_id", "kind", "agg_cents", "ts")
 
   /** The S8d runner — the 24 h (s8c) funnel behind the watermark
     * reorder buffer (see [[FunnelProcessor.fold]]), variant-parameterized
     * for the replay-order-invariance pin. */
   private[graft] def s8dRun(s: SparkSession, d: String,
-                            variant: String): DataFrame = {
-    import s.implicits._
-    val conversions = UserEvent.byUser(s, d, variant, FunnelEvent,
-      watermark = Some(Replayer.OooDelay))
-      .transformWithState(new ReorderingProcessor(
-          FunnelProcessor.fold(24L * 3600L * 1000000L), FunnelEvent.encoder),
-        TimeMode.EventTime(), OutputMode.Append())
-    runToMemory(s, conversions.toDF("user_id", "purchase_id"),
-                "append", RocksDbConf)
+                            variant: String): DataFrame =
+    runKeyed(s, d, variant, FunnelEvent,
+        new ReorderingProcessor(FunnelProcessor.fold(24L * 3600L * 1000000L),
+          FunnelEvent.encoder),
+        "user_id", "purchase_id")
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_conversions"))
       .orderBy(col("user_id"))
-  }
 
   /** The S24b runner — the S22b CDC consumer with the LATE-DATA SIDE
     * OUTPUT ([[ReorderingProcessor]]'s `onLate`) on the MOST
@@ -631,21 +593,16 @@ object Streams {
     * changelog IS the audit artifact here. Proves the side-output face
     * is a property of the reorder buffer, not of the S24 funnel host. */
   private[graft] def s24bRun(s: SparkSession, d: String,
-                             variant: String): DataFrame = {
-    import s.implicits._
-    val tagged = UserEvent.byUser(s, d, variant, CdcOp,
-      watermark = Some(Replayer.OooDelay))
-      .transformWithState(new ReorderingProcessor(
+                             variant: String): DataFrame =
+    runKeyed(s, d, variant, CdcOp,
+        new ReorderingProcessor(
           CdcProcessor.fold.mapOut { case (u, sid, d) =>
             (u, sid, d, "delta") },
           CdcOp.encoder,
           (user: Long, ops: Seq[CdcOp]) =>
             ops.map(o => (user, o.event_id, 0L, "late"))),
-        TimeMode.EventTime(), OutputMode.Append())
-    runToMemory(s, tagged.toDF("user_id", "ref_id", "delta", "kind"),
-                "append", RocksDbConf)
+        "user_id", "ref_id", "delta", "kind")
       .orderBy(col("kind"), col("user_id"), col("ref_id"))
-  }
 
   /** The S24 runner — the S8d funnel with a LATE-DATA SIDE OUTPUT
     * (Flink's `sideOutputLateData` + `getSideOutput` pair, re-expressed
@@ -672,22 +629,16 @@ object Streams {
     * comparisons (the tie-exact form), not the s8 family's ts-only
     * convention. */
   private[graft] def s24Run(s: SparkSession, d: String,
-                            variant: String): DataFrame = {
-    import s.implicits._
-    val tagged = UserEvent.byUser(s, d, variant, FunnelEvent,
-      watermark = Some(Replayer.OooDelay))
-      .transformWithState(
+                            variant: String): DataFrame =
+    runKeyed(s, d, variant, FunnelEvent,
         new ReorderingProcessor(
           FunnelProcessor.fold(24L * 3600L * 1000000L).mapOut {
             case (u, pid) => (u, pid, "conv") },
           FunnelEvent.encoder,
           (user: Long, events: Seq[FunnelEvent]) =>
             events.map(e => (user, e.event_id, "late"))),
-        TimeMode.EventTime(), OutputMode.Append())
-    runToMemory(s, tagged.toDF("user_id", "ref_id", "kind"),
-                "append", RocksDbConf)
+        "user_id", "ref_id", "kind")
       .orderBy(col("kind"), col("user_id"), col("ref_id"))
-  }
 
   /** S29's allowance: 48 h — above the `refire` fixture's 1-day tail-
     * file watermark steps (so in-allowance rows can arrive AFTER their
@@ -1041,23 +992,20 @@ object Streams {
   private[graft] val S25GapMs = 250L
 
   /** S25 body — the s8b funnel with a REAL state TTL (see the
-    * InOrderProcessor ttl param; TimeMode.ProcessingTime as TTL
-    * requires), paced so every batch boundary exceeds the TTL. Returns
+    * InOrderProcessor ttl param, which runs it in processing time as
+    * TTL requires), paced so every batch boundary exceeds the TTL. Returns
     * (result, query) — the spec reads the query's TTL-eviction metrics,
     * the canonical entry takes the table (the s13Run shape). */
   private[graft] def s25Run(s: SparkSession, d: String)
       : (DataFrame, org.apache.spark.sql.streaming.StreamingQuery) = {
-    import s.implicits._
-    val conv = UserEvent.byUser(s, d, "funnel", FunnelEvent)
-      .transformWithState(
-        new InOrderProcessor(FunnelProcessor.fold(HourUs),
-          org.apache.spark.sql.streaming.TTLConfig(
-            java.time.Duration.ofMillis(S25TtlMs))),
-        TimeMode.ProcessingTime(), OutputMode.Append())
-      .toDF("user_id", "purchase_id")
+    val ttlFunnel = new InOrderProcessor(FunnelProcessor.fold(HourUs),
+      org.apache.spark.sql.streaming.TTLConfig(
+        java.time.Duration.ofMillis(S25TtlMs)))
+    val conv = UserEvent.keyed(s, d, "funnel", FunnelEvent, ttlFunnel,
+      "user_id", "purchase_id")
     val buf = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
     val nBatches = new java.util.concurrent.atomic.AtomicLong(0)
-    val q = runStream(s, conv, RocksDbConf ++ NoFinalBatch)(
+    val q = runStream(s, conv, keyedConf(ttlFunnel))(
       _.foreachBatch { (batch: DataFrame, id: Long) =>
         nBatches.incrementAndGet()
         batch.collect().foreach(r =>
@@ -1105,14 +1053,12 @@ object Streams {
     * collect here is a test-harness convenience, legal only because
     * the export is state-sized by construction. */
   private[graft] def s31Run(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     val ckpt = Scratch.checkpoint()
     try {
-      val conv = UserEvent.byUser(s, d, "funnel", FunnelEvent)
-        .transformWithState(new InOrderProcessor(FunnelProcessor.fold(HourUs)),
-          TimeMode.None(), OutputMode.Append())
-        .toDF("user_id", "purchase_id")
-      runStream(s, conv, RocksDbConf ++ NoFinalBatch, Some(ckpt))(
+      val funnel = new InOrderProcessor(FunnelProcessor.fold(HourUs))
+      val conv = UserEvent.keyed(s, d, "funnel", FunnelEvent, funnel,
+        "user_id", "purchase_id")
+      runStream(s, conv, keyedConf(funnel), Some(ckpt))(
         _.foreachBatch { (b: DataFrame, _: Long) =>
           // consume every partition (an unconsumed partition fails
           // commit validation); the query's OUTPUT is not the point
@@ -1174,7 +1120,7 @@ object Streams {
     * inclusive at equality, the pinned contract), while a pending
     * VIEW additionally requires no answering purchase — so the
     * timer-minus-view difference is exactly the answered views'
-    * left-to-fire no-op timers, the AbandonProcessor design decision
+    * left-to-fire no-op timers, the [[TimeoutFold]] design decision
     * ("timers are left to fire and sweep nothing") made VISIBLE and
     * hash-gated. The driver-side collect is timer/state-sized
     * (trailing-window cardinality). 100 TB: same read path as S31 —
@@ -1182,15 +1128,12 @@ object Streams {
     * writes the read to a table BEFORE checkpoint teardown instead of
     * collecting (see s31Run's note). */
   private[graft] def s31bRun(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     val ckpt = Scratch.checkpoint()
     try {
-      val out = UserEvent.byUser(s, d, "clean", FunnelEvent,
-        watermark = Some(WatermarkDelay))
-        .transformWithState(new AbandonProcessor(S31bWindowUs),
-          TimeMode.EventTime(), OutputMode.Append())
-        .toDF("user_id", "view_id")
-      runStream(s, out, RocksDbConf, Some(ckpt))(
+      val timer = abandonTimer(S31bWindowUs)
+      val out = UserEvent.keyed(s, d, "clean", FunnelEvent, timer,
+        "user_id", "view_id")
+      runStream(s, out, keyedConf(timer), Some(ckpt))(
         _.foreachBatch((b: DataFrame, _: Long) => b.foreach((_: Row) => ())))
       val timers = s.read.format("statestore")
         .option("readRegisteredTimers", "true").load(ckpt)
@@ -1222,25 +1165,22 @@ object Streams {
     * flag lets the spec assert the upgrade point genuinely fired. */
   private[graft] def s26Run(s: SparkSession, d: String)
       : (DataFrame, Boolean) = {
-    import s.implicits._
-    def pipeline(proc: org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, FunnelEvent, (Long, Long)]): DataFrame = {
-      UserEvent.byUser(s, d, "funnel", FunnelEvent)
-        .transformWithState(proc, TimeMode.None(), OutputMode.Append())
-        .toDF("user_id", "purchase_id")
-    }
+    val v1 = new InOrderProcessor(FunnelProcessor.fold(HourUs))
+    val v2 = new InOrderProcessor(FunnelProcessor.foldV2(HourUs))
+    def pipeline(runner: KeyedRunner[FunnelEvent, (Long, Long)]) =
+      UserEvent.keyed(s, d, "funnel", FunnelEvent, runner,
+        "user_id", "purchase_id")
     val buf = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
     def collect(b: DataFrame): Unit =
       b.collect().foreach(r => buf.add((r.getLong(0), r.getLong(1))))
-    val conf = Map(
-      "spark.sql.streaming.stateStore.encodingFormat" -> "avro") ++
-      RocksDbConf ++ NoFinalBatch
+    // both versions run in order: one declared conf, plus the Avro
+    // state encoding that schema evolution requires
+    val conf = keyedConf(v1) +
+      ("spark.sql.streaming.stateStore.encodingFormat" -> "avro")
     val ckpt = Scratch.checkpoint()
     var crashed = false
     try {
-      try runStream(s,
-          pipeline(new InOrderProcessor(FunnelProcessor.fold(HourUs))), conf,
-          Some(ckpt))(
+      try runStream(s, pipeline(v1), conf, Some(ckpt))(
         _.foreachBatch { (b: DataFrame, id: Long) =>
           if (id >= 3L) throw new RuntimeException("upgrade point")
           collect(b)
@@ -1254,9 +1194,7 @@ object Streams {
       }
       require(crashed, "s26 upgrade point never fired — fixture has " +
         "fewer batches than the poison id")
-      runStream(s,
-        pipeline(new InOrderProcessor(FunnelProcessor.foldV2(HourUs))), conf,
-        Some(ckpt))(
+      runStream(s, pipeline(v2), conf, Some(ckpt))(
         _.foreachBatch((b: DataFrame, _: Long) => collect(b)))
     } finally Scratch.delete(ckpt)
     import scala.jdk.CollectionConverters._
@@ -1659,17 +1597,12 @@ object Streams {
     // StreamingSpec (per-user counts vs w9bCounts; emission set vs
     // skipPatternCount on a repeated-letter pattern). 100 TB: one
     // user_id shuffle into state, O(|pattern|) work per event.
-    "s20_stream_pattern" -> ((s, d) => {
-      import s.implicits._
-      val completions = UserEvent.byUser(s, d, "clean", FunnelEvent)
-        .transformWithState(
+    "s20_stream_pattern" -> ((s, d) =>
+      runKeyed(s, d, "clean", FunnelEvent,
           new InOrderProcessor(SkipMatchProcessor.fold("vcp",
             graft.queries.Windows.SkipWindowUs)),
-          TimeMode.None(), OutputMode.Append())
-      runToMemory(s, completions.toDF("user_id", "completion_id"),
-                  "append", RocksDbConf ++ NoFinalBatch)
-        .orderBy(col("user_id"), col("completion_id"))
-    }),
+          "user_id", "completion_id")
+        .orderBy(col("user_id"), col("completion_id"))),
 
     // S20f — CEP GREEDY UNBOUNDED QUANTIFIER (Flink's
     // oneOrMore.greedy + until, MATCH_RECOGNIZE's C+): v c+ p within
@@ -1680,18 +1613,12 @@ object Streams {
     // oracle = S20's m2 window chain + the click-count closed form
     // (clicks whose max-view-before equals the purchase's anchor).
     // See OneOrMoreProcessor: 3 longs of state per key, O(1)/event.
-    "s20f_oneormore" -> ((s, d) => {
-      import s.implicits._
-      val completions = UserEvent.byUser(s, d, "clean", FunnelEvent)
-        .transformWithState(
+    "s20f_oneormore" -> ((s, d) =>
+      runKeyed(s, d, "clean", FunnelEvent,
           new InOrderProcessor(
             OneOrMoreProcessor.fold(graft.queries.Windows.SkipWindowUs)),
-          TimeMode.None(), OutputMode.Append())
-      runToMemory(s, completions.toDF("user_id", "completion_id",
-                    "n_clicks"),
-                  "append", RocksDbConf ++ NoFinalBatch)
-        .orderBy(col("user_id"), col("completion_id"))
-    }),
+          "user_id", "completion_id", "n_clicks")
+        .orderBy(col("user_id"), col("completion_id"))),
 
     // S20e — ALL-MATCHES CEP enumeration (Flink CEP's
     // AfterMatchSkipStrategy.noSkip / MATCH_RECOGNIZE's overlapping
@@ -1712,17 +1639,12 @@ object Streams {
     // the skip DP completes once where no-skip enumerates both
     // tuples, and the distinct-purchase projection of this query
     // equals S20's completion set exactly.
-    "s20e_all_matches" -> ((s, d) => {
-      import s.implicits._
-      val matches = UserEvent.byUser(s, d, "clean", FunnelEvent)
-        .transformWithState(
+    "s20e_all_matches" -> ((s, d) =>
+      runKeyed(s, d, "clean", FunnelEvent,
           new InOrderProcessor(
             AllMatchesProcessor.fold(graft.queries.Windows.SkipWindowUs)),
-          TimeMode.None(), OutputMode.Append())
-      runToMemory(s, matches.toDF("user_id", "v_id", "c_id", "p_id"),
-                  "append", RocksDbConf ++ NoFinalBatch)
-        .orderBy(col("user_id"), col("v_id"), col("c_id"), col("p_id"))
-    }),
+          "user_id", "v_id", "c_id", "p_id")
+        .orderBy(col("user_id"), col("v_id"), col("c_id"), col("p_id"))),
 
     // S20d — QUANTIFIED CEP pattern (Flink CEP's times(n)/oneOrMore
     // quantifiers, MATCH_RECOGNIZE's {n} repetition): the SAME
@@ -1734,17 +1656,12 @@ object Streams {
     // first-class oracle-gated face on the natural corpus — 1
     // completion at sf0.001, 17 at sf0.01). State stays O(|pattern|)
     // longs per key. 100 TB: identical budget to S20.
-    "s20d_quantified_pattern" -> ((s, d) => {
-      import s.implicits._
-      val completions = UserEvent.byUser(s, d, "clean", FunnelEvent)
-        .transformWithState(
+    "s20d_quantified_pattern" -> ((s, d) =>
+      runKeyed(s, d, "clean", FunnelEvent,
           new InOrderProcessor(SkipMatchProcessor.fold("vvcp",
             graft.queries.Windows.SkipWindowUs)),
-          TimeMode.None(), OutputMode.Append())
-      runToMemory(s, completions.toDF("user_id", "completion_id"),
-                  "append", RocksDbConf ++ NoFinalBatch)
-        .orderBy(col("user_id"), col("completion_id"))
-    }),
+          "user_id", "completion_id")
+        .orderBy(col("user_id"), col("completion_id"))),
 
     // S27 — COUNT WINDOWS (Flink's countWindow(n): element-count
     // tumbling windows, a trigger Spark's time-based window() cannot
@@ -1755,16 +1672,11 @@ object Streams {
     // trigger, no watermark involved). Oracle = rank-div-5 grouping
     // keeping full groups. 100 TB: one key shuffle, O(1) state/key,
     // output volume = input/5.
-    "s27_count_window" -> ((s, d) => {
-      import s.implicits._
-      val wins = UserEvent.byUser(s, d, "clean", CountEvent)
-        .transformWithState(new InOrderProcessor(CountWindowProcessor.fold(5)),
-          TimeMode.None(), OutputMode.Append())
-      runToMemory(s, wins.toDF("user_id", "win_idx", "sum_cents",
-                               "max_event_id"),
-                  "append", RocksDbConf ++ NoFinalBatch)
-        .orderBy(col("user_id"), col("win_idx"))
-    }),
+    "s27_count_window" -> ((s, d) =>
+      runKeyed(s, d, "clean", CountEvent,
+          new InOrderProcessor(CountWindowProcessor.fold(5)),
+          "user_id", "win_idx", "sum_cents", "max_event_id")
+        .orderBy(col("user_id"), col("win_idx"))),
 
     // S27b — SLIDING COUNT WINDOWS (Flink's countWindow(size, slide)):
     // every 3rd event per user triggers an aggregate over the last
@@ -1774,17 +1686,11 @@ object Streams {
     // overlap by 5 elements. State = the last 7 cents values per key
     // (strictly bounded); output = input/3. Oracle = a ROWS BETWEEN
     // 7 PRECEDING AND CURRENT ROW frame at every 3rd rank.
-    "s27b_sliding_count" -> ((s, d) => {
-      import s.implicits._
-      val wins = UserEvent.byUser(s, d, "clean", CountEvent)
-        .transformWithState(
+    "s27b_sliding_count" -> ((s, d) =>
+      runKeyed(s, d, "clean", CountEvent,
           new InOrderProcessor(CountSlideProcessor.fold(8, 3)),
-          TimeMode.None(), OutputMode.Append())
-      runToMemory(s, wins.toDF("user_id", "trig_idx", "n_in_window",
-                               "sum_cents"),
-                  "append", RocksDbConf ++ NoFinalBatch)
-        .orderBy(col("user_id"), col("trig_idx"))
-    }),
+          "user_id", "trig_idx", "n_in_window", "sum_cents")
+        .orderBy(col("user_id"), col("trig_idx"))),
 
     // S20c — STRICT-CONTIGUITY CEP (Flink CEP's next(); see
     // StrictMatchProcessor): the v→c→p events must be IMMEDIATELY
@@ -1795,16 +1701,11 @@ object Streams {
     // the arithmetic rewrite (the s8b CTE) then checks lag(l,1)='c',
     // lag(l,2)='v' within the window. State = last two (letter, tsu)
     // pairs per key — the smallest CEP state in the S-series.
-    "s20c_strict_pattern" -> ((s, d) => {
-      import s.implicits._
-      val completions = UserEvent.byUser(s, d, "funnel", FunnelEvent)
-        .transformWithState(
+    "s20c_strict_pattern" -> ((s, d) =>
+      runKeyed(s, d, "funnel", FunnelEvent,
           new InOrderProcessor(StrictMatchProcessor.fold(3600L * 1000000L)),
-          TimeMode.None(), OutputMode.Append())
-      runToMemory(s, completions.toDF("user_id", "completion_id"),
-                  "append", RocksDbConf ++ NoFinalBatch)
-        .orderBy(col("user_id"), col("completion_id"))
-    }),
+          "user_id", "completion_id")
+        .orderBy(col("user_id"), col("completion_id"))),
 
     // S21 — TIMEOUT-emission absence CEP on EVENT-TIME TIMERS (Flink's
     // notFollowedBy…within with its true onTimer firing; the first
@@ -1812,15 +1713,16 @@ object Streams {
     // with no purchase in [view, view+2h] emits WHEN THE WATERMARK
     // PASSES ITS DEADLINE — firing on the NON-arrival of an event,
     // which S14's at-the-purchase evaluation cannot express. See
-    // AbandonProcessor for the pinned timer mechanics; the oracle
+    // TimeoutProcessor for the pinned timer mechanics; the oracle
     // models the firing horizon exactly (floor-ms(max ts) − delay,
     // the s5b watermark-model discipline) — the stream tail's
-    // unexpired views correctly never emit. NoFinalBatch is NOT set:
-    // the trailing watermark-advance batch is what fires the last
+    // unexpired views correctly never emit. The runner keeps the
+    // trailing watermark-advance batch, which fires the last
     // deadlines. 100 TB: one user_id shuffle, state = open views per
     // user (rate × window), timers range-scanned per batch.
     "s21_abandon_timer" -> ((s, d) =>
-      runToMemory(s, s21Abandoned(s, d), "append", RocksDbConf)
+      runKeyed(s, d, "clean", FunnelEvent, abandonTimer(AbandonWindowUs),
+          "user_id", "view_id")
         .orderBy(col("user_id"), col("view_id"))),
 
     // S21c — TIMED-OUT PARTIAL MATCHES (Flink CEP's
@@ -1831,12 +1733,13 @@ object Streams {
     // event-time timers, same suppression rule, same firing horizon
     // (the S21 oracle's ms-floored deadline ≤ final-wm model);
     // StreamingSpec pins that the (user, view) projection equals S21's
-    // output exactly and unit-pins the payload fold. NoFinalBatch NOT
-    // set — the trailing watermark advance fires the last deadlines.
-    // 100 TB: one user_id shuffle, state = open views × payload
-    // (rate × window), timers O(fired) per batch.
+    // output exactly and unit-pins the payload fold (see
+    // PartialTimeoutProcessor). 100 TB: one user_id shuffle, state =
+    // open views × payload (rate × window), timers O(fired) per batch.
     "s21c_partial_timeout" -> ((s, d) =>
-      runToMemory(s, s21cPartials(s, d), "append", RocksDbConf)
+      runKeyed(s, d, "clean", FunnelEvent,
+          new TimeoutProcessor(PartialTimeoutProcessor.timeouts(AbandonWindowUs)),
+          "user_id", "view_id", "n_clicks", "max_click_id")
         .orderBy(col("user_id"), col("view_id"))),
 
     // S18 — STREAMING SCD2 maintenance (the CDC-apply face of J16's
@@ -1870,17 +1773,12 @@ object Streams {
     // out-of-order general case buffers probes until the watermark
     // clears their event time (rate × delay bound) — degenerate on
     // the ordered replay.
-    "s4b_temporal_join" -> ((s, d) => {
-      import s.implicits._
-      val joined = UserEvent.byUser(s, d, "clean", TemporalEvent)
-        .transformWithState(
+    "s4b_temporal_join" -> ((s, d) =>
+      runKeyed(s, d, "clean", TemporalEvent,
           new InOrderProcessor(TemporalJoinProcessor.fold(
             midCents = 40000L, highCents = 100000L)),
-          TimeMode.None(), OutputMode.Append())
-      runToMemory(s, joined.toDF("user_id", "event_id", "band"),
-                  "append", RocksDbConf ++ NoFinalBatch)
-        .orderBy(col("user_id"), col("event_id"))
-    }),
+          "user_id", "event_id", "band")
+        .orderBy(col("user_id"), col("event_id"))),
 
     // S20b/S4c/S21b — the stateful trio behind the WATERMARK REORDER
     // BUFFER (see ReorderingProcessor), run on the genuinely DISORDERED
@@ -2181,18 +2079,13 @@ object Streams {
     // no-op (n_changes counts effective ops only). 100 TB: one key
     // shuffle, 1 state row per LIVE key (the only operator whose state
     // shrinks), group deltas map-side combine.
-    "s22_cdc_aggregate" -> ((s, d) => {
-      import s.implicits._
-      val changes = UserEvent.byUser(s, d, "clean", CdcOp)
-        .transformWithState(new InOrderProcessor(CdcProcessor.fold),
-          TimeMode.None(), OutputMode.Append())
-      runToMemory(s, changes.toDF("user_id", "seq_id", "delta"),
-                  "append", RocksDbConf ++ NoFinalBatch)
+    "s22_cdc_aggregate" -> ((s, d) =>
+      runKeyed(s, d, "clean", CdcOp, new InOrderProcessor(CdcProcessor.fold),
+          "user_id", "seq_id", "delta")
         .groupBy((col("user_id") % 10).as("grp"))
         .agg(sum(col("delta")).as("net_cents"),
              count(lit(1)).as("n_changes"))
-        .orderBy(col("grp"))
-    }),
+        .orderBy(col("grp"))),
 
     // S33 — RETRACT-STREAM PRODUCER (Flink's toRetractStream — the
     // missing half of the CDC axis: S22 consumes a changelog, this
@@ -2206,16 +2099,12 @@ object Streams {
     // event_id); retract(lag(run)) + upsert(run) per record. See
     // RetractProcessor for state/scale budget (1 value per key, 2×
     // emission — Flink's own retract price).
-    "s33_retract_stream" -> ((s, d) => {
-      import s.implicits._
-      val train = UserEvent.byUser(s, d, "clean", RetractOp)
-        .transformWithState(new InOrderProcessor(RetractProcessor.fold),
-          TimeMode.None(), OutputMode.Append())
-      runToMemory(s, train.toDF(), "append", RocksDbConf ++ NoFinalBatch)
+    "s33_retract_stream" -> ((s, d) =>
+      runKeyed(s, d, "clean", RetractOp,
+          new InOrderProcessor(RetractProcessor.fold), RetractCols: _*)
         .select(col("user_id"), col("seq_id"), col("kind"),
           col("agg_cents"))
-        .orderBy(col("user_id"), col("seq_id"), col("kind"))
-    }),
+        .orderBy(col("user_id"), col("seq_id"), col("kind"))),
 
     // S33c — the retract PRODUCER on the genuinely DISORDERED ooo
     // replay, behind the watermark reorder buffer (the sextet
@@ -2580,16 +2469,11 @@ object Streams {
     // sf0.001, 40 at sf0.01) — no injection needed. 100 TB: one
     // user_id shuffle, state = two timestamp lists per user bounded by
     // rate × window — the funnel's exact budget.
-    "s14_absence" -> ((s, d) => {
-      import s.implicits._
-      val impulses = UserEvent.byUser(s, d, "clean", FunnelEvent)
-        .transformWithState(
+    "s14_absence" -> ((s, d) =>
+      runKeyed(s, d, "clean", FunnelEvent,
           new InOrderProcessor(AbsenceProcessor.fold(HourUs)),
-          TimeMode.None(), OutputMode.Append())
-      runToMemory(s, impulses.toDF("user_id", "purchase_id"), "append",
-                  RocksDbConf ++ NoFinalBatch)
-        .orderBy(col("user_id"), col("purchase_id"))
-    }),
+          "user_id", "purchase_id")
+        .orderBy(col("user_id"), col("purchase_id"))),
 
     // S15 — streaming HEAVY HITTERS: per-hour top-3 users by event
     // count — the L44 question (who is heavy?) asked of the live
@@ -3512,7 +3396,7 @@ object Streams {
 
     // s31b — the savepoint's timer registry and pending-view state in
     // closed form. Timers: one per DISTINCT (user, deadline) ever
-    // registered (AbandonProcessor registers per view; the registry is
+    // registered (TimeoutProcessor registers per view; the registry is
     // a set), surviving iff deadline > floor-ms(max ts) − 10 min (a
     // fired timer is deleted at firing; expiry == wm fires — the
     // inclusive pin). Views: the same horizon AND no answering
@@ -3987,7 +3871,7 @@ object Streams {
     // s21b — s21's closed form with the 24 h delay's firing horizon and
     // the reorder variant's STRICT boundary (deadline < wm: deadline
     // timers register at deadline+1 because the release bound is
-    // strict — see ReorderedAbandon's scaladoc; s21 proper is <=).
+    // strict — see ReorderingProcessor's scaladoc; s21 proper is <=).
     "s21b_abandon_ooo" ->
       """WITH mx21 AS (
         |  SELECT (epoch_us(max(ts)) // 1000) - 86400000 AS wm_ms

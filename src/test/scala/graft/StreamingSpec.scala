@@ -1128,7 +1128,7 @@ class StreamingSpec extends AnyFunSuite {
        "fires pending timers BEFORE the next data batch arrives, and " +
        "an answering purchase from the PRIOR batch — the only place " +
        "an ordered stream can put it — suppresses the emission") {
-    import graft.streaming.{AbandonProcessor, FunnelEvent}
+    import graft.streaming.{AbandonProcessor, FunnelEvent, TimeoutProcessor}
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     implicit val sqlCtx = s.sqlContext
     import s.implicits._
@@ -1152,7 +1152,8 @@ class StreamingSpec extends AnyFunSuite {
         .select(col("event_id"), col("tsu"), col("user_id"),
           col("event_type")).as[FunnelEvent]
       val out = ev.groupByKey(_.user_id)
-        .transformWithState(new AbandonProcessor(winUs),
+        .transformWithState(
+          new TimeoutProcessor(AbandonProcessor.timeouts(winUs)),
           TimeMode.EventTime(), OutputMode.Append())
       val name = "s21_pin_" + java.util.UUID.randomUUID().toString.take(8)
       val ckpt = Scratch.checkpoint()
@@ -2924,6 +2925,40 @@ class StreamingSpec extends AnyFunSuite {
     check("cdc", CdcProcessor.fold, ops)
     check("cdctimed", CdcTimedProcessor.fold, ops)
     check("retract", RetractProcessor.fold, byUser(RetractOp))
+  }
+
+  test("Keyed-state run policy: an in-order run has one batch per " +
+       "replay file; a reordering or timeout run also has the trailing " +
+       "no-data batch, which reads 0 rows") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    import scala.jdk.CollectionConverters._
+    def batches(name: String): Seq[Long] = {
+      val c = s.newSession()
+      val rows = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+      val done = new java.util.concurrent.CountDownLatch(1)
+      c.streams.addListener(new StreamingQueryListener {
+        override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+        override def onQueryProgress(e: QueryProgressEvent): Unit =
+          rows.add(e.progress.numInputRows)
+        // posted after the query's last progress event
+        override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+          done.countDown()
+      })
+      SparkEntry.queries(name)(c, sf).collect()
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        s"$name: no termination event")
+      rows.asScala.toSeq
+    }
+    val n = Replayer.NumFiles
+    val inOrder = batches("s20_stream_pattern")
+    assert(inOrder.size == n && inOrder.forall(_ > 0),
+      s"in-order run: expected $n data batches, got $inOrder")
+    Seq("s20b_pattern_ooo", "s21_abandon_timer").foreach { name =>
+      val b = batches(name)
+      assert(b.size == n + 1 && b.init.forall(_ > 0) && b.last == 0L,
+        s"$name: expected $n data batches and a trailing empty one, got $b")
+    }
   }
 
   test("S26: state schema evolution across a checkpoint restart — the " +
